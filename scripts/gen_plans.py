@@ -62,7 +62,7 @@ HEADLINERS = [
     ("pipeline_preference_pairs", "two rank-1 windows carry constant rn<=1 -> WindowGroupLimit keeps per-group state at one row map-side"),
     ("multimodal_scenecut", "one stateless mapInPandas frame-hash pass; lag window keyed by high-cardinality doc_id"),
     ("ml_mrr", "bounded 10-query ground-truth side joins broadcast; the evaluated IVF side keeps its bucketed equi-join"),
-    ("source_fixedwidth", "pluggable DataSource scan: record-aligned byte-range splits (~32 partitions from 8 files) feed a pure projection"),
+    ("source_fixedwidth", "JVM binaryRecords scan (one record-aligned split per part file) feeds key/value substrings and the decode projection in one codegen stage; no Python node"),
     ("mv_rewrite", "MV query rewrite: the only FileScan is the daily pre-aggregate, never orders.parquet; monthly roll-up of DECIMAL partial sums"),
     ("dedup_probabilistic", "Bloom gate: 256-word filter built by bit_or aggregation, broadcast to the probe; exact anti-join sees only the Bloom-positive sliver"),
     ("pipeline_ivm_rewrite", "composed MV lifecycle: the month answer's only FileScan is the refreshed view directory"),

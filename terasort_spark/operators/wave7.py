@@ -1,4 +1,4 @@
-"""Round-7 wave: file-format plugin read, retrieval evaluation,
+"""Round-7 wave: record-file round trip, retrieval evaluation,
 fixed-size reservoir sampling, video scene-cut detection, and
 preference-pair assembly — five operators the SURVEY.md §2b inventory
 and the LLM-pipeline north star still lacked (each concept grepped
@@ -10,6 +10,8 @@ oracle (determinism rules D1–D6, registry.py).
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -18,8 +20,9 @@ from terasort_spark.operators._util import o_rnd, rnd, scratch_dir
 from terasort_spark.registry import register
 
 # --------------------------------------------------------------------------
-# source_fixedwidth — the §4.2 named gap: fixed-width records as a
-# pluggable FORMAT (sources/fixedwidth_ds.py), not just binaryRecords.
+# source_fixedwidth — the 100-byte record files' round trip through the
+# format's one home, sources/teragen.py: write_tera_files out,
+# read_tera_files back.
 
 _FW_ROWS = 20_000
 _FW_PARTS = 8
@@ -28,7 +31,8 @@ _FW_PARTS = 8
 def _fw_oracle() -> str:
     # built from the SAME constants as tera_queries._gen_df/_GEN_SQL so
     # a future VALUE_LEN change cannot silently desync this oracle
-    from terasort_spark.sources.tera_queries import _KEY_SQL, VALUE_LEN
+    from terasort_spark.sources.tera_queries import _KEY_SQL
+    from terasort_spark.sources.teragen import VALUE_LEN
 
     return f"""
 SELECT id,
@@ -40,41 +44,31 @@ FROM range(0, {_FW_ROWS}) t(id)
 
 @register("source_fixedwidth", oracle=_fw_oracle())
 def source_fixedwidth(spark, sf_dir):
-    """Round-trip through the custom fixed-width DataSource: generate
-    the registered teragen rows, sink them as raw 100-byte records
-    (sources/teragen.py write_tera_files — the R5 sink contract), then
-    read them BACK through the pluggable ``fixedwidth`` format and
-    parse id out of the value payload. The oracle regenerates the rows
-    from ``range()``, so a hash match proves the write → split-planned
-    read → key/value slicing round trip is byte-faithful.
+    """Round trip through the record files: generate the registered
+    teragen rows, sink them as raw 100-byte records with
+    ``write_tera_files`` (the R5 sink), read them back with
+    ``read_tera_files`` (the R1 source) and parse id out of the value
+    payload. The oracle regenerates the rows from ``range()``, so a
+    hash match proves the write → read → key/value slicing round trip
+    is byte-faithful.
 
-    Scale: writing is per-partition streaming (no driver hop); the
-    reader carves record-aligned ~64 KiB splits (forced small here so
-    the plan exercises MULTIPLE splits per file — 2 MB of data → ~32
-    splits), each task streaming its range with one IO buffer. A
-    misaligned file fails at planning time."""
-    from terasort_spark.sources.fixedwidth_ds import FixedWidthDataSource
+    Scale: each task writes its own part file from Arrow buffers (no
+    driver hop); the read is a JVM ``binaryRecords`` scan split on
+    record boundaries, with no record passing through Python. The
+    scratch directory is cleared first, since the writer refuses a
+    directory that already holds part files."""
     from terasort_spark.sources.tera_queries import _gen_df
+    from terasort_spark.sources.teragen import read_tera_files, write_tera_files
 
     out = scratch_dir(spark, "fixedwidth")
+    shutil.rmtree(out, ignore_errors=True)
     gen = _gen_df(spark, _FW_ROWS, _FW_PARTS).select(
         F.encode("key", "utf-8").alias("key"),
         F.encode("value", "utf-8").alias("value"),
     )
-    from terasort_spark.sources.teragen import write_tera_files
-
     write_tera_files(gen, out)
-    spark.dataSource.register(FixedWidthDataSource)
-    df = (
-        spark.read.format("fixedwidth")
-        .option("path", out)
-        .option("record_len", 100)
-        .option("key_len", 10)
-        .option("split_bytes", 64 * 1024)
-        .load()
-    )
     val = F.decode("value", "utf-8")
-    return df.select(
+    return read_tera_files(spark, out).select(
         F.substring(val, 1, 32).cast("bigint").alias("id"),
         F.decode("key", "utf-8").alias("key"),
         val.alias("value"),

@@ -12,9 +12,9 @@ Format name is ``pyavro``, NOT ``avro``: Spark special-cases the string
 "Avro is built-in but not loaded" error before Python data sources are
 consulted), so the built-in name cannot be claimed from Python.
 
-Follows fixedwidth_ds.py's plugin shape — partitions() enumerates byte
-splits on the DRIVER, read() streams one split on an executor — but the
-split planning is the real Avro recipe: OCF files are sequences of
+The usual Python DataSource plugin shape — partitions() enumerates byte
+splits on the DRIVER, read() streams one split on an executor — with
+the real Avro recipe for split planning: OCF files are sequences of
 self-delimiting blocks separated by a per-file random 16-byte SYNC
 MARKER (written after the header and after every block), so a split
 [start, end) owns exactly the blocks whose PRECEDING sync marker begins

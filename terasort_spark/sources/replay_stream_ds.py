@@ -187,8 +187,8 @@ def _pickle_module_by_value() -> None:
     DataSource in a fresh Python process that — unlike batch
     data-source and executor workers — does not put addPyFile'd zips
     on sys.path before ``read_command`` (observed empirically: batch
-    ``source_fixedwidth`` plans fine from a non-repo cwd, the
-    streaming sources died with ModuleNotFoundError). By-value
+    Python data sources plan fine from a non-repo cwd, the streaming
+    sources died with ModuleNotFoundError). By-value
     registration embeds the class definitions (and the
     ``_slice_rows``/``EVENTS_SCHEMA`` objects they reference) in the
     pickle itself, so the runner needs no ``terasort_spark`` import —

@@ -32,11 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from terasort_spark.registry import register
+from terasort_spark.sources.teragen import KEY_LEN, VALUE_LEN
 
 N_ROWS = 100_000  # driver-facing sample; module tests run 1M binary rows
 N_PARTS = 16
-KEY_LEN = 10
-VALUE_LEN = 90
 
 
 def mix32(v):

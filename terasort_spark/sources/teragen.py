@@ -25,10 +25,14 @@ empty; see SURVEY.md §0):
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -120,75 +124,94 @@ def terasort(df: DataFrame, n_partitions: int = 32) -> DataFrame:
 
 
 def write_tera_files(sorted_df: DataFrame, out_dir: str) -> list[str]:
-    """R5 sink contract (reconstructed pub:TeraOutputFormat semantics —
-    SURVEY.md §2a): one file per partition of raw concatenated 100-byte
-    records (no header, no framing), named part-<index> so that
-    concatenating the files in name order reproduces the globally
-    sorted dataset. Executors write their own partition directly — the
-    local-mode twin of TeraOutputFormat's per-reducer DFS file; no data
-    moves through the driver. Assumes out_dir is visible to both driver
-    and executors (true in local mode and on any shared fs); a
-    non-shared-fs cluster would need Hadoop FileSystem APIs here, as
-    the reference TeraOutputFormat uses. Empty partitions still emit a
-    (zero-byte) file, matching Hadoop's behavior. Returns paths in
-    index order."""
+    """R5 sink (TeraOutputFormat semantics): each partition becomes one
+    file ``part-<partition index>.dat`` of raw concatenated 100-byte
+    records (no header, no framing), so the files concatenated in name
+    order reproduce the globally sorted dataset.
+
+    The records travel as ``concat(key, value)`` through ``mapInArrow``;
+    each task opens its own partition's file and writes every Arrow
+    batch's data buffer in one call, so no data moves through the
+    driver and no record is a Python object. Empty partitions still
+    write a zero-byte file, as Hadoop does. A NULL record, or one that
+    is not 100 bytes, fails the task.
+
+    Like Hadoop's FileOutputFormat, this refuses an ``out_dir`` that
+    already holds part files: a stale part file from an earlier, wider
+    write would otherwise be read back as data. ``out_dir`` must be
+    visible to the driver and every executor (local mode or a shared
+    fs). Returns the paths in partition order."""
+    if glob.glob(os.path.join(out_dir, "part-*.dat")):
+        raise FileExistsError(f"output directory {out_dir} already holds part-*.dat files")
     os.makedirs(out_dir, exist_ok=True)
 
-    def write_partition(idx: int, rows) -> Iterator[tuple[int, str]]:
-        path = os.path.join(out_dir, f"part-{idx:05d}.dat")
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        path = os.path.join(out_dir, f"part-{TaskContext.get().partitionId():05d}.dat")
         with open(path, "wb") as f:
-            for row in rows:
-                f.write(bytes(row["key"]))
-                f.write(bytes(row["value"]))
-        yield (idx, path)
+            for batch in batches:
+                recs = batch.column(0)
+                if not len(recs):
+                    continue
+                widths = pc.binary_length(recs)
+                if recs.null_count or not pc.all(pc.equal(widths, RECORD_LEN)).as_py():
+                    raise ValueError(f"{path}: every record must be {RECORD_LEN} non-NULL bytes")
+                _, offsets, data = recs.buffers()
+                width = np.int64 if pa.types.is_large_binary(recs.type) else np.int32
+                start = int(np.frombuffer(offsets, width)[recs.offset])
+                f.write(data[start : start + len(recs) * RECORD_LEN])
+        yield pa.RecordBatch.from_pydict({"path": [path]})
 
-    paths = dict(sorted_df.rdd.mapPartitionsWithIndex(write_partition).collect())
-    return [paths[i] for i in sorted(paths)]
+    records = sorted_df.select(F.concat("key", "value"))
+    return sorted(r["path"] for r in records.mapInArrow(write_partition, "path string").collect())
 
 
-def read_tera_files(spark: SparkSession, out_dir: str) -> DataFrame:
-    """R1 source contract (reconstructed pub:TeraInputFormat semantics):
-    fixed-width 100-byte binary records → (key BINARY, value BINARY)
-    rows. ``binaryRecords`` splits exactly at record boundaries and
-    parallelizes by file, so a 100 TB directory scans with the same
-    code; the 10/90 key/value split happens JVM-side off each record."""
-    rdd = spark.sparkContext.binaryRecords(
-        os.path.join(out_dir, "part-*.dat"), RECORD_LEN
+def read_tera_files(spark: SparkSession, in_dir: str) -> DataFrame:
+    """R1 source (TeraInputFormat semantics): the ``part-*.dat`` files of
+    ``in_dir`` as (key BINARY, value BINARY) rows, built in the JVM.
+
+    The JVM ``binaryRecords`` RDD is wrapped as a Dataset[Array[Byte]]
+    and ``substring`` slices out key and value, so no record passes
+    through Python. Splits follow the Hadoop conf's
+    ``mapreduce.input.fileinputformat.split.maxsize``, rounded to whole
+    records; partitions come in file-name order, then byte offset. A
+    file holding a partial record fails the job."""
+    jsc = spark.sparkContext._jsc
+    records = jsc.sc().binaryRecords(
+        os.path.join(in_dir, "part-*.dat"), RECORD_LEN, jsc.hadoopConfiguration()
     )
-    return spark.createDataFrame(
-        rdd.map(lambda b: (b[:KEY_LEN], b[KEY_LEN:])),
-        schema="key binary, value binary",
+    encoder = spark.sparkContext._jvm.org.apache.spark.sql.Encoders.BINARY()
+    df = DataFrame(spark._jsparkSession.createDataset(records, encoder).toDF(), spark)
+    return df.select(
+        F.substring("value", 1, KEY_LEN).alias("key"),
+        F.substring("value", KEY_LEN + 1, VALUE_LEN).alias("value"),
     )
 
 
-def _summarize_partitions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-partition TeraValidate summary. mapInPandas hands batches in
-    partition order, so cross-batch ordering is checked too. Only one
-    tiny summary row per partition leaves the executor."""
+def _summarize_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """One partition's TeraValidate summary: its index, record count,
+    first and last key, and whether its keys never decrease — across
+    batch boundaries too. Only this one row leaves the executor; an
+    empty partition sends none."""
     first = last = None
     n = 0
     sorted_ok = True
-    for pdf in batches:
-        keys = pdf["key"]
-        if len(keys) == 0:
+    for batch in batches:
+        keys = batch.column(0)
+        if not len(keys):
             continue
-        kb = [bytes(k) for k in keys]
+        if last is not None and keys[0].as_py() < last:
+            sorted_ok = False
+        if pc.any(pc.less(keys[1:], keys[:-1])).as_py():
+            sorted_ok = False
         if first is None:
-            first = kb[0]
-        if last is not None and kb[0] < last:
-            sorted_ok = False
-        if any(kb[i] > kb[i + 1] for i in range(len(kb) - 1)):
-            sorted_ok = False
-        last = kb[-1]
-        n += len(kb)
-    yield pd.DataFrame(
-        {
-            "n": [n],
-            "first_key": [first.hex() if first is not None else None],
-            "last_key": [last.hex() if last is not None else None],
-            "sorted_ok": [sorted_ok],
-        }
-    )
+            first = keys[0].as_py()
+        last = keys[-1].as_py()
+        n += len(keys)
+    if n:
+        part = TaskContext.get().partitionId()
+        yield pa.RecordBatch.from_pylist(
+            [{"part": part, "n": n, "first_key": first, "last_key": last, "sorted_ok": sorted_ok}]
+        )
 
 
 def checksum(df: DataFrame) -> int:
@@ -207,23 +230,21 @@ def checksum(df: DataFrame) -> int:
 def teravalidate(sorted_df: DataFrame) -> dict:
     """TeraValidate invariants on a sorted DataFrame:
     (a) keys non-decreasing within every partition,
-    (b) last key of partition i <= first key of partition i+1,
+    (b) last key of partition i <= first key of partition i+1, taking
+        partitions in index order — for ``read_tera_files`` that is
+        file-name order, so a directory with two part files swapped
+        fails,
     (c) row count preserved (caller compares),
     Returns a dict with counts and booleans; raises nothing itself."""
-    schema = "n long, first_key string, last_key string, sorted_ok boolean"
-    # mapInPandas runs on the sorted partitions directly (no extra shuffle)
-    summaries = sorted_df.mapInPandas(_summarize_partitions, schema=schema).collect()
-    summaries = [r for r in summaries if r["n"] > 0]
-    summaries.sort(key=lambda r: bytes.fromhex(r["first_key"]))
-    within = all(r["sorted_ok"] for r in summaries)
-    between = all(
-        bytes.fromhex(summaries[i]["last_key"])
-        <= bytes.fromhex(summaries[i + 1]["first_key"])
-        for i in range(len(summaries) - 1)
-    )
+    # mapInArrow runs on the sorted partitions directly (no extra shuffle)
+    schema = "part long, n long, first_key binary, last_key binary, sorted_ok boolean"
+    rows = sorted_df.select("key").mapInArrow(_summarize_partition, schema).collect()
+    summaries = sorted(rows, key=lambda r: r["part"])
     return {
         "n_rows": sum(r["n"] for r in summaries),
         "n_partitions": len(summaries),
-        "sorted_within": within,
-        "sorted_between": between,
+        "sorted_within": all(r["sorted_ok"] for r in summaries),
+        "sorted_between": all(
+            a["last_key"] <= b["first_key"] for a, b in zip(summaries, summaries[1:])
+        ),
     }

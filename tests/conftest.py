@@ -30,7 +30,6 @@ _SLOW_TESTS = {
     "test_stream_lsh_compaction_preserves_hash_and_bounds_files",  # 33 s
     "test_stream_lsh_equals_sequential_batch_twin",  # 21 s
     "test_similarity_rewrite_small_input_uses_exact_form",  # 25 s
-    "test_cli_gen_sort_validate_roundtrip",  # 20 s call + 9 s setup
     "test_partition_count_invariance_of_sensitive_queries",  # 19 s
     "test_url_canonicalization_idempotent",  # 15 s
     "test_quartile_histogram_machinery_equals_ntile",  # 13 s

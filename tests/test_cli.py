@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from terasort_spark.__main__ import main
 
 
@@ -63,6 +65,39 @@ def test_cli_gen_sort_validate_roundtrip(spark, tmp_path, capsys):
         spark=spark,
     ) == 1
     assert json.loads(capsys.readouterr().out)["checksum_ok"] is False
+
+
+def test_cli_teravalidate_fails_on_swapped_part_files(spark, tmp_path, capsys):
+    """Sorted files concatenate in NAME order, so swapping two sorted
+    part files breaks the total order even though each file, and the
+    set of first/last keys, is unchanged."""
+    from terasort_spark.sources.teragen import teragen, terasort, write_tera_files
+
+    d = tmp_path / "sorted"
+    write_tera_files(terasort(teragen(spark, 4000, n_partitions=2), 4), str(d))
+    assert main(["teravalidate", "--input", str(d)], spark=spark) == 0
+    capsys.readouterr()
+
+    first, last = d / "part-00000.dat", d / "part-00003.dat"
+    first_bytes = first.read_bytes()
+    first.write_bytes(last.read_bytes())
+    last.write_bytes(first_bytes)
+    assert main(["teravalidate", "--input", str(d)], spark=spark) == 1
+    report = json.loads(capsys.readouterr().out)
+    assert report["sorted_within"] and not report["sorted_between"]
+
+
+def test_cli_terasort_refuses_existing_output(spark, tmp_path):
+    """Like Hadoop's FileOutputFormat: part files left by an earlier
+    write would be read back as data, so a second write into the same
+    directory fails instead."""
+    gen_dir, sort_dir = str(tmp_path / "gen"), str(tmp_path / "sorted")
+    parts = ["--partitions", "2"]
+    assert main(["teragen", "--rows", "1000", "--out", gen_dir, *parts], spark=spark) == 0
+    argv = ["terasort", "--input", gen_dir, "--out", sort_dir, *parts]
+    assert main(argv, spark=spark) == 0
+    with pytest.raises(FileExistsError, match="already holds part"):
+        main(argv, spark=spark)
 
 
 def test_cli_list_query_explain(spark, sf_dir, capsys):

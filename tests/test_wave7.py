@@ -1,4 +1,4 @@
-"""Round-7 wave: fixed-width DataSource round trip, retrieval
+"""Round-7 wave: record-file round trip, retrieval
 evaluation (MRR/hit@5), priority-reservoir sampling, scene-cut
 detection, and preference-pair assembly. Oracle equivalence is covered
 by tests/test_oracle.py; these pin operator-specific invariants and
@@ -7,7 +7,6 @@ plan shapes."""
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,48 +25,59 @@ def _plan(df) -> str:
 
 
 def test_fixedwidth_reader_splits_and_roundtrip(spark, tmp_path):
-    from terasort_spark.sources.fixedwidth_ds import FixedWidthDataSource
+    """read_tera_files cuts files into record-aligned splits by the
+    Hadoop split size, takes them in file-name order, then byte offset
+    (the order teravalidate relies on), and returns every record
+    exactly once — for an empty file, a one-record file and files
+    that span several splits."""
+    import random
+    from collections import Counter
 
-    spark.dataSource.register(FixedWidthDataSource)
-    # 300 records of 20 bytes (key 4 + value 16) across two files
-    recs = [
-        (f"k{i:03d}".encode(), f"v{i:014d}-".encode()) for i in range(300)
-    ]
-    assert all(len(k) == 4 and len(v) == 16 for k, v in recs)
-    for fname, chunk in (("part-0.dat", recs[:180]), ("part-1.dat", recs[180:])):
-        with open(tmp_path / fname, "wb") as f:
-            for k, v in chunk:
-                f.write(k + v)
-    df = (
-        spark.read.format("fixedwidth")
-        .option("path", str(tmp_path))
-        .option("record_len", 20)
-        .option("key_len", 4)
-        .option("split_bytes", 1000)  # -> 50-record splits, 7 total
-        .load()
-    )
-    # split planning: 180*20/1000 -> 4 splits + 120*20/1000 -> 3 splits
-    assert df.rdd.getNumPartitions() == 7
-    got = sorted((bytes(r["key"]), bytes(r["value"])) for r in df.collect())
-    assert got == sorted(recs)  # nothing lost or torn at split boundaries
+    from terasort_spark.sources.teragen import RECORD_LEN, read_tera_files
+
+    rng = random.Random(7)
+    written = []
+    for i, n in enumerate((0, 1, 37, 53)):
+        recs = [rng.randbytes(RECORD_LEN) for _ in range(n)]
+        (tmp_path / f"part-{i:05d}.dat").write_bytes(b"".join(recs))
+        written += recs
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "mapreduce.input.fileinputformat.split.maxsize"
+    old = conf.get(key)
+    conf.set(key, str(10 * RECORD_LEN))  # 10-record splits
+    try:
+        df = read_tera_files(spark, str(tmp_path))
+        got = sorted(bytes(r["key"]) + bytes(r["value"]) for r in df.collect())
+        splits = df.select(
+            F.spark_partition_id().alias("p"),
+            F.regexp_extract(F.input_file_name(), r"part-\d+", 0).alias("f"),
+        ).distinct().collect()
+    finally:
+        if old is None:
+            conf.unset(key)
+        else:
+            conf.set(key, old)
+    assert got == sorted(written)  # nothing lost, torn or duplicated
+    per_file = Counter(r["f"] for r in splits)
+    assert per_file["part-00002"] > 1 and per_file["part-00003"] > 1, per_file
+    by_part = [r["f"] for r in sorted(splits, key=lambda r: r["p"])]
+    assert by_part == sorted(by_part)
 
 
 def test_fixedwidth_reader_rejects_misaligned_file(spark, tmp_path):
-    from terasort_spark.sources.fixedwidth_ds import FixedWidthReader
+    from py4j.protocol import Py4JJavaError
 
-    p = tmp_path / "bad.dat"
-    p.write_bytes(b"x" * 105)  # not a multiple of record_len
-    reader = FixedWidthReader(
-        {"path": str(tmp_path), "record_len": "20", "key_len": "4"}
-    )
-    with pytest.raises(ValueError, match="multiple of record_len"):
-        reader.partitions()
+    from terasort_spark.sources.teragen import read_tera_files
+
+    (tmp_path / "part-00000.dat").write_bytes(b"x" * 105)  # 1.05 records
+    with pytest.raises(Py4JJavaError, match="EOFException"):
+        read_tera_files(spark, str(tmp_path)).count()
 
 
 def test_source_fixedwidth_query_has_multiple_splits(spark, sf_dir):
     df = _Q["source_fixedwidth"](spark, sf_dir)
-    # 20k 100-byte records / 64 KiB splits -> ~4 splits per part file
-    assert df.rdd.getNumPartitions() >= 16
+    # one split per written part file at the default split size
+    assert df.rdd.getNumPartitions() == 8
     assert df.count() == 20_000
 
 
