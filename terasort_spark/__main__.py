@@ -16,7 +16,8 @@ returns nonzero when the directory is NOT sorted — and, when the
 caller supplies ``--expect-rows`` / ``--expect-checksum`` (printed by
 teragen / computable via sources.teragen.checksum), also when records
 were dropped, duplicated, or corrupted, which upgrades the check to
-the reference validator's full sorted-permutation contract.
+the reference validator's full sorted-permutation contract. teragen
+and terasort exit 1 when ``--out`` already holds part files.
 """
 
 from __future__ import annotations
@@ -76,6 +77,12 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _refused(e: FileExistsError) -> int:
+    """A refused ``--out``: one line on stderr and exit 1, no traceback."""
+    print(f"terasort_spark: {e}", file=sys.stderr)
+    return 1
+
+
 def main(argv: list[str] | None = None, spark=None) -> int:
     """Runs one subcommand; ``spark`` is injectable for in-process tests
     (a real spark-submit leaves it None and builds the session)."""
@@ -97,9 +104,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     if args.cmd == "teragen":
         from terasort_spark.sources.teragen import write_tera_files
 
-        paths = write_tera_files(
-            eng.teragen(args.rows, args.partitions), args.out
-        )
+        try:
+            paths = write_tera_files(
+                eng.teragen(args.rows, args.partitions), args.out
+            )
+        except FileExistsError as e:
+            return _refused(e)
         out = {"rows": args.rows, "files": len(paths)}
         if args.checksum:
             from terasort_spark.sources.teragen import checksum, read_tera_files
@@ -116,7 +126,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         )
 
         df = read_tera_files(eng.spark, args.input)
-        paths = write_tera_files(terasort(df, args.partitions), args.out)
+        try:
+            paths = write_tera_files(terasort(df, args.partitions), args.out)
+        except FileExistsError as e:
+            return _refused(e)
         print(json.dumps({"files": len(paths)}))
         return 0
 

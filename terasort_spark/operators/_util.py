@@ -42,24 +42,6 @@ def scratch_dir(spark, name: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"terasort_spark_{name}_{app}")
 
 
-# Token-hash dial for the sketch/LSH family (dedup_minhash,
-# agg_heavyhitters): "md5" (default) keeps every bucket SQL-replayable in
-# DuckDB — the exact-oracle mode the driver grades; "xxhash64" is the
-# production mode for a 100 TB scan-bound corpus (single JVM-intrinsic
-# 64-bit hash instead of a 128-bit digest + hex slicing — measured 1.6×
-# cheaper on dedup_minhash, 2.4× on agg_heavyhitters at sf0.1,
-# BASELINE.md). The bucket/banding STRUCTURE is hash-agnostic; a test
-# pins that both modes produce identical dedup decisions at sf0.01.
-TOKEN_HASH_CONF = "spark.terasort_spark.tokenHash"
-
-
-def token_hash_mode(spark) -> str:
-    mode = spark.conf.get(TOKEN_HASH_CONF, "md5")
-    if mode not in ("md5", "xxhash64"):
-        raise ValueError(f"{TOKEN_HASH_CONF} must be md5|xxhash64, got {mode!r}")
-    return mode
-
-
 # Micro-batch shuffle/state width for the streaming operator family
 # (r12 optimization). Structured Streaming pins its STATE partition
 # count to spark.sql.shuffle.partitions at query start — AQE never
@@ -70,17 +52,9 @@ def token_hash_mode(spark) -> str:
 # fresh-JVM medians): stream_transformwithstate 13.1 s @ 32 -> 7.3 @ 8
 # -> 6.1 @ 16, 12.2 @ 4; stream_source_pyds_dist 17.0 @ 32 -> 6.3 @ 16
 # — per-partition state init dominates above ~16, per-key round-trip
-# serialization dominates below ~8. The dial: explicit conf wins
-# (production streams size state partitions to the cluster's executor
-# count); default adapts to the session's parallelism, capped at the
-# measured local optimum.
-STREAM_SHUFFLE_CONF = "spark.terasort_spark.streamShufflePartitions"
-
-
+# serialization dominates below ~8. The width adapts to the session's
+# parallelism, capped at the measured local optimum.
 def stream_shuffle_width(spark) -> int:
-    explicit = spark.conf.get(STREAM_SHUFFLE_CONF, None)
-    if explicit:
-        return int(explicit)
     return max(4, min(16, spark.sparkContext.defaultParallelism))
 
 
@@ -122,6 +96,20 @@ def o_rnd(expr: str, alias: str | None = None, nd: int = 4) -> str:
     s = 10**nd
     sql = f"floor(({expr}) * {s} + 0.5) / {s}"
     return f"{sql} AS {alias}" if alias else sql
+
+
+def hex_int(hex_col: Column, nibbles: int, start: int = 1) -> Column:
+    """Integer value of ``nibbles`` hex digits of ``hex_col`` (an md5
+    digest) from 1-based position ``start``. Every md5-sliced hash
+    (tokens, sketches, Bloom positions) goes through this pair, so
+    DuckDB replays it exactly; ``nibbles`` <= 15 keeps the value inside
+    a signed 64-bit integer."""
+    return F.conv(F.substring(hex_col, start, nibbles), 16, 10).cast("long")
+
+
+def o_hex_int(hex_expr: str, nibbles: int, start: int = 1) -> str:
+    """DuckDB twin of ``hex_int`` (DuckDB has no conv())."""
+    return f"CAST('0x' || substr({hex_expr}, {start}, {nibbles}) AS BIGINT)"
 
 
 def dsum(col: Column, alias: str, nd: int = 4) -> Column:

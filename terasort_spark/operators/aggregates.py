@@ -15,12 +15,13 @@ from pyspark.sql import functions as F
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import (
     dsum,
+    hex_int,
     o_dsum,
+    o_hex_int,
     o_ravg,
     o_rnd,
     ravg,
     rnd,
-    token_hash_mode,
 )
 from terasort_spark.registry import register
 
@@ -287,21 +288,12 @@ def _cm_bucket(tok_md5, depth):
     8*d (chars 1-3 / 9-11 / 17-19 / 25-27 of the 32-char digest), i.e.
     12 independent digest bits, folded mod CM_WIDTH. md5 replaces the
     original murmur3 so the cells replay bit-for-bit in DuckDB — the
-    dedup_minhash r6 pattern (llm_dedup.py); structure is hash-agnostic
-    for a 100 TB fast-hash swap."""
-    return F.pmod(
-        F.conv(F.substring(tok_md5, depth * 8 + 1, 3), 16, 10).cast("int"),
-        F.lit(CM_WIDTH),
-    )
+    dedup_minhash r6 pattern (llm_dedup.py)."""
+    return F.pmod(hex_int(tok_md5, 3, depth * 8 + 1), F.lit(CM_WIDTH))
 
 
 def _cm_bucket_sql(h, depth):
-    start = depth * 8 + 1
-    nibs = " + ".join(
-        f"(strpos('0123456789abcdef', substr({h},{start + j},1))-1)*{16 ** (2 - j)}"
-        for j in range(3)
-    )
-    return f"(({nibs}) % {CM_WIDTH})"
+    return f"({o_hex_int(h, 3, depth * 8 + 1)} % {CM_WIDTH})"
 
 
 def _heavyhitters_oracle() -> str:
@@ -377,25 +369,14 @@ def agg_heavyhitters(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint(eager=False)
     )
-    # Hash dial (r6 VERDICT task 4): md5 once per distinct token +
-    # CM_DEPTH cheap slice/mod projections (default, DuckDB-replayable)
-    # — or, for the 100 TB scan-bound path, CM_DEPTH seeded xxhash64
-    # calls (JVM intrinsic, no hex digest materialized). Sketch
-    # structure (depth x width, min-estimate) identical.
-    if token_hash_mode(spark) == "xxhash64":
-        def bucket(i):
-            return F.pmod(F.xxhash64(F.lit(i), F.col("tok")), F.lit(CM_WIDTH))
-    else:
-        h = F.md5(F.col("tok"))
-
-        def bucket(i):
-            return _cm_bucket(h, i)
-
+    # md5 once per distinct token + CM_DEPTH cheap slice/mod
+    # projections, all DuckDB-replayable.
+    h = F.md5(F.col("tok"))
     cells = F.array(
         *[
             F.struct(
                 F.lit(i).alias("depth"),
-                bucket(i).cast("int").alias("bucket"),
+                _cm_bucket(h, i).cast("int").alias("bucket"),
             )
             for i in range(CM_DEPTH)
         ]

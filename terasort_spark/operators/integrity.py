@@ -16,7 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import DEC, rnd, scratch_dir
+from terasort_spark.operators._util import DEC, hex_int, o_hex_int, rnd, scratch_dir
 from terasort_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -167,9 +167,7 @@ WITH toks AS (
 ),
 placed AS (
   SELECT lang, tok,
-         (strpos('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 256
-       + (strpos('0123456789abcdef', substr(md5(tok), 2, 1)) - 1) * 16
-       + (strpos('0123456789abcdef', substr(md5(tok), 3, 1)) - 1) AS h
+         {o_hex_int("md5(tok)", 3)} AS h
   FROM toks WHERE length(tok) > 0
 )
 SELECT lang, h % {N_FEATURES} AS feature,
@@ -188,12 +186,7 @@ def ml_feature_hash(spark, sf_dir):
 
     The bucket is 3 md5 nibbles mod N_FEATURES — md5 replaces the
     production murmur3 so DuckDB replays bit-for-bit (the
-    agg_heavyhitters _cm_bucket pattern); the structure is
-    hash-agnostic, and spark.terasort_spark.tokenHash=xxhash64 swaps in
-    the JVM-intrinsic 64-bit hash for the 100 TB scan-bound path
-    (tests/test_hash_dial.py pins that per-lang token mass and distinct
-    mass are invariant under the swap — only the bucket ASSIGNMENT
-    moves).
+    agg_heavyhitters _cm_bucket pattern).
 
     Scale notes: explode stays pipelined in codegen; the groupBy key
     space is FIXED at |langs| x N_FEATURES (~320 cells), so partial
@@ -201,20 +194,11 @@ def ml_feature_hash(spark, sf_dir):
     The distinct count adds one (lang, feature, tok)-keyed exchange —
     bounded by vocabulary, not corpus. No per-doc vectors materialize;
     a model trainer consumes (feature, count) pairs directly."""
-    from terasort_spark.operators._util import token_hash_mode
-
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = d.select(
         "lang", F.explode(F.split(F.lower("text"), " ")).alias("tok")
     ).filter(F.length("tok") > 0)
-    if token_hash_mode(spark) == "xxhash64":
-        raw = F.pmod(F.xxhash64("tok"), F.lit(N_FEATURES)).cast("int")
-    else:
-        raw = F.pmod(
-            F.conv(F.substring(F.md5("tok"), 1, 3), 16, 10).cast("int"),
-            F.lit(N_FEATURES),
-        )
-    feat = raw.cast("bigint").alias("feature")
+    feat = F.pmod(hex_int(F.md5("tok"), 3), F.lit(N_FEATURES)).alias("feature")
     return toks.select("lang", feat, "tok").groupBy("lang", "feature").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.countDistinct("tok").cast("bigint").alias("n_distinct"),

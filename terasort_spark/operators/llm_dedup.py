@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import o_rnd, rnd, token_hash_mode
+from terasort_spark.operators._util import hex_int, o_hex_int, o_rnd, rnd
 from terasort_spark.registry import register
 
 N_HASHES = 32  # minhash signature length
@@ -74,8 +74,9 @@ def lsh_signatures(spark, sf_dir):
     ``(sig, buckets)``: ``sig`` carries doc_id, toks and the mh0..mh{N}
     signature columns; ``buckets`` is (doc_id, band, bucket).
 
-    signature: one xxhash64 per token, re-mixed into 32 "permutations"
-    by cheap integer murmur3 (fully deterministic, no RNG state);
+    signature: one 28-bit md5 slice per token, re-mixed into 32
+    "permutations" by universal hashing (fully deterministic, no RNG
+    state);
     banding: 4 bands x 8 rows (P(candidate) = 1-(1-s^8)^4 ~ 0.89 at
     s=0.9 but only ~0.07 at this corpus's 0.6 median overlap — the knob
     that keeps candidates sub-quadratic on high-overlap data);
@@ -102,7 +103,6 @@ def lsh_signatures_df(docs):
     factor that lets STREAMING micro-batches compute the exact same
     signatures/band buckets as the batch corpus pass
     (wave10.dedup_stream_lsh signs each arriving batch with this)."""
-    spark = docs.sparkSession
     d = docs.select(
         "doc_id", F.array_distinct(F.split(F.lower("text"), " ")).alias("toks")
     )
@@ -113,22 +113,12 @@ def lsh_signatures_df(docs):
     # Cuts per-token hashing work by N_HASHES x without changing the
     # scheme's guarantees (each mix is an independent uniform function
     # of the token), and makes the ENTIRE candidate pipeline
-    # SQL-replayable (the r6 exact-oracle upgrade; was xxhash64 +
-    # murmur3, which have no DuckDB twins). 28 bits keeps every mix32
-    # input below 2^31, the mixer's bit-exactness precondition.
-    # The hash itself is a DIAL (r6 VERDICT task 4): md5 (default) for
-    # oracle parity, xxhash64 (spark.terasort_spark.tokenHash) for the
-    # 100 TB production path — same 28-bit range, same banding
-    # structure, ~1.6x cheaper per scan (BASELINE.md).
-    if token_hash_mode(spark) == "xxhash64":
-        tok28 = lambda t: F.pmod(F.xxhash64(t), F.lit(1 << 28))  # noqa: E731
-    else:
-        tok28 = lambda t: F.conv(  # noqa: E731
-            F.substring(F.md5(t), 1, 7), 16, 10
-        ).cast("long")
-    d = d.withColumn("th", F.transform(F.col("toks"), tok28)).localCheckpoint(
-        eager=False
-    )
+    # SQL-replayable: md5 is the one token hash DuckDB can replay.
+    # 28 bits keeps every mix32 input below 2^31, the mixer's
+    # bit-exactness precondition.
+    d = d.withColumn(
+        "th", F.transform(F.col("toks"), lambda t: hex_int(F.md5(t), 7))
+    ).localCheckpoint(eager=False)
     # ^ pin the hashed-token arrays: Catalyst collapses projections, so
     # without the checkpoint every one of the N_HASHES signature
     # columns would re-run the md5 pass over every token (32x the
@@ -280,15 +270,7 @@ def lsh_buckets_sql() -> str:
     ``buckets(doc_id, band, bucket)``; ``d`` (doc_id, toks), ``th_t``
     and ``sig`` (mh0..mh31) stay visible to callers. Shared by
     lsh_candidates_sql and wave8's cross-corpus fuzzy-ingest oracle."""
-    h28 = (
-        "((strpos('0123456789abcdef', substr(md5(t),1,1))-1)*16777216"
-        " + (strpos('0123456789abcdef', substr(md5(t),2,1))-1)*1048576"
-        " + (strpos('0123456789abcdef', substr(md5(t),3,1))-1)*65536"
-        " + (strpos('0123456789abcdef', substr(md5(t),4,1))-1)*4096"
-        " + (strpos('0123456789abcdef', substr(md5(t),5,1))-1)*256"
-        " + (strpos('0123456789abcdef', substr(md5(t),6,1))-1)*16"
-        " + (strpos('0123456789abcdef', substr(md5(t),7,1))-1))"
-    )
+    h28 = o_hex_int("md5(t)", 7)
     mh_cols = ",\n           ".join(
         f"list_min(list_transform(th, h -> (h * {PERM_A[i]} + {PERM_B[i]})"
         f" % {BUCKET_M})) AS mh{i}"
@@ -402,10 +384,9 @@ def dedup_minhash(spark, sf_dir):
     buckets are polynomial folds — all engine-portable integer
     arithmetic, so the ENTIRE pipeline (banding, per-bucket candidate
     slices, the 8-smallest cap, exact-Jaccard verification) replays
-    bit-for-bit in SQL (_minhash_oracle). The md5 pass costs ~1.6x the
-    old xxhash64 at sf0.1 (BASELINE.md) — the price of cross-engine
-    verifiability; swap a fast 64-bit hash back only if profiling
-    shows a 100 TB scan is hash-bound, the scheme is hash-agnostic.
+    bit-for-bit in SQL (_minhash_oracle). md5 is the token hash
+    because DuckDB can replay it; the scheme itself only needs a
+    uniform hash.
 
     Verification is capped at 8 candidate partners per doc (see
     minhash_pairs.per_doc_cap — per-bucket nearest-smaller ids, then
@@ -430,7 +411,7 @@ WITH ints_t AS (
     SELECT doc_id,
            list_transform(
                list_distinct(string_split(lower(text), ' ')),
-               t -> (strpos('0123456789abcdef', substr(md5(t),1,1))-1)*4096 + (strpos('0123456789abcdef', substr(md5(t),2,1))-1)*256 + (strpos('0123456789abcdef', substr(md5(t),3,1))-1)*16 + (strpos('0123456789abcdef', substr(md5(t),4,1))-1)*1) AS ints
+               t -> {o_hex_int("md5(t)", 4)}) AS ints
     FROM documents
 ),
 votes AS (
@@ -466,26 +447,18 @@ def dedup_simhash(spark, sf_dir):
 
     Exact-oracle upgrade (round 6): the per-token hash is the first 16
     bits of md5 — identical in both engines — so the ±1 bit votes are
-    exact integer sums and the whole fingerprint replays in SQL (was
-    xxhash64, which has no DuckDB twin). The token hash is the r6 DIAL
-    (spark.terasort_spark.tokenHash): md5 (default) for oracle parity,
-    xxhash64 for the 100 TB scan-bound path — the scheme only needs
-    uniformity, and the structure (one hash per DISTINCT token, all JVM
-    higher-order functions, zero shuffles before the fingerprint
-    groupBy) is hash-agnostic; tests/test_hash_dial.py pins that
-    exact-duplicate texts land on one fingerprint in BOTH modes."""
+    exact integer sums and the whole fingerprint replays in SQL. One
+    hash per DISTINCT token, all JVM higher-order functions, zero
+    shuffles before the fingerprint groupBy; tests/test_token_hash.py
+    pins that exact-duplicate texts land on one fingerprint."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id", F.array_distinct(F.split(F.lower("text"), " ")).alias("toks")
     )
     # For each bit b: +1 if token-hash bit set else -1; sum over tokens;
     # fingerprint bit = 1 iff sum > 0. All JVM higher-order functions.
-    if token_hash_mode(spark) == "xxhash64":
-        tok16 = lambda t: F.pmod(F.xxhash64(t), F.lit(1 << 16))  # noqa: E731
-    else:
-        tok16 = lambda t: F.conv(  # noqa: E731
-            F.substring(F.md5(t), 1, 4), 16, 10
-        ).cast("long")
-    d = d.withColumn("th", F.transform(F.col("toks"), tok16))
+    d = d.withColumn(
+        "th", F.transform(F.col("toks"), lambda t: hex_int(F.md5(t), 4))
+    )
 
     def make_vote(b):
         # HOF merge lambdas must be exactly 2-ary; bind b via closure

@@ -238,27 +238,16 @@ FROM documents
 def text_fingerprint(spark, sf_dir):
     """Document fingerprints: an order-insensitive content hash (sorted
     distinct token set → md5) for exact-content dedup modulo word order,
-    and a prefix hash for fast candidate blocking.
-
-    The hash is the tokenHash dial: md5 (default, DuckDB-replayable) or
-    xxhash64 rendered as a decimal string for the 100 TB path — the
-    fingerprint only needs to partition documents by content, and
-    tests/test_hash_dial.py pins that both modes induce the IDENTICAL
-    doc partition on the corpus."""
-    from terasort_spark.operators._util import token_hash_mode
-
+    and a prefix hash for fast candidate blocking. Both are md5, so
+    DuckDB replays them."""
     d = table(spark, sf_dir, "documents")
     canon = F.concat_ws(
         " ", F.sort_array(F.array_distinct(F.split(F.lower("text"), " ")))
     )
-    if token_hash_mode(spark) == "xxhash64":
-        fp = lambda c: F.xxhash64(c).cast("string")  # noqa: E731
-    else:
-        fp = F.md5
     return d.select(
         "doc_id",
-        fp(canon).alias("content_fp"),
-        fp(F.substring("text", 1, 64)).alias("prefix_fp"),
+        F.md5(canon).alias("content_fp"),
+        F.md5(F.substring("text", 1, 64)).alias("prefix_fp"),
     )
 
 
@@ -538,27 +527,16 @@ def text_winnowing(spark, sf_dir):
     scan stage (no join, no self-shuffle); the only shuffle is the
     per-document window on (doc_id, pos), linear in corpus token count,
     and fingerprints are md5 STRINGS so the min-window semantics are
-    byte-identical across engines (under the tokenHash dial's xxhash64
-    production mode the k-gram hash is a plain LONG through the window
-    and only the emitted fp_min is rendered as a string — the selection
-    guarantee is hash-agnostic, and identical documents still select
-    identical fingerprint sets, tests/test_hash_dial.py). Window minima
-    over a W-row frame are O(n·W) worst case but W is a small constant —
-    Spark's sliding-frame evaluator never rescans the document."""
-    from terasort_spark.operators._util import token_hash_mode
-
-    xx = token_hash_mode(spark) == "xxhash64"
+    byte-identical across engines. Window minima over a W-row frame
+    are O(n·W) worst case but W is a small constant — Spark's
+    sliding-frame evaluator never rescans the document."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.lower("text"), " ").alias("toks")
     )
     d = d.withColumn("n", F.size("toks")).where(
         F.col("n") >= _WINNOW_K + _WINNOW_W - 1
     )
-    hash_expr = (
-        f"xxhash64(concat_ws(' ', slice(toks, i, {_WINNOW_K})))"
-        if xx
-        else f"md5(concat_ws(' ', slice(toks, i, {_WINNOW_K})))"
-    )
+    hash_expr = f"md5(concat_ws(' ', slice(toks, i, {_WINNOW_K})))"
     kg = d.select(
         "doc_id",
         (F.col("n") - _WINNOW_K + 1).alias("nk"),
@@ -577,10 +555,9 @@ def text_winnowing(spark, sf_dir):
         # posexplode is 0-based; full windows only (0-based pos <= nk - W)
         F.col("pos") <= F.col("nk") - _WINNOW_W
     )
-    fp_min = F.min("wmin")
     return sel.groupBy("doc_id").agg(
         F.countDistinct("wmin").alias("n_fp"),
-        (fp_min.cast("string") if xx else fp_min).alias("fp_min"),
+        F.min("wmin").alias("fp_min"),
     )
 
 

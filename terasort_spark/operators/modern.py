@@ -34,7 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import rnd, scratch_dir
+from terasort_spark.operators._util import hex_int, o_hex_int, rnd, scratch_dir
 from terasort_spark.registry import register
 
 # Chunking geometry: 16-token windows, stride 12 (25% overlap).
@@ -404,8 +404,7 @@ _SKR_POW = f"{1 << 60}.0E0"  # 2^60 exactly representable as a double
     oracle=f"""
 WITH h AS (
   SELECT DISTINCT o_orderpriority AS pr,
-         CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15)
-              AS BIGINT) AS h
+         {o_hex_int("md5(CAST(o_custkey AS VARCHAR))", 15)} AS h
   FROM orders
 ),
 samp AS (
@@ -464,13 +463,7 @@ def agg_sketch_rollup(spark, sf_dir):
     h = (
         o.select(
             F.col("o_orderpriority").alias("pr"),
-            F.conv(
-                F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
+            hex_int(F.md5(F.col("o_custkey").cast("string")), 15).alias("h"),
         )
         .distinct()
     )

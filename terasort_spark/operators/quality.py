@@ -114,8 +114,8 @@ def text_ccnet_bucket(spark, sf_dir):
     # session (bench re-invokes this query; a fresh newSession() each
     # call leaked one JVM SessionState per run), and the caller's FULL
     # explicitly-set runtime conf map is mirrored each call via SET —
-    # not a 3-key allowlist — so behavior dials (tokenHash, ANSI, time
-    # zone, partitioning sweeps) all propagate. Static/non-modifiable
+    # not a 3-key allowlist — so behavior dials (ANSI, time zone,
+    # partitioning sweeps) all propagate. Static/non-modifiable
     # confs are skipped; a key the caller UNSET since the last call is
     # not un-mirrored (document: the child only ever converges toward
     # the caller's current SET state).
@@ -553,17 +553,9 @@ def text_dsir_weights(spark, sf_dir):
     d = table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
-    from terasort_spark.operators._util import token_hash_mode
-
     toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
-    # bucket id: 2 md5 hex chars (default, DuckDB-replayable) or
-    # xxhash64 mod 256 under the production tokenHash dial — the bucket
-    # value never reaches the output, so only the ASSIGNMENT moves;
-    # per-doc n_toks is dial-invariant (tests/test_hash_dial.py)
-    if token_hash_mode(spark) == "xxhash64":
-        bucket = F.pmod(F.xxhash64("w"), F.lit(_DSIR_B)).cast("string")
-    else:
-        bucket = F.substring(F.md5("w"), 1, 2)
+    # bucket id: 2 md5 hex chars, DuckDB-replayable
+    bucket = F.substring(F.md5("w"), 1, 2)
     occ = d.select(
         "doc_id", "lang", F.explode(toks).alias("w")
     ).select("doc_id", "lang", bucket.alias("b"))

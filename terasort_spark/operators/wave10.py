@@ -12,7 +12,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import scratch_dir
+from terasort_spark.operators._util import scoped_confs, scratch_dir
 from terasort_spark.registry import register
 from terasort_spark.sources.avro_ds import AvroDataSource, write_avro
 
@@ -343,24 +343,14 @@ def dedup_stream_lsh(spark, sf_dir):
     # Micro-batch shuffles here move batch-sized (not corpus-sized)
     # data through many small jobs; 32-way exchanges are pure task
     # overhead at that volume. Scope a smaller width to this operator
-    # and restore the session dial after (results are order-free, so
-    # the width never affects the hash). Only the EXPLICIT conf is
-    # shared with the rest of the streaming family (a production
-    # stream sizes it to executor count); the default here deliberately
-    # diverges from _util.stream_shuffle_width's adaptive clamp — 8 is
-    # the measured local sweet spot for these ~batch-row jobs.
-    from terasort_spark.operators._util import STREAM_SHUFFLE_CONF
-
-    _explicit = spark.conf.get(STREAM_SHUFFLE_CONF, None)
-    _width = _explicit if _explicit and _explicit.strip() else "8"
-    _prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _width)
-    try:
+    # (results are order-free, so the width never affects the hash).
+    # 8 deliberately diverges from _util.stream_shuffle_width's adaptive
+    # clamp: it is the measured local sweet spot for these ~batch-row
+    # jobs.
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": 8}):
         return _stream_lsh_run(
             spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_sp)
 
 
 def _stream_lsh_run(spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged):

@@ -17,14 +17,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import token_hash_mode
+from terasort_spark.operators._util import hex_int, o_hex_int
 from terasort_spark.operators.llm_dedup import (
     BUCKET_M,
     N_HASHES,
     PERM_A,
     PERM_B,
 )
-from terasort_spark.operators.wave8 import _hex_int_sql
 from terasort_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -32,7 +31,7 @@ from terasort_spark.registry import register
 
 
 def _src_minhash_oracle() -> str:
-    h28 = _hex_int_sql("md5(t)", 7)
+    h28 = o_hex_int("md5(t)", 7)
     mh_cols = ",\n         ".join(
         f"min((h * {PERM_A[i]} + {PERM_B[i]}) % {BUCKET_M}) AS mh{i}"
         for i in range(N_HASHES)
@@ -93,15 +92,7 @@ def sim_source_minhash(spark, sf_dir):
     WITHOUT touching raw data again, where exact Jaccard needs a
     token-level join of both corpora. The exact side here is the
     oracle's ground truth AND stays feasible because sources are few;
-    at scale you keep only the sketch. Token hash rides the
-    md5/xxhash64 dial (spark.terasort_spark.tokenHash) like
-    dedup_minhash."""
-    if token_hash_mode(spark) == "xxhash64":
-        tok28 = lambda t: F.pmod(F.xxhash64(t), F.lit(1 << 28))  # noqa: E731
-    else:
-        tok28 = lambda t: F.conv(  # noqa: E731
-            F.substring(F.md5(t), 1, 7), 16, 10
-        ).cast("long")
+    at scale you keep only the sketch."""
     st = (
         table(spark, sf_dir, "documents")
         .select(
@@ -112,7 +103,7 @@ def sim_source_minhash(spark, sf_dir):
         )
         .distinct()
     )
-    th = st.select("source", tok28(F.col("t")).alias("h"))
+    th = st.select("source", hex_int(F.md5("t"), 7).alias("h"))
     sig = th.groupBy("source").agg(
         *[
             F.min(

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import rnd, scratch_dir
+from terasort_spark.operators._util import hex_int, o_hex_int, rnd, scratch_dir
 from terasort_spark.registry import register
 
 _ROCKSDB_PROVIDER = (
@@ -421,8 +421,7 @@ FROM (
                   ELSE {_HLL_WBITS + 1} - length(bin(h // {_HLL_M}))
              END AS rho
       FROM (
-        SELECT CAST('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 15)
-                    AS BIGINT) AS h
+        SELECT {o_hex_int(f"md5(CAST({c} AS VARCHAR))", 15)} AS h
         FROM orders WHERE {c} IS NOT NULL
       )
     ) GROUP BY b
@@ -457,9 +456,7 @@ def agg_hll_exact(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
     outs = []
     for c in _HLL_COLS:
-        h = F.conv(
-            F.substring(F.md5(F.col(c).cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        h = hex_int(F.md5(F.col(c).cast("string")), 15)
         w = F.shiftright(h, _HLL_P)
         rho = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
             F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
@@ -524,6 +521,7 @@ def _kmv_oracle() -> str:
     from terasort_spark.operators._util import o_rnd
 
     k = _KMV_K
+    h = o_hex_int("md5(CAST(o_custkey AS VARCHAR))", 15)
     parts = []
     for a, b in _KMV_PAIRS:
         est = lambda n, th: (  # noqa: E731
@@ -544,9 +542,9 @@ SELECT '{a}|{b}' AS pair, theta, n_int_sample,
   )},
   exact_a, exact_b, exact_int
 FROM (
-  WITH ha AS (SELECT DISTINCT CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
+  WITH ha AS (SELECT DISTINCT {h} AS h
               FROM orders WHERE o_orderstatus = '{a}'),
-       hb AS (SELECT DISTINCT CAST('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
+       hb AS (SELECT DISTINCT {h} AS h
               FROM orders WHERE o_orderstatus = '{b}'),
        ka AS (SELECT h FROM ha ORDER BY h LIMIT {k}),
        kb AS (SELECT h FROM hb ORDER BY h LIMIT {k}),
@@ -616,13 +614,7 @@ def agg_kmv_theta(spark, sf_dir):
         o.filter(F.col("o_orderstatus").isin(statuses))
         .select(
             F.col("o_orderstatus").alias("s"),
-            F.conv(
-                F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h"),
+            hex_int(F.md5(F.col("o_custkey").cast("string")), 15).alias("h"),
         )
         .distinct()
         .groupBy("h")

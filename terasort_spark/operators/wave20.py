@@ -30,7 +30,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import o_rnd, rnd
+from terasort_spark.operators._util import hex_int, o_hex_int, o_rnd, rnd
 from terasort_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -311,17 +311,11 @@ _BI_SPLIT = 300  # standing corpus: doc_id < 300; new batch: the rest
 def _bi_pos(md5col, i: int):
     # 3 hex nibbles at digest offset 8*i — 12 independent digest bits,
     # the agg_heavyhitters md5-slice pattern
-    return F.conv(F.substring(md5col, i * 8 + 1, 3), 16, 10).cast("bigint")
+    return hex_int(md5col, 3, i * 8 + 1)
 
 
 def _bi_pos_sql(h: str, i: int) -> str:
-    start = i * 8 + 1
-    nibs = " + ".join(
-        f"(strpos('0123456789abcdef', substr({h},{start + j},1))-1)"
-        f"*{16 ** (2 - j)}"
-        for j in range(3)
-    )
-    return f"({nibs})"
+    return o_hex_int(h, 3, i * 8 + 1)
 
 
 def _bloom_ingest_oracle() -> str:

@@ -23,7 +23,14 @@ import shutil
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import DEC, o_rnd, rnd, scratch_dir
+from terasort_spark.operators._util import (
+    DEC,
+    hex_int,
+    o_hex_int,
+    o_rnd,
+    rnd,
+    scratch_dir,
+)
 from terasort_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -67,35 +74,19 @@ _BLOOM_M_SQL = (
 )
 
 
-def _hex_int_sql(expr: str, nibbles: int) -> str:
-    """DuckDB integer from the first ``nibbles`` hex chars of ``expr``
-    (DuckDB lacks conv(); this is the llm_dedup h28 nibble-parse
-    pattern, parameterized)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({expr},{i + 1},1))-1)*{16 ** (nibbles - 1 - i)}"
-        for i in range(nibbles)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def _bloom_pos_sql(h_expr: str, k: int) -> str:
     """Bit position k for key ``h_expr``: 32 bits of md5(h || '#k')
     (16 bits would alias once the data-sized M exceeds 65536), mod the
     data-sized M (a scalar subquery over the `mm` CTE) — the same
     expression the Spark side evaluates with its driver-side M."""
     md5_expr = f"md5({h_expr} || '#{k}')"
-    return f"({_hex_int_sql(md5_expr, 8)} % (SELECT m FROM mm))"
+    return f"({o_hex_int(md5_expr, 8)} % (SELECT m FROM mm))"
 
 
 def _bloom_pos_spark(h_col, k: int, m_col):
     """``m_col`` is the data-sized M as a COLUMN (1-row scalar joined
     in), so sizing never needs a separate driver action."""
-    return F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(h_col, F.lit(f"#{k}"))), 1, 8), 16, 10
-        ).cast("long"),
-        m_col,
-    )
+    return F.pmod(hex_int(F.md5(F.concat(h_col, F.lit(f"#{k}"))), 8), m_col)
 
 
 def _probabilistic_oracle() -> str:
@@ -162,9 +153,8 @@ def dedup_probabilistic(spark, sf_dir):
     100 TB: the filter is M bits regardless of corpus size and ships as
     a ~M/W-entry broadcast map; per-batch cost is one scan of the batch
     plus an equi-join whose left side is only the Bloom-positive sliver
-    (true dups + ~(1-e^{{-Kn/M}})^K false positives). The md5 positions
-    are the oracle-parity mode; production swaps xxhash64 exactly as the
-    tokenHash dial does for the other sketches."""
+    (true dups + ~(1-e^{{-Kn/M}})^K false positives). The positions are
+    md5 slices so DuckDB replays the filter bit-for-bit."""
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     h = F.md5("text").alias("h")
     # checkpoint pins ONE execution: the M-sizing aggregate, the

@@ -29,12 +29,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
-# Modules that register operators on import. Order matters: the driver
-# grades queries() entries in dict order with a bounded budget, so modules
-# whose queries lack CORRECTNESS rows are imported first (the already-green
-# r1 entries are demoted to the back by _graded_last regardless).
+# Modules that register operators on import. Import order does not set
+# the order queries() yields; _graded_last does.
 _OPERATOR_MODULES = (
-    "terasort_spark.operators.aggregates",  # agg_collect: failed r1, regrade first
+    "terasort_spark.operators.aggregates",
     "terasort_spark.operators.sessions",
     "terasort_spark.functions.scalar",
     "terasort_spark.functions.collections",
@@ -123,22 +121,19 @@ def _load() -> None:
 
 
 # The driver grades registry entries in dict order with a bounded
-# per-round budget (~50), so entries without a hard CORRECTNESS row yet
-# must be yielded FIRST and already-proven ones last. The graded set is
-# derived from the committed CORRECTNESS_r*.json files themselves — the
-# rotation advances automatically each round, with two self-healing
-# rules: a query whose latest row FAILED re-fronts for regrade, and a
-# query graded rows-only before its oracle existed (err == "no_oracle"
-# but an oracle is registered now) re-fronts to earn a hash row.
+# per-round budget (~50), so queries are yielded stalest evidence first.
+# The evidence is read from the committed CORRECTNESS_r*.json files
+# themselves, so the rotation advances automatically each round. Two
+# self-healing rules fall out of the same sort: a query whose latest row
+# FAILED, and one graded rows-only before its oracle existed (err ==
+# "no_oracle" but an oracle is registered now), have no green round and
+# so lead with the never-graded queries.
 _graded_cache: dict | None = None
 
 
 def _graded_rounds() -> dict:
     """name -> round number of the query's LATEST green CORRECTNESS
-    row. Drives both membership (graded at all) and the staleness
-    rotation: with every query green, the ~50-slot per-round budget
-    re-grades the queries whose evidence is OLDEST (r11 VERDICT task
-    4 — ~50 rows dated r1-r3 under materially evolved code).
+    row.
 
     Files are ordered by PARSED round number, not filename sort: an
     unpadded name (CORRECTNESS_r2.json vs _r10.json) would otherwise
@@ -174,123 +169,14 @@ def _graded_rounds() -> dict:
             done[name] = rnum
         elif row.get("err") == "no_oracle" and name not in _ORACLES:
             done[name] = rnum  # rows-only by declared design, recorded
-    global _ever_cache
-    _ever_cache = frozenset(latest)
     _graded_cache = done
     return _graded_cache
 
 
-_ever_cache: frozenset | None = None
-
-
-def _ever_graded() -> frozenset:
-    """Names with ANY committed CORRECTNESS row (green or not)."""
-    _graded_rounds()
-    return _ever_cache or frozenset()
-
-
-def _graded_names() -> frozenset:
-    return frozenset(_graded_rounds())
-
-# Never-graded entries pulled to the very front of the rotation so this
-# round's 50-entry budget lands on the highest-evidence-value rows first:
-# the 21 TPC-H shapes, the regrade slots (sink_parquet's now-existing
-# oracle, stream_dedup's new batch twin), the perf-flagged graph/gemm/
-# audio/bigram queries, and every remaining source format.
-_GRADE_FIRST = (
-    "sink_parquet", "stream_dedup", "stream_stateful", "late_data",
-    "stream_join",
-    "tpch_q2_shape", "tpch_q3_shape", "tpch_q4_shape", "tpch_q5_shape",
-    "tpch_q6_shape", "tpch_q7_shape", "tpch_q8_shape", "tpch_q9_shape",
-    "tpch_q10_shape", "tpch_q11_shape", "tpch_q12_shape", "tpch_q13_shape",
-    "tpch_q14_shape", "tpch_q15_shape", "tpch_q16_shape", "tpch_q17_shape",
-    "tpch_q18_shape", "tpch_q19_shape", "tpch_q20_shape", "tpch_q21_shape",
-    "tpch_q22_shape", "corr_scalar_subquery",
-    "graph_pagerank", "graph_triangles", "sim_cosine_gemm", "text_bigram_lm",
-    "multimodal_audio", "multimodal_framesample",
-    "source_csv", "source_jsonl", "source_orc", "source_text",
-    "source_binaryfile", "source_csv_permissive",
-    "text_contamination", "pack_sequences", "sample_mixture",
-    "events_funnel", "events_retention", "events_rfm", "events_anomaly",
-    "text_vocab_coverage", "emb_norm_stats", "text_tfidf", "text_tokens",
-    "etl_upsert", "etl_scd2", "ml_linreg",
-    # Round-6 pin: the 39 queries declared before round 6 but never
-    # driver-graded (VERDICT r5 "What's missing" #1). Listing them here
-    # guarantees they hold rotation slots 1-39 regardless of how many
-    # NEW round-6 queries register in earlier modules — the ~50-row
-    # budget must land on this backlog first. (All already sit in the
-    # ungraded front; this pin just makes the order edit-proof.)
-    "ts_interpolate", "pipeline_pretrain_funnel", "events_attribution",
-    "agg_weighted_percentile", "agg_entropy", "fn_variant", "sql_pipe",
-    "fn_collate", "source_xml", "text_chunk", "dedup_chunk",
-    "sim_cosine_mrl", "agg_sketch_rollup", "join_bloom",
-    "join_range_binned", "events_transitions", "profile_table",
-    "dq_expectations", "text_bm25", "sim_tfidf_cosine",
-    "dedup_incremental", "split_dataset", "sample_weighted",
-    "scan_zorder", "sim_containment", "fn_geo", "join_spatial_grid",
-    "text_bpe_train", "text_bpe_encode", "scan_changefeed",
-    "ivm_incremental_agg", "sink_merge", "ml_logreg",
-    "sim_join_autoplan", "text_ccnet_bucket", "dedup_soft",
-    "sample_temperature", "scan_timetravel", "ml_kfold",
-    # Round-6 additions, highest-evidence-value first: with ~50 rows
-    # per round and 39 backlog slots ahead, the tail of this list may
-    # spill to round 7 — put the flagship-adjacent operators first.
-    "pipeline_rag_retrieval", "sink_bucketed", "emb_kmeans",
-    "text_boilerplate", "ml_naivebayes", "ml_stump", "text_novelty",
-    "sample_stratified_alloc", "agg_gini", "events_ab_test",
-    "dq_outliers", "text_keywords", "text_readability",
-    "scan_rowgroup_stats", "win_gaps_islands", "text_zipf_fit",
-    "text_compression_ratio", "ml_auc", "text_dsir_weights",
-    "topk_skyline", "ml_calibration", "dq_ks_drift",
-    "sink_compacted", "dq_k_anonymity", "dedup_simhash",
-    "dedup_minhash",
-)
-
-
-# Queries whose OUTPUT changed this round (operator and oracle edited
-# together): their latest committed CORRECTNESS row predates the change,
-# so they must re-front for a fresh hash row even though _graded_names()
-# still lists them as green. Reviewed each round; emptied once regraded.
-# (r11 set — dedup_stream_lsh, ml_rouge, scan_vacuum — all earned green
-# r11 rows; emptied.)
-_REGRADE = ()
-
-# Green rows graded before this round are "stale evidence" and re-front
-# AHEAD of never-graded new declarations (r11 VERDICT task 2: the 55
-# r3/r4 rows predate materially evolved shared helpers; the 50-slot
-# driver budget must chase them before freshly-declared queries, which
-# are already proven by this round's own full drive_driver sweep and
-# get their driver row next round). Budget arithmetic for r12: 2
-# oracle-upgrade slots (agg_sketch_rollup/agg_percentile_approx re-front
-# via the no_oracle rule) + 12 r3 rows + 36 of the 43 r4 rows = 50.
-_FRESH_CUT = 5
-
-
 def _graded_last(d: dict) -> dict:
+    """``d`` ordered by (round of the latest green row, else 0; name)."""
     rounds = _graded_rounds()
-    ever = _ever_graded()
-    graded = set(rounds) - set(_REGRADE)
-    # tier 0 — must-regrade: latest row FAILED, output changed this
-    # round (_REGRADE), or graded rows-only before its oracle existed
-    # (the no_oracle self-healing rule excludes these from `graded`).
-    urgent = [k for k in d if k in ever and k not in graded]
-    # tier 1 — stale green evidence (graded before _FRESH_CUT),
-    # oldest round first.
-    old = sorted(
-        (k for k in d if k in graded and rounds[k] < _FRESH_CUT),
-        key=lambda k: (rounds[k], k),
-    )
-    # tier 2 — never-graded new declarations (_GRADE_FIRST pins first).
-    new = [k for k in d if k not in ever]
-    pinned = [k for k in _GRADE_FIRST if k in new]
-    new = pinned + [k for k in new if k not in set(pinned)]
-    # tier 3 — remaining green rows, stalest first.
-    seen = set(urgent) | set(old) | set(new)
-    rest = sorted(
-        (k for k in d if k not in seen),
-        key=lambda k: (rounds.get(k, 0), k),
-    )
-    return {k: d[k] for k in urgent + old + new + rest}
+    return {k: d[k] for k in sorted(d, key=lambda k: (rounds.get(k, 0), k))}
 
 
 def queries() -> dict[str, QueryFn]:

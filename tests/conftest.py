@@ -23,7 +23,12 @@ _SLOW_MODULES = {
     "test_stream_recovery",
 }
 
-# Individual heavyweights (>13 s measured, none oracle-correctness):
+# Individual heavyweights (>13 s measured). None is an oracle-hash test,
+# but four are result-equivalence tests that only `make test-all` runs:
+# test_stream_left_outer_join_equals_batch,
+# test_stream_lsh_equals_sequential_batch_twin,
+# test_partition_count_invariance_of_sensitive_queries and
+# test_quartile_histogram_machinery_equals_ntile.
 _SLOW_TESTS = {
     "test_no_nested_output_types",  # builds all 341 plans: 178 s
     "test_stream_left_outer_join_equals_batch",  # 85 s + 46 s

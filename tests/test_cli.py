@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from terasort_spark.__main__ import main
 
 
@@ -87,17 +85,24 @@ def test_cli_teravalidate_fails_on_swapped_part_files(spark, tmp_path, capsys):
     assert report["sorted_within"] and not report["sorted_between"]
 
 
-def test_cli_terasort_refuses_existing_output(spark, tmp_path):
+def test_cli_terasort_refuses_existing_output(spark, tmp_path, capsys):
     """Like Hadoop's FileOutputFormat: part files left by an earlier
     write would be read back as data, so a second write into the same
-    directory fails instead."""
+    directory fails instead: exit 1 and one message line, no
+    traceback."""
     gen_dir, sort_dir = str(tmp_path / "gen"), str(tmp_path / "sorted")
     parts = ["--partitions", "2"]
-    assert main(["teragen", "--rows", "1000", "--out", gen_dir, *parts], spark=spark) == 0
+    gen = ["teragen", "--rows", "1000", "--out", gen_dir, *parts]
+    assert main(gen, spark=spark) == 0
     argv = ["terasort", "--input", gen_dir, "--out", sort_dir, *parts]
     assert main(argv, spark=spark) == 0
-    with pytest.raises(FileExistsError, match="already holds part"):
-        main(argv, spark=spark)
+    capsys.readouterr()
+    for refused in (gen, argv):
+        assert main(refused, spark=spark) == 1
+        err = capsys.readouterr().err.splitlines()
+        assert len(err) == 1, err
+        assert err[0].startswith("terasort_spark: ")
+        assert "already holds part-*.dat files" in err[0]
 
 
 def test_cli_list_query_explain(spark, sf_dir, capsys):

@@ -73,46 +73,21 @@ def test_engine_facade(spark, sf_dir):
 
 def test_grading_rotation_fronts_ungraded_queries():
     """The driver grades queries() in dict order with a ~50-entry
-    budget; since r12 the rotation is TIERED (registry._graded_last):
-    tier 0 = urgent regrades (latest row FAILED, output changed this
-    round, or graded rows-only before its oracle existed), tier 1 =
-    stale green rows (graded before _FRESH_CUT) oldest-first, tier 2 =
-    never-graded new declarations, tier 3 = remaining green rows
-    stalest-first. This test derives the expected tiers from the same
+    budget, so registry._graded_last yields the stalest evidence first:
+    one sort by (round of the latest green CORRECTNESS row, else 0;
+    name). This test derives the expected order from the same
     committed CORRECTNESS_r*.json files the rotation reads, so future
     driver rounds advance it without re-breaking the invariant."""
-    from terasort_spark import registry
-
-    order = list(registry.queries())
-    pos = {n: i for i, n in enumerate(order)}
-    rounds = registry._graded_rounds()
-    ever = registry._ever_graded()
-    graded = set(rounds) - set(registry._REGRADE)
-
-    def tier(n):
-        if n in ever and n not in graded:
-            return 0
-        if n in graded and rounds[n] < registry._FRESH_CUT:
-            return 1
-        if n not in ever:
-            return 2
-        return 3
-
-    tiers = [tier(n) for n in order]
-    assert tiers == sorted(tiers), [
-        (n, t) for n, t in zip(order, tiers)
-    ][:20]
-    # within tiers 1 and 3, stalest evidence first
-    for want in (1, 3):
-        rs = [rounds[n] for n, t in zip(order, tiers) if t == want]
-        assert rs == sorted(rs)
-    # Self-healing rules: a rows-only row whose oracle now exists, and
-    # a FAILED latest row, must both be tier 0 (before everything).
     import glob
     import json
     import os
     import re
 
+    from terasort_spark import registry
+
+    order = list(registry.queries())
+    pos = {n: i for i, n in enumerate(order)}
+    oracles = registry.oracle_sql()
     root = os.path.dirname(os.path.dirname(os.path.abspath(registry.__file__)))
     latest = {}
     paths = []
@@ -120,21 +95,31 @@ def test_grading_rotation_fronts_ungraded_queries():
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if m:
             paths.append((int(m.group(1)), path))
-    for _, path in sorted(paths):
+    for rnum, path in sorted(paths):
         data = json.load(open(path))
         for name, row in data.items():
             if isinstance(row, dict):
-                latest[name] = row
-    oracles = registry.oracle_sql()
-    for name, row in latest.items():
+                latest[name] = (rnum, row)
+    green = {
+        name: rnum
+        for name, (rnum, row) in latest.items()
+        if row.get("hash_match")
+        or (row.get("err") == "no_oracle" and name not in oracles)
+    }
+    assert order == sorted(order, key=lambda n: (green.get(n, 0), n))
+    assert list(oracles) == [n for n in order if n in oracles]
+    # Self-healing rules: a rows-only row whose oracle now exists, and
+    # a FAILED latest row, must both lead every green query.
+    first_green = min((pos[n] for n in green if n in pos), default=len(order))
+    for name, (_, row) in latest.items():
         if name not in pos:
             continue
         if row.get("err") == "no_oracle" and name in oracles:
-            assert tier(name) == 0, (
+            assert pos[name] < first_green, (
                 f"{name}: rows-only row but oracle now registered"
             )
         if not row.get("hash_match") and row.get("err") != "no_oracle":
-            assert tier(name) == 0, f"{name}: failed row must re-front"
+            assert pos[name] < first_green, f"{name}: failed row must re-front"
 
 
 def test_engine_explain_returns_plan_text(spark, sf_dir):

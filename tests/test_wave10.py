@@ -402,14 +402,12 @@ def test_stream_lsh_compaction_preserves_hash_and_bounds_files(
 
 
 def test_stream_lsh_honors_explicit_width_conf(spark, monkeypatch):
-    """dedup_stream_lsh scopes its micro-batch shuffle width the same
-    way the rest of the streaming family does: the explicit
-    streamShufflePartitions conf wins (a production stream sizes it to
-    executor count); absent that, the measured local default of 8.
-    Captured from inside the run body, and the session dial must be
-    restored afterwards."""
+    """dedup_stream_lsh runs its micro-batches under an explicit
+    shuffle width of 8 (the measured local sweet spot), captured from
+    inside the run body, and the session's own width must be restored
+    afterwards."""
     import terasort_spark.operators.wave10 as w10
-    from terasort_spark.operators._util import STREAM_SHUFFLE_CONF
+    from terasort_spark.operators._util import scoped_confs
 
     seen = {}
 
@@ -418,16 +416,8 @@ def test_stream_lsh_honors_explicit_width_conf(spark, monkeypatch):
         return sp.range(1)
 
     monkeypatch.setattr(w10, "_stream_lsh_run", fake_run)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-
-    w10.dedup_stream_lsh(spark, "/unused")
-    assert seen["width"] == "8"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-    spark.conf.set(STREAM_SHUFFLE_CONF, "12")
-    try:
+    # a session width other than 8, so the capture proves the scope
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": 3}):
         w10.dedup_stream_lsh(spark, "/unused")
-    finally:
-        spark.conf.unset(STREAM_SHUFFLE_CONF)
-    assert seen["width"] == "12"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+        assert seen["width"] == "8"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
