@@ -6,7 +6,10 @@
 #                 (~15 min), full-registry hash sweep at sf0.1 (~35 min),
 #                 partition-invariance 7v32 at sf0.01 (~30 min)
 #   make test     pytest suite at sf0.001 (~14 min)
-#   make bench    headline benchmark at sf0.1, one JSON line (~13 min)
+#   make bench    headline benchmark at sf0.1; the graded JSON line
+#                 (suite_median_total_s) prints last (~13 min)
+#   make bench-promote
+#                 fold the last full sweep into the bench baseline
 #
 # Each stage fails fast with a nonzero exit; "FAILS: 0" per stage is the
 # green state every round must re-establish mechanically.
@@ -31,10 +34,9 @@ test-all:
 bench:
 	python bench.py
 
-# Promote the last full sweep's sidecar to the committed snapshot.
-# bench.py never overwrites BENCH_QUERIES.json itself (r12 verdict
-# task 8: the driver's own loaded sweeps clobbered the committed
-# min-of-sweeps snapshot); replacing the gate/heavy-classifier input is
-# a deliberate act.
+# Fold the last full sweep's sidecar into BENCH_QUERIES.json, the one
+# bench baseline (chunking, rep counts, drift and the gate), per-query
+# min. bench.py never writes the baseline itself, so a run leaves the
+# tree clean and changing the gate's input is a deliberate act.
 bench-promote:
-	cp BENCH_QUERIES.latest.json BENCH_QUERIES.json
+	python scripts/fold_bench_snapshots.py BENCH_QUERIES.json BENCH_QUERIES.json BENCH_QUERIES.latest.json

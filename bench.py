@@ -1,60 +1,59 @@
 #!/usr/bin/env python
 """Benchmark harness (BASELINE.md §2 protocol).
 
-Runs every declared query at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], 3 repetitions after a
-discarded warm-up, and prints ONE compact JSON line at the end:
+Runs every registered query at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data, see SF_DIR) on local[$SPARK_GRAFT_CPUS] and prints three JSON
+lines: the full per-query map, the gate report, and LAST the line that
+is graded:
   {"metric": "suite_median_total_s", "value": N, "unit": "sec",
-   "queries": {name: median_sec, ...}, "sf": 0.1}
+   "queries": {15 slowest: median_sec}, "sf": 0.1, ...}
+$BENCH_ONLY (comma-separated names) restricts the run for local
+iteration.
 
-Each timing materializes the full result through the built-in no-op
-sink (every column of every row computed, guide §1.4) so the measured
-cost is the whole plan without the driver-side row transfer;
-BENCH_ACTION=collect restores the pre-r12 collect-timed protocol.
+Each timing writes the full result to the built-in no-op sink: every
+column of every row is computed and discarded inside Spark, so the
+measured cost is the whole plan without the driver-side row transfer
+(which scales with rows returned, not with cores). Every query runs one
+discarded warm-up rep, then REPS timed reps; the median is reported.
 
-Session-aging fix (round-10 verdict task 1): one SparkSession across
-308 queries x 4 reps accumulates JVM heap / plan-cache / listener state
-that inflated late-alphabet medians 4-17x on UNTOUCHED code
-(BENCH_r10: ts_autocorr 0.58 -> 9.71 s; isolated re-timing returned it
-to 1.0-1.9x). The suite now runs in CHUNKS of $BENCH_CHUNK (default 25)
-queries, each chunk in a FRESH child process (fresh JVM — stronger than
-newSession, which shares the aged context). Chunk startup cost is
-outside the per-query timings. 25, not 50: the r11 50-query sweep
-showed heavyweight STREAMING queries (stream_tws_*, dedup_stream_lsh —
-13-17 s each, RocksDB state + streaming listener turnover) age their
-chunk-mates measurably (win_runsum 3.5 s in-chunk vs 0.8 s solo);
-halving the chunk halves the blast radius at ~90 s extra JVM startup
-across the suite. Per-query medians are therefore comparable to
-isolated runs by construction.
+Fresh-JVM chunks: one SparkSession across the suite accumulates JVM
+heap, plan-cache and listener state that inflated late queries' medians
+4-17x on untouched code. The suite therefore runs in chunks of CHUNK
+queries, each in a FRESH child process (a fresh JVM — stronger than
+newSession, which shares the aged context). Chunk startup is outside the
+per-query timings, so medians are comparable to isolated runs. 25, not
+50: heavyweight streaming queries measurably age their chunk-mates, and
+a smaller chunk shrinks the blast radius for ~90 s of extra JVM starts.
 
-Gate (round-10 verdict task 7): after the sweep, every query is checked
-against OPERATIVE_BASELINE.json (per-query frozen best median +
-provenance; regenerate with scripts/make_operative_baseline.py). A
-query fails the gate when median > 2x its operative baseline AND > 1 s
-absolute.
+Baseline: BENCH_QUERIES.json holds one figure per query at one scale,
+the per-query minimum over every promoted sweep. It decides, per query:
+- Light reps: under LIGHT_S a query runs REPS_LIGHT timed reps (median
+  of 2 = their mean); at 0.2-1.5 s the rep spread is scheduling noise,
+  not plan cost, so 2 reps buy the same confidence at 2/3 the cost.
+- Heavy pairs: at or over HEAVY_S a query runs in a fresh JVM with one
+  same-weight neighbor instead of in a chunk. Back-to-back 10-20 s
+  streaming/LSH runs age every later chunk-mate; one neighbor is within
+  the measured aging tolerance and halves the JVM starts of singles.
+- Ambient drift: the median per-query ratio to the baseline. Host load
+  moves every query by a uniform ~1.1-1.25x, a real regression moves
+  single queries; >1.15 means "re-run before trusting absolute numbers".
+- The gate: a query fails when median > 2x its baseline AND > 1 s.
+Drift and the gate are only computed against a baseline at the run's
+scale factor; otherwise drift is null and the gate reports sf_mismatch.
 
-Budget discipline (r12 verdict task 1 — the r12 sweep timed out at both
-core counts before printing the line the driver grades):
-- The final suite_median_total_s line prints BEFORE the gate report, so
-  a timeout during adjudication can never eat the driver's line.
-- Gate adjudication is bounded: at most $BENCH_GATE_MAX_SOLO (default 5)
-  solo re-runs, worst ratio first; the burst-retry pause
-  $BENCH_GATE_RETRY_S defaults to 0 (the r12 default of 90 s per row was
-  unbounded on a loaded box). Rows past the cap are recorded
-  unadjudicated, not confirmed.
-- Sub-second-tail queries (previous median < $BENCH_LIGHT_S, default
-  1.5 s) run 2 timed reps instead of 3 (median of 2 = their mean; at
-  0.2-1.5 s the rep spread is scheduling noise, not plan cost).
-- Heavy queries (>= $BENCH_HEAVY_S) run in PAIRS of fresh JVMs instead
-  of singles (halves the untimed JVM-startup overhead; a single
-  same-weight neighbor is within the measured chunk-aging tolerance).
-- The chunk warm-up pre-pass runs the first query ONCE (plus its own
-  discarded rep-0 warm-up = 2 discarded executions, matching the
-  documented stabilize-by-third-execution probe; the old 2+1 discipline
-  spent one extra heavy execution per chunk).
-- A full sweep writes BENCH_QUERIES.latest.json; the committed
-  BENCH_QUERIES.json snapshot is only replaced deliberately
-  (`make bench-promote`), so a driver run leaves the tree clean.
+Gate adjudication: a chunk-sweep median can carry chunk-neighborhood
+noise, so each flagged query is RE-RUN SOLO in its own fresh JVM. The
+host also carries bursty external load that inflates a sweep and the
+solo right after it alike, so a still-over solo runs once more and the
+row is judged on the min of the two (two solos >2x apart mark it
+flaky). Only solo-confirmed rows fail the gate. At most MAX_SOLO rows,
+worst ratio first, are adjudicated; the rest are recorded
+unadjudicated, which bounds the gate's time so the graded line still
+prints within budget on a loaded box.
+
+A full sweep writes the sidecar BENCH_QUERIES.latest.json; the committed
+baseline is only changed by `make bench-promote`, which folds the
+sidecar into it, so a run leaves the tree clean.
 """
 
 from __future__ import annotations
@@ -71,36 +70,19 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-REPS = int(os.environ.get("BENCH_REPS", "3"))
-CHUNK = int(os.environ.get("BENCH_CHUNK", "25"))
-# Queries whose previously committed median sits under this threshold
-# run REPS_LIGHT timed reps (r12 verdict task 1: 2 reps for the
-# sub-second tail buys the same median confidence at 2/3 the cost).
-LIGHT_S = float(os.environ.get("BENCH_LIGHT_S", "1.5"))
-REPS_LIGHT = int(os.environ.get("BENCH_REPS_LIGHT", "2"))
+REPS = 3
+REPS_LIGHT = 2
+LIGHT_S = 1.5
+HEAVY_S = 3.0
+CHUNK = 25
+MAX_SOLO = 5
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# Timed action (r12 measurement fix, guide §1.4): "noop" writes the
-# result to the built-in no-op sink — every column of every row is
-# computed and discarded inside Spark, so the timing measures the
-# QUERY, not the driver-side row transfer. The previous protocol
-# ("collect") serialized the full result through py4j/pickle to the
-# Python driver: for large-result queries that single-threaded
-# transfer dominated (scan_project, 600k rows at sf0.1: 2.41 s
-# collect-timed vs 0.54 s noop-timed on identical code/plan) and it
-# scales with ROWS RETURNED, not with cores — polluting the driver's
-# core-count scaling measurement. BENCH_ACTION=collect reproduces the
-# old protocol; the last collect-protocol full sweep is kept in
-# BENCH_QUERIES_collect_protocol.json (see OPTIMIZATION_r12.md).
-ACTION = os.environ.get("BENCH_ACTION", "noop")
 _CHILD_MARK = "##BENCH_CHILD_RESULT##"
 
 
 def _run_df(df) -> None:
     """Execute one timed repetition of a query's DataFrame."""
-    if ACTION == "collect":
-        df.collect()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _sf_from_dir(d: str) -> float:
@@ -111,13 +93,18 @@ def _sf_from_dir(d: str) -> float:
         return -1.0
 
 
-def _prev_medians() -> dict[str, float]:
-    """Last committed full-sweep per-query medians (read-only)."""
+def _baseline() -> dict:
+    """The committed BENCH_QUERIES.json snapshot (read-only); {} if absent."""
     try:
         with open(os.path.join(REPO, "BENCH_QUERIES.json")) as f:
-            return json.load(f).get("queries", {})
+            return json.load(f)
     except (OSError, ValueError):
         return {}
+
+
+def _over(median: float, baseline: float) -> bool:
+    """The gate's failure test: over 2x the baseline and over 1 s."""
+    return median > 2 * baseline and median > 1.0
 
 
 def _run_chunk(names: list[str]) -> dict[str, float]:
@@ -128,14 +115,12 @@ def _run_chunk(names: list[str]) -> dict[str, float]:
     spark = get_spark(app_name="terasort-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
-    prev = _prev_medians()
+    prev = _baseline().get("queries", {})
     # JVM warm-up pre-pass: the chunk's first query runs ONCE, discarded,
     # so global one-time costs (codegen compiler JIT, parquet reader and
     # shuffle init) land outside ANY timed rep. Together with the
-    # per-query rep-0 warm-up the first timed rep is the third execution
-    # — the point the r10 probe measured rep times stabilizing
-    # (8.1 -> 1.8 s by the third execution). The old 2-run pre-pass
-    # spent one extra (heavy) execution per chunk for nothing.
+    # per-query rep-0 warm-up the first timed rep is the third execution,
+    # the point where rep times were measured to stabilize.
     try:
         _run_df(qs[names[0]](spark, SF_DIR))
     except Exception:  # pragma: no cover
@@ -144,8 +129,8 @@ def _run_chunk(names: list[str]) -> dict[str, float]:
     for name in names:
         fn = qs[name]
         times = []
-        # Sub-second-tail queries get REPS_LIGHT timed reps; anything
-        # previously >= LIGHT_S (or never benched) keeps the full REPS.
+        # Light queries get REPS_LIGHT timed reps; anything at or over
+        # LIGHT_S (or never benched) keeps the full REPS.
         n_reps = REPS_LIGHT if 0.0 < prev.get(name, -1.0) < LIGHT_S else REPS
         for rep in range(n_reps + 1):  # rep 0 = warm-up, discarded
             t0 = time.perf_counter()
@@ -175,7 +160,6 @@ def _spawn_chunk(names: list[str]) -> dict[str, float]:
         [sys.executable, os.path.abspath(__file__), "--chunk"] + names,
         capture_output=True,
         text=True,
-        env=os.environ.copy(),
         cwd=REPO,
     )
     for line in reversed(proc.stdout.splitlines()):
@@ -189,95 +173,52 @@ def _spawn_chunk(names: list[str]) -> dict[str, float]:
     return {}
 
 
-def _gate(medians: dict[str, float], adjudicate: bool = True) -> dict:
-    """Evaluate the >2x-and->1s gate against OPERATIVE_BASELINE.json.
-
-    Self-adjudication (r11 VERDICT task 1): a chunk-sweep median can
-    carry 4-17x chunk-neighborhood noise on untouched code (r10/r11
-    both recorded phantom rows later refuted by solo re-times). So any
-    query the sweep flags is RE-RUN SOLO here — its own fresh JVM, the
-    normal warm-up + 3 reps — and the row records both numbers plus a
-    `confirmed_solo` verdict. Only solo-confirmed rows count as real
-    regressions; the overall status reflects the confirmed count.
-    """
-    try:
-        with open(os.path.join(REPO, "OPERATIVE_BASELINE.json")) as f:
-            base = json.load(f)["queries"]
-    except (OSError, ValueError, KeyError):
-        return {"metric": "gate_over_2x", "status": "no_baseline_file"}
+def _gate(medians: dict[str, float], sf: float, baseline: dict) -> dict:
+    """Evaluate the >2x-and->1s gate against a same-scale baseline,
+    solo re-running flagged queries (see the module docstring)."""
+    if sf != baseline.get("sf"):
+        return {"metric": "gate_over_2x", "status": "sf_mismatch",
+                "sf": sf, "baseline_sf": baseline.get("sf")}
+    base = baseline.get("queries", {})
     over = {}
     for name, med in medians.items():
-        b = base.get(name, {}).get("median_s")
-        if b and med > 2 * b and med > 1.0:
+        b = base.get(name)
+        if b and _over(med, b):
             over[name] = {"median_s": med, "baseline_s": b,
                           "ratio": round(med / b, 2)}
-    # Bounded adjudication (r12 verdict task 1: the r12 gate ran
-    # unbounded-many 2-solo + 90 s cycles on a loaded box and timed out
-    # the whole bench at both core counts). At most BENCH_GATE_MAX_SOLO
-    # flagged rows are solo re-run, worst ratio first; the rest are
-    # recorded unadjudicated (visible, not silently confirmed).
-    try:
-        max_solo = int(os.environ.get("BENCH_GATE_MAX_SOLO", "5"))
-    except ValueError:
-        max_solo = 5
-    try:
-        delay = float(os.environ.get("BENCH_GATE_RETRY_S", "0"))
-    except ValueError:  # malformed env must not abort a finished sweep
-        print("# gate: bad BENCH_GATE_RETRY_S, using 0", file=sys.stderr)
-        delay = 0.0
     ranked = sorted(over, key=lambda n: over[n]["ratio"], reverse=True)
-    n_confirmed = n_unadjudicated = 0
-    if adjudicate and over:
-        for name in ranked[max_solo:]:
-            over[name]["adjudication_skipped"] = True
-            n_unadjudicated += 1
-        for name in ranked[:max_solo]:
-            row = over[name]
-            print(f"# gate: solo re-adjudicating {name} "
-                  f"(sweep {row['median_s']} s vs baseline "
-                  f"{row['baseline_s']} s)", file=sys.stderr)
-            row["load_1m"] = round(os.getloadavg()[0], 2)
-            solo = _spawn_chunk([name]).get(name)
-            row["solo_median_s"] = solo
-            if solo is None:
-                row["confirmed_solo"] = True  # crashed solo: real problem
-                n_confirmed += 1
-                continue
-            confirmed = bool(solo > 2 * row["baseline_s"] and solo > 1.0)
-            if confirmed:
-                # The host carries bursty EXTERNAL load that decays in
-                # ~minutes (documented in BASELINE.md): a burst inflates
-                # the sweep AND an immediately-following solo run the
-                # same way, so one hot solo is not evidence. Re-run
-                # (after an optional pause — default 0 so an unattended
-                # run stays bounded) and judge on the MIN of the two
-                # solo medians; rows where the two solos disagree >2x
-                # are additionally flagged flaky (r12 ADVICE) so an
-                # intermittent regression stays visible.
-                if delay > 0:
-                    print(f"# gate: {name} still over solo ({solo} s); "
-                          f"retrying once after {delay:.0f}s "
-                          f"(load_1m={os.getloadavg()[0]:.2f})",
-                          file=sys.stderr)
-                    time.sleep(delay)
-                solo2 = _spawn_chunk([name]).get(name)
-                row["solo_retry_s"] = solo2
-                row["load_1m_retry"] = round(os.getloadavg()[0], 2)
-                if solo2 is not None:
-                    if max(solo, solo2) > 2 * min(solo, solo2):
-                        row["flaky"] = True
-                    solo = min(solo, solo2)
-                confirmed = bool(solo > 2 * row["baseline_s"] and solo > 1.0)
-            row["solo_ratio"] = round(solo / row["baseline_s"], 2)
-            row["confirmed_solo"] = confirmed
-            n_confirmed += bool(row["confirmed_solo"])
+    for name in ranked[MAX_SOLO:]:
+        over[name]["adjudication_skipped"] = True
+    n_confirmed = 0
+    for name in ranked[:MAX_SOLO]:
+        row = over[name]
+        b = row["baseline_s"]
+        print(f"# gate: solo re-adjudicating {name} "
+              f"(sweep {row['median_s']} s vs baseline {b} s)",
+              file=sys.stderr)
+        row["load_1m"] = round(os.getloadavg()[0], 2)
+        solo = _spawn_chunk([name]).get(name)
+        row["solo_median_s"] = solo
+        if solo is not None and _over(solo, b):
+            solo2 = _spawn_chunk([name]).get(name)
+            row["solo_retry_s"] = solo2
+            row["load_1m_retry"] = round(os.getloadavg()[0], 2)
+            if solo2 is not None:
+                if max(solo, solo2) > 2 * min(solo, solo2):
+                    row["flaky"] = True
+                solo = min(solo, solo2)
+        if solo is not None:
+            row["solo_ratio"] = round(solo / b, 2)
+        # A solo run that crashed is a real problem: confirmed.
+        row["confirmed_solo"] = solo is None or _over(solo, b)
+        n_confirmed += row["confirmed_solo"]
     return {
         "metric": "gate_over_2x",
         "status": "PASS" if not n_confirmed else "FAIL",
         "n_checked": sum(1 for n in medians if n in base),
         "n_over": len(over),
         "n_confirmed_solo": n_confirmed,
-        "n_unadjudicated": n_unadjudicated,
+        "n_unadjudicated": max(0, len(ranked) - MAX_SOLO),
         "over": over,
     }
 
@@ -295,29 +236,19 @@ def main() -> None:
     if only:
         keep = {n.strip() for n in only.split(",")}
         names = [n for n in names if n in keep]
-    # HEAVY queries (>= BENCH_HEAVY_S in the previous committed snapshot)
-    # run in their own fresh JVMs: 4 back-to-back 10-20 s runs of a
-    # streaming/LSH workload measurably age every later chunk-mate
-    # (r11 calibration: emb_pca_power 1.6 s solo -> 8.9 s when scheduled
-    # after dedup_stream_lsh in one chunk). r12 verdict task 1: PAIRS
-    # instead of singles — one same-weight neighbor is within the
-    # measured aging tolerance and halves the untimed JVM-startup bill
-    # (the r12 sweep's 28 solo chunks were part of why it timed out).
-    heavy_cut = float(os.environ.get("BENCH_HEAVY_S", "3.0"))
-    prev_meds = _prev_medians()
-    light = [n for n in names if prev_meds.get(n, 0.0) < heavy_cut]
+    baseline = _baseline()
+    prev_meds = baseline.get("queries", {})
+    light = [n for n in names if prev_meds.get(n, 0.0) < HEAVY_S]
     heavy = [n for n in names if n not in set(light)]
     chunks = [light[i : i + CHUNK] for i in range(0, len(light), CHUNK)]
     chunks += [heavy[i : i + 2] for i in range(0, len(heavy), 2)]
     medians: dict[str, float] = {}
     for ci, chunk in enumerate(chunks):
         got = _spawn_chunk(chunk)
-        # A crashed child (JVM death under a co-tenant burst — observed
-        # once in the r13 sweep: ConnectionRefusedError mid-chunk) loses
-        # its WHOLE chunk, and a hole in the per-query map reads as
-        # dropped_from_bench to the driver. Retry each lost query once in
-        # its own fresh JVM; a query that fails twice is a real failure
-        # and stays in `missing` below.
+        # A crashed child (JVM death under a co-tenant burst) loses its
+        # WHOLE chunk, and a hole in the per-query map reads as a dropped
+        # query. Retry each lost query once in its own fresh JVM; a query
+        # that fails twice is a real failure and stays in `missing`.
         lost = [n for n in chunk if n not in got]
         if lost:
             print(f"# retrying {len(lost)} lost queries solo: {lost}",
@@ -332,31 +263,24 @@ def main() -> None:
         )
     total = round(sum(medians.values()), 3)
     sf = _sf_from_dir(SF_DIR)
-    # Queries that produced no timing (chunk child crashed or the query
-    # itself failed): recorded by NAME so gate/drift consumers can see a
-    # degraded sweep instead of silently-shrunk medians (r11 ADVICE).
+    # Queries that produced no timing are recorded by NAME so consumers
+    # see a degraded sweep instead of silently-shrunk medians.
     missing = sorted(set(names) - set(medians))
     if missing:
         print(f"# WARNING: {len(missing)} queries missing from sweep: "
               f"{missing}", file=sys.stderr)
-    # Machine-detectable ambient drift (r8 VERDICT task 7): the median
-    # per-query ratio vs the previously committed snapshot. Host load
-    # shows up as a UNIFORM ~1.1-1.25x ratio across all queries; a real
-    # regression moves individual queries. >1.15 here means "re-run
-    # solo before trusting absolute numbers", documented in BASELINE.md.
     ambient = None
-    ratios = sorted(
-        medians[n] / prev_meds[n]
-        for n in medians
-        if n in prev_meds and prev_meds[n] > 0
-    )
-    if ratios:
-        ambient = round(ratios[len(ratios) // 2], 3)
-    # Full per-query map: separate stdout line + file. The FINAL stdout
-    # line must stay compact (a few hundred bytes) — the driver keeps
-    # only a short tail of output, and r1's single 186-entry line was
-    # truncated to unparseable. The compact line carries the 15 slowest
-    # queries; the complete map lives in BENCH_QUERIES.json / line 1.
+    if sf == baseline.get("sf"):
+        ratios = sorted(
+            medians[n] / prev_meds[n]
+            for n in medians
+            if n in prev_meds and prev_meds[n] > 0
+        )
+        if ratios:
+            ambient = round(ratios[len(ratios) // 2], 3)
+    # Full per-query map: its own stdout line and the sidecar. The graded
+    # line must stay compact (a few hundred bytes) because only a short
+    # tail of output is kept, so it carries only the 15 slowest queries.
     full = {
         "metric": "per_query_median_s",
         "unit": "sec",
@@ -367,12 +291,8 @@ def main() -> None:
         "ambient_vs_prev_snapshot": ambient,
     }
     print(json.dumps(full))
-    # A BENCH_ONLY-filtered run is a local iteration aid; only a full
-    # sweep may be promoted to the committed per-query snapshot. The
-    # sweep itself writes a SIDECAR (r12 verdict task 8: the driver's
-    # own loaded runs used to clobber the committed min-of-sweeps
-    # snapshot in the working tree); `make bench-promote` copies it to
-    # BENCH_QUERIES.json deliberately.
+    # Only a full sweep writes the sidecar a promotion may fold in; a
+    # BENCH_ONLY run is a local iteration aid.
     if not only:
         try:
             with open(os.path.join(REPO, "BENCH_QUERIES.latest.json"), "w") as f:
@@ -380,10 +300,7 @@ def main() -> None:
         except OSError as exc:  # pragma: no cover
             print(f"# could not write BENCH_QUERIES.latest.json: {exc}",
                   file=sys.stderr)
-    # The line the driver grades prints BEFORE the gate (r12 verdict
-    # task 1: the r12 gate phase outlived the driver budget at both core
-    # counts and the suite line never appeared — 15 queries registered
-    # as dropped_from_bench on a 100%-complete sweep).
+    print(json.dumps(_gate(medians, sf, baseline)))
     slowest = dict(
         sorted(medians.items(), key=lambda kv: kv[1], reverse=True)[:15]
     )
@@ -401,7 +318,6 @@ def main() -> None:
             }
         )
     )
-    print(json.dumps(_gate(medians)))
 
 
 if __name__ == "__main__":

@@ -1,19 +1,25 @@
 #!/usr/bin/env python
-"""Fold per-query MINIMA across same-protocol bench runs into a
-promotable snapshot (the r11/r12 min-of-sweeps discipline, made a
-script for r13).
+"""Fold per-query MINIMA across bench runs into the bench baseline.
 
 Usage:
     python scripts/fold_bench_snapshots.py OUT.json IN1.json [IN2.json ...]
 
+`make bench-promote` runs it with OUT = IN1 = BENCH_QUERIES.json and
+IN2 = BENCH_QUERIES.latest.json, so each query's gate bound is its
+minimum over every promoted sweep.
+
 Each IN file is either a full-sweep sidecar (BENCH_QUERIES.latest.json
-shape: {"queries": {...}}) or a bare {"name": seconds} map (hand-built
-from gate solo adjudications / quiet BENCH_ONLY re-times — same solo
-fresh-JVM protocol). The output records per-query MIN and the fold's
-provenance. Rationale: this host carries bursty external co-tenant
-load (BASELINE.md); a per-query min across repeated same-protocol runs
-converges on the query's cost, while any single sweep carries 2-8x
-phantom inflation on whichever chunks a burst hit.
+shape: {"queries": {...}, "sf": ...}) or a bare {"name": seconds} map
+(hand-built from gate solo adjudications / quiet BENCH_ONLY re-times —
+the same solo fresh-JVM protocol). Rationale: the bench host carries bursty
+external co-tenant load (BASELINE.md); a per-query min across repeated
+runs converges on the query's cost, while any single sweep carries 2-8x
+phantom inflation on whichever chunks a burst hit. The sidecar-shaped
+inputs must declare one shared scale factor, which OUT carries; a fold
+of mixed scales, or with no declared scale, is refused.
+
+A query deliberately reworked to do more work gets its entry reset by
+hand in the same change, since its old minimum timed different code.
 """
 
 from __future__ import annotations
@@ -23,29 +29,42 @@ import sys
 
 
 def main() -> None:
+    if len(sys.argv) < 3:
+        print("usage: fold_bench_snapshots.py OUT.json IN1.json [IN2.json ...]",
+              file=sys.stderr)
+        sys.exit(2)
     out_path, *in_paths = sys.argv[1:]
     folded: dict[str, float] = {}
+    sfs = set()
     sources = []
     for p in in_paths:
         with open(p) as f:
             doc = json.load(f)
-        qs = doc.get("queries", doc)
+        if "queries" in doc:
+            qs = doc["queries"]
+            if doc.get("sf") is not None:
+                sfs.add(doc["sf"])
+        else:
+            qs = doc
         n_used = 0
         for name, med in qs.items():
-            if not isinstance(med, (int, float)) or med <= 0:
+            if (isinstance(med, bool) or not isinstance(med, (int, float))
+                    or med <= 0):
                 continue
             if med < folded.get(name, float("inf")):
                 folded[name] = med
                 n_used += 1
         sources.append({"path": p, "n_queries": len(qs), "n_mins": n_used})
+    if len(sfs) != 1:
+        print(f"refusing to fold: inputs must declare one sf, got {sorted(sfs)}",
+              file=sys.stderr)
+        sys.exit(2)
     out = {
-        "metric": "per_query_median_s",
+        "metric": "per_query_min_of_medians_s",
         "unit": "sec",
         "queries": dict(sorted(folded.items())),
-        "sf": 0.1,
+        "sf": sfs.pop(),
         "n_queries": len(folded),
-        "missing": [],
-        "fold": "per-query min across same-protocol runs",
         "fold_sources": sources,
     }
     with open(out_path, "w") as f:

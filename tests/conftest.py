@@ -24,20 +24,16 @@ _SLOW_MODULES = {
 }
 
 # Individual heavyweights (>13 s measured). None is an oracle-hash test,
-# but four are result-equivalence tests that only `make test-all` runs:
-# test_stream_left_outer_join_equals_batch,
-# test_stream_lsh_equals_sequential_batch_twin,
-# test_partition_count_invariance_of_sensitive_queries and
-# test_quartile_histogram_machinery_equals_ntile.
+# but two are result-equivalence tests that only `make test-all` runs:
+# test_stream_left_outer_join_equals_batch and
+# test_stream_lsh_equals_sequential_batch_twin.
 _SLOW_TESTS = {
     "test_no_nested_output_types",  # builds all 341 plans: 178 s
     "test_stream_left_outer_join_equals_batch",  # 85 s + 46 s
     "test_stream_lsh_compaction_preserves_hash_and_bounds_files",  # 33 s
     "test_stream_lsh_equals_sequential_batch_twin",  # 21 s
     "test_similarity_rewrite_small_input_uses_exact_form",  # 25 s
-    "test_partition_count_invariance_of_sensitive_queries",  # 19 s
     "test_url_canonicalization_idempotent",  # 15 s
-    "test_quartile_histogram_machinery_equals_ntile",  # 13 s
 }
 
 
