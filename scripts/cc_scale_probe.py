@@ -1,7 +1,7 @@
 """graph_cc_star scale probe (round 12): turn the "O(log n) rounds
 regardless of component diameter" claim from prose into measured
 curves, on exactly the loop the graded query runs
-(wave17.star_components — shared, not re-implemented).
+(graph.star_components — shared, not re-implemented).
 
 Two sweeps:
 
@@ -9,8 +9,8 @@ Two sweeps:
    time as the real near-dup graph grows (its diameter is small, so
    this pins the ambient cost curve, not the algorithmic win).
 2. PATH GRAPHS (0-1-2-...-n): diameter = n-1, the adversarial topology
-   for O(diameter) label propagation (dedup_cluster needs ~n rounds —
-   analytically, its per-round min spreads one hop). Star alternation
+   for O(diameter) label propagation (~n rounds — analytically, its
+   per-round min spreads one hop). Star alternation
    must stay logarithmic: rounds vs log2(n) is THE claim under test.
 
 Correctness is CHECKED at every point: labels must equal a sequential
@@ -49,10 +49,10 @@ def _union_find(edges):
 
 
 def probe_lsh(spark, sf_dir):
-    from terasort_spark.operators.wave17 import _lsh_edges, star_components
+    from terasort_spark.operators.graph import lsh_edges, star_components
 
     t0 = time.time()
-    e = _lsh_edges(spark, sf_dir, tau=0.8, cap=8).localCheckpoint(eager=True)
+    e = lsh_edges(spark, sf_dir, tau=0.8).localCheckpoint(eager=True)
     n_edges = e.count()
     t_edges = time.time() - t0
     t0 = time.time()
@@ -75,7 +75,7 @@ def probe_lsh(spark, sf_dir):
 def probe_chain(spark, n):
     from pyspark.sql import functions as F
 
-    from terasort_spark.operators.wave17 import star_components
+    from terasort_spark.operators.graph import star_components
 
     e = (
         spark.range(n - 1)

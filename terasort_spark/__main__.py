@@ -17,14 +17,20 @@ caller supplies ``--expect-rows`` / ``--expect-checksum`` (printed by
 teragen / computable via sources.teragen.checksum), also when records
 were dropped, duplicated, or corrupted, which upgrades the check to
 the reference validator's full sorted-permutation contract. teragen
-and terasort exit 1 when ``--out`` already holds part files.
+and terasort exit 1 when ``--out`` already holds part files, and
+terasort and teravalidate exit 1 when an input part file ends in a
+partial record, each with one ``terasort_spark: ...`` line on stderr.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
+import os
 import sys
+
+from py4j.protocol import Py4JJavaError
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -77,10 +83,30 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _refused(e: FileExistsError) -> int:
-    """A refused ``--out``: one line on stderr and exit 1, no traceback."""
-    print(f"terasort_spark: {e}", file=sys.stderr)
+def _refused(reason: object) -> int:
+    """A refused run: one line on stderr and exit 1, no traceback."""
+    print(f"terasort_spark: {reason}", file=sys.stderr)
     return 1
+
+
+def _partial_record(e: Py4JJavaError, in_dir: str) -> int:
+    """A Spark job over ``in_dir`` failed. When a part file there ends in a
+    partial record, that is the cause (the JVM reader fails on it with
+    a bare EOFException), so refuse with the file names; otherwise
+    re-raise. File sizes are checked only here, after a failure."""
+    from terasort_spark.sources.teragen import RECORD_LEN
+
+    bad = sorted(
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(in_dir, "part-*.dat"))
+        if os.path.getsize(p) % RECORD_LEN
+    )
+    if not bad:
+        raise e
+    return _refused(
+        f"{in_dir}: partial record in {', '.join(bad)}"
+        f" (size not a multiple of {RECORD_LEN} bytes)"
+    )
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -130,6 +156,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             paths = write_tera_files(terasort(df, args.partitions), args.out)
         except FileExistsError as e:
             return _refused(e)
+        except Py4JJavaError as e:
+            return _partial_record(e, args.input)
         print(json.dumps({"files": len(paths)}))
         return 0
 
@@ -137,13 +165,17 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from terasort_spark.sources.teragen import checksum, read_tera_files
 
         df = read_tera_files(eng.spark, args.input)
-        report = eng.teravalidate(df)
+        try:
+            report = eng.teravalidate(df)
+            if args.expect_checksum is not None:
+                report["checksum"] = checksum(df)
+        except Py4JJavaError as e:
+            return _partial_record(e, args.input)
         ok = report["sorted_within"] and report["sorted_between"]
         if args.expect_rows is not None:
             report["rows_ok"] = report["n_rows"] == args.expect_rows
             ok = ok and report["rows_ok"]
         if args.expect_checksum is not None:
-            report["checksum"] = checksum(df)
             report["checksum_ok"] = report["checksum"] == args.expect_checksum
             ok = ok and report["checksum_ok"]
         print(json.dumps(report))

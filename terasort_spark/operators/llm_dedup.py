@@ -243,7 +243,8 @@ def minhash_pairs(spark, sf_dir, tau: float = 0.8, per_doc_cap: int | None = Non
     """MinHash-LSH near-duplicate PAIRS: lsh_candidates' banded
     candidate set, verified at exact Jaccard >= tau by re-joining the
     token sets (tests assert recall against the exact Jaccard pair
-    set)."""
+    set). Capped or not, every pair comes out once, with a_id < b_id
+    (tests/test_graph.py pins it; graph.lsh_edges relies on it)."""
     sig, pairs = lsh_candidates(spark, sf_dir, per_doc_cap)
     toks = sig.select("doc_id", "toks")
     verified = pairs.join(
@@ -337,14 +338,14 @@ def jaccard_sql(a: str = "ta", b: str = "tb") -> str:
     )
 
 
-def lsh_pairs_sql(tau: float, cap: int = 8) -> str:
+def lsh_pairs_sql(tau: float) -> str:
     """lsh_candidates_sql + exact-Jaccard verification, ending with CTE
     ``lsh_pairs(a_id, b_id)`` (a_id < b_id, verified at Jaccard >= tau)
-    — the replay of ``minhash_pairs(tau, per_doc_cap=cap)``. Shared by
+    — the replay of ``minhash_pairs(tau, per_doc_cap=8)``. Shared by
     the dedup_minhash keep/drop oracle and the graph oracles
-    (graph_triangles/graph_pagerank ride the same edge list)."""
+    (graph.lsh_edges_sql)."""
     jacc = jaccard_sql()
-    return f"""{lsh_candidates_sql(cap)},
+    return f"""{lsh_candidates_sql(8)},
 lsh_pairs AS MATERIALIZED (
     SELECT c.a_id, c.b_id
     FROM capped c
@@ -358,7 +359,7 @@ def _minhash_oracle() -> str:
     """Keep/drop replay over the shared LSH pairs body (tau=0.8, cap=8
     — dedup_minhash's exact parameters)."""
     return f"""
-WITH {lsh_pairs_sql(tau=0.8, cap=8)},
+WITH {lsh_pairs_sql(tau=0.8)},
 dropped AS MATERIALIZED (
     SELECT DISTINCT b_id AS doc_id FROM lsh_pairs
 )
@@ -551,19 +552,20 @@ def dedup_cluster(spark, sf_dir):
     LSH in a real dedup pipeline (grouping candidate pairs into
     duplicate clusters; cluster_id = smallest doc_id in the component).
 
-    Spark has no recursive SQL, so this is iterative min-label
-    propagation: each round every node takes the min label among itself
-    and its neighbors (one equi-join + one groupBy-min), until a round
-    changes nothing. Rounds needed = component diameter. The driver only
-    ever collects a single convergence scalar; labels stay distributed,
-    and each round localCheckpoints to keep the plan from growing with
-    the iteration count (on a cluster: spark.checkpoint against a
-    durable dir). The oracle is DuckDB's recursive-CTE transitive
-    closure — same answer, engine-native recursion.
+    Spark has no recursive SQL, so the components come from
+    graph.star_components, the package's one CC loop (large-star /
+    small-star alternation: O(log n) rounds whatever the component
+    diameter; the driver only sees one convergence scalar per round).
+    It labels the nodes that have an edge; a left join gives every
+    other document its own id as its cluster. The oracle is DuckDB's
+    recursive-CTE transitive closure — same answer, engine-native
+    recursion.
 
     The pair generator here is the exact-Jaccard slice (doc_id < 200,
     tau 0.9) so the oracle can reproduce it; at 100 TB the pairs input
-    swaps to minhash_pairs with no change to the propagation loop."""
+    swaps to minhash_pairs with no change to the components step."""
+    from terasort_spark.operators.graph import star_components
+
     d = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
@@ -577,45 +579,12 @@ def dedup_cluster(spark, sf_dir):
     pairs = (
         a.join(b, F.col("a_id") < F.col("b_id"))
         .filter(jacc >= 0.9)
-        .select("a_id", "b_id")
+        .select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
     )
-    edges = pairs.select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).unionByName(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
-    edges = edges.localCheckpoint(eager=True)  # pairs are reused every round
-
-    labels = d.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    for _ in range(32):  # cap >> any real component diameter
-        neigh = (
-            edges.join(labels, edges.v == labels.doc_id)
-            .groupBy("u")
-            .agg(F.min("cluster_id").alias("neigh_min"))
-        )
-        # The changed flag rides the label row (labels only ever
-        # decrease, so changed == strictly-smaller new label): the
-        # convergence check is then a filter-count over the checkpoint
-        # just materialized instead of a second join job per round
-        # (r12; was join-old-vs-new — one extra shuffle join per round).
-        new_cid = F.least(
-            F.col("cluster_id"),
-            F.coalesce(F.col("neigh_min"), F.col("cluster_id")),
-        )
-        new_labels = (
-            labels.join(neigh, labels.doc_id == neigh.u, "left")
-            .select(
-                "doc_id",
-                new_cid.alias("new_cid"),
-                (new_cid < F.col("cluster_id")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.select(
-            "doc_id", F.col("new_cid").alias("cluster_id")
-        )
-        if changed == 0:
-            break
-    return labels
+    labels, _rounds = star_components(spark, pairs)
+    return d.join(labels, "doc_id", "left").select(
+        "doc_id", F.coalesce("component", "doc_id").alias("cluster_id")
+    )
 
 
 def canonical_url(col):

@@ -1,17 +1,6 @@
-"""Round-12 wave (session 2): scale-first graph algorithms, two more
-mergeable sketches, clustered semantic dedup, equality deletes, and a
-robust trend estimator.
+"""Round-12 wave (session 2): two more mergeable sketches, clustered
+semantic dedup, equality deletes, and a robust trend estimator.
 
-- ``graph_cc_star`` — connected components via the LARGE-STAR /
-  SMALL-STAR alternation (Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC'14): converges in O(log n) rounds
-  independent of component diameter — the algorithm that replaces
-  dedup_cluster's O(diameter) label propagation when the duplicate
-  graph has long chains. Fixpoint graded against the same
-  recursive-CTE min-reachable oracle (components are
-  algorithm-independent).
-- ``graph_bfs_levels`` — multi-source BFS hop levels by frontier
-  expansion (the Pregel shape: rounds = eccentricity of the seed set).
 - ``agg_cms_topk`` — Count-Min sketch (d=4, w=64, portable mix32 row
   hashes): cells are plain counts, so the sketch is mergeable
   (map-side combinable) and the min-over-rows estimate replays
@@ -40,258 +29,13 @@ from __future__ import annotations
 
 import shutil
 
-from pyspark.sql import Observation, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import o_rnd, rnd, scratch_dir
 from terasort_spark.registry import register
 from terasort_spark.sources.tera_queries import mix32, mix32_sql
-
-# ---------------------------------------------------------------------------
-# graph_cc_star
-
-
-def _cc_fixpoint_oracle(tau: float, cap: int) -> str:
-    """Min-reachable-node fixpoint over the symmetrized LSH edge list —
-    the algorithm-independent definition of connected components, so it
-    grades any CC algorithm (dedup_cluster's label propagation and this
-    module's star alternation alike)."""
-    from terasort_spark.operators.llm_dedup import lsh_pairs_sql
-
-    return f"""
-WITH RECURSIVE {lsh_pairs_sql(tau=tau, cap=cap)},
-e AS MATERIALIZED (
-    SELECT a_id AS src, b_id AS dst FROM lsh_pairs
-    UNION ALL
-    SELECT b_id AS src, a_id AS dst FROM lsh_pairs
-),
-nodes AS MATERIALIZED (SELECT DISTINCT src FROM e),
-reach(node, r) AS (
-    SELECT src, src FROM nodes
-    UNION
-    SELECT e.dst, reach.r FROM reach JOIN e ON e.src = reach.node
-)
-SELECT node AS doc_id, CAST(min(r) AS BIGINT) AS component
-FROM reach GROUP BY node
-"""
-
-
-def _lsh_edges(spark, sf_dir, tau: float, cap: int):
-    """Canonical (a < b) undirected edge set from the shared MinHash-LSH
-    candidate machinery — the same generator the graph_pagerank /
-    graph_triangles oracles replay in SQL."""
-    from terasort_spark.operators.llm_dedup import minhash_pairs
-
-    pairs = minhash_pairs(spark, sf_dir, tau=tau, per_doc_cap=cap)
-    return (
-        pairs.select(
-            F.least("a_id", "b_id").alias("a"),
-            F.greatest("a_id", "b_id").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-@register("graph_cc_star", oracle=_cc_fixpoint_oracle(tau=0.8, cap=8))
-def graph_cc_star(spark, sf_dir):
-    """Connected components by LARGE-STAR / SMALL-STAR alternation over
-    the near-duplicate graph (Jaccard >= 0.8, the dedup tau).
-
-    Each round is two map-reduce shapes over the edge set only —
-    no separate label table:
-
-    - large-star: for every node u, connect each LARGER neighbor to
-      m = min(N(u) ∪ {u});
-    - small-star: orient edges high→low, connect each neighbor (all
-      smaller) and u itself to the minimum.
-
-    The fixpoint is a collection of stars whose centers are the
-    component minima; the label read-off is one groupBy over the final
-    edges. The per-node minima are window aggregates over the same node
-    key each star phase is keyed by (one exchange per phase, no
-    broadcast builds) — the co-partitioned shape that also holds on a
-    corpus-scale graph. Rounds needed are O(log n) REGARDLESS of component diameter
-    — the property that matters on web-crawl duplicate graphs whose
-    chain-shaped components defeat O(diameter) label propagation
-    (dedup_cluster) at 100 TB. Each round shuffles on a single node
-    key; localCheckpoint truncates lineage per round (a cluster job
-    would checkpoint to durable storage).
-
-    The driver only ever sees one convergence scalar per round; the
-    oracle is the recursive-CTE min-reachable fixpoint, which defines
-    components independently of the algorithm."""
-    e = _lsh_edges(spark, sf_dir, tau=0.8, cap=8).localCheckpoint(eager=True)
-    labels, _rounds = star_components(spark, e)
-    return labels
-
-
-def star_components(spark, e, max_rounds: int = 16):
-    """Large-star/small-star alternation over a canonical (a < b) edge
-    DataFrame until fixpoint. Returns (labels_df(doc_id, component),
-    rounds_run). Shared by graph_cc_star and the scale probe
-    (scripts/cc_scale_probe.py), so the probed loop IS the graded one."""
-    e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Convergence = two consecutive rounds with identical (count,
-    # xor-fold-of-xxhash64) edge-set signature: one tiny aggregate per
-    # round instead of a two-sided subtract (which re-shuffles both edge
-    # sets — 6.5 s/round vs 0.4 s at sf0.01). A 64-bit xor-fold collision
-    # on a CHANGED set is the 2^-64 failure mode; the round cap and the
-    # fixpoint oracle both bound it.
-    prev_sig = None
-    rounds = 0
-    w_u = Window.partitionBy("u")
-    for _ in range(max_rounds):  # >> log2(n) for any shipped SF
-        sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        # Per-node minima as window aggregates over the same key the
-        # star phase groups on: one shuffle per phase and ZERO broadcast
-        # builds. The r12 shape broadcast each phase's groupBy(u).min —
-        # two BroadcastExchange sub-jobs per round whose driver collect +
-        # scheduling dominated the round at local scale, and the mins_s
-        # branch re-executed the whole e_large subtree a second time.
-        # The window min is computed inside the one checkpoint job.
-        syml = sym.withColumn("m", F.least(F.min("v").over(w_u), F.col("u")))
-        e_large = (
-            syml.where(F.col("v") > F.col("u"))
-            .select(
-                F.least("v", "m").alias("a"), F.greatest("v", "m").alias("b")
-            )
-            .where(F.col("a") != F.col("b"))
-        )
-        # small-star input: orient high -> low (b is the high end);
-        # duplicate edges are harmless under min, so no distinct here.
-        # m < u always holds on this side (every v < u), so filtering
-        # a != b after the union touches only the (m, v) rows — the
-        # same set the r12 join shape produced.
-        d = e_large.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        ds = d.withColumn("m", F.min("v").over(w_u))
-        e_small = (
-            ds.select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .union(ds.select(F.col("m").alias("a"), F.col("u").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # Convergence signature rides the checkpoint job via observe():
-        # the r12 shape ran a SEPARATE agg+collect action per round
-        # (guide §5 — the driver should block once per round, not twice).
-        obs = Observation()
-        e_small = e_small.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).localCheckpoint(eager=True)
-        m = obs.get  # blocks on the checkpoint action just executed
-        sig = (m["n"], m["h"])
-        e = e_small
-        rounds += 1
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # converged: every edge is (component-min, member)
-    labels = (
-        nodes.join(e, nodes.node == e.b, "left")
-        .groupBy("node")
-        .agg(F.min("a").alias("ma"))
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce("ma", F.col("node")).alias("component"),
-        )
-    )
-    return labels, rounds
-
-
-# ---------------------------------------------------------------------------
-# graph_bfs_levels
-
-
-def _bfs_oracle(tau: float, cap: int, seed_mod: int) -> str:
-    from terasort_spark.operators.llm_dedup import lsh_pairs_sql
-
-    return f"""
-WITH RECURSIVE {lsh_pairs_sql(tau=tau, cap=cap)},
-e AS MATERIALIZED (
-    SELECT a_id AS src, b_id AS dst FROM lsh_pairs
-    UNION ALL
-    SELECT b_id AS src, a_id AS dst FROM lsh_pairs
-),
-nodes AS MATERIALIZED (SELECT DISTINCT src FROM e),
-nn AS (SELECT count(*) AS n FROM nodes),
-lvl(node, d) AS (
-    SELECT src, 0 FROM nodes WHERE src % {seed_mod} = 0
-    UNION
-    SELECT e.dst, lvl.d + 1 FROM lvl JOIN e ON e.src = lvl.node
-    WHERE lvl.d < (SELECT n FROM nn)
-)
-SELECT node AS doc_id, CAST(min(d) AS BIGINT) AS hops
-FROM lvl GROUP BY node
-"""
-
-
-@register("graph_bfs_levels", oracle=_bfs_oracle(tau=0.8, cap=8, seed_mod=17))
-def graph_bfs_levels(spark, sf_dir):
-    """Multi-source BFS hop levels over the near-duplicate graph:
-    seeds are every graph node with doc_id % 17 == 0; output is each
-    REACHED node's minimum hop count (unreached nodes are absent —
-    mirrored by the oracle's recursive join).
-
-    The Pregel frontier shape: per round, one equi-join of the edge
-    list against the current frontier, minus the visited set
-    (left_anti) — rounds = eccentricity of the seed set (4 at sf0.01),
-    per-round cost = frontier-adjacent edges only, never the whole
-    graph. Each round is ONE blocking action: the new frontier's
-    checkpoint, with its size riding along as an observe() metric
-    (r13 — the r12 shape ran 3 driver-blocking jobs per round:
-    frontier.count(), the nxt checkpoint, and a visited checkpoint;
-    guide §5). visited stays a lazy union of the per-round
-    CHECKPOINTED frontiers — each piece is materialized, so the
-    per-round left_anti re-scans tiny cached blocks and lineage depth
-    stays constant.
-    This is the hop-distance primitive under crawl-frontier scheduling
-    and "within k hops of a seed set" contamination sweeps."""
-    e = _lsh_edges(spark, sf_dir, tau=0.8, cap=8)
-    sym = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select("src").distinct()
-    obs0 = Observation()
-    frontier = (
-        nodes.where(F.col("src") % 17 == 0)
-        .select(F.col("src").alias("node"))
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_frontier = obs0.get["n"]
-    visited = frontier.select("node", F.lit(0).cast("long").alias("hops"))
-    level = 0
-    while n_frontier > 0 and level < 64:
-        level += 1
-        obs = Observation()
-        nxt = (
-            sym.join(F.broadcast(frontier), sym.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_frontier = obs.get["n"]
-        visited = visited.union(
-            nxt.select("node", F.lit(level).cast("long").alias("hops"))
-        )
-        frontier = nxt
-    return visited.select(F.col("node").alias("doc_id"), "hops")
-
 
 # ---------------------------------------------------------------------------
 # agg_cms_topk

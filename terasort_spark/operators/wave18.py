@@ -1,6 +1,6 @@
 """Round-12 wave (session 2, batch 2): smoothed language models,
-changepoint detection, the GROUP BY ALL surface, manifest-level file
-pruning, and k-core decomposition.
+changepoint detection, the GROUP BY ALL surface, and manifest-level
+file pruning.
 
 - ``text_kneser_ney`` — interpolated Kneser–Ney bigram probabilities
   (absolute discount D=0.75 + continuation-probability backoff): the
@@ -17,9 +17,6 @@ pruning, and k-core decomposition.
   can touch BEFORE any data is read; complements scan_rowgroup_stats
   (footer stats within a file) and sink_partitioned_pruned (partition
   values) — this is the table-format layer above both.
-- ``graph_kcore`` — k-core decomposition (k=3) by iterative peeling,
-  fixed 6 rounds (converged at every shipped SF; both engines replay
-  the SAME fixed-round computation, the quantized-pagerank trick).
 """
 
 from __future__ import annotations
@@ -30,7 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import o_rnd, rnd, scratch_dir
+from terasort_spark.operators._util import rnd, scratch_dir
 from terasort_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -378,80 +375,3 @@ def scan_manifest_prune(spark, sf_dir):
         (F.col("o_orderdate") >= F.lit(lo).cast("timestamp"))
         & (F.col("o_orderdate") < F.lit(hi).cast("timestamp"))
     ).select("o_orderkey", "o_custkey", rnd(F.col("o_totalprice"), "price"))
-
-
-# ---------------------------------------------------------------------------
-# graph_kcore
-
-_KCORE_K = 3
-_KCORE_ROUNDS = 6  # fixed-round replay; converged by round 5 at all SFs
-
-
-def _kcore_oracle(tau: float, cap: int) -> str:
-    from terasort_spark.operators.llm_dedup import lsh_pairs_sql
-
-    parts = [
-        lsh_pairs_sql(tau=tau, cap=cap),
-        "e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM lsh_pairs"
-        " UNION ALL SELECT b_id, a_id FROM lsh_pairs)",
-    ]
-    for i in range(1, _KCORE_ROUNDS + 1):
-        parts.append(
-            f"n{i} AS (SELECT src FROM e{i-1} GROUP BY src"
-            f" HAVING count(*) >= {_KCORE_K})"
-        )
-        parts.append(
-            f"e{i} AS (SELECT e.src, e.dst FROM e{i-1} e"
-            f" JOIN n{i} a ON a.src = e.src JOIN n{i} b ON b.src = e.dst)"
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-FROM e{_KCORE_ROUNDS} GROUP BY src"""
-    )
-
-
-@register("graph_kcore", oracle=_kcore_oracle(tau=0.5, cap=8))
-def graph_kcore(spark, sf_dir):
-    """3-core of the similarity graph by iterative peeling: drop every
-    node whose degree in the CURRENT subgraph is < k, repeat. The
-    k-core is the standard "dense duplicate neighborhood" extractor —
-    hub templates survive, incidental near-dup pairs (degree 1–2
-    chains) peel away, which is exactly the separation a dedup
-    curation pass wants before deciding cluster keepers.
-
-    Runs a FIXED 6 rounds rather than a convergence loop, and the
-    oracle unrolls the same 6 rounds — both engines grade the
-    identical computation (the quantized-pagerank trick), with
-    convergence-by-round-5 verified at every shipped SF in the module
-    test, so the fixed-round answer IS the fixpoint. Each round is one
-    degree groupBy + one (broadcast) semi-join pair on the node key;
-    rounds needed in general = peeling depth (bounded by degeneracy
-    ordering length, ~log-ish on similarity graphs). The edge set
-    shrinks monotonically, so per-round cost falls."""
-    from terasort_spark.operators.wave17 import _lsh_edges
-
-    e = _lsh_edges(spark, sf_dir, tau=0.5, cap=8)
-    sym = (
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_KCORE_ROUNDS):
-        keep = F.broadcast(
-            sym.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= _KCORE_K)
-            .select("src")
-        )
-        sym = (
-            sym.join(keep, "src")
-            .join(keep.withColumnRenamed("src", "dst"), "dst")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-    return sym.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("core_deg")
-    ).select(F.col("src").alias("doc_id"), "core_deg")

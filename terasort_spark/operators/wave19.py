@@ -388,8 +388,8 @@ def dedup_cluster_keepbest(spark, sf_dir):
     or boilerplate-stripped copies, and keep-by-id throws away the
     full one whenever a fragment crawled first.
 
-    Plan: reuses dedup_cluster's converged label propagation (min-label
-    rounds over the pair graph), then one per-cluster window for the
+    Plan: reuses dedup_cluster's connected components (star
+    alternation over the pair graph), then one per-cluster window for the
     keeper — the only addition to the id-keeper pipeline is that
     window, whose partition is duplicate-cluster-sized (bounded), not
     corpus-sized."""

@@ -60,6 +60,17 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def empty_sf(spark, sf_dir, tmp_path_factory) -> str:
+    """A corpus of 0-row tables with the production schemas."""
+    out = tmp_path_factory.mktemp("empty_sf")
+    for f in os.listdir(sf_dir):
+        if f.endswith(".parquet"):
+            df = spark.read.parquet(os.path.join(sf_dir, f))
+            df.limit(0).write.parquet(str(out / f))
+    return str(out)
+
+
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )

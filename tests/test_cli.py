@@ -105,6 +105,27 @@ def test_cli_terasort_refuses_existing_output(spark, tmp_path, capsys):
         assert "already holds part-*.dat files" in err[0]
 
 
+def test_cli_partial_record_exits_with_one_line(spark, tmp_path, capsys):
+    """A part file cut short of a whole record fails the read job deep in
+    the JVM (java.io.EOFException); both commands that read records
+    report it as exit 1 and one line naming the file, no traceback."""
+    gen_dir, sort_dir = str(tmp_path / "gen"), str(tmp_path / "sorted")
+    parts = ["--partitions", "2"]
+    assert main(["teragen", "--rows", "1000", "--out", gen_dir, *parts], spark=spark) == 0
+    capsys.readouterr()
+    cut = tmp_path / "gen" / "part-00001.dat"
+    cut.write_bytes(cut.read_bytes()[:-7])
+    for argv in (
+        ["terasort", "--input", gen_dir, "--out", sort_dir, *parts],
+        ["teravalidate", "--input", gen_dir],
+    ):
+        assert main(argv, spark=spark) == 1
+        err = capsys.readouterr().err.splitlines()
+        assert len(err) == 1, err
+        assert err[0].startswith("terasort_spark: ")
+        assert "partial record in part-00001.dat" in err[0]
+
+
 def test_cli_list_query_explain(spark, sf_dir, capsys):
     assert main(["list"], spark=spark) == 0
     names = capsys.readouterr().out.split()

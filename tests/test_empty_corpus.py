@@ -15,27 +15,11 @@ the writer's schema explicitly)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 
 from terasort_spark.registry import queries
 
 _Q = queries()
-
-EMPTY_DIR = "/tmp/terasort_spark_empty_sf_ci"
-
-
-@pytest.fixture(scope="module")
-def empty_sf(spark, sf_dir):
-    shutil.rmtree(EMPTY_DIR, ignore_errors=True)
-    os.makedirs(EMPTY_DIR)
-    for f in os.listdir(sf_dir):
-        if f.endswith(".parquet"):
-            df = spark.read.parquet(os.path.join(sf_dir, f))
-            df.limit(0).write.parquet(os.path.join(EMPTY_DIR, f))
-    yield EMPTY_DIR
 
 
 @pytest.mark.parametrize("name", sorted(_Q))

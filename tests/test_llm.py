@@ -326,55 +326,6 @@ def test_framesample_plumbing(spark, sf_dir):
         assert all(f["n_frames"] == n_frames for f in frames)
 
 
-def test_pagerank_invariants(spark, sf_dir):
-    """PageRank over the similarity graph: probability mass conserved
-    (no dangling nodes in an undirected graph), every rank >= the
-    teleport floor, and hub docs (max degree) rank above the median."""
-    rows = _Q["graph_pagerank"](spark, sf_dir).collect()
-    assert rows
-    # ranks are int64 micro-units of a 1e12 total mass (r6 quantized
-    # rewrite); truncating division leaks < N_ITER units per node
-    ranks = {r["doc_id"]: r["rank_u"] / 1e12 for r in rows}
-    n = len(ranks)
-    assert abs(sum(ranks.values()) - 1.0) < 1e-3
-    floor = 0.15 / n * 0.99
-    assert all(v >= floor for v in ranks.values())
-    from terasort_spark.operators.graph import _candidate_edges
-
-    deg = {}
-    for r in _candidate_edges(spark, sf_dir).collect():
-        deg[r["src"]] = deg.get(r["src"], 0) + 1
-        deg[r["dst"]] = deg.get(r["dst"], 0) + 1
-    hub = max(deg, key=lambda k: deg[k])
-    med = sorted(ranks.values())[n // 2]
-    assert ranks[hub] >= med
-
-
-def test_triangle_count_matches_bruteforce(spark, sf_dir):
-    """graph_triangles' two-join count equals an adjacency-set brute
-    force over the collected (small at sf0.001) edge list."""
-    from terasort_spark.operators.graph import _candidate_edges
-
-    edges = set()
-    for r in _candidate_edges(spark, sf_dir).collect():
-        a, b = sorted((r["src"], r["dst"]))
-        if a != b:
-            edges.add((a, b))
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    expect = sum(
-        1
-        for a, b in edges
-        for c in adj[a] & adj[b]
-        if b < c
-    )
-    row = _Q["graph_triangles"](spark, sf_dir).collect()[0]
-    assert row["n_triangles"] == expect
-    assert row["n_edges"] == len(edges)
-
-
 def test_sample_mixture_matches_local_md5(spark, sf_dir):
     """The mixture coin is pure md5 — recompute keep/drop in Python and
     require the exact same doc set (proves partitioning-independence:

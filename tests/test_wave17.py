@@ -1,5 +1,5 @@
-"""Round-12 wave (session 2): star-CC, BFS levels, CMS / Bloom
-mergeable sketches, SemDeDup, equality deletes, Theil–Sen."""
+"""Round-12 wave (session 2): CMS / Bloom mergeable sketches,
+SemDeDup, equality deletes, Theil–Sen."""
 
 from __future__ import annotations
 
@@ -8,103 +8,6 @@ from pyspark.sql import functions as F
 from terasort_spark.registry import queries
 
 _Q = queries()
-
-
-# ---------------------------------------------------------------------------
-# graph_cc_star
-
-
-def _union_find_components(edges):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
-
-
-def test_cc_star_matches_union_find(spark, sf_dir):
-    """The star-alternation fixpoint must equal a sequential union-find
-    over the same edge list (the algorithm-independent ground truth,
-    checked independently of the DuckDB oracle)."""
-    from terasort_spark.operators.wave17 import _lsh_edges
-
-    edges = [
-        (r["a"], r["b"])
-        for r in _lsh_edges(spark, sf_dir, tau=0.8, cap=8).collect()
-    ]
-    want = _union_find_components(edges)
-    got = {
-        r["doc_id"]: r["component"]
-        for r in _Q["graph_cc_star"](spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-def test_cc_star_labels_are_component_minima(spark, sf_dir):
-    rows = _Q["graph_cc_star"](spark, sf_dir).collect()
-    by_comp = {}
-    for r in rows:
-        by_comp.setdefault(r["component"], []).append(r["doc_id"])
-    for comp, members in by_comp.items():
-        assert comp == min(members)
-
-
-def test_star_components_observe_loop_on_tiny_and_empty_inputs(spark):
-    """Focused r13 internals test: star_components' convergence
-    signature now rides the per-round checkpoint job as an observe()
-    metric and the per-node minima are window aggregates (no broadcast
-    builds). Pin the degenerate paths that used to live only in the
-    (now slow-tier) empty-corpus sweep: an EMPTY edge set must return
-    an empty label table without hanging on Observation.get, and a
-    two-clique graph must label every node with its component minimum
-    in <= the round cap."""
-    from terasort_spark.operators.wave17 import star_components
-
-    empty = spark.createDataFrame([], "a long, b long")
-    labels, rounds = star_components(spark, empty)
-    assert labels.count() == 0 and rounds >= 1
-
-    e2 = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "a long, b long"
-    )
-    labels2, rounds2 = star_components(spark, e2)
-    got = {r["doc_id"]: r["component"] for r in labels2.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    assert rounds2 <= 16
-
-
-# ---------------------------------------------------------------------------
-# graph_bfs_levels
-
-
-def test_bfs_levels_seeds_and_monotonicity(spark, sf_dir):
-    """Seeds sit at hop 0; every node at hop k>0 has a neighbor at
-    hop k-1 (the BFS frontier invariant)."""
-    from terasort_spark.operators.wave17 import _lsh_edges
-
-    hops = {
-        r["doc_id"]: r["hops"]
-        for r in _Q["graph_bfs_levels"](spark, sf_dir).collect()
-    }
-    assert hops, "graph has seed-reachable nodes at every shipped SF"
-    adj = {}
-    for r in _lsh_edges(spark, sf_dir, tau=0.8, cap=8).collect():
-        adj.setdefault(r["a"], set()).add(r["b"])
-        adj.setdefault(r["b"], set()).add(r["a"])
-    for node, h in hops.items():
-        if h == 0:
-            assert node % 17 == 0
-        else:
-            assert any(hops.get(nb) == h - 1 for nb in adj[node]), node
 
 
 # ---------------------------------------------------------------------------

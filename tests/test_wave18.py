@@ -1,5 +1,5 @@
 """Round-12 wave (session 2, batch 2): Kneser–Ney, changepoint,
-GROUP BY ALL, manifest pruning, k-core."""
+GROUP BY ALL, manifest pruning."""
 
 from __future__ import annotations
 
@@ -8,44 +8,6 @@ from pyspark.sql import functions as F
 from terasort_spark.registry import queries
 
 _Q = queries()
-
-
-# ---------------------------------------------------------------------------
-# graph_kcore
-
-
-def _peel(edges, k):
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    changed = True
-    while changed:
-        changed = False
-        for n in [n for n, nb in adj.items() if len(nb) < k]:
-            for nb in adj.pop(n):
-                adj[nb].discard(n)
-            changed = True
-    return {n: len(nb) for n, nb in adj.items()}
-
-
-def test_kcore_matches_full_peeling(spark, sf_dir):
-    """The fixed-6-round answer must equal peeling run to convergence
-    (proves 6 rounds suffice at this SF) and the sequential reference."""
-    from terasort_spark.operators.wave17 import _lsh_edges
-    from terasort_spark.operators.wave18 import _KCORE_K
-
-    edges = [
-        (r["a"], r["b"])
-        for r in _lsh_edges(spark, sf_dir, tau=0.5, cap=8).collect()
-    ]
-    want = _peel(edges, _KCORE_K)
-    got = {
-        r["doc_id"]: r["core_deg"]
-        for r in _Q["graph_kcore"](spark, sf_dir).collect()
-    }
-    assert got == want
-    assert all(d >= _KCORE_K for d in got.values())
 
 
 # ---------------------------------------------------------------------------
