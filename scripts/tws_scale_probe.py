@@ -15,9 +15,10 @@ fixed costs amortize while per-key RPCs do not.
 
 Methodology (agg_scale_probe discipline): events are generated
 deterministically in-executor from row ids (xxhash64 streams), staged
-through the SAME file-replay harness the graded stream_tws_* queries
-use (3 chunks, maxFilesPerTrigger=1), folded by the SAME
-ValueState-of-exact-integers processor, RocksDB provider. Correctness
+through the graded queries' transformWithState scaffold
+(``operators.streaming.tws_fold``: 3 chunks, maxFilesPerTrigger=1,
+RocksDB provider) and folded by stream_transformwithstate's own
+ValueState-of-exact-integers processor (``running_totals``). Correctness
 is CHECKED at every point: the fold's final per-key (cents, count)
 must match the batch groupBy exactly (order-insensitive checksum), and
 total row conservation is asserted.
@@ -37,12 +38,11 @@ REPO = "/root/repo"
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from terasort_spark.operators.wave15 import (  # noqa: E402
-    _ROCKSDB_PROVIDER,
-    _ensure_state_codec,
+from terasort_spark.operators.streaming import (  # noqa: E402
+    running_totals,
+    tws_fold,
 )
 from terasort_spark.session import get_spark  # noqa: E402
 
@@ -70,64 +70,17 @@ def gen_events(spark, n: int, n_keys: int):
 def main() -> None:
     spark = get_spark(app_name=f"tws-scale-{N_KEYS}")
     spark.sparkContext.setLogLevel("ERROR")
-    _ensure_state_codec(spark)
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from terasort_spark.streaming.replay import (
-        read_stream,
-        run_to_memory,
-        stage_chunks,
-    )
-
     src = gen_events(spark, N_ROWS, N_KEYS).localCheckpoint()
-    replay_dir = f"/tmp/tws_scale_{N_KEYS}"
-    stagers = stage_chunks(spark, "", replay_dir, n_chunks=3, src=src)
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self._s = handle.getValueState("tot", "total bigint, n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import math
-
-            t, n = tuple(self._s.get()) if self._s.exists() else (0, 0)
-            for pdf in rows:
-                v = pdf["value"].dropna()
-                t += int(sum(int(math.floor(x * 100 + 0.5)) for x in v))
-                n += int(len(v))
-            self._s.update((t, n))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "total_cents": [t], "n_events": [n]}
-            )
-
-        def close(self):
-            pass
-
-    folded = (
-        read_stream(spark, replay_dir)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType=(
-                "user_id bigint, total_cents bigint, n_events bigint"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-    )
     t0 = time.perf_counter()
-    got = run_to_memory(folded, f"tws_scale_sink_{N_KEYS}", "update", stagers, spark)
-    final = (
-        got.groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "total_cents")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.total_cents").alias("total_cents"),
-            F.col("s.n_events").alias("n_events"),
-        )
+    final = tws_fold(
+        spark,
+        "",
+        f"tws_scale_{N_KEYS}",
+        running_totals,
+        "user_id bigint, total_cents bigint, n_events bigint",
+        "n_events",
+        src=src,
+        drop_null_values=False,
     )
     cs_row = final.agg(
         F.sum(
@@ -166,6 +119,7 @@ def main() -> None:
         "rows_conserved": int(cs_row.rows) == N_ROWS == int(exact.rows),
         "checksum_match": int(cs_row.cs) == int(exact.cs),
     }
+    out["parity"] = out["rows_conserved"] and out["checksum_match"]
     print("TWS_PROBE " + json.dumps(out))
     spark.stop()
 

@@ -53,8 +53,9 @@ class Engine:
 
     def explain(self, name: str, mode: str = "formatted") -> str:
         """Physical plan of a registered query as a string — the audit
-        surface scripts/gen_plans.py and tests/test_plans.py consume
-        (modes: 'simple' | 'extended' | 'formatted' | 'cost')."""
+        surface behind ``python -m terasort_spark explain <q>`` and
+        tests/test_plans.py (modes: 'simple' | 'extended' | 'formatted'
+        | 'cost')."""
         df = self.query(name)
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), mode

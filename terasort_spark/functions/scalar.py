@@ -225,3 +225,216 @@ def fn_regex(spark, sf_dir):
         F.col("p_type").rlike(r"^[a-z]+ [a-z]+$").alias("two_words"),
         F.regexp_replace(F.col("p_name"), r"\s+", "_").alias("snake"),
     )
+
+
+# ---------------------------------------------------------------------------
+# fn_try — error-tolerant (TRY_*) function family
+
+
+@register(
+    "fn_try",
+    oracle="""
+SELECT o_orderkey,
+       TRY_CAST(o_orderpriority AS INTEGER) AS pri_int,
+       TRY_CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS pri_num,
+       TRY_CAST(o_orderstatus AS DOUBLE) AS st_dbl,
+       CASE WHEN o_orderkey % 5 = 0 THEN NULL
+            ELSE floor(o_totalprice / (o_orderkey % 5) * 10000 + 0.5) / 10000
+       END AS price_div,
+       string_split(o_orderpriority, '-')[2] AS pri_word,
+       string_split(o_orderpriority, '-')[3] AS pri_missing
+FROM orders WHERE o_orderkey < 2000
+""",
+)
+def fn_try(spark, sf_dir):
+    """The TRY_* error-tolerant family — found-data hygiene at 100 TB,
+    where a single malformed cell must yield NULL, not kill a
+    1000-executor job: try_cast on non-numeric strings ('1-URGENT' ->
+    NULL; its leading digit parses), try_divide (divisor 0 ->
+    NULL instead of ANSI error), try_element_at past the array end ->
+    NULL. The oracle replays with DuckDB's TRY_CAST / guarded divide /
+    out-of-bounds list index (NULL by definition there), so the
+    NULL-not-error contract is hash-checked cell by cell. All
+    expressions stay in whole-stage codegen — error tolerance costs no
+    Python."""
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
+    pri_parts = F.split(F.col("o_orderpriority"), "-")
+    return o.select(
+        "o_orderkey",
+        F.col("o_orderpriority").try_cast("int").alias("pri_int"),
+        F.expr("substr(o_orderpriority, 1, 1)").try_cast("bigint").alias("pri_num"),
+        F.col("o_orderstatus").try_cast("double").alias("st_dbl"),
+        (
+            F.floor(
+                F.try_divide(
+                    F.col("o_totalprice"), F.col("o_orderkey") % 5
+                )
+                * 10000
+                + F.lit(0.5)
+            )
+            / 10000
+        ).alias("price_div"),
+        F.try_element_at(pri_parts, F.lit(2)).alias("pri_word"),
+        F.try_element_at(pri_parts, F.lit(3)).alias("pri_missing"),
+    )
+
+
+@register(
+    "fn_string2",
+    oracle="""
+SELECT p_partkey,
+       array_to_string(list_transform(string_split(p_name, ' '), w -> concat(upper(w[1:1]), lower(w[2:]))), ' ') AS cap_name,
+       reverse(p_brand) AS rev_brand,
+       repeat(p_brand, 2) AS brand2,
+       translate(p_type, 'aeiou', '.....') AS masked_type,
+       split_part(p_name, ' ', 1) AS first_tok,
+       starts_with(p_name, 'a') AS starts_a,
+       ends_with(p_type, 's') AS ends_s,
+       contains(p_name, 'er') AS has_er
+FROM part
+WHERE p_partkey < 1000
+""",
+)
+def fn_string2(spark, sf_dir):
+    p = table(spark, sf_dir, "part").filter(F.col("p_partkey") < 1000)
+    return p.select(
+        "p_partkey",
+        F.initcap("p_name").alias("cap_name"),
+        F.reverse("p_brand").alias("rev_brand"),
+        F.repeat("p_brand", 2).alias("brand2"),
+        F.translate("p_type", "aeiou", ".....").alias("masked_type"),
+        F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("first_tok"),
+        F.startswith(F.col("p_name"), F.lit("a")).alias("starts_a"),
+        F.endswith(F.col("p_type"), F.lit("s")).alias("ends_s"),
+        F.contains(F.col("p_name"), F.lit("er")).alias("has_er"),
+    )
+
+
+@register(
+    "fn_bits",
+    oracle="""
+SELECT e.event_id,
+       e.event_id & 255 AS low_byte,
+       e.event_id | 4096 AS with_flag,
+       xor(e.event_id, 1431655765) AS xored,
+       e.event_id << 2 AS shl,
+       e.event_id >> 3 AS shr,
+       CAST(bit_count(e.event_id) AS INTEGER) AS popcount
+FROM events e
+WHERE e.event_id < 2000
+""",
+)
+def fn_bits(spark, sf_dir):
+    ev = table(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
+    k = F.col("event_id")
+    return ev.select(
+        "event_id",
+        k.bitwiseAND(F.lit(255)).alias("low_byte"),
+        k.bitwiseOR(F.lit(4096)).alias("with_flag"),
+        k.bitwiseXOR(F.lit(0x55555555)).alias("xored"),
+        F.shiftleft(k, 2).alias("shl"),
+        F.shiftright(k, 3).alias("shr"),
+        F.bit_count(k).alias("popcount"),
+    )
+
+
+@register(
+    "fn_date2",
+    oracle="""
+SELECT o_orderkey,
+       make_timestamp(CAST(year(o_orderdate) AS BIGINT), month(o_orderdate), 1, 0, 0, 0.0) AS month_start,
+       strftime(o_orderdate, '%Y-%m') AS ym,
+       CAST(quarter(o_orderdate) AS INTEGER) AS q,
+       CAST(dayofyear(o_orderdate) AS INTEGER) AS doy,
+       CAST(epoch(o_orderdate) AS BIGINT) AS epoch_s
+FROM orders
+WHERE o_orderkey <= 1000
+""",
+)
+def fn_date2(spark, sf_dir):
+    """Datetime construction/extraction family #2: make_timestamp,
+    format-to-string, quarter, day-of-year, epoch seconds — the
+    constructors and extractors fn_date doesn't cover."""
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 1000)
+    return o.select(
+        "o_orderkey",
+        F.make_timestamp(
+            F.year("o_orderdate"),
+            F.month("o_orderdate"),
+            F.lit(1),
+            F.lit(0),
+            F.lit(0),
+            F.lit(0),
+        ).alias("month_start"),
+        F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
+        F.quarter("o_orderdate").alias("q"),
+        F.dayofyear("o_orderdate").alias("doy"),
+        F.unix_timestamp("o_orderdate").alias("epoch_s"),
+    )
+
+
+@register(
+    "fn_string3",
+    oracle="""
+SELECT p_partkey,
+       translate(p_name, 'aeiou', 'AEIOU') AS tr,
+       reverse(p_name) AS rev,
+       repeat(p_brand, 2) AS rep,
+       CAST(ascii(p_name) AS INTEGER) AS first_code,
+       chr(65 + p_size % 26) AS size_chr,
+       CAST(strpos(p_name, 'a') AS INTEGER) AS a_pos,
+       left(p_name, 3) AS l3,
+       right(p_name, 3) AS r3
+FROM part
+WHERE p_partkey <= 500
+""",
+)
+def fn_string3(spark, sf_dir):
+    """String family #3: translate/reverse/repeat/ascii/chr/instr and
+    left/right — rounding out the scalar string surface beyond
+    fn_string/fn_string2."""
+    p = table(spark, sf_dir, "part").filter(F.col("p_partkey") <= 500)
+    return p.select(
+        "p_partkey",
+        F.translate("p_name", "aeiou", "AEIOU").alias("tr"),
+        F.reverse("p_name").alias("rev"),
+        F.repeat("p_brand", 2).alias("rep"),
+        F.ascii("p_name").alias("first_code"),
+        F.chr(F.lit(65) + F.col("p_size") % 26).alias("size_chr"),
+        F.instr("p_name", "a").alias("a_pos"),
+        F.left("p_name", F.lit(3)).alias("l3"),
+        F.right("p_name", F.lit(3)).alias("r3"),
+    )
+
+
+@register(
+    "fn_format",
+    oracle=f"""
+SELECT p_partkey,
+       printf('%s#%06d', p_brand, p_partkey) AS sku,
+       printf('%.2f', p_retailprice) AS price_str,
+       lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_code,
+       printf('%x', p_partkey) AS key_hex
+FROM part WHERE p_partkey % 100 = 0
+""",
+)
+def fn_format(spark, sf_dir):
+    """String formatting family: printf-style templates
+    (format_string ↔ printf), fixed-decimal rendering, zero-padding,
+    hex rendering — the functions that build SKUs, codes, and export
+    columns. %-template semantics are the shared C printf spec, so the
+    two engines agree byte-for-byte.
+
+    Scale notes: stateless scan-stage expressions; the modulus filter
+    is pushed to parquet; whole-stage codegen keeps them JVM-side."""
+    p = table(spark, sf_dir, "part")
+    return (
+        p.where(F.col("p_partkey") % 100 == 0)
+        .select(
+            "p_partkey",
+            F.format_string("%s#%06d", "p_brand", "p_partkey").alias("sku"),
+            F.format_string("%.2f", "p_retailprice").alias("price_str"),
+            F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size_code"),
+            F.format_string("%x", "p_partkey").alias("key_hex"),
+        )
+    )

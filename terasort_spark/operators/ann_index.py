@@ -5,7 +5,7 @@ makes similarity search over a 100 TB embedding corpus a pruned scan
 instead of a full pass.
 
 Shares the exact integer-hyperplane quantizer with sim_cosine_ivf
-(llm_similarity.ivf_bucket / _ivf_proj_sql), so the whole
+(llm_similarity.ivf_bucket / ivf_proj_sql), so the whole
 build → write → prune → re-rank pipeline replays in DuckDB.
 """
 
@@ -18,11 +18,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import o_rnd, rnd, scratch_dir
-from terasort_spark.operators.llm_similarity import (
-    _COSINE_SQL,
-    _ivf_proj_sql,
-    ivf_bucket,
-)
+from terasort_spark.operators.llm_similarity import COSINE_SQL, ivf_bucket, ivf_proj_sql
 from terasort_spark.registry import register
 
 
@@ -37,19 +33,19 @@ WITH xu AS (
 ),
 b AS MATERIALIZED (
   SELECT vec_id, embedding,
-         (CASE WHEN {_ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)
-       + (CASE WHEN {_ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)
-       + (CASE WHEN {_ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)
-       + (CASE WHEN {_ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END) AS bucket
+         (CASE WHEN {ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)
+       + (CASE WHEN {ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)
+       + (CASE WHEN {ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)
+       + (CASE WHEN {ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END) AS bucket
   FROM xu
 )
 SELECT q_id, c_id, cosine, rn
 FROM (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         {o_rnd(_COSINE_SQL, "cosine")},
+         {o_rnd(COSINE_SQL, "cosine")},
          CAST(row_number() OVER (
               PARTITION BY q.vec_id
-              ORDER BY {o_rnd(_COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
+              ORDER BY {o_rnd(COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
   FROM (SELECT vec_id, embedding, bucket FROM b WHERE vec_id < 5) q
   JOIN b c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
 )
@@ -121,10 +117,10 @@ def _ivfpq_oracle() -> str:
     from terasort_spark.operators.llm_similarity import PQ_CODE_CTES
 
     bucket_case = (
-        f"(CASE WHEN {_ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)\n"
-        f"       + (CASE WHEN {_ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)\n"
-        f"       + (CASE WHEN {_ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)\n"
-        f"       + (CASE WHEN {_ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END)"
+        f"(CASE WHEN {ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)\n"
+        f"       + (CASE WHEN {ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)\n"
+        f"       + (CASE WHEN {ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)\n"
+        f"       + (CASE WHEN {ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END)"
     )
     return f"""
 WITH e AS MATERIALIZED (
@@ -165,9 +161,9 @@ shortlist AS MATERIALIZED (
 )
 SELECT q_id, c_id, cosine, rn FROM (
   SELECT s.q_id, s.c_id,
-         {o_rnd(_COSINE_SQL, "cosine")},
+         {o_rnd(COSINE_SQL, "cosine")},
          CAST(row_number() OVER (PARTITION BY s.q_id
-              ORDER BY {o_rnd(_COSINE_SQL)} DESC, s.c_id) AS INTEGER) AS rn
+              ORDER BY {o_rnd(COSINE_SQL)} DESC, s.c_id) AS INTEGER) AS rn
   FROM shortlist s
   JOIN e q ON q.vec_id = s.q_id
   JOIN e c ON c.vec_id = s.c_id
@@ -189,7 +185,7 @@ def sim_cosine_ivfpq(spark, sf_dir):
 
     Composes the two proven pieces verbatim: the coarse quantizer is
     sim_cosine_ivf's integer-hyperplane ivf_bucket and the codebooks/
-    codes/LUT come from _pq_train_encode (sim_cosine_pq's machinery —
+    codes/LUT come from pq_train_encode (sim_cosine_pq's machinery —
     shared function AND shared oracle CTE chain, so the three operators
     can never drift). 100 TB: the scan cost per probe is
     |probed lists|/16 of the corpus read as 8-byte codes (not
@@ -198,7 +194,7 @@ def sim_cosine_ivfpq(spark, sf_dir):
     and the directory pruning COMPOUND — this is the layout
     billion-vector services actually deploy."""
     from terasort_spark.operators.llm_similarity import (
-        _pq_train_encode,
+        pq_train_encode,
         dot_fold,
     )
 
@@ -218,7 +214,7 @@ def sim_cosine_ivfpq(spark, sf_dir):
             ),
         )
     )
-    pq = _pq_train_encode(spark, e, q_cut=10)
+    pq = pq_train_encode(spark, e, q_cut=10)
     if pq is None:  # empty corpus
         return spark.createDataFrame(
             [], "q_id bigint, c_id bigint, cosine double, rn int"
@@ -307,7 +303,7 @@ def _nprobe_oracle(nprobe: int, q_cut: int) -> str:
     hyperplanes by |projection| ascending and probe the own bucket plus
     the buckets reached by flipping the (nprobe-1) narrowest-margin
     signs — exact int64 end to end."""
-    pj = ",\n         ".join(f"{_ivf_proj_sql(j)} AS p{j}" for j in range(4))
+    pj = ",\n         ".join(f"{ivf_proj_sql(j)} AS p{j}" for j in range(4))
     bucket = " + ".join(
         f"(CASE WHEN p{j} > 0 THEN {1 << j} ELSE 0 END)" for j in range(4)
     )
@@ -341,10 +337,10 @@ probes AS MATERIALIZED (
 SELECT q_id, c_id, cosine, rn
 FROM (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         {o_rnd(_COSINE_SQL, "cosine")},
+         {o_rnd(COSINE_SQL, "cosine")},
          CAST(row_number() OVER (
               PARTITION BY q.vec_id
-              ORDER BY {o_rnd(_COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
+              ORDER BY {o_rnd(COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
   FROM probes q
   JOIN b c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
 )
@@ -433,7 +429,7 @@ def sim_cosine_ivf_nprobe(spark, sf_dir):
     scans a bounded 3/16 of the corpus per probe (vs 1/16 at nprobe=1
     and 5/16 for sim_cosine_ivf's blanket Hamming-1 fan); the recall
     lift over nprobe=1 at that bounded extra scan is asserted
-    strictly in tests/test_wave10.py (hit@5 vs exact brute force).
+    strictly in tests/test_similarity.py (hit@5 vs exact brute force).
 
     Exact oracle end to end: margins |p_j| are the SAME int64
     hyperplane projections whose signs form the bucket
@@ -479,7 +475,7 @@ def _ann_inc_ingest(spark, sf_dir, out):
     """Phase 2: APPEND the new batch (vec_id % 10 == 0) into the same
     layout. mode('append') + partitionBy only ADDS files under the
     buckets the batch routes to; every existing base file is untouched
-    (asserted file-level in tests/test_wave9.py)."""
+    (asserted file-level in tests/test_similarity.py)."""
     batch = _ann_inc_bucketed(spark, sf_dir, F.col("vec_id") % 10 == 0, "batch")
     batch.write.mode("append").partitionBy("bucket").parquet(out)
 
@@ -494,10 +490,10 @@ WITH xu AS (
   FROM embeddings WHERE embedding IS NOT NULL
 )
 SELECT vec_id,
-       (CASE WHEN {_ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)
-     + (CASE WHEN {_ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)
-     + (CASE WHEN {_ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)
-     + (CASE WHEN {_ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END) AS bucket,
+       (CASE WHEN {ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)
+     + (CASE WHEN {ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)
+     + (CASE WHEN {ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)
+     + (CASE WHEN {ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END) AS bucket,
        CASE WHEN vec_id % 10 = 0 THEN 'batch' ELSE 'base' END AS src
 FROM xu
 """,
@@ -509,7 +505,7 @@ def sink_ann_incremental(spark, sf_dir):
     rebuilding untouched lists. The coarse quantizer routes each new
     vector to its bucket directory and mode('append') adds files only
     there — base files are never rewritten (file-level mtime/size
-    assertion in tests/test_wave9.py), which is what makes a 100 TB
+    assertion in tests/test_similarity.py), which is what makes a 100 TB
     index maintainable: ingest cost is O(batch), not O(index), and
     readers keep dynamic partition pruning over the same directory
     keys (sink_ann_index / sim_cosine_ivfpq share this layout).

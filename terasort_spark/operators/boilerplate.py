@@ -226,8 +226,9 @@ def text_compression_ratio(spark, sf_dir):
 
     Rows-only by declared design: DuckDB has no zlib scalar, so there
     is no SQL oracle — determinism is pinned instead by
-    tests/test_wave6.py (zlib level 6 output is a pure function of the
-    bytes, so ratios are identical across reruns and partitionings).
+    test_compression_ratio_is_deterministic_and_sane (zlib level 6
+    output is a pure function of the bytes, so ratios are identical
+    across reruns and partitionings).
 
     Scale: an Arrow-batched pandas UDF (the sanctioned Python path) in
     the scan stage — no shuffle at all; the UDF is CPU-bound per byte,

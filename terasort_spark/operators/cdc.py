@@ -38,7 +38,7 @@ def stage_orders_cdc(spark, sf_dir, name: str, extra_cols: tuple = ()):
     """Write the shared v0/v1 CDC fixture (the recipe above) under a
     session-scoped scratch root and return that root. ONE staging
     implementation backs scan_changefeed, ivm_incremental_agg and
-    wave8.pipeline_ivm_rewrite so the recipe and its three oracles
+    pipelines.pipeline_ivm_rewrite so the recipe and its three oracles
     cannot drift apart. ``extra_cols`` rides immutable dimension
     columns (e.g. order date/priority) along in every segment."""
     root = scratch_dir(spark, name)

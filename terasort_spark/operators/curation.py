@@ -34,14 +34,14 @@ BM25_B = 0.75
 # The probe query: mid-frequency terms from the corpus vocabulary.
 BM25_TERMS = ("vector", "stream", "hash")
 
-_TERMS_SQL = "(" + ", ".join(f"'{t}'" for t in BM25_TERMS) + ")"
+TERMS_SQL = "(" + ", ".join(f"'{t}'" for t in BM25_TERMS) + ")"
 
 
 def _eq_lit(term: str):
     return lambda x: x == F.lit(term)
 
 
-def _tok_cte() -> str:
+def tok_cte() -> str:
     """Shared DuckDB CTE: one row per token occurrence."""
     return """
 tok AS (
@@ -53,7 +53,7 @@ tok AS (
 )"""
 
 
-def _tokens(spark, sf_dir, bound=None):
+def doc_terms(spark, sf_dir, bound=None):
     """One row per token occurrence (doc_id, term); scan-side explode."""
     d = table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
@@ -68,15 +68,15 @@ def _tokens(spark, sf_dir, bound=None):
 @register(
     "text_bm25",
     oracle=f"""
-WITH {_tok_cte()},
+WITH {tok_cte()},
 dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
 stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
 tf AS (
   SELECT doc_id, term, count(*) AS tf FROM tok
-  WHERE term IN {_TERMS_SQL} GROUP BY doc_id, term
+  WHERE term IN {TERMS_SQL} GROUP BY doc_id, term
 ),
 df AS (SELECT term, count(DISTINCT doc_id) AS dfreq FROM tok
-       WHERE term IN {_TERMS_SQL} GROUP BY term),
+       WHERE term IN {TERMS_SQL} GROUP BY term),
 contrib AS (
   SELECT tf.doc_id,
          CAST(floor(
@@ -244,7 +244,7 @@ def sim_tfidf_cosine(spark, sf_dir):
     norms are exact integer sums (≤ ~5e13, no overflow), so cosines are
     bit-identical on both engines and any partitioning; ranking is over
     those exact values."""
-    tok = _tokens(spark, sf_dir, bound=TFIDF_DOC_BOUND)
+    tok = doc_terms(spark, sf_dir, bound=TFIDF_DOC_BOUND)
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
     n = tf.agg(F.countDistinct("doc_id").alias("nd"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
@@ -603,4 +603,91 @@ def sim_containment(spark, sf_dir):
         shared.join(F.broadcast(na), "a_id")
         .filter(c >= CONTAIN_TAU)
         .select("a_id", "b_id", rnd(c, "containment"))
+    )
+
+
+# --------------------------------------------------------------------------
+# sample_reservoir — fixed-SIZE uniform sample via priority hashing.
+
+_RESERVOIR_K = 100
+
+
+def _reservoir_oracle() -> str:
+    from terasort_spark.sources.tera_queries import mix32_sql
+
+    pri = mix32_sql("doc_id % 2147483648")
+    return f"""
+WITH pri AS (SELECT doc_id, ({pri}) AS priority FROM documents)
+SELECT CAST(row_number() OVER (ORDER BY priority, doc_id) AS BIGINT) AS rank,
+       doc_id, priority
+FROM pri ORDER BY priority, doc_id LIMIT {_RESERVOIR_K}
+"""
+
+
+@register("sample_reservoir", oracle=_reservoir_oracle())
+def sample_reservoir(spark, sf_dir):
+    """Fixed-size uniform sample (the distributed reservoir): assign
+    each row a content-addressed priority (mix32 of its id) and keep
+    the K smallest — exactly the "priority sampling" equivalence that
+    makes reservoir sampling mergeable across partitions. Unlike
+    scan_sample's Bernoulli fraction (output size varies with n), the
+    result is ALWAYS K rows, and unlike rand()-based reservoirs it is
+    partition- and retry-invariant: the kept set is a pure function of
+    the ids.
+
+    Scale: ORDER BY + LIMIT K compiles to TakeOrderedAndProject — each
+    partition keeps a K-row heap, the driver merges #partitions * K
+    rows; no global sort, no full shuffle. The id is folded mod 2^31
+    before mixing so 64-bit ids at 100 TB stay inside the mixer's
+    exact-arithmetic precondition."""
+    from terasort_spark.sources.tera_queries import mix32
+
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", mix32(F.col("doc_id") % F.lit(2147483648)).alias("priority")
+    )
+    top = d.orderBy("priority", "doc_id").limit(_RESERVOIR_K)
+    w = Window.orderBy("priority", "doc_id")
+    return top.select(
+        F.row_number().over(w).cast("bigint").alias("rank"),
+        "doc_id",
+        "priority",
+    )
+
+
+@register(
+    "sample_pergroup",
+    oracle="""
+SELECT lang, doc_id, h, rn FROM (
+    SELECT lang, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
+           CAST(row_number() OVER (
+               PARTITION BY lang
+               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+           ) AS INTEGER) AS rn
+    FROM documents
+) WHERE rn <= 50
+""",
+)
+def sample_pergroup(spark, sf_dir):
+    """Deterministic per-group sample: the 50 lowest-md5(doc_id) docs
+    per language. Content-addressed ranking means every rerun, retry,
+    and cluster size picks the SAME rows (unlike rand()-based samples),
+    and growing the corpus only ever swaps members at the hash boundary
+    — the reproducible "k per stratum" subsample a curation pipeline
+    pins in a datasheet.
+
+    Scale notes: rank-within-group plans a window with a group-limit
+    pushdown (each partition keeps only its local top-50 per lang before
+    the shuffle — same mechanism as topk_pergroup), so the exchange
+    carries at most 50·|langs| rows per partition regardless of corpus
+    size."""
+    from pyspark.sql import Window
+
+    d = table(spark, sf_dir, "documents").select(
+        "lang", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("h")
+    )
+    w = Window.partitionBy("lang").orderBy("h", "doc_id")
+    return (
+        d.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 50)
+        .select("lang", "doc_id", "h", "rn")
     )

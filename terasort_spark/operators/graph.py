@@ -404,6 +404,54 @@ FROM lvl GROUP BY node
 """
 
 
+_BFS_COLLAPSE_EVERY = 8
+
+
+def bfs_levels(sym, seeds):
+    """Multi-source BFS over a two-way ``(src, dst)`` edge list from the
+    ``seeds`` (one column, ``node``). Returns (hops_df(node, hops),
+    levels_run, collapses); unreached nodes are absent.
+
+    Each level is ONE blocking action: a checkpoint, with the new
+    frontier's size riding along as an observe() metric. Between
+    collapses, visited is a lazy union of the checkpointed frontiers.
+    Every ``_BFS_COLLAPSE_EVERY`` levels that level's checkpoint is of
+    visited itself (the new frontier is its ``hops == level`` slice),
+    so the per-level left_anti never re-analyzes more than 8 union
+    branches however deep the graph is. Shared by graph_bfs_levels and
+    its chain test, so the tested loop IS the graded one."""
+    obs0 = Observation()
+    frontier = seeds.observe(obs0, F.count(F.lit(1)).alias("n"))
+    frontier = frontier.localCheckpoint(eager=True)
+    n_frontier = obs0.get["n"]
+    visited = frontier.select("node", F.lit(0).cast("long").alias("hops"))
+    level = collapses = 0
+    while n_frontier > 0 and level < 64:
+        level += 1
+        hop = F.lit(level).cast("long").alias("hops")
+        obs = Observation()
+        new = (
+            sym.join(F.broadcast(frontier), sym.src == frontier.node)
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(visited.select("node"), "node", "left_anti")
+        )
+        if level % _BFS_COLLAPSE_EVERY == 0:
+            visited = (
+                visited.union(new.select("node", hop))
+                .observe(obs, F.count_if(F.col("hops") == level).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            frontier = visited.where(F.col("hops") == level).select("node")
+            collapses += 1
+        else:
+            frontier = new.observe(obs, F.count(F.lit(1)).alias("n"))
+            frontier = frontier.localCheckpoint(eager=True)
+            visited = visited.union(frontier.select("node", hop))
+        n_frontier = obs.get["n"]
+    return visited, level, collapses
+
+
 @register("graph_bfs_levels", oracle=_bfs_oracle(tau=0.8, seed_mod=17))
 def graph_bfs_levels(spark, sf_dir):
     """Multi-source BFS hop levels over the near-duplicate graph:
@@ -411,48 +459,21 @@ def graph_bfs_levels(spark, sf_dir):
     REACHED node's minimum hop count (unreached nodes are absent —
     mirrored by the oracle's recursive join).
 
-    The Pregel frontier shape: per round, one equi-join of the edge
-    list against the current frontier, minus the visited set
-    (left_anti) — rounds = eccentricity of the seed set (4 at sf0.01),
-    per-round cost = frontier-adjacent edges only, never the whole
-    graph. Each round is ONE blocking action: the new frontier's
-    checkpoint, with its size riding along as an observe() metric
-    (r13 — the r12 shape ran 3 driver-blocking jobs per round:
-    frontier.count(), the nxt checkpoint, and a visited checkpoint;
-    guide §5). visited stays a lazy union of the per-round
-    CHECKPOINTED frontiers — each piece is materialized, so the
-    per-round left_anti re-scans tiny cached blocks and lineage depth
-    stays constant.
+    The Pregel frontier shape (``bfs_levels``): per round, one
+    equi-join of the edge list against the current frontier, minus the
+    visited set (left_anti) — rounds = eccentricity of the seed set (4
+    at sf0.01), per-round cost = frontier-adjacent edges only, never
+    the whole graph, and one blocking action per round.
     This is the hop-distance primitive under crawl-frontier scheduling
     and "within k hops of a seed set" contamination sweeps."""
     sym = _two_way(lsh_edges(spark, sf_dir, tau=0.8))
-    nodes = sym.select("src").distinct()
-    obs0 = Observation()
-    frontier = (
-        nodes.where(F.col("src") % 17 == 0)
+    seeds = (
+        sym.select("src")
+        .distinct()
+        .where(F.col("src") % 17 == 0)
         .select(F.col("src").alias("node"))
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    n_frontier = obs0.get["n"]
-    visited = frontier.select("node", F.lit(0).cast("long").alias("hops"))
-    level = 0
-    while n_frontier > 0 and level < 64:
-        level += 1
-        obs = Observation()
-        nxt = (
-            sym.join(F.broadcast(frontier), sym.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_frontier = obs.get["n"]
-        visited = visited.union(
-            nxt.select("node", F.lit(level).cast("long").alias("hops"))
-        )
-        frontier = nxt
+    visited, _, _ = bfs_levels(sym, seeds)
     return visited.select(F.col("node").alias("doc_id"), "hops")
 
 

@@ -25,7 +25,7 @@ from terasort_spark.catalog import table
 from terasort_spark.operators._util import DEC, rnd
 from terasort_spark.registry import register
 
-_BIGRAMS_SQL = """
+BIGRAMS_SQL = """
     SELECT doc_id, lang,
            w[i] AS w1, w[i + 1] AS w2
     FROM (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
@@ -37,7 +37,7 @@ _BIGRAMS_SQL = """
 @register(
     "text_bigram_lm",
     oracle=f"""
-WITH bigrams AS ({_BIGRAMS_SQL}),
+WITH bigrams AS ({BIGRAMS_SQL}),
 model AS (
     SELECT lang, w1, w2, count(*) AS c12,
            sum(count(*)) OVER (PARTITION BY lang, w1) AS c1

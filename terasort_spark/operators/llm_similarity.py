@@ -1,6 +1,8 @@
 """Similarity-search operators for LLM data pipelines (north-star
-extension): exact n-gram Jaccard pairs, brute-force cosine top-k, and
-kNN majority-label classification.
+extension): exact n-gram Jaccard pairs, brute-force cosine top-k, kNN
+majority-label classification, quantized retrieval (PQ, SQ8, binary
+codes), late-interaction MaxSim, edit distance and source-level MinHash
+sketches.
 
 Scale design: the declared queries are the exact baselines at corpus
 scale; the 100 TB path swaps the all-pairs step for the banded
@@ -15,7 +17,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators._util import o_rnd, rnd
+from terasort_spark.operators._util import hex_int, o_hex_int, o_rnd, rnd
+from terasort_spark.operators.llm_dedup import BUCKET_M, N_HASHES, PERM_A, PERM_B
 from terasort_spark.registry import register
 
 TAU = 0.9  # Jaccard threshold (p95 of the corpus pair distribution)
@@ -106,21 +109,21 @@ def dot_fold(x, y):
     )
 
 
-def _dot_sql(a, b):
+def dot_sql(a, b):
     return (
         f"list_sum(list_transform(list_zip({a}, {b}), "
         f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
     )
 
 
-def _norm_sql(a):
-    return f"sqrt({_dot_sql(a, a)})"
+def norm_sql(a):
+    return f"sqrt({dot_sql(a, a)})"
 
 
-_COSINE_SQL = f"{_dot_sql('q.embedding', 'c.embedding')} / ({_norm_sql('q.embedding')} * {_norm_sql('c.embedding')})"
+COSINE_SQL = f"{dot_sql('q.embedding', 'c.embedding')} / ({norm_sql('q.embedding')} * {norm_sql('c.embedding')})"
 
 
-def _ivf_proj_sql(j: int) -> str:
+def ivf_proj_sql(j: int) -> str:
     """Integer hyperplane projection for IVF bucket bit j: 6dp-quantized
     coordinates (CTE column ``v``) dotted with mix32-derived signed
     weights — exact int64, matching the Spark expression bit-for-bit.
@@ -142,10 +145,10 @@ COSINE_TOPK_ORACLE = f"""
 SELECT q_id, c_id, cosine, rn
 FROM (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         {o_rnd(_COSINE_SQL, "cosine")},
+         {o_rnd(COSINE_SQL, "cosine")},
          CAST(row_number() OVER (
               PARTITION BY q.vec_id
-              ORDER BY {o_rnd(_COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
+              ORDER BY {o_rnd(COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
   FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
   JOIN embeddings c ON c.vec_id != q.vec_id
 )
@@ -197,7 +200,7 @@ WITH topk AS (
     SELECT q.vec_id AS q_id, c.vec_id AS c_id, c.label AS label,
            CAST(row_number() OVER (
                 PARTITION BY q.vec_id
-                ORDER BY {o_rnd(_COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
+                ORDER BY {o_rnd(COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
     FROM (SELECT * FROM embeddings WHERE vec_id < 10) q
     JOIN embeddings c ON c.vec_id != q.vec_id
   ) WHERE rn <= 5
@@ -258,7 +261,7 @@ def ivf_projection(xu_col, j: int):
     hyperplane ``j`` (mix32-derived weights) — the quantity whose SIGN
     is bucket bit j and whose MAGNITUDE is the margin multi-probe ranks
     flip candidates by (ann_index.sim_cosine_ivf_nprobe). Twin of
-    _ivf_proj_sql; factored so the bucket and the margins can never use
+    ivf_proj_sql; factored so the bucket and the margins can never use
     different hyperplanes."""
     from terasort_spark.sources.tera_queries import mix32
 
@@ -277,7 +280,7 @@ def ivf_bucket(xu_col):
     hyperplanes dotted against 6dp-quantized coordinates (``xu_col`` is
     an array<long>). Exact int64 in both engines — shared by
     sim_cosine_ivf and sink_ann_index (ann_index.py), twin of
-    _ivf_proj_sql."""
+    ivf_proj_sql."""
     bits = [
         F.when(ivf_projection(xu_col, j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
         for j in range(4)
@@ -288,10 +291,9 @@ def ivf_bucket(xu_col):
     return out
 
 
-
 # Shared oracle text for the IVF index: the bucket-assignment CTEs and
 # the multi-probe top-5 inner query. sim_cosine_ivf's oracle AND
-# ml_mrr's oracle (wave7._mrr_oracle) are both composed from these, so
+# ml_mrr's oracle (ml._mrr_oracle) are both composed from these, so
 # the index and its evaluation metric cannot drift apart silently.
 IVF_BUCKET_CTES = f"""xu AS (
   SELECT vec_id, embedding,
@@ -301,18 +303,18 @@ IVF_BUCKET_CTES = f"""xu AS (
 ),
 b AS MATERIALIZED (
   SELECT vec_id, embedding,
-         (CASE WHEN {_ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)
-       + (CASE WHEN {_ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)
-       + (CASE WHEN {_ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)
-       + (CASE WHEN {_ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END) AS bucket
+         (CASE WHEN {ivf_proj_sql(0)} > 0 THEN 1 ELSE 0 END)
+       + (CASE WHEN {ivf_proj_sql(1)} > 0 THEN 2 ELSE 0 END)
+       + (CASE WHEN {ivf_proj_sql(2)} > 0 THEN 4 ELSE 0 END)
+       + (CASE WHEN {ivf_proj_sql(3)} > 0 THEN 8 ELSE 0 END) AS bucket
   FROM xu
 )"""
 
 IVF_TOPK_INNER = f"""SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         {o_rnd(_COSINE_SQL, "cosine")},
+         {o_rnd(COSINE_SQL, "cosine")},
          CAST(row_number() OVER (
               PARTITION BY q.vec_id
-              ORDER BY {o_rnd(_COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
+              ORDER BY {o_rnd(COSINE_SQL)} DESC, c.vec_id) AS INTEGER) AS rn
   FROM (SELECT vec_id, embedding, unnest([bucket, xor(bucket, 1),
                xor(bucket, 2), xor(bucket, 4), xor(bucket, 8)]) AS bucket
         FROM b WHERE vec_id < 10) q
@@ -996,7 +998,7 @@ def _pq_id2(x, y):
     )
 
 
-def _pq_train_encode(spark, e, q_cut: int = 10):
+def pq_train_encode(spark, e, q_cut: int = 10):
     """Shared PQ machinery for sim_cosine_pq and sim_cosine_ivfpq
     (extracted verbatim in r9 so the two operators can never train
     divergent codebooks): seed codebooks from the PQ_K smallest-id
@@ -1153,7 +1155,7 @@ lut AS MATERIALIZED (
   GROUP BY s.vec_id, s.sub_id, k.cid
 ),
 norms AS MATERIALIZED (
-  SELECT vec_id, sqrt({_dot_sql('embedding', 'embedding')}) AS nrm FROM e
+  SELECT vec_id, sqrt({dot_sql('embedding', 'embedding')}) AS nrm FROM e
 )"""
 
 
@@ -1185,9 +1187,9 @@ shortlist AS MATERIALIZED (
 )
 SELECT q_id, c_id, cosine, rn FROM (
   SELECT s.q_id, s.c_id,
-         {o_rnd(_COSINE_SQL, "cosine")},
+         {o_rnd(COSINE_SQL, "cosine")},
          CAST(row_number() OVER (PARTITION BY s.q_id
-              ORDER BY {o_rnd(_COSINE_SQL)} DESC, s.c_id) AS INTEGER) AS rn
+              ORDER BY {o_rnd(COSINE_SQL)} DESC, s.c_id) AS INTEGER) AS rn
   FROM shortlist s
   JOIN e q ON q.vec_id = s.q_id
   JOIN e c ON c.vec_id = s.c_id
@@ -1238,7 +1240,7 @@ def sim_cosine_pq(spark, sf_dir):
             F.col("v"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
         ),
     )
-    pq = _pq_train_encode(spark, e, q_cut=10)
+    pq = pq_train_encode(spark, e, q_cut=10)
     if pq is None:  # empty corpus → no codebooks, not a crash
         return spark.createDataFrame(
             [], "q_id bigint, c_id bigint, cosine double, rn int"
@@ -1303,4 +1305,545 @@ def sim_cosine_pq(spark, sf_dir):
         exact.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select("q_id", "c_id", "cosine", "rn")
+    )
+
+
+# ---------------------------------------------------------------------------
+# sim_cosine_sq8 — int8 scalar quantization: the third quantization
+# family (PQ = codebook, MRL = prefix truncation, SQ8 = per-vector
+# symmetric int8). Shortlist by exact-integer int8 dot products, exact
+# cosine re-rank of the shortlist.
+
+SQ8_QCUT = 10
+_SQ8_SHORTLIST = 20
+SQ8_TOPK = 5
+
+_SQ8_BASE_SQL = f"""
+base AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings WHERE embedding IS NOT NULL
+),
+sq AS (
+  SELECT vec_id, v,
+         list_max(list_transform(v, x -> abs(x))) AS amax,
+         {norm_sql("v")} AS nrm,
+         list_transform(
+           v, x -> CAST(floor(x * 127 / list_max(list_transform(v, y -> abs(y)))
+                              + 0.5) AS BIGINT)) AS q8
+  FROM base
+  WHERE list_max(list_transform(v, x -> abs(x))) > 0
+)"""
+
+
+# Shared by sim_cosine_sq8 and its evaluator ml_ndcg, so the index and
+# its metric cannot drift apart silently (the ml_mrr <-> sim_cosine_ivf
+# pattern).
+SQ8_CTES = f"""{_SQ8_BASE_SQL},
+pairs AS (
+  SELECT a.vec_id AS q_id, b.vec_id AS c_id,
+         {dot_sql("a.q8", "b.q8")} AS dot8,
+         a.amax AS aq, b.amax AS ac, a.nrm AS nq, b.nrm AS nc,
+         a.v AS qv, b.v AS cv
+  FROM sq a JOIN sq b ON b.vec_id != a.vec_id
+  WHERE a.vec_id < {SQ8_QCUT}
+),
+short AS (
+  SELECT *, row_number() OVER (
+      PARTITION BY q_id
+      ORDER BY {o_rnd("(dot8 * aq * ac) / (16129.0 * nq * nc)", nd=6)} DESC,
+               c_id) AS rn8
+  FROM pairs
+),
+rer AS (
+  SELECT q_id, c_id,
+         {o_rnd(f"{dot_sql('qv', 'cv')} / (nq * nc)", "cosine")}
+  FROM short WHERE rn8 <= {_SQ8_SHORTLIST}
+),
+sq8_topk AS (
+  SELECT q_id, c_id, cosine, rn FROM (
+    SELECT q_id, c_id, cosine,
+           CAST(row_number() OVER (PARTITION BY q_id
+                ORDER BY cosine DESC, c_id) AS INTEGER) AS rn
+    FROM rer
+  ) WHERE rn <= {SQ8_TOPK}
+)"""
+
+
+@register(
+    "sim_cosine_sq8",
+    oracle=f"""
+WITH {SQ8_CTES}
+SELECT q_id, c_id, cosine, rn FROM sq8_topk
+""",
+)
+def sim_cosine_sq8(spark, sf_dir):
+    """ANN via per-vector symmetric int8 scalar quantization: q_i =
+    round(v_i * 127 / max|v|) — the classic SQ8 index cell (FAISS
+    ScalarQuantizer, Lucene int8 HNSW storage). Shortlist of
+    {_SQ8_SHORTLIST} by the int8 dot estimate, exact cosine re-rank to
+    top {SQ8_TOPK}.
+
+    Why this matters at 100 TB: the scan side of brute-force ANN is
+    memory-bandwidth-bound, and SQ8 cuts the scanned bytes 4x vs fp32
+    (8x vs fp64) while keeping the estimator a pure-INTEGER dot
+    product — exact int64 arithmetic, so the shortlist is
+    partition-count- and engine-invariant (the PQ/IVF float-score
+    subtlety disappears). Per-vector scale+norm ride along as two
+    doubles (the standard SQ sidecar). The plan is the sim_cosine_topk
+    shape — broadcast queries, one candidate pass, WindowGroupLimit
+    shortlist — with the re-rank touching only shortlisted fp
+    vectors. Estimator rank key is quantized to 6dp like the IVF/PQ
+    family; re-rank and output round at the family-standard 4dp."""
+    e = (
+        table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        )
+        .withColumn("amax", F.array_max(F.transform("v", F.abs)))
+        .filter(F.col("amax") > 0)
+        .withColumn("nrm", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
+        .withColumn(
+            "q8",
+            F.transform(
+                "v",
+                lambda x: F.floor(x * 127 / F.col("amax") + 0.5).cast(
+                    "bigint"
+                ),
+            ),
+        )
+    )
+    q = F.broadcast(
+        e.filter(F.col("vec_id") < SQ8_QCUT).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("v").alias("qv"),
+            F.col("amax").alias("aq"),
+            F.col("nrm").alias("nq"),
+            F.col("q8").alias("qq8"),
+        )
+    )
+    c = e.select(
+        F.col("vec_id").alias("c_id"),
+        F.col("v").alias("cv"),
+        F.col("amax").alias("ac"),
+        F.col("nrm").alias("nc"),
+        F.col("q8").alias("cq8"),
+    )
+    dot8 = dot_fold(F.col("qq8"), F.col("cq8"))
+    est = (F.col("dot8") * F.col("aq") * F.col("ac")) / (
+        F.lit(16129.0) * F.col("nq") * F.col("nc")
+    )
+    w8 = Window.partitionBy("q_id").orderBy(F.desc("est6"), F.asc("c_id"))
+    short = (
+        q.join(c, F.col("c_id") != F.col("q_id"))
+        .withColumn("dot8", dot8)
+        .withColumn("est6", rnd(est, nd=6))
+        .withColumn("rn8", F.row_number().over(w8))
+        .filter(F.col("rn8") <= _SQ8_SHORTLIST)
+    )
+    cosine = dot_fold(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    return (
+        short.withColumn("cosine", rnd(cosine))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= SQ8_TOPK)
+        .select("q_id", "c_id", "cosine", "rn")
+    )
+
+
+# ---------------------------------------------------------------------------
+# sim_source_minhash — mergeable corpus-level MinHash sketch per source
+
+
+def _src_minhash_oracle() -> str:
+    h28 = o_hex_int("md5(t)", 7)
+    mh_cols = ",\n         ".join(
+        f"min((h * {PERM_A[i]} + {PERM_B[i]}) % {BUCKET_M}) AS mh{i}"
+        for i in range(N_HASHES)
+    )
+    agree = " + ".join(
+        f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END"
+        for i in range(N_HASHES)
+    )
+    return f"""
+WITH st AS MATERIALIZED (
+  SELECT DISTINCT source, unnest(list_distinct(string_split(lower(text), ' '))) AS t
+  FROM documents
+),
+th AS MATERIALIZED (
+  SELECT source, {h28} AS h FROM st
+),
+sig AS MATERIALIZED (
+  SELECT source,
+         {mh_cols}
+  FROM th GROUP BY source
+),
+sz AS MATERIALIZED (
+  SELECT source, CAST(count(*) AS BIGINT) AS n FROM st GROUP BY source
+),
+inter AS MATERIALIZED (
+  SELECT a.source AS src_a, b.source AS src_b, CAST(count(*) AS BIGINT) AS i
+  FROM st a JOIN st b ON a.t = b.t AND a.source < b.source
+  GROUP BY a.source, b.source
+)
+SELECT a.source AS src_a, b.source AS src_b,
+       floor(CAST(({agree}) AS DOUBLE) / {N_HASHES} * 10000 + 0.5) / 10000
+         AS est_jaccard,
+       floor(CAST(coalesce(i.i, 0) AS DOUBLE)
+             / (za.n + zb.n - coalesce(i.i, 0)) * 10000 + 0.5) / 10000
+         AS jaccard
+FROM sig a JOIN sig b ON a.source < b.source
+JOIN sz za ON za.source = a.source
+JOIN sz zb ON zb.source = b.source
+LEFT JOIN inter i ON i.src_a = a.source AND i.src_b = b.source
+"""
+
+
+@register("sim_source_minhash", oracle=_src_minhash_oracle())
+def sim_source_minhash(spark, sf_dir):
+    """Corpus-level similarity between SOURCES via mergeable MinHash
+    sketches: each source's token set is summarized by N_HASHES
+    min-aggregations (the same 28-bit md5 hash + universal-hash
+    permutations as dedup_minhash, so sketch and dedup cannot drift),
+    and pairwise estimated Jaccard = fraction of agreeing signature
+    slots — emitted NEXT TO the exact Jaccard so the sketch's error is
+    measured on the graded path, not asserted.
+
+    This is the sketch-rollup shape of corpus governance ("how much
+    does crawl A overlap crawl B"): min() is associative and
+    commutative, so per-partition partials merge in the map-combine —
+    the sketch of a 100 TB source is computed in ONE streaming
+    aggregation pass and two sources' sketches union by slot-wise min
+    WITHOUT touching raw data again, where exact Jaccard needs a
+    token-level join of both corpora. The exact side here is the
+    oracle's ground truth AND stays feasible because sources are few;
+    at scale you keep only the sketch."""
+    st = (
+        table(spark, sf_dir, "documents")
+        .select(
+            "source",
+            F.explode(
+                F.array_distinct(F.split(F.lower("text"), " "))
+            ).alias("t"),
+        )
+        .distinct()
+    )
+    th = st.select("source", hex_int(F.md5("t"), 7).alias("h"))
+    sig = th.groupBy("source").agg(
+        *[
+            F.min(
+                (F.col("h") * F.lit(PERM_A[i]) + F.lit(PERM_B[i]))
+                % F.lit(BUCKET_M)
+            ).alias(f"mh{i}")
+            for i in range(N_HASHES)
+        ]
+    )
+    sz = st.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sig.alias("a"), sig.alias("b")
+    agree = sum(
+        F.when(F.col(f"a.mh{i}") == F.col(f"b.mh{i}"), 1).otherwise(0)
+        for i in range(N_HASHES)
+    )
+    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
+        F.col("a.source").alias("src_a"),
+        F.col("b.source").alias("src_b"),
+        (
+            F.floor(
+                agree.cast("double") / N_HASHES * 10000 + F.lit(0.5)
+            )
+            / 10000
+        ).alias("est_jaccard"),
+    )
+    inter = (
+        st.alias("x")
+        .join(
+            st.alias("y"),
+            (F.col("x.t") == F.col("y.t"))
+            & (F.col("x.source") < F.col("y.source")),
+        )
+        .groupBy(
+            F.col("x.source").alias("src_a"),
+            F.col("y.source").alias("src_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("i"))
+    )
+    return (
+        pairs.join(
+            F.broadcast(sz.select(F.col("source").alias("src_a"), F.col("n").alias("na"))),
+            "src_a",
+        )
+        .join(
+            F.broadcast(sz.select(F.col("source").alias("src_b"), F.col("n").alias("nb"))),
+            "src_b",
+        )
+        .join(F.broadcast(inter), ["src_a", "src_b"], "left")
+        .select(
+            "src_a",
+            "src_b",
+            "est_jaccard",
+            (
+                F.floor(
+                    F.coalesce(F.col("i"), F.lit(0)).cast("double")
+                    / (F.col("na") + F.col("nb") - F.coalesce(F.col("i"), F.lit(0)))
+                    * 10000
+                    + F.lit(0.5)
+                )
+                / 10000
+            ).alias("jaccard"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# sim_maxsim
+
+_MS_TOK = 8  # token vectors per embedding (64 dims -> 8 x 8)
+_MS_DIM = 8
+_MS_NQ = 5  # query vectors: vec_id < 5
+_MS_TOPK = 3
+
+
+def _maxsim_oracle() -> str:
+    cos = (
+        f"{dot_sql('q.tv', 'c.tv')} / ({norm_sql('q.tv')} * {norm_sql('c.tv')})"
+    )
+    return f"""
+WITH toks AS (
+    SELECT vec_id, t,
+           list_slice(list_transform(embedding, x -> CAST(x AS DOUBLE)),
+                      (t - 1) * {_MS_DIM} + 1, t * {_MS_DIM}) AS tv
+    FROM embeddings,
+         LATERAL (SELECT unnest(generate_series(1, {_MS_TOK})) AS t)
+),
+q AS (SELECT * FROM toks WHERE vec_id < {_MS_NQ}),
+c AS (SELECT * FROM toks WHERE vec_id >= {_MS_NQ}),
+tok_max AS (
+    SELECT q.vec_id AS q_id, c.vec_id AS c_id, q.t AS qt,
+           max({o_rnd(cos)}) AS m
+    FROM q JOIN c ON true
+    GROUP BY q.vec_id, c.vec_id, q.t
+),
+scores AS (
+    SELECT q_id, c_id, {o_rnd("sum(m)", "maxsim")}
+    FROM tok_max GROUP BY q_id, c_id
+)
+SELECT q_id, c_id, maxsim, rn FROM (
+    SELECT q_id, c_id, maxsim,
+           CAST(row_number() OVER (PARTITION BY q_id
+                ORDER BY maxsim DESC, c_id) AS INTEGER) AS rn
+    FROM scores)
+WHERE rn <= {_MS_TOPK}
+"""
+
+
+@register("sim_maxsim", oracle=_maxsim_oracle())
+def sim_maxsim(spark, sf_dir):
+    """ColBERT-style late-interaction top-3: each of 5 query vectors is
+    split into 8 token vectors (8-dim slices, deterministic), every
+    candidate likewise; score = Σ_qt max_ct cosine(qt, ct). Late
+    interaction beats single-vector cosine when different query tokens
+    match different document regions — the granularity single-vector
+    retrieval (sim_cosine_topk) averages away.
+
+    Plan shape: explode both sides to token rows, broadcast the (tiny)
+    query-token side, one equi-free token join bounded by
+    |q_tokens| × |c_tokens|, then two aggregations — per-(pair, query
+    token) MAX, per-pair SUM — both map-side combinable. Per-token
+    max is the WindowGroupLimit-free formulation (groupBy max beats a
+    window here: no ordering needed). At corpus scale the candidate
+    set comes from an ANN prefilter (sim_cosine_ivf) and MaxSim
+    re-ranks the shortlist — exactly how late-interaction systems
+    deploy; the 4dp-rounded per-token cosines reuse the shared
+    dot_fold, so the whole score replays in SQL."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+    )
+    toks = e.select(
+        "vec_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("t"),
+                        F.slice("emb", (t - 1) * _MS_DIM + 1, _MS_DIM).alias(
+                            "tv"
+                        ),
+                    )
+                    for t in range(1, _MS_TOK + 1)
+                ]
+            )
+        ).alias("tok"),
+    ).select("vec_id", F.col("tok.t").alias("t"), F.col("tok.tv").alias("tv"))
+    q = F.broadcast(
+        toks.where(F.col("vec_id") < _MS_NQ).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("t").alias("qt"),
+            F.col("tv").alias("qv"),
+        )
+    )
+    c = toks.where(F.col("vec_id") >= _MS_NQ).select(
+        F.col("vec_id").alias("c_id"), F.col("tv").alias("cv")
+    )
+    cos = dot_fold(F.col("qv"), F.col("cv")) / (
+        F.sqrt(dot_fold(F.col("qv"), F.col("qv")))
+        * F.sqrt(dot_fold(F.col("cv"), F.col("cv")))
+    )
+    tok_max = (
+        c.crossJoin(q)
+        .withColumn("cc", rnd(cos))
+        .groupBy("q_id", "c_id", "qt")
+        .agg(F.max("cc").alias("m"))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("maxsim"), F.asc("c_id"))
+    return (
+        tok_max.groupBy("q_id", "c_id")
+        .agg(rnd(F.sum("m"), "maxsim"))
+        .withColumn("rn", F.row_number().over(w).cast("int"))
+        .where(F.col("rn") <= _MS_TOPK)
+        .select("q_id", "c_id", "maxsim", "rn")
+    )
+
+
+# ---------------------------------------------------------------------------
+# sim_cosine_binary
+
+_BIN_NQ = 10
+_BIN_TOPK = 5
+
+
+def _bin_word(word: int):
+    """Bits 32*word .. 32*word+31 of the sign code as one bigint."""
+    return F.expr(
+        "aggregate(transform(sequence(0, 31), i -> IF(element_at(emb, "
+        f"{32 * word} + i + 1) > 0D, shiftleft(cast(1 as bigint), i), "
+        "cast(0 as bigint))), cast(0 as bigint), (a, x) -> a + x)"
+    )
+
+
+def _bin_word_sql(col: str, word: int) -> str:
+    return (
+        f"list_sum(list_transform(range(0, 32), i -> CASE WHEN "
+        f"{col}[{32 * word} + i + 1] > 0 THEN (CAST(1 AS BIGINT) << i) "
+        f"ELSE CAST(0 AS BIGINT) END))"
+    )
+
+
+def _binary_oracle() -> str:
+    h = (
+        f"(bit_count(xor(q.h0, c.h0)) + bit_count(xor(q.h1, c.h1)))"
+    )
+    return f"""
+WITH codes AS (
+    SELECT vec_id,
+           CAST({_bin_word_sql("embedding", 0)} AS BIGINT) AS h0,
+           CAST({_bin_word_sql("embedding", 1)} AS BIGINT) AS h1
+    FROM embeddings
+),
+q AS (SELECT * FROM codes WHERE vec_id < {_BIN_NQ}),
+c AS (SELECT * FROM codes WHERE vec_id >= {_BIN_NQ})
+SELECT q_id, c_id, hamming, rn FROM (
+    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+           CAST({h} AS BIGINT) AS hamming,
+           CAST(row_number() OVER (PARTITION BY q.vec_id
+                ORDER BY {h}, c.vec_id) AS INTEGER) AS rn
+    FROM q CROSS JOIN c)
+WHERE rn <= {_BIN_TOPK}
+"""
+
+
+@register("sim_cosine_binary", oracle=_binary_oracle())
+def sim_cosine_binary(spark, sf_dir):
+    """Binary-code nearest neighbors: each 64-dim embedding becomes a
+    64-bit sign code (bit i = coordinate i > 0 — hyperplane LSH with
+    the coordinate axes as hyperplanes), held as two 32-bit halves in
+    bigints so no shift ever touches the sign bit (the engine-safe
+    layout agg_bloom_filter established). Top-5 per query by Hamming
+    distance = popcount(xor) on each half — integer-exact, so the
+    whole ranking hash-grades.
+
+    This is the 8-byte compression point of the ANN family: SQ8 keeps
+    64 bytes, PQ 8 bytes with codebooks and ADC lookups; binary codes
+    need NO codebook and the distance is two xor+popcount
+    instructions — the candidate-generation tier billion-scale systems
+    scan first, re-ranking survivors with exact cosine
+    (sim_cosine_topk's plan). The code build is one whole-stage-
+    codegen projection; at 100 TB codes ride in a 64x smaller column
+    and the scan is bandwidth-bound at 8 bytes/vector."""
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+    )
+    codes = e.select(
+        "vec_id", _bin_word(0).alias("h0"), _bin_word(1).alias("h1")
+    )
+    q = F.broadcast(
+        codes.where(F.col("vec_id") < _BIN_NQ).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("h0").alias("q0"),
+            F.col("h1").alias("q1"),
+        )
+    )
+    c = codes.where(F.col("vec_id") >= _BIN_NQ).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("h0").alias("c0"),
+        F.col("h1").alias("c1"),
+    )
+    ham = (
+        F.bit_count(F.col("q0").bitwiseXOR(F.col("c0")))
+        + F.bit_count(F.col("q1").bitwiseXOR(F.col("c1")))
+    ).cast("bigint")
+    w = Window.partitionBy("q_id").orderBy(F.asc("hamming"), F.asc("c_id"))
+    return (
+        c.crossJoin(q)
+        .withColumn("hamming", ham)
+        .withColumn("rn", F.row_number().over(w).cast("int"))
+        .where(F.col("rn") <= _BIN_TOPK)
+        .select("q_id", "c_id", "hamming", "rn")
+    )
+
+
+@register(
+    "sim_levenshtein",
+    oracle="""
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       CAST(levenshtein(substring(a.text, 1, 30), substring(b.text, 1, 30)) AS INTEGER) AS dist
+FROM documents a
+JOIN documents b ON a.lang = b.lang
+                AND substring(a.text, 1, 4) = substring(b.text, 1, 4)
+                AND a.doc_id < b.doc_id
+WHERE levenshtein(substring(a.text, 1, 30), substring(b.text, 1, 30)) <= 8
+""",
+)
+def sim_levenshtein(spark, sf_dir):
+    """Edit-distance near-dup: same-language docs sharing a 4-char
+    blocking prefix whose 30-char prefixes are within Levenshtein
+    distance 8. The (lang, 4-char-prefix) blocking key is part of the
+    operator's definition (mirrored in the oracle): it turns the
+    O(n²)-per-lang self-join into an equi-join over small blocks — the
+    only shape that survives 100 TB. Finer corpora swap in a coarser
+    fingerprint (first-k-token hash) as the block key; same plan."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        F.substring("text", 1, 4).alias("blk"),
+        F.substring("text", 1, 30).alias("prefix"),
+    )
+    a = d.alias("a")
+    b = d.alias("b")
+    dist = F.levenshtein(F.col("a.prefix"), F.col("b.prefix"))
+    return (
+        a.join(
+            b,
+            (F.col("a.lang") == F.col("b.lang"))
+            & (F.col("a.blk") == F.col("b.blk"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            dist.alias("dist"),
+        )
+        .filter(F.col("dist") <= 8)
     )

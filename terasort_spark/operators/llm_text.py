@@ -1,6 +1,7 @@
 """Text-analysis operators for LLM data pipelines (SURVEY.md §2b +
 north-star extension): wordcount, per-language stats, quality scoring,
-language-ID heuristic, and content fingerprinting.
+language-ID heuristic, content fingerprinting, markup extraction,
+MinHash containment and Kneser-Ney bigram smoothing.
 
 Everything is built-in-function composition (split/explode/regexp/md5) —
 JVM-side, no Python UDFs — so the same pipeline runs at corpus scale
@@ -135,7 +136,6 @@ def _marker_hits_sql(words):
         f"CAST(len(list_filter(string_split(lower(text), ' '), "
         f"w -> list_contains([{lst}], w))) AS INTEGER)"
     )
-
 
 
 def langid_pred_spark(toks):
@@ -746,4 +746,309 @@ def text_langid_confusion(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n"),
             rnd(F.count(F.lit(1)).cast("double") / F.max("n_true"), "row_frac"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# text_markup_extract — HTML -> visible text (the WET-extraction step).
+
+# Deterministic markup wrapper: the corpus has no raw HTML, so the query
+# MANUFACTURES a realistic page around each document (head with script,
+# heading, paragraph, per-doc links) — the _with_dups convention from
+# llm_dedup. Extraction must get exactly the visible text back out.
+_SCRIPT = "<script>var x = 1;</script>"
+
+
+@register(
+    "text_markup_extract",
+    oracle=f"""
+WITH page AS (
+    SELECT doc_id,
+           '<html><head>{_SCRIPT}</head><body><h1>' || lang ||
+           '</h1><p>' || text || '</p><a href="u' || doc_id ||
+           '">more</a>' ||
+           CASE WHEN doc_id % 3 = 0 THEN '<a href="v">x</a>' ELSE '' END ||
+           '</body></html>' AS html
+    FROM documents WHERE text IS NOT NULL
+),
+stripped AS (
+    SELECT doc_id, html,
+           trim(regexp_replace(regexp_replace(regexp_replace(html,
+               '<script>.*?</script>', ' ', 'g'),
+               '<[^>]*>', ' ', 'g'),
+               ' +', ' ', 'g')) AS clean_text
+    FROM page
+)
+SELECT doc_id, clean_text,
+       CAST(length(clean_text) AS BIGINT) AS n_chars_clean,
+       CAST(len(regexp_extract_all(html, '<a href=')) AS INTEGER) AS n_links
+FROM stripped
+""",
+)
+def text_markup_extract(spark, sf_dir):
+    """Markup-to-text extraction — the first step of every web-corpus
+    pipeline (WET extraction): drop non-content blocks (<script> here;
+    style/nav in production), strip tags, collapse whitespace, and keep
+    link counts as a quality signal (link-farm pages have high
+    links-per-char). The page is manufactured deterministically around
+    each document so the oracle can verify the extraction recovers the
+    visible text EXACTLY (heading + body), not approximately.
+
+    Scale: three regexp_replace passes and one regexp count, all
+    whole-stage codegen over the scan — no shuffle at all; the output
+    is one row per page. Java and RE2 both support the non-greedy
+    block pattern; production would swap the regex chain for a real
+    HTML parser behind the same projection."""
+    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    html = F.concat(
+        F.lit(f"<html><head>{_SCRIPT}</head><body><h1>"),
+        F.col("lang"),
+        F.lit("</h1><p>"),
+        F.col("text"),
+        F.lit('</p><a href="u'),
+        F.col("doc_id").cast("string"),
+        F.lit('">more</a>'),
+        F.when(F.col("doc_id") % 3 == 0, F.lit('<a href="v">x</a>')).otherwise(
+            F.lit("")
+        ),
+        F.lit("</body></html>"),
+    )
+    page = d.select("doc_id", html.alias("html"))
+    clean = F.trim(
+        F.regexp_replace(
+            F.regexp_replace(
+                F.regexp_replace(F.col("html"), "<script>.*?</script>", " "),
+                "<[^>]*>",
+                " ",
+            ),
+            " +",
+            " ",
+        )
+    )
+    return page.select(
+        "doc_id",
+        clean.alias("clean_text"),
+        F.length(clean).cast("bigint").alias("n_chars_clean"),
+        F.size(F.regexp_extract_all(F.col("html"), F.lit("<a href="), 0))
+        .cast("int")
+        .alias("n_links"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_minhash_containment — asymmetric containment at LSH scale.
+
+CONTAIN_EST_TAU = 0.7  # keep pairs whose ESTIMATED containment >= tau
+CONTAIN_CAP = 8  # dedup_minhash's per-doc candidate cap
+
+
+def _containment_oracle() -> str:
+    from terasort_spark.operators.llm_dedup import N_HASHES, lsh_candidates_sql
+
+    agree = " + ".join(
+        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
+        for i in range(N_HASHES)
+    )
+    ej = f"(CAST(({agree}) AS DOUBLE) / {N_HASHES})"
+    cont = f"((({ej} / (1 + {ej})) * (len(ta.toks) + len(tb.toks))) / len(tb.toks))"
+    return f"""
+WITH {lsh_candidates_sql(cap=CONTAIN_CAP)}
+SELECT c.a_id, c.b_id,
+       {o_rnd(ej, "est_jaccard")},
+       {o_rnd(cont, "containment")}
+FROM capped c
+JOIN th_t ta ON ta.doc_id = c.a_id
+JOIN th_t tb ON tb.doc_id = c.b_id
+JOIN sig sa ON sa.doc_id = c.a_id
+JOIN sig sb ON sb.doc_id = c.b_id
+WHERE {o_rnd(cont)} >= {CONTAIN_EST_TAU!r}
+"""
+
+
+@register("text_minhash_containment", oracle=_containment_oracle())
+def text_minhash_containment(spark, sf_dir):
+    """Asymmetric containment at LSH scale: how much of candidate doc B
+    lives inside doc A — the signal that catches quotes, boilerplate
+    inclusions and subset-crawls that symmetric Jaccard dilutes
+    (|A∩B|/|A∪B| is small when A is much larger than B even if B ⊂ A).
+    sim_containment computes this exactly but only under a hard
+    doc-count bound; this operator rides dedup_minhash's banded
+    candidate generation (lsh_candidates — same signatures, same
+    bands, same per-doc cap) and ESTIMATES containment from signature
+    agreement without ever re-touching token sets pairwise:
+    Ĵ = (1/32)·Σ 1[mh_i(A)=mh_i(B)], |A∩B| ≈ Ĵ/(1+Ĵ)·(|A|+|B|),
+    containment(B) = |A∩B|/|B| with exact set sizes.
+
+    Deterministic estimate: signature agreement is an integer count and
+    the arithmetic is a fixed-order IEEE expression, so the estimate —
+    not just the candidate set — replays bit-for-bit in the oracle.
+
+    100 TB: identical cost shape to dedup_minhash (the signatures and
+    banding ARE dedup_minhash's); the estimation join moves 32 longs
+    per doc instead of token arrays, so verification bandwidth is
+    constant-size per candidate regardless of document length."""
+    from terasort_spark.operators.llm_dedup import N_HASHES, lsh_candidates
+
+    sig, pairs = lsh_candidates(spark, sf_dir, per_doc_cap=CONTAIN_CAP)
+    a = sig.select(
+        F.col("doc_id").alias("a_id"),
+        F.size("toks").alias("na"),
+        *[F.col(f"mh{i}").alias(f"amh{i}") for i in range(N_HASHES)],
+    )
+    b = sig.select(
+        F.col("doc_id").alias("b_id"),
+        F.size("toks").alias("nb"),
+        *[F.col(f"mh{i}").alias(f"bmh{i}") for i in range(N_HASHES)],
+    )
+    j = pairs.join(a, "a_id").join(b, "b_id")
+    agree = F.lit(0)
+    for i in range(N_HASHES):
+        agree = agree + F.when(
+            F.col(f"amh{i}") == F.col(f"bmh{i}"), 1
+        ).otherwise(0)
+    ej = agree.cast("double") / F.lit(N_HASHES)
+    cont = ((ej / (F.lit(1) + ej)) * (F.col("na") + F.col("nb"))) / F.col("nb")
+    return (
+        j.select(
+            "a_id",
+            "b_id",
+            rnd(ej, "est_jaccard"),
+            rnd(cont, "containment"),
+        )
+        .filter(F.col("containment") >= CONTAIN_EST_TAU)
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_kneser_ney
+
+_KN_D = 0.75  # absolute discount
+_KN_TOP = 10  # per-language output rows
+
+
+@register(
+    "text_kneser_ney",
+    oracle=f"""
+WITH toks AS (
+    SELECT doc_id, lang, string_split(lower(text), ' ') AS ws FROM documents
+),
+big AS (
+    SELECT lang, ws[i] AS w1, ws[i+1] AS w2, count(*) AS c
+    FROM toks, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS i)
+    WHERE ws[i] <> '' AND ws[i+1] <> ''
+    GROUP BY lang, ws[i], ws[i+1]
+),
+ctx AS (SELECT lang, w1, sum(c) AS c1, count(*) AS n_follow
+        FROM big GROUP BY lang, w1),
+cont AS (SELECT lang, w2, count(*) AS n_prec FROM big GROUP BY lang, w2),
+types AS (SELECT lang, count(*) AS n_types FROM big GROUP BY lang),
+kn AS (
+    SELECT b.lang, b.w1, b.w2,
+           (CAST(greatest(b.c - {_KN_D!r}, 0.0) AS DOUBLE) / ctx.c1)
+           + ({_KN_D!r} * ctx.n_follow / ctx.c1)
+             * (CAST(cont.n_prec AS DOUBLE) / types.n_types) AS p
+    FROM big b
+    JOIN ctx ON ctx.lang = b.lang AND ctx.w1 = b.w1
+    JOIN cont ON cont.lang = b.lang AND cont.w2 = b.w2
+    JOIN types ON types.lang = b.lang
+)
+SELECT lang, w1, w2, p_kn, rn FROM (
+    SELECT lang, w1, w2,
+           floor(p * 1000000 + 0.5) / 1000000 AS p_kn,
+           CAST(row_number() OVER (
+               PARTITION BY lang
+               ORDER BY floor(p * 1000000 + 0.5) / 1000000 DESC, w1, w2)
+               AS INTEGER) AS rn
+    FROM kn)
+WHERE rn <= {_KN_TOP}
+""",
+)
+def text_kneser_ney(spark, sf_dir):
+    """Interpolated Kneser–Ney bigram model over the corpus, per
+    language; output = each language's top-10 bigrams by smoothed
+    probability. P_KN(w2|w1) = max(c(w1w2)-D,0)/c(w1) +
+    (D·N1+(w1·)/c(w1)) · N1+(·w2)/|bigram types| with D=0.75 — the
+    continuation-probability backoff that makes "francisco" unlikely
+    after anything but "san", which raw MLE (text_bigram_lm) cannot
+    express. Everything is four count aggregations over the exploded
+    bigram stream joined back on (lang, w1)/(lang, w2) — model size is
+    vocabulary-shaped, never corpus-shaped, and the probability
+    expression tree is mirrored operation-for-operation in the oracle
+    (same left-associative order, 6dp floor-round).
+
+    100 TB: identical shape to the production KenLM-prep pipelines —
+    one shuffle to bigram counts (map-side combined), then
+    vocabulary-sized joins; per-language skew is bounded by the
+    vocabulary, not the corpus."""
+    d = table(spark, sf_dir, "documents").select(
+        "lang", F.split(F.lower("text"), " ").alias("ws")
+    )
+    pairs = d.select(
+        "lang",
+        F.explode(
+            F.expr(
+                "filter(zip_with(slice(ws, 1, size(ws) - 1), "
+                "slice(ws, 2, size(ws) - 1), "
+                "(a, b) -> struct(a as w1, b as w2)), "
+                "p -> p.w1 <> '' AND p.w2 <> '')"
+            )
+        ).alias("bg"),
+    ).select("lang", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    big = pairs.groupBy("lang", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    ctx = big.groupBy("lang", "w1").agg(
+        F.sum("c").alias("c1"), F.count(F.lit(1)).alias("n_follow")
+    )
+    cont = big.groupBy("lang", "w2").agg(F.count(F.lit(1)).alias("n_prec"))
+    types = big.groupBy("lang").agg(F.count(F.lit(1)).alias("n_types"))
+    p = (
+        F.greatest(F.col("c") - F.lit(_KN_D), F.lit(0.0)).cast("double")
+        / F.col("c1")
+    ) + ((F.lit(_KN_D) * F.col("n_follow") / F.col("c1"))
+         * (F.col("n_prec").cast("double") / F.col("n_types")))
+    w = Window.partitionBy("lang").orderBy(
+        F.desc("p_kn"), F.asc("w1"), F.asc("w2")
+    )
+    return (
+        big.join(ctx, ["lang", "w1"])
+        .join(cont, ["lang", "w2"])
+        .join(F.broadcast(types), "lang")
+        .withColumn("p_kn", rnd(p, nd=6))
+        .withColumn("rn", F.row_number().over(w).cast("int"))
+        .where(F.col("rn") <= _KN_TOP)
+        .select("lang", "w1", "w2", "p_kn", "rn")
+    )
+
+
+@register(
+    "text_tokens",
+    oracle=f"""
+WITH toks AS (
+  SELECT lang, doc_id, unnest(regexp_extract_all(text, '([a-z]{{1,4}})', 1)) AS tok
+  FROM documents
+)
+SELECT lang,
+       count(*) AS n_tokens,
+       count(DISTINCT tok) AS n_vocab,
+       {o_rnd("count(*) * 1.0 / count(DISTINCT doc_id)", "tokens_per_doc")}
+FROM toks
+GROUP BY lang
+""",
+)
+def text_tokens(spark, sf_dir):
+    """BPE-ish token counting: greedy <=4-char subword chunks via
+    regexp_extract_all (a stand-in for a real BPE merge table — the
+    Spark-side shape is identical: stringly tokenize, explode, count).
+    Vocabulary size + tokens/doc per language, one explode + one agg."""
+    d = table(spark, sf_dir, "documents")
+    toks = d.select(
+        "lang",
+        "doc_id",
+        F.explode(F.regexp_extract_all("text", F.lit("([a-z]{1,4})"))).alias("tok"),
+    )
+    return toks.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.countDistinct("tok").alias("n_vocab"),
+        rnd(
+            F.count(F.lit(1)) * 1.0 / F.countDistinct("doc_id"), "tokens_per_doc"
+        ),
     )

@@ -277,10 +277,10 @@ def dedup_chunk(spark, sf_dir):
 
 def _mrl_oracle() -> str:
     from terasort_spark.operators._util import o_rnd
-    from terasort_spark.operators.llm_similarity import _dot_sql, _norm_sql
+    from terasort_spark.operators.llm_similarity import dot_sql, norm_sql
 
     def cos(a, b):
-        return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
+        return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
 
     pre_q = f"list_slice(q.embedding, 1, {MRL_DIMS})"
     pre_c = f"list_slice(c.embedding, 1, {MRL_DIMS})"
@@ -394,7 +394,7 @@ def agg_sketch_rollup_hll(spark, sf_dir):
 
 
 # Portable KMV rollup (r11 VERDICT task 3): same parameters as
-# wave15's agg_kmv_theta so the sketch family is consistent repo-wide.
+# sketches.agg_kmv_theta so the sketch family is consistent repo-wide.
 _SKR_K = 64
 _SKR_POW = f"{1 << 60}.0E0"  # 2^60 exactly representable as a double
 

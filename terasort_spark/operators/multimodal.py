@@ -13,6 +13,7 @@ tests/test_llm.py for codec + batch-shape assertions.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
@@ -355,3 +356,108 @@ def multimodal_phash_hamming(spark, sf_dir):
         )
         .distinct()
     )
+
+
+# --------------------------------------------------------------------------
+# multimodal_scenecut — adjacent-frame perceptual-hash deltas.
+
+_CUT_HAMMING = 8  # 12-bit frame hashes: unrelated frames average 6
+_FRAME_BYTES = 64
+
+
+def _frame_bits_sql(h: str) -> str:
+    # bit k set iff md5-digest byte k < byte k+1, weighted 2^k — the
+    # exact comparison the Python frame hash makes (12 bits from the
+    # first 13 digest bytes).
+    def byte(i: int) -> str:
+        return f"CAST('0x'||substr({h}, {2 * i + 1}, 2) AS INT)"
+
+    terms = [
+        f"CASE WHEN {byte(k)} < {byte(k + 1)} THEN {1 << k} ELSE 0 END"
+        for k in range(12)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+@register(
+    "multimodal_scenecut",
+    # text is ASCII in this corpus (pinned by test), so DuckDB's
+    # character-indexed substr slices the same bytes Python slices from
+    # the utf-8 payload; md5 then hashes identical frame bytes.
+    oracle=f"""
+WITH f AS (
+    SELECT doc_id, text,
+           greatest(1, octet_length(encode(text)) // {_FRAME_BYTES}) AS nf
+    FROM documents WHERE text IS NOT NULL
+),
+fr AS (
+    SELECT doc_id, CAST(i AS INT) AS frame_idx,
+           md5(substr(text, CAST(i * {_FRAME_BYTES} + 1 AS BIGINT),
+               {_FRAME_BYTES})) AS h
+    FROM f, unnest(generate_series(0, CAST(nf - 1 AS BIGINT))) AS t(i)
+),
+ph AS (SELECT doc_id, frame_idx,
+              CAST({_frame_bits_sql('h')} AS BIGINT) AS fhash FROM fr),
+lagged AS (
+    SELECT doc_id, frame_idx, fhash,
+           lag(fhash) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev
+    FROM ph
+)
+SELECT doc_id, frame_idx,
+       CAST(bit_count(xor(fhash, prev)) AS INTEGER) AS hamming
+FROM lagged
+WHERE prev IS NOT NULL AND bit_count(xor(fhash, prev)) >= {_CUT_HAMMING}
+""",
+)
+def multimodal_scenecut(spark, sf_dir):
+    """Scene-cut detection: decode each video payload into fixed-width
+    frames (the multimodal_framesample container stub), perceptual-hash
+    every frame (12-bit gradient signs over the frame's md5 digest —
+    the deterministic stand-in for a dHash of decoded pixels), then
+    flag frame transitions whose Hamming distance clears the cut
+    threshold. The standard shot-boundary primitive for video curation
+    (sampling one keyframe per scene instead of one per N frames).
+
+    Scale: frame hashing is ONE stateless Arrow-batched mapInPandas
+    pass (scan-stage, no shuffle); the transition test is a lag window
+    partitioned by doc_id — high-cardinality key, state = one frame
+    hash. Output is bounded by the number of cuts, never frames²."""
+    import hashlib
+
+    def frame_hashes(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out_doc, out_idx, out_hash = [], [], []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                n_frames = max(1, len(payload) // _FRAME_BYTES)
+                for i in range(n_frames):
+                    chunk = bytes(
+                        payload[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES]
+                    )
+                    dg = hashlib.md5(chunk).digest()
+                    bits = 0
+                    for k in range(12):
+                        if dg[k] < dg[k + 1]:
+                            bits |= 1 << k
+                    out_doc.append(doc_id)
+                    out_idx.append(i)
+                    out_hash.append(bits)
+            yield pd.DataFrame(
+                {"doc_id": out_doc, "frame_idx": out_idx, "fhash": out_hash}
+            )
+
+    d = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", F.encode(F.col("text"), "utf-8").alias("payload"))
+    )
+    ph = d.mapInPandas(
+        frame_hashes, schema="doc_id bigint, frame_idx int, fhash bigint"
+    )
+    w = Window.partitionBy("doc_id").orderBy("frame_idx")
+    lagged = ph.withColumn("prev", F.lag("fhash").over(w))
+    hamming = F.bit_count(F.col("fhash").bitwiseXOR(F.col("prev")))
+    return lagged.filter(
+        F.col("prev").isNotNull() & (hamming >= _CUT_HAMMING)
+    ).select("doc_id", "frame_idx", hamming.cast("int").alias("hamming"))

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import DEC, rnd, scratch_dir
-from terasort_spark.operators.llm_lm import _BIGRAMS_SQL, text_bigram_lm
+from terasort_spark.operators.llm_lm import BIGRAMS_SQL, text_bigram_lm
 from terasort_spark.registry import register
 from terasort_spark.sources.snapshots import read_snapshot, write_version
 from terasort_spark.sources.tera_queries import mix32, mix32_sql
@@ -57,7 +57,7 @@ def _ccnet_child_session(outer):
 @register(
     "text_ccnet_bucket",
     oracle=f"""
-WITH bigrams AS ({_BIGRAMS_SQL}),
+WITH bigrams AS ({BIGRAMS_SQL}),
 model AS (
     SELECT lang, w1, w2, count(*) AS c12,
            sum(count(*)) OVER (PARTITION BY lang, w1) AS c1

@@ -40,7 +40,7 @@ RAG_QUERIES = (
 )
 
 
-def _dim_sql(tok: str) -> str:
+def dim_sql(tok: str) -> str:
     """Feature-hash dimension: pure integer function of the token,
     identical text in Spark SQL and DuckDB."""
     return f"((ascii(substr({tok}, 1, 1)) * 31 + length({tok})) % {DIMS})"
@@ -66,7 +66,7 @@ WITH doc_toks AS (
 chunk_vec AS (
     SELECT doc_id * {CHUNK_ID_STRIDE}
                + CAST((ord - 1) // {CHUNK_TOKENS} AS BIGINT) AS chunk_id,
-           {_dim_sql("tok")} AS dim, count(*) AS w
+           {dim_sql("tok")} AS dim, count(*) AS w
     FROM doc_toks GROUP BY 1, 2
 ),
 chunk_norm AS (
@@ -77,7 +77,7 @@ q_toks AS (
     FROM {_queries_sql()}, unnest(string_split(qtext, ' ')) AS u(tok)
 ),
 q_vec AS (
-    SELECT query_id, {_dim_sql("tok")} AS dim, count(*) AS w
+    SELECT query_id, {dim_sql("tok")} AS dim, count(*) AS w
     FROM q_toks GROUP BY 1, 2
 ),
 q_norm AS (
@@ -124,7 +124,7 @@ def pipeline_rag_retrieval(spark, sf_dir):
     )
     toks = F.filter(F.split(F.lower("text"), " "), lambda t: F.length(t) > 0)
     exploded = d.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
-    dim = F.expr(_dim_sql("tok"))
+    dim = F.expr(dim_sql("tok"))
     chunk_vec = (
         exploded.select(
             (

@@ -72,3 +72,43 @@ def set_except(spark, sf_dir):
     r = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("suppkey"))
     a = li.filter(F.col("l_returnflag") == "A").select(F.col("l_suppkey").alias("suppkey"))
     return r.exceptAll(a)
+
+
+# ---------------------------------------------------------------------------
+# set_except_all — bag-semantics difference (completes the set family)
+
+
+@register(
+    "set_except_all",
+    oracle="""
+SELECT c_nationkey AS nationkey FROM customer WHERE c_acctbal > 1000
+EXCEPT ALL
+SELECT s_nationkey AS nationkey FROM supplier
+""",
+)
+def set_except_all(spark, sf_dir):
+    """EXCEPT ALL: multiset difference — each nation keeps
+    max(customer_copies - supplier_copies, 0) rows, the bag semantics
+    EXCEPT (DISTINCT) destroys. Spark plans this as one aggregate of
+    signed counts + generator replication (no join back to the raw
+    rows), the same single-shuffle shape as intersectAll."""
+    c = table(spark, sf_dir, "customer")
+    s = table(spark, sf_dir, "supplier")
+    return c.filter(F.col("c_acctbal") > 1000).select(
+        F.col("c_nationkey").alias("nationkey")
+    ).exceptAll(s.select(F.col("s_nationkey").alias("nationkey")))
+
+
+@register(
+    "set_intersect_all",
+    oracle="""
+SELECT l_suppkey AS suppkey FROM lineitem WHERE l_returnflag = 'R'
+INTERSECT ALL
+SELECT l_suppkey AS suppkey FROM lineitem WHERE l_returnflag = 'A'
+""",
+)
+def set_intersect_all(spark, sf_dir):
+    li = table(spark, sf_dir, "lineitem")
+    r = li.filter(F.col("l_returnflag") == "R").select(F.col("l_suppkey").alias("suppkey"))
+    a = li.filter(F.col("l_returnflag") == "A").select(F.col("l_suppkey").alias("suppkey"))
+    return r.intersectAll(a)

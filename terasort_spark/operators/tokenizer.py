@@ -1,4 +1,5 @@
-"""Tokenizer operators: corpus-scale BPE training and encoding.
+"""Tokenizer operators: corpus-scale BPE training and encoding, the
+unigram LM and WordPiece.
 
 Byte-pair-encoding training is THE tokenizer workload of a pretraining
 pipeline, and its distributed architecture mirrors emb_kmeans: the
@@ -28,6 +29,8 @@ an independent pure-Python BPE replay over the raw corpus.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
@@ -38,7 +41,7 @@ VOCAB_CAP = 10_000  # frequency-truncated word vocab, standard practice
 END = "</w>"
 
 
-def _word_counts(spark, sf_dir):
+def corpus_word_counts(spark, sf_dir):
     """One shuffle: corpus word histogram, frequency-truncated to the
     cap with a deterministic (count desc, word) tie-break."""
     d = table(spark, sf_dir, "documents").filter(
@@ -106,9 +109,9 @@ def encode_word(word: str, merges) -> list[str]:
     return sym
 
 
-def _bpe_base_sql() -> str:
+def bpe_base_sql() -> str:
     """Shared CTE prefix: frequency-truncated word histogram (`vocab`,
-    the ONE corpus-sized aggregation, mirroring _word_counts) and the
+    the ONE corpus-sized aggregation, mirroring corpus_word_counts) and the
     initial character segmentation `r0` (w, pos, sym, n) with '</w>'
     appended — tuple(w) + (END,) in the Python trainer."""
     return f"""
@@ -132,7 +135,7 @@ r0 AS MATERIALIZED (
 )"""
 
 
-def _bpe_round_sql(k: int) -> str:
+def bpe_round_sql(k: int) -> str:
     """One unrolled BPE merge round: r{k-1} -> r{k}.
 
     p{k}: adjacent-pair histogram (lead window per word, weighted by n).
@@ -189,7 +192,7 @@ r{k} AS MATERIALIZED (
 
 
 def _bpe_train_oracle(n_merges: int = N_MERGES) -> str:
-    parts = [_bpe_base_sql()] + [_bpe_round_sql(k) for k in range(1, n_merges + 1)]
+    parts = [bpe_base_sql()] + [bpe_round_sql(k) for k in range(1, n_merges + 1)]
     union = "\nUNION ALL ".join(
         f'SELECT {k - 1} AS rank, a AS "left", b AS "right", cnt AS pair_count FROM b{k}'
         for k in range(1, n_merges + 1)
@@ -204,7 +207,7 @@ def _bpe_encode_oracle(n_merges: int = N_MERGES) -> str:
     symbol count in r{N}. Out-of-vocab words fall back to the unmerged
     character segmentation length(w)+1, exactly like the Spark side's
     left-join coalesce."""
-    parts = [_bpe_base_sql()] + [_bpe_round_sql(k) for k in range(1, n_merges + 1)]
+    parts = [bpe_base_sql()] + [bpe_round_sql(k) for k in range(1, n_merges + 1)]
     return (
         "WITH " + ",".join(parts) + f""",
 dw AS MATERIALIZED (
@@ -236,9 +239,9 @@ def text_bpe_train(spark, sf_dir):
     data-sized step is the histogram; the loop's state is O(vocab),
     independent of corpus size — the same partial-then-model split as
     emb_kmeans. Exact oracle: the merge loop unrolled into N_MERGES
-    MATERIALIZED-CTE rounds (see _bpe_round_sql); semantics additionally
+    MATERIALIZED-CTE rounds (see bpe_round_sql); semantics additionally
     pinned by pure-Python replay in tests/test_tokenizer.py."""
-    wc = [(r["w"], r["n"]) for r in _word_counts(spark, sf_dir).collect()]
+    wc = [(r["w"], r["n"]) for r in corpus_word_counts(spark, sf_dir).collect()]
     merges = train_bpe(wc)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_count bigint"
@@ -253,7 +256,7 @@ def text_bpe_encode(spark, sf_dir):
     and aggregate per document — encoding cost is one broadcast join,
     never a per-token Python loop over the corpus. Emits per-doc word
     and subtoken counts plus the compression ratio for doc_id < 100."""
-    wc = [(r["w"], r["n"]) for r in _word_counts(spark, sf_dir).collect()]
+    wc = [(r["w"], r["n"]) for r in corpus_word_counts(spark, sf_dir).collect()]
     merges = train_bpe(wc)
     enc = [
         (w, len(encode_word(w, merges)), " ".join(encode_word(w, merges)))
@@ -460,7 +463,7 @@ def text_unigram_lm(spark, sf_dir):
     piece table — with the (score, fewer-pieces) objective packed into
     one int64 (score_i * 64 - n_pieces) so max() is exact; integer
     log-prob sums make the comparison engine-portable."""
-    wc = [(r["w"], int(r["n"])) for r in _word_counts(spark, sf_dir).collect()]
+    wc = [(r["w"], int(r["n"])) for r in corpus_word_counts(spark, sf_dir).collect()]
     wc15 = [(w, n) for w, n in wc if len(w) <= UNI_MAXLEN]
     logp = _unigram_pieces(wc15)
     top = sorted(wc15, key=lambda t: (-t[1], t[0]))[:UNI_TOP_WORDS]
@@ -470,4 +473,173 @@ def text_unigram_lm(spark, sf_dir):
         rows.append((w, n, n_pieces, score_i / 1000000.0))
     return spark.createDataFrame(
         rows, "w string, n bigint, n_pieces int, logprob double"
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_wordpiece — greedy longest-match-first subword segmentation
+
+WP_MAXLEN = 12  # words longer than this are out of segmentation scope
+WP_PIECE_LEN = 4  # max candidate piece length
+WP_MULTI_KEEP = 300  # multi-char pieces kept PER CLASS (initial / cont)
+WP_TOP_WORDS = 200  # output rows: most frequent words
+
+
+def _wp_inventory(word_counts):
+    """WordPiece-style piece inventory over the word histogram: every
+    substring of length 1..WP_PIECE_LEN, weighted by word frequency and
+    CLASSED by position — initial (word start) vs continuation (the
+    '##' pieces). All single chars of each class are kept (coverage
+    guarantee: every encodable word segments without [UNK]) plus the
+    WP_MULTI_KEEP most frequent multi-char pieces per class, ties to
+    the lexicographically smaller piece. Returns set[(txt, is_cont)]."""
+    cnt: Counter = Counter()
+    for w, n in word_counts:
+        for s in range(len(w)):
+            for ln in range(1, WP_PIECE_LEN + 1):
+                if s + ln <= len(w):
+                    cnt[(w[s : s + ln], s > 0)] += n
+    kept = {k for k in cnt if len(k[0]) == 1}
+    for is_cont in (False, True):
+        multis = sorted(
+            (
+                (t, c)
+                for (t, ic), c in cnt.items()
+                if ic == is_cont and len(t) > 1
+            ),
+            key=lambda tc: (-tc[1], tc[0]),
+        )[:WP_MULTI_KEEP]
+        kept |= {(t, is_cont) for t, _ in multis}
+    return kept
+
+
+def _wp_encode(w: str, kept) -> list[str]:
+    """The WordPiece inference rule: at each position take the LONGEST
+    inventory piece of the position's class. Always terminates without
+    [UNK] because single chars of both classes are in the inventory."""
+    pos, pieces = 0, []
+    while pos < len(w):
+        for ln in range(min(WP_PIECE_LEN, len(w) - pos), 0, -1):
+            t = w[pos : pos + ln]
+            if (t, pos > 0) in kept:
+                pieces.append(("##" + t) if pos > 0 else t)
+                pos += ln
+                break
+    return pieces
+
+
+def _wp_base_sql() -> str:
+    lens = ",".join(str(i) for i in range(1, WP_PIECE_LEN + 1))
+    return f"""
+vocab AS MATERIALIZED (
+  SELECT w, CAST(count(*) AS BIGINT) AS n
+  FROM (
+    SELECT unnest(string_split(lower(text), ' ')) AS w
+    FROM documents
+    WHERE text IS NOT NULL AND length(text) > 0
+  )
+  WHERE length(w) > 0
+  GROUP BY w
+  ORDER BY n DESC, w
+  LIMIT {VOCAB_CAP}
+),
+v12 AS MATERIALIZED (
+  SELECT w, n FROM vocab WHERE length(w) <= {WP_MAXLEN}
+),
+cand AS MATERIALIZED (
+  SELECT substr(w, s, l) AS txt, s > 1 AS is_cont, SUM(n) AS cnt
+  FROM (SELECT w, n, unnest(generate_series(1, length(w))) AS s FROM v12)
+  CROSS JOIN (SELECT unnest([{lens}]) AS l)
+  WHERE s + l - 1 <= length(w)
+  GROUP BY txt, is_cont
+),
+kept AS MATERIALIZED (
+  SELECT txt, is_cont FROM cand WHERE length(txt) = 1
+  UNION ALL
+  SELECT txt, is_cont FROM (
+    SELECT txt, is_cont,
+           row_number() OVER (PARTITION BY is_cont ORDER BY cnt DESC, txt) AS rk
+    FROM cand WHERE length(txt) > 1
+  ) WHERE rk <= {WP_MULTI_KEEP}
+),
+s0 AS MATERIALIZED (
+  SELECT w, n, CAST(1 AS BIGINT) AS pos, 0 AS n_pieces, '' AS seg
+  FROM (SELECT w, n FROM v12 ORDER BY n DESC, w LIMIT {WP_TOP_WORDS})
+)"""
+
+
+def _wp_step_sql(k: int) -> str:
+    """One unrolled greedy step: every unfinished word matches the kept
+    pieces of its position's class at each length (equi-joins on the
+    substr key — the hash-joinable form of 'longest prefix'), the
+    longest wins (row_number over plen DESC — unique: one piece per
+    (word, pos, length, class)), finished words carry forward."""
+    p = k - 1
+    branches = []
+    for ln in range(1, WP_PIECE_LEN + 1):
+        branches.append(
+            f"""SELECT s.w, s.n, s.pos, s.n_pieces, s.seg, p.txt, {ln} AS plen
+      FROM s{p} s JOIN kept p
+        ON p.is_cont = (s.pos > 1) AND length(p.txt) = {ln}
+           AND p.txt = substr(s.w, CAST(s.pos AS INT), {ln})
+      WHERE s.pos <= length(s.w) AND s.pos + {ln} - 1 <= length(s.w)"""
+        )
+    u = "\n      UNION ALL ".join(branches)
+    return f"""
+m{k} AS MATERIALIZED (
+  SELECT *, row_number() OVER (PARTITION BY w ORDER BY plen DESC) AS rk
+  FROM (
+      {u}
+  )
+),
+s{k} AS MATERIALIZED (
+  SELECT w, n, pos + plen AS pos, n_pieces + 1 AS n_pieces,
+         seg || CASE WHEN pos > 1 THEN ' ##' ELSE '' END || txt AS seg
+  FROM m{k} WHERE rk = 1
+  UNION ALL
+  SELECT w, n, pos, n_pieces, seg FROM s{p} WHERE pos > length(w)
+)"""
+
+
+def _wp_oracle() -> str:
+    parts = [_wp_base_sql()] + [
+        _wp_step_sql(k) for k in range(1, WP_MAXLEN + 1)
+    ]
+    return (
+        "WITH "
+        + ",".join(parts)
+        + f"\nSELECT w, n, n_pieces, seg FROM s{WP_MAXLEN}"
+    )
+
+
+@register("text_wordpiece", oracle=_wp_oracle())
+def text_wordpiece(spark, sf_dir):
+    """WordPiece tokenizer (the BERT family's inference rule, built
+    from the public algorithm): derive a piece inventory from the word
+    histogram — every substring up to WP_PIECE_LEN weighted by word
+    frequency, classed initial vs continuation ('##'), all single
+    chars kept per class for coverage plus the WP_MULTI_KEEP most
+    frequent multi-char pieces per class — then segment each word by
+    GREEDY LONGEST-MATCH-FIRST. Completes the tokenizer triad: BPE
+    (merge-rank replay), unigram-LM (Viterbi), WordPiece (greedy).
+
+    Architecture mirrors text_bpe_train / text_unigram_lm: the ONE
+    corpus-sized step is the word-histogram shuffle (map-side combine);
+    inventory and matcher run over vocab-sized driver model state.
+    Exact oracle: the greedy loop unrolls into WP_MAXLEN steps — each
+    step equi-joins unfinished words to the piece table per candidate
+    length (substr keys, hash-joinable) and keeps the longest — so the
+    FULL segmentation string is hash-checked, not just piece counts.
+    Emits the WP_TOP_WORDS most frequent words with piece count and
+    the '##'-marked segmentation."""
+    wc = [(r["w"], int(r["n"])) for r in corpus_word_counts(spark, sf_dir).collect()]
+    v12 = [(w, n) for w, n in wc if len(w) <= WP_MAXLEN]
+    kept = _wp_inventory(v12)
+    top = sorted(v12, key=lambda t: (-t[1], t[0]))[:WP_TOP_WORDS]
+    rows = []
+    for w, n in top:
+        pieces = _wp_encode(w, kept)
+        rows.append((w, n, len(pieces), " ".join(pieces)))
+    return spark.createDataFrame(
+        rows, "w string, n bigint, n_pieces int, seg string"
     )

@@ -217,3 +217,73 @@ def win_pctrank(spark, sf_dir):
         rnd(F.percent_rank().over(w), "pct_rank"),
         rnd(F.cume_dist().over(w), "cume"),
     )
+
+
+@register(
+    "win_median",
+    oracle=f"""
+SELECT event_id, user_id,
+       {o_rnd("median(value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)", "roll_median")}
+FROM events
+WHERE user_id < 20
+""",
+)
+def win_median(spark, sf_dir):
+    """Rolling median (5-row frame) per user — the robust-smoothing twin
+    of win_sliding's moving average. Spark disallows median() with a
+    window frame, so the frame is materialized as a sorted collect_list
+    (bounded: 5 elements) and the midpoint interpolated explicitly —
+    (arr[(n+1)//2] + arr[n//2+1]) / 2 covers odd and even counts with
+    one expression. Constant-size frame → constant per-row cost at any
+    scale."""
+    ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-4, Window.currentRow)
+    )
+    arr = F.sort_array(F.collect_list("value").over(w))
+    n = F.size(arr)
+    lo = F.element_at(arr, ((n + 1) / 2).cast("int"))
+    hi = F.element_at(arr, (n / 2).cast("int") + 1)
+    # collect_list drops NULLs, so an all-NULL frame has n = 0: the
+    # median is NULL (matching median() semantics), never index 0
+    med = F.when(n > 0, (lo + hi) / 2.0)
+    return ev.select("event_id", "user_id", rnd(med, "roll_median"))
+
+
+@register(
+    "win_ignorenulls",
+    oracle="""
+SELECT event_id, user_id,
+       last_value(v IGNORE NULLS) OVER (
+         PARTITION BY user_id ORDER BY ts, event_id) AS fill_fwd,
+       nth_value(v, 2 IGNORE NULLS) OVER (
+         PARTITION BY user_id ORDER BY ts, event_id
+         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS second_v
+FROM (
+  SELECT event_id, user_id, ts,
+         CASE WHEN event_type = 'error' THEN NULL
+              ELSE floor(value * 10000 + 0.5) / 10000 END AS v
+  FROM events
+)
+WHERE user_id < 10
+""",
+)
+def win_ignorenulls(spark, sf_dir):
+    """IGNORE NULLS window semantics: forward-fill (last non-null so
+    far) and the partition's second non-null value. NULLs are
+    manufactured by voiding 'error' events — the gap-repair pattern for
+    sensor/event streams. One shuffle on user_id serves both windows."""
+    ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 10)
+    v = F.when(F.col("event_type") == "error", F.lit(None)).otherwise(
+        rnd(F.col("value"))
+    )
+    ordered = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    full = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return ev.withColumn("v", v).select(
+        "event_id",
+        "user_id",
+        F.last("v", ignorenulls=True).over(ordered).alias("fill_fwd"),
+        F.nth_value("v", 2, ignoreNulls=True).over(full).alias("second_v"),
+    )

@@ -48,11 +48,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import estimate_rows, table
 from terasort_spark.operators._util import rnd
-from terasort_spark.operators.timeseries import (
-    AC_LAGS,
-    AC_MIN_EVENTS,
-    _autocorr_oracle,
-)
+from terasort_spark.operators.timeseries import AC_LAGS, AC_MIN_EVENTS, autocorr_oracle
 from terasort_spark.registry import register
 
 # Measured crossover (SCALE.md r11 lead-window decades): at 10% hot
@@ -200,7 +196,7 @@ def autocorr_autoplan(
     return autocorr_stats(lead_fn(seq).drop("ts", "event_id"))
 
 
-@register("ts_autocorr_autoplan", oracle=_autocorr_oracle())
+@register("ts_autocorr_autoplan", oracle=autocorr_oracle())
 def ts_autocorr_autoplan(spark, sf_dir):
     """Skew-adaptive per-entity autocorrelation: identical output to
     ``ts_autocorr`` (same oracle grades both), but the physical window

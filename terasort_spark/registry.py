@@ -33,7 +33,7 @@ _ORACLES: dict[str, str] = {}
 # the order queries() yields; _graded_last does.
 _OPERATOR_MODULES = (
     "terasort_spark.operators.aggregates",
-    "terasort_spark.operators.sessions",
+    "terasort_spark.operators.streaming",
     "terasort_spark.functions.scalar",
     "terasort_spark.functions.collections",
     "terasort_spark.functions.udfs",
@@ -43,28 +43,24 @@ _OPERATOR_MODULES = (
     "terasort_spark.operators.llm_similarity",
     "terasort_spark.operators.multimodal",
     "terasort_spark.operators.composites",
-    "terasort_spark.operators.composites2",
+    "terasort_spark.operators.sketches",
+    "terasort_spark.operators.formats",
+    "terasort_spark.operators.sql",
     "terasort_spark.operators.scans",
     "terasort_spark.operators.projections",
     "terasort_spark.operators.joins",
     "terasort_spark.operators.windows",
     "terasort_spark.operators.sorts",
     "terasort_spark.operators.setops",
-    "terasort_spark.operators.extras",
-    "terasort_spark.operators.extras2",
     "terasort_spark.operators.timeseries",
     "terasort_spark.operators.pipelines",
     "terasort_spark.operators.graph",
-    "terasort_spark.operators.relational3",
-    "terasort_spark.operators.relational4",
-    "terasort_spark.operators.relational5",
     "terasort_spark.operators.pretrain",
     "terasort_spark.operators.analytics",
     "terasort_spark.operators.multimodal_audio",
     "terasort_spark.operators.llm_gemm",
     "terasort_spark.operators.llm_lm",
     "terasort_spark.operators.modern",
-    "terasort_spark.operators.relational6",
     "terasort_spark.operators.curation",
     "terasort_spark.operators.geo",
     "terasort_spark.operators.tokenizer",
@@ -76,21 +72,8 @@ _OPERATOR_MODULES = (
     "terasort_spark.operators.rag",
     "terasort_spark.operators.integrity",
     "terasort_spark.operators.ann_index",
-    "terasort_spark.operators.wave7",
     "terasort_spark.plans.mv_rewrite",
-    "terasort_spark.operators.wave8",
-    "terasort_spark.operators.wave10",
-    "terasort_spark.operators.wave11",
-    "terasort_spark.operators.wave12",
-    "terasort_spark.operators.wave13",
-    "terasort_spark.operators.wave14",
-    "terasort_spark.operators.wave15",
     "terasort_spark.plans.window_skew_rewrite",
-    "terasort_spark.operators.wave16",
-    "terasort_spark.operators.wave17",
-    "terasort_spark.operators.wave18",
-    "terasort_spark.operators.wave19",
-    "terasort_spark.operators.wave20",
 )
 
 _loaded = False

@@ -67,7 +67,7 @@ def _mix_sql(v: str) -> str:
     return f"(({mix32_sql(v)}) % 95)"
 
 
-def _gen_df(spark, n_rows: int, n_partitions: int):
+def gen_df(spark, n_rows: int, n_partitions: int):
     """GraySort-shaped rows: 10-char printable-ASCII key (uniform per
     char), 90-char value carrying the zero-padded row id."""
     ids = spark.range(0, n_rows, numPartitions=n_partitions)
@@ -83,13 +83,13 @@ def _gen_df(spark, n_rows: int, n_partitions: int):
     return ids.select("id", key, value)
 
 
-_KEY_SQL = "||".join(
+KEY_SQL = "||".join(
     f"chr(CAST(32 + {_mix_sql(f'id * {KEY_LEN} + {i}')} AS INT))"
     for i in range(KEY_LEN)
 )
 _GEN_SQL = f"""
 SELECT id,
-       {_KEY_SQL} AS key,
+       {KEY_SQL} AS key,
        rpad(lpad(CAST(id AS VARCHAR), 32, '0'), {VALUE_LEN}, 'X') AS value
 FROM range(0, {N_ROWS}) t(id)
 """
@@ -97,7 +97,7 @@ FROM range(0, {N_ROWS}) t(id)
 
 @register("teragen", oracle=_GEN_SQL)
 def teragen_query(spark, sf_dir):
-    return _gen_df(spark, N_ROWS, N_PARTS)
+    return gen_df(spark, N_ROWS, N_PARTS)
 
 
 @register(
@@ -111,7 +111,7 @@ FROM g
 )
 def terasort_query(spark, sf_dir):
     srt = (
-        _gen_df(spark, N_ROWS, N_PARTS)
+        gen_df(spark, N_ROWS, N_PARTS)
         .repartitionByRange(N_PARTS, "key", "id")
         .sortWithinPartitions("key", "id")
     )
@@ -203,7 +203,7 @@ def terasort_skewed(spark, sf_dir):
     (key, salt) with a deterministic per-row salt; key stays the major
     sort term, so the output is still globally key-sorted while the hot
     key spreads over up to 64 salt slices (spanning-partition spread
-    asserted in tests/test_wave10.py; the straggler wall-clock cost and
+    asserted in tests/test_terasort.py; the straggler wall-clock cost and
     the salted fix are measured at 20 GB in
     scripts/tera_scale_probe.py's key-mode dial, BASELINE.md).
 

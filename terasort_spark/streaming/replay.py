@@ -119,7 +119,8 @@ def run_to_memory(
 ):
     """Start the query on a memory sink, release chunks one at a time
     (processing all available work between arrivals so watermarks advance
-    deterministically), then stop and return the sink table.
+    deterministically), then stop and return the sink table. With no
+    stagers (a source that replays by itself) it drains once.
 
     One automatic retry on a transient STREAMING failure only: under a
     heavily loaded suite the zero-interval trigger can occasionally die
@@ -159,6 +160,8 @@ def run_to_memory(
         try:
             for stage in stagers:
                 stage()
+                q.processAllAvailable()
+            if not stagers:  # a source that needs no staging: drain once
                 q.processAllAvailable()
         except StreamingQueryException as exc:
             q.stop()

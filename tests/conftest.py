@@ -24,14 +24,14 @@ _SLOW_MODULES = {
 }
 
 # Individual heavyweights (>13 s measured). None is an oracle-hash test,
-# but two are result-equivalence tests that only `make test-all` runs:
-# test_stream_left_outer_join_equals_batch and
-# test_stream_lsh_equals_sequential_batch_twin.
+# but one is a result-equivalence test that only `make test-all` runs:
+# test_stream_left_outer_join_equals_batch. The other three equivalence
+# tests (streaming LSH ≡ sequential batch, partition-count invariance,
+# quartile histogram ≡ ntile) run in the default tier.
 _SLOW_TESTS = {
     "test_no_nested_output_types",  # builds all 341 plans: 178 s
     "test_stream_left_outer_join_equals_batch",  # 85 s + 46 s
     "test_stream_lsh_compaction_preserves_hash_and_bounds_files",  # 33 s
-    "test_stream_lsh_equals_sequential_batch_twin",  # 21 s
     "test_similarity_rewrite_small_input_uses_exact_form",  # 25 s
     "test_url_canonicalization_idempotent",  # 15 s
 }

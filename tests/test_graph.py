@@ -8,7 +8,12 @@ from __future__ import annotations
 
 import pytest
 
-from terasort_spark.operators.graph import _KCORE_K, lsh_edges, star_components
+from terasort_spark.operators.graph import (
+    _KCORE_K,
+    bfs_levels,
+    lsh_edges,
+    star_components,
+)
 from terasort_spark.operators.llm_dedup import minhash_pairs
 from terasort_spark.registry import queries
 
@@ -116,6 +121,22 @@ def test_bfs_levels_seeds_and_monotonicity(spark, sf_dir):
             assert node % 17 == 0
         else:
             assert any(hops.get(nb) == h - 1 for nb in adj[node]), node
+
+
+def test_bfs_levels_on_a_chain_collapses_visited(spark):
+    """A 20-node chain seeded at one end: every node's hops equal its
+    distance from the seed, and the 19 levels collapse visited at
+    least twice (levels 8 and 16)."""
+    pairs = [(i, i + 1) for i in range(19)]
+    sym = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+    visited, levels, collapses = bfs_levels(sym, seeds)
+    hops = {r["node"]: r["hops"] for r in visited.collect()}
+    assert hops == {i: i for i in range(20)}
+    assert levels == 20  # the 20th level finds an empty frontier
+    assert collapses >= 2
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,17 @@
 """Quality tests for the approximate LLM-pipeline operators: the
 rows-only queries (no DuckDB oracle) still have measurable contracts —
 LSH candidate recall vs the exact pair set, ANN recall vs exact top-k,
-simhash determinism, multimodal batch plumbing."""
+simhash determinism, multimodal batch plumbing — and replays of the
+language-ID and Kneser-Ney text operators."""
 
 from __future__ import annotations
+
+import hashlib
 
 import pytest
 from pyspark.sql import functions as F
 
+from terasort_spark.catalog import table
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -922,3 +926,14 @@ def test_langid_confusion_mass_and_diagonal(spark, sf_dir):
         by_true[t] += n
     for r in rows:
         assert abs(r["row_frac"] - r["n"] / by_true[r["true_lang"]]) < 1e-3
+
+
+# ---------------------------------------------------------------------------
+# text_kneser_ney
+
+
+def test_kneser_ney_probabilities_in_range(spark, sf_dir):
+    rows = _Q["text_kneser_ney"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 0.0 < r["p_kn"] <= 1.0, r

@@ -685,7 +685,8 @@ def test_window_skew_rewrite_strategy_choice_and_parity(spark, sf_dir, tmp_path)
 
 
 # ---------------------------------------------------------------------------
-# Round-12 session-2 wave operators: the scale-critical shapes
+# Scale-critical shapes: semantic and Bloom-gated dedup, Bloom-filter
+# probes, late-interaction and binary-code retrieval, manifest pruning
 
 
 def test_dedup_semantic_pair_join_is_hash_not_nested_loop(spark, sf_dir):
@@ -733,7 +734,7 @@ def test_binary_codes_build_in_codegen(spark, sf_dir):
 
 def test_manifest_prune_scan_lists_only_surviving_files(spark, sf_dir):
     """The pruned read's FileScan must not reference all staged files:
-    behaviorally proven in test_wave18 (corrupting a pruned-out file);
+    behaviorally proven in test_scans (corrupting a pruned-out file);
     here assert the residual predicate is pushed into the pruned scan."""
     df = _Q["scan_manifest_prune"](spark, sf_dir)
     plan = formatted_plan(df)

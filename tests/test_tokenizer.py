@@ -1,7 +1,8 @@
-"""BPE tokenizer operators (terasort_spark/operators/tokenizer.py).
-Rows-only queries, so semantics are pinned here: independent
+"""Tokenizer operators (terasort_spark/operators/tokenizer.py): BPE and
+WordPiece. Semantics are pinned here independently of the oracles:
 brute-force pair counting over the raw corpus, full-document encode
-replay, determinism, and structural invariants."""
+replay, the greedy-longest-match rule, determinism, and structural
+invariants."""
 
 from __future__ import annotations
 
@@ -11,6 +12,11 @@ from pyspark.sql import functions as F
 
 from terasort_spark.operators.tokenizer import (
     END,
+    WP_MAXLEN,
+    WP_PIECE_LEN,
+    _wp_encode,
+    _wp_inventory,
+    corpus_word_counts,
     encode_word,
     train_bpe,
 )
@@ -65,7 +71,7 @@ def test_encode_matches_full_document_replay(spark, sf_dir):
     """Distributed encode (broadcast word→n_sub join) must equal a
     per-document pure-Python replay that re-encodes every word."""
     words = _corpus_words(spark, sf_dir)
-    # Truncate the replay histogram exactly like _word_counts does
+    # Truncate the replay histogram exactly like corpus_word_counts does
     # (sort by (-count, word), keep VOCAB_CAP): text_bpe_encode trains
     # on the capped vocab and gives out-of-vocab words the merge-free
     # char fallback, so the replay must do the same or it breaks
@@ -167,10 +173,10 @@ def test_unigram_viterbi_matches_bruteforce_enumeration(spark, sf_dir):
     from terasort_spark.operators.tokenizer import (
         UNI_PIECE_LEN,
         _unigram_pieces,
-        _word_counts,
+        corpus_word_counts,
     )
 
-    wc = [(r["w"], int(r["n"])) for r in _word_counts(spark, sf_dir).collect()]
+    wc = [(r["w"], int(r["n"])) for r in corpus_word_counts(spark, sf_dir).collect()]
     logp = _unigram_pieces(wc)
 
     def brute(word):
@@ -216,3 +222,51 @@ def test_unigram_prefers_frequent_multichar_pieces():
     assert score < 0
     s1, k1 = _unigram_viterbi("x", logp)
     assert k1 == 1 and s1 == logp["x"]
+
+
+# ---------------------------------------------------------------------------
+# text_wordpiece
+
+
+def test_wordpiece_greedy_invariant(spark, sf_dir):
+    """Every emitted piece must be (a) in the inventory with the right
+    class, (b) the LONGEST inventory match at its position, and the
+    de-marked concatenation must rebuild the word exactly."""
+    wc = [(r["w"], int(r["n"])) for r in corpus_word_counts(spark, sf_dir).collect()]
+    v12 = [(w, n) for w, n in wc if len(w) <= WP_MAXLEN]
+    kept = _wp_inventory(v12)
+    rows = _Q["text_wordpiece"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        pieces = r["seg"].split(" ")
+        assert len(pieces) == r["n_pieces"]
+        pos = 0
+        for i, p in enumerate(pieces):
+            is_cont = p.startswith("##")
+            txt = p[2:] if is_cont else p
+            assert is_cont == (pos > 0)
+            assert (txt, is_cont) in kept
+            # longest-match: no longer inventory piece matches here
+            for ln in range(len(txt) + 1, WP_PIECE_LEN + 1):
+                cand = r["w"][pos : pos + ln]
+                if len(cand) == ln:
+                    assert (cand, pos > 0) not in kept
+            pos += len(txt)
+        assert pos == len(r["w"])
+
+
+def test_wordpiece_unit_rule():
+    """Greedy longest-match on a hand-built inventory, including the
+    classic WordPiece case where greedy differs from the optimal
+    (fewest-pieces) segmentation."""
+    kept = {
+        ("u", False), ("un", False), ("una", False),
+        ("f", True), ("fo", True), ("old", True), ("l", True),
+        ("d", True), ("o", True), ("a", True), ("n", True), ("e", True),
+    }
+    # greedy takes 'una' (longest initial), which strands '##old':
+    # una ##fo ##l ##d — the classic greedy-vs-optimal divergence
+    assert _wp_encode("unafold", kept) == ["una", "##fo", "##l", "##d"]
+    # single-char fallback path
+    assert _wp_encode("un", kept) == ["un"]
+    assert _wp_encode("ufe", kept) == ["u", "##f", "##e"]

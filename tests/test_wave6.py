@@ -1,7 +1,9 @@
-"""Round-6 wave: cross-document boilerplate, Hamilton-stratified
-sampling, z-score outliers, readability, footer-stats queries, and the
-Z-order clustered sink. Oracle equivalence is covered by
-tests/test_oracle.py; these pin the operator-specific invariants."""
+"""Cross-document boilerplate, Hamilton-stratified sampling, z-score
+outliers, readability, footer stats, ML evaluation metrics and
+time-series replays. Oracle equivalence is covered by
+tests/test_oracle.py; these pin the operator-specific invariants.
+This file keeps its name so its test IDs stay stable; its tests
+belong in the family test modules and move there in a later change."""
 
 from __future__ import annotations
 

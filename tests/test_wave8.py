@@ -1,9 +1,12 @@
-"""Round-8 wave: Bloom admission gate, composed MV lifecycle, LSH
-containment. Oracle parity is driver-graded; these tests pin the
-properties the hash compare cannot see — the Bloom's no-false-negative
-guarantee against an independent Python filter, the answer plan reading
-ONLY the refreshed view, and the containment estimator's exactness on
-known-identical documents."""
+"""Bloom admission gate, composed MV lifecycle, LSH containment,
+position deletes and fuzzy ingest. Oracle parity is covered by
+tests/test_oracle.py; these tests pin the properties the hash compare
+cannot see — the Bloom's no-false-negative guarantee against an
+independent Python filter, the answer plan reading ONLY the refreshed
+view, and the containment estimator's exactness on known-identical
+documents.
+This file keeps its name so its test IDs stay stable; its tests
+belong in the family test modules and move there in a later change."""
 
 from __future__ import annotations
 
@@ -12,11 +15,8 @@ import hashlib
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.wave8 import (
-    BLOOM_K,
-    CONTAIN_EST_TAU,
-    _bloom_m,
-)
+from terasort_spark.operators.llm_dedup import BLOOM_K, _bloom_m
+from terasort_spark.operators.llm_text import CONTAIN_EST_TAU
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -218,7 +218,7 @@ def test_fuzzy_ingest_drops_are_admissible(spark, sf_dir):
     every DROP has a verified EXISTING-corpus partner at exact
     Jaccard >= 0.8 (no hash/banding choice can fabricate one); kept +
     dropped partition the batch."""
-    from terasort_spark.operators.wave8 import FUZZY_TAU
+    from terasort_spark.operators.llm_dedup import FUZZY_TAU
 
     docs = {
         r["doc_id"]: set((r["text"] or "").lower().split(" "))

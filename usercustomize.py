@@ -16,7 +16,7 @@ Coverage notes (r11 ADVICE):
   repo-root ``sitecustomize.py`` (imported by ``site`` unconditionally
   unless -S) chains to :func:`install` so the shim still loads there.
 - Driver-side code never relies on the import side effect alone:
-  ``wave15._ensure_state_codec`` calls :func:`install` explicitly.
+  ``operators.streaming.ensure_state_codec`` calls :func:`install` explicitly.
 - Because this file shadows any user-site ``usercustomize.py`` for
   processes whose PYTHONPATH leads with the repo root, :func:`install`
   chain-loads the NEXT usercustomize found later on sys.path, so user
