@@ -14,6 +14,7 @@ Scale design:
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import Window
@@ -945,13 +946,13 @@ WHERE d.doc_id % 5 <> 0
 """
 
 
-def fuzzy_group_state(exb):
-    """Group standing-side (band,bucket,e_id) rows into the sorted
-    per-bucket id arrays the admission rule consumes. Kept as its own
-    factor so a PRE-GROUPED, cap-compacted state store (dedup_stream_lsh's
-    streaming ingest) can skip this full-state shuffle per batch."""
-    return exb.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_set("e_id")).alias("eids")
+def capped_buckets(rows, ids, cap=FUZZY_CAP):
+    """One (band, bucket, eids) row per bucket of ``rows``, with eids
+    the sorted ``cap`` smallest distinct ``ids``. Those are the only
+    standing ids fuzzy_capped's slice can ever use, so the cap changes
+    no admission decision."""
+    return rows.groupBy("band", "bucket").agg(
+        F.slice(F.sort_array(F.collect_set(ids)), 1, cap).alias("eids")
     )
 
 
@@ -993,17 +994,18 @@ def fuzzy_verified_drops(capped, b_toks, e_toks, tau=FUZZY_TAU):
 
 
 def fuzzy_dropped(btb, exb, b_toks, e_toks, cap=FUZZY_CAP, tau=FUZZY_TAU):
-    """THE cross-corpus capped LSH admission rule, factored (r10) so
-    the batch ingest below and the streaming ingest
-    (dedup_stream_lsh's per-micro-batch twin) are one code path.
+    """THE cross-corpus capped LSH admission rule, shared by the batch
+    ingest below and, per micro-batch, by the streaming ingest
+    (dedup_stream_lsh, which keeps its standing side already grouped by
+    capped_buckets and so calls the factors directly).
     ``btb``/(band,bucket,b_id) is the arriving side, ``exb``/(band,
     bucket,e_id) the standing side; ``b_toks``/(b_id,toks) and
-    ``e_toks``/(e_id,toks) feed exact-Jaccard verification. Composed
-    from the three factors above (r11: split so the streaming twin can
-    feed a pre-grouped pruned state instead of re-grouping the full
-    standing corpus every micro-batch)."""
+    ``e_toks``/(e_id,toks) feed exact-Jaccard verification."""
     return fuzzy_verified_drops(
-        fuzzy_capped(btb, fuzzy_group_state(exb), cap), b_toks, e_toks, tau
+        fuzzy_capped(btb, capped_buckets(exb, "e_id", cap), cap),
+        b_toks,
+        e_toks,
+        tau,
     )
 
 
@@ -1066,100 +1068,17 @@ _STREAM_ROUNDS = 3
 _DOCS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
-# Standing-state layout (r10 VERDICT task 2): bucket state is stored
-# PRE-GROUPED and CAP-COMPACTED (per (band,bucket) the sorted <=cap
-# smallest admitted ids — the only ids the admission slice can ever
-# use), hive-partitioned by (band, bs=pmod(bucket, _BUCKET_SHARDS)) so
-# a micro-batch reads only the partition directories its own buckets
-# can touch. Token state is partitioned by ds=pmod(doc_id, _TOK_SHARDS)
-# so Jaccard verification reads only the shards holding candidate ids.
-_BUCKET_SHARDS = 4
-_TOK_SHARDS = 8
-_COMPACT_FILES = 8  # fragmentation threshold: compact a (band, bs)
-
-
-# leaf once it holds this many files (>= bounds read amplification at
-# cap-merge time; appends write one file per touched leaf per batch)
-
-
-def _leaf_file_count(st_b: str, band, bs) -> int:
-    import os as _os
-
-    leaf = _os.path.join(st_b, f"band={band}", f"bs={bs}")
-    try:
-        return sum(1 for f in _os.listdir(leaf) if f.endswith(".parquet"))
-    except OSError:
-        return 0
-
-
-_GSTATE_SCHEMA = "bucket bigint, eids array<bigint>, band int, bs int"
-_TOKS_PART_SCHEMA = "doc_id bigint, toks array<string>, ds int"
-
-
-def _bucket_shard(col):
-    return F.pmod(col, F.lit(_BUCKET_SHARDS)).cast("int")
-
-
-def _tok_shard(col):
-    return F.pmod(col, F.lit(_TOK_SHARDS)).cast("int")
-
-
-def _read_pruned_buckets(spark, st_b, pairs, cap):
-    """Partition-pruned standing-state read: only the (band, bs) hive
-    directories in ``pairs`` are listed and scanned — the filter is a
-    disjunction over partition columns only, so it resolves at file
-    listing time (PartitionFilters in the scan node), never touching
-    the other shards' bytes. ``pairs`` is bounded at
-    N_BANDS x _BUCKET_SHARDS regardless of corpus size.
-
-    State rows are APPEND-ONLY pre-capped groups (one row per bucket
-    per admitting batch); this read cap-merges them back to one sorted
-    <=cap array per bucket. Exact despite per-row capping: an id
-    outside a row's cap-smallest could only have been capped out by
-    cap smaller ids in that same row, all of which are present in the
-    merge, so it can never re-enter any cap slice."""
-    from functools import reduce
-
-    cond = reduce(
-        lambda acc, p: acc
-        | ((F.col("band") == p[0]) & (F.col("bs") == p[1])),
-        sorted(pairs),
-        F.lit(False),
-    )
-    return (
-        spark.read.schema(_GSTATE_SCHEMA)
-        .parquet(st_b)
-        .filter(cond)
-        .groupBy("band", "bucket")
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("eids")))),
-                1,
-                cap,
-            ).alias("eids")
-        )
-        .select("band", "bucket", "eids")
-    )
-
-
-def _compact_buckets(spark, st_b, pairs, cap):
-    """Physical cap-compaction: rewrite the given (band, bs) partitions
-    as one merged <=cap row per bucket (dynamic partition overwrite of
-    a checkpointed merge), so standing state stays bounded at
-    cap x n_buckets ids no matter how many batches appended. Triggered
-    per leaf by measured fragmentation (>= _COMPACT_FILES files) —
-    amortized, never on the admission path."""
-    merged = (
-        _read_pruned_buckets(spark, st_b, pairs, cap)
-        .withColumn("bs", _bucket_shard(F.col("bucket")))
-        .localCheckpoint(eager=True)  # pin before overwriting source
-    )
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("band", "bs")
-        .parquet(st_b)
-    )
+# Standing state is two plain parquet tables under the run's scratch
+# directory:
+# - state_buckets/g{n}, generation n of the bucket table: one (band,
+#   bucket, eids) row per bucket, eids the sorted FUZZY_CAP smallest
+#   admitted ids (capped_buckets). Micro-batch n reads g{n} and writes
+#   g{n+1}, the cap-merge of g{n} with its own admissions, so every
+#   generation holds exactly one row per bucket.
+# - state_toks: the append-only (doc_id, toks) of every admitted doc,
+#   which exact-Jaccard verification joins against.
+_BUCKETS_SCHEMA = "band int, bucket bigint, eids array<bigint>"
+_TOKS_SCHEMA = "doc_id bigint, toks array<string>"
 
 
 def _stream_lsh_oracle() -> str:
@@ -1226,54 +1145,31 @@ LEFT JOIN ({union_drops}) dr ON dr.b_id = b.doc_id
 
 @register("dedup_stream_lsh", oracle=_stream_lsh_oracle())
 def dedup_stream_lsh(spark, sf_dir):
-    """STREAMING near-duplicate ingest — the live-crawl shape (r9
-    VERDICT task 4): document batches arrive as a real file-source
-    stream; each micro-batch is MinHash-LSH deduplicated against the
-    STANDING admitted corpus inside foreachBatch, and its admissions
-    MERGE back into that state before the next batch — so a near-dup
-    of a doc admitted two crawls ago is dropped even though batch LSH
-    (dedup_minhash) and streaming exact dedup (sessions.stream_dedup)
-    would each miss it.
+    """STREAMING near-duplicate ingest — the live-crawl shape: document
+    batches arrive as a real file-source stream; each micro-batch is
+    MinHash-LSH deduplicated against the STANDING admitted corpus
+    inside foreachBatch, and its admissions MERGE back into that state
+    before the next batch — so a near-dup of a doc admitted two crawls
+    ago is dropped even though batch LSH (dedup_minhash) and streaming
+    exact dedup (sessions.stream_dedup) would each miss it.
 
     One code path with the batch twin: signatures/bands come from
-    lsh_signatures_df and the capped admission rule is
-    fuzzy_dropped — literally the functions dedup_fuzzy_ingest
-    runs, applied per micro-batch. Arrival rounds are the exact
-    function doc_id % 3 (a value-partitioned staged write, moved file
-    by file into the watched directory), so the whole sequential fold
-    replays relationally: the oracle unrolls the three rounds as
-    MATERIALIZED CTE generations of the fuzzy-ingest chain.
+    lsh_signatures_df and the admission rule is fuzzy_capped ->
+    fuzzy_verified_drops, the factors of the fuzzy_dropped rule that
+    dedup_fuzzy_ingest runs, applied per micro-batch. Arrival rounds
+    are the exact function doc_id % 3 (a value-partitioned staged
+    write, moved file by file into the watched directory), so the whole
+    sequential fold replays relationally: the oracle unrolls the three
+    rounds as MATERIALIZED CTE generations of the fuzzy-ingest chain.
 
-    Per-batch state discipline: the drop set is eagerly checkpointed
-    BEFORE any state write (the decision must see state as of batch
-    start); decisions land in an append-only sink. Bucket state lives
-    PRE-GROUPED and CAP-COMPACTED (r10 VERDICT task 2): per
-    (band,bucket) only the sorted cap SMALLEST admitted ids —
-    semantics-preserving because the admission slice sort(S)[1:cap]
-    depends only on those — hive-partitioned by (band, bucket shard)
-    so each micro-batch's state read PRUNES to the directories its own
-    buckets map to instead of re-scanning (and re-grouping!) the full
-    standing corpus. Admissions APPEND pre-capped per-bucket groups
-    (the pruned read cap-merges them exactly — see
-    _read_pruned_buckets); once a leaf's measured fragmentation reaches
-    _COMPACT_FILES files, a physical
-    compaction rewrites that partition to one row per bucket
-    (dynamic partition overwrite on a checkpointed merge; at 100 TB
-    the same rewrite is a staged write + atomic dir swap). Token state
-    is doc-id-sharded the same way, so Jaccard verification reads only
-    the shards that hold candidate ids. The existing side contributes
-    signatures, never text, exactly as in the batch twin."""
-    import os as _os
-
+    Per batch: the drop set is computed against the bucket table and
+    token table as of batch start and eagerly checkpointed; then the
+    decisions, the kept docs' toks and the next bucket generation are
+    written one after another (state layout above). The existing side
+    contributes signatures, never text, exactly as in the batch twin."""
     base = scratch_dir(spark, "stream_lsh")
     shutil.rmtree(base, ignore_errors=True)
-    replay = _os.path.join(base, "replay")
-    ckpt = _os.path.join(base, "ckpt")
-    st_b = _os.path.join(base, "state_buckets")
-    st_t = _os.path.join(base, "state_toks")
-    dec = _os.path.join(base, "decisions")
-    staged = _os.path.join(base, "_staged")
-    _os.makedirs(replay, exist_ok=True)
+    os.makedirs(os.path.join(base, "replay"))
 
     # Micro-batch shuffles here move batch-sized (not corpus-sized)
     # data through many small jobs; 32-way exchanges are pure task
@@ -1283,43 +1179,25 @@ def dedup_stream_lsh(spark, sf_dir):
     # clamp: it is the measured local sweet spot for these ~batch-row
     # jobs.
     with scoped_confs(spark, {"spark.sql.shuffle.partitions": 8}):
-        return _stream_lsh_run(
-            spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged
-        )
+        return _stream_lsh_run(spark, sf_dir, base)
 
 
-def _stream_lsh_run(spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged):
-    import os as _os
+def _stream_lsh_run(spark, sf_dir, base):
+    replay = os.path.join(base, "replay")
+    staged = os.path.join(base, "_staged")
+    st_t = os.path.join(base, "state_toks")
+    dec = os.path.join(base, "decisions")
+
+    def gen(n):
+        return os.path.join(base, "state_buckets", f"g{n}")
 
     docs = table(spark, sf_dir, "documents")
-    # bootstrap standing state from the existing corpus: grouped,
-    # cap-compacted, shard-partitioned (layout documented at top)
+    # bootstrap standing state from the existing corpus
     sig0, b0 = lsh_signatures_df(
         docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
     )
-    (
-        b0.groupBy("band", "bucket")
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_set("doc_id")), 1, FUZZY_CAP
-            ).alias("eids")
-        )
-        .withColumn("bs", _bucket_shard(F.col("bucket")))
-        # repartition on the partition columns: one file per leaf dir
-        # instead of one per task per dir (commit cost is per file)
-        .repartition("band", "bs")
-        .write.mode("overwrite")
-        .partitionBy("band", "bs")
-        .parquet(st_b)
-    )
-    (
-        sig0.select("doc_id", "toks")
-        .withColumn("ds", _tok_shard(F.col("doc_id")))
-        .repartition("ds")
-        .write.mode("overwrite")
-        .partitionBy("ds")
-        .parquet(st_t)
-    )
+    capped_buckets(b0, "doc_id").write.parquet(gen(0))
+    sig0.select("doc_id", "toks").write.parquet(st_t)
 
     # stage the crawl rounds: VALUE-partitioned write (round is the
     # exact function doc_id % 3, never a sampled range), then each
@@ -1328,144 +1206,77 @@ def _stream_lsh_run(spark, sf_dir, replay, ckpt, st_b, st_t, dec, staged):
         docs.filter(F.col("doc_id") % 5 != 0)
         .withColumn("_round", F.pmod("doc_id", F.lit(3)).cast("int"))
         .repartition(_STREAM_ROUNDS, "_round")
-        .write.mode("overwrite")
-        .partitionBy("_round")
+        .write.partitionBy("_round")
         .parquet(staged)
     )
 
-    def admit(batch_df, _batch_id):
-        b = batch_df.select("doc_id", "text")
-        sigb, bb = lsh_signatures_df(b)
-        btb = bb.select("band", "bucket", F.col("doc_id").alias("b_id"))
-        # (band, shard) pairs this batch can touch — bounded at
-        # N_BANDS x _BUCKET_SHARDS rows regardless of batch size, so
-        # the collect is a constant-size driver list, not data volume
-        touched = {
-            (r["band"], r["bs"])
-            for r in btb.filter(F.col("bucket").isNotNull())
-            .select("band", _bucket_shard(F.col("bucket")).alias("bs"))
-            .distinct()
-            .collect()
-        }  # NULL-text docs have NULL buckets: they can never match
-        # standing state, so they prune out here and fall through to
-        # keep=True via the left-anti decision join
-        state = _read_pruned_buckets(spark, st_b, touched, FUZZY_CAP)
-        capped = fuzzy_capped(btb, state)
-        # token-state pruning without a second action: semi-join the
-        # doc-sharded toks store against the candidates' shard set
-        # (broadcast -> dynamic partition pruning prunes the ds= dirs
-        # at scale; locally it degrades to a cheap semi-join, same
-        # rows either way)
-        cand_ds = capped.select(_tok_shard(F.col("e_id")).alias("ds")).distinct()
-        e_toks = (
-            spark.read.schema(_TOKS_PART_SCHEMA)
-            .parquet(st_t)
-            .join(F.broadcast(cand_ds), "ds", "left_semi")
-            .select(F.col("doc_id").alias("e_id"), "toks")
-        )
-        b_toks = sigb.select(F.col("doc_id").alias("b_id"), "toks")
+    def admit(batch_df, batch_id):
+        sigb, bb = lsh_signatures_df(batch_df.select("doc_id", "text"))
+        state = spark.read.schema(_BUCKETS_SCHEMA).parquet(gen(batch_id))
+        e_toks = spark.read.schema(_TOKS_SCHEMA).parquet(st_t)
         # pin the drop set against state AS OF batch start: the toks
         # append below would otherwise change what a lazy recompute of
-        # this plan reads (the buckets append changes st_b too)
-        dropped = fuzzy_verified_drops(
-            capped, b_toks, e_toks
-        ).localCheckpoint(eager=True)
-        drop_ids = dropped.withColumnRenamed("b_id", "doc_id")
-        decisions = (
+        # this plan reads. NULL-text docs have NULL buckets, match no
+        # standing row and so fall through to keep=True.
+        drop_ids = (
+            fuzzy_verified_drops(
+                fuzzy_capped(
+                    bb.select("band", "bucket", F.col("doc_id").alias("b_id")),
+                    state,
+                ),
+                sigb.select(F.col("doc_id").alias("b_id"), "toks"),
+                e_toks.select(F.col("doc_id").alias("e_id"), "toks"),
+            )
+            .withColumnRenamed("b_id", "doc_id")
+            .localCheckpoint(eager=True)
+        )
+        (
             sigb.select("doc_id")
             .join(drop_ids, "doc_id", "left_anti")
             .withColumn("keep", F.lit(True))
             .unionByName(drop_ids.withColumn("keep", F.lit(False)))
+            .write.mode("append")
+            .parquet(dec)
         )
         kept = sigb.select("doc_id", "toks").join(
             drop_ids, "doc_id", "left_anti"
         )
-        # the batch's admissions append as pre-capped per-bucket groups
-        # (one row per bucket per batch; the pruned read cap-merges);
-        # every new row's partition is in `touched` by construction —
-        # its bucket came from btb
-        new_groups = (
-            bb.join(kept.select("doc_id"), "doc_id")
-            .groupBy("band", "bucket")
-            .agg(
-                F.slice(
-                    F.sort_array(F.collect_set("doc_id")), 1, FUZZY_CAP
-                ).alias("eids")
-            )
-            .withColumn("bs", _bucket_shard(F.col("bucket")))
-            .repartition("band", "bs")  # one file per touched leaf dir
+        kept.write.mode("append").parquet(st_t)
+        standing = state.select("band", "bucket", F.explode("eids").alias("id"))
+        admitted = bb.join(kept.select("doc_id"), "doc_id").select(
+            "band", "bucket", F.col("doc_id").alias("id")
         )
-        new_toks = kept.withColumn(
-            "ds", _tok_shard(F.col("doc_id"))
-        ).repartition("ds")
-        # all three sinks read only the PINNED drop set (plus the lazy
-        # signature checkpoint), so they are independent — submit them
-        # concurrently; small-job latency, not data volume, is the
-        # per-batch cost here
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(
-                    lambda: decisions.write.mode("append").parquet(dec)
-                ),
-                pool.submit(
-                    lambda: new_groups.write.mode("append")
-                    .partitionBy("band", "bs")
-                    .parquet(st_b)
-                ),
-                pool.submit(
-                    lambda: new_toks.write.mode("append")
-                    .partitionBy("ds")
-                    .parquet(st_t)
-                ),
-            ]
-            for f in futs:
-                f.result()
-        # amortized physical compaction keeps per-bucket state at ONE
-        # row regardless of batch count. Cadence is AUTO-TUNED by
-        # measured fragmentation (r11 SURVEY candidate): a leaf
-        # (band, bs) dir is rewritten only once it holds >=
-        # _COMPACT_FILES parquet files — compaction work tracks actual
-        # append pressure per leaf instead of a blind every-N clock, so
-        # hot leaves stay within a bounded read amplification while
-        # cold leaves are never rewritten. The listing is the same
-        # O(touched-leaves) driver metadata walk the pruned read
-        # already pays; at 100 TB the file count comes from the table
-        # metadata layer (manifest/file-index) for the same O(1)/leaf.
-        frag = [
-            (band, bs)
-            for band, bs in touched
-            if _leaf_file_count(st_b, band, bs) >= _COMPACT_FILES
-        ]
-        if frag:
-            _compact_buckets(spark, st_b, frag, FUZZY_CAP)
+        (
+            capped_buckets(standing.unionByName(admitted), "id")
+            .write.mode("overwrite")
+            .parquet(gen(batch_id + 1))
+        )
 
     q = (
         spark.readStream.schema(_DOCS_SCHEMA)
         .parquet(replay)
         .writeStream.foreachBatch(admit)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
         .trigger(processingTime="0 seconds")
         .start()
     )
     try:
         for r in range(_STREAM_ROUNDS):
-            rdir = _os.path.join(staged, f"_round={r}")
-            if _os.path.isdir(rdir):
+            rdir = os.path.join(staged, f"_round={r}")
+            if os.path.isdir(rdir):
                 parts = sorted(
-                    f for f in _os.listdir(rdir) if f.endswith(".parquet")
+                    f for f in os.listdir(rdir) if f.endswith(".parquet")
                 )
                 for j, f in enumerate(parts):
-                    _os.rename(
-                        _os.path.join(rdir, f),
-                        _os.path.join(replay, f"data-{r}-{j}.parquet"),
+                    os.rename(
+                        os.path.join(rdir, f),
+                        os.path.join(replay, f"data-{r}-{j}.parquet"),
                     )
             q.processAllAvailable()
     finally:
         q.stop()
 
-    if not _os.path.isdir(dec):  # empty corpus: no batch ever landed
+    if not os.path.isdir(dec):  # empty corpus: no batch ever landed
         return spark.createDataFrame(
             [], "doc_id bigint, round int, keep boolean"
         )

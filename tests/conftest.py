@@ -31,7 +31,6 @@ _SLOW_MODULES = {
 _SLOW_TESTS = {
     "test_no_nested_output_types",  # builds all 341 plans: 178 s
     "test_stream_left_outer_join_equals_batch",  # 85 s + 46 s
-    "test_stream_lsh_compaction_preserves_hash_and_bounds_files",  # 33 s
     "test_similarity_rewrite_small_input_uses_exact_form",  # 25 s
     "test_url_canonicalization_idempotent",  # 15 s
 }

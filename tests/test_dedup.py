@@ -1,12 +1,16 @@
 """Dedup operators (terasort_spark/operators/llm_dedup.py): the streaming
-LSH ingest against its batch twin and state layout, Bloom-gated ingest,
-semantic dedup and quality-aware keepers."""
+LSH ingest against its batch twin and its one-row-per-bucket state, the
+Bloom gate's exactness, fuzzy ingest admissibility, semantic dedup and
+quality-aware keepers."""
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
+from terasort_spark.operators.llm_dedup import BLOOM_K, _bloom_m
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -61,86 +65,46 @@ def test_stream_lsh_equals_sequential_batch_twin(spark, sf_dir):
     assert any(not keep for _, _, keep in want)
 
 
-def test_stream_lsh_state_read_prunes_partitions(spark, tmp_path):
-    """The r10 VERDICT 'done' criterion for streaming-state pruning:
-    a micro-batch's standing-state read must touch ONLY the (band, bs)
-    hive directories its own buckets map to. Build a synthetic grouped
-    state across every shard, read with a two-pair filter, and assert
-    (a) the scan's inputFiles stay inside those two directories and
-    (b) the filter shows up as a partition filter (pruned at listing
-    time), not a post-scan predicate."""
-    from terasort_spark.operators.llm_dedup import _BUCKET_SHARDS, _read_pruned_buckets
-
-    st_b = str(tmp_path / "state_buckets")
-    rows = [
-        (bucket, [bucket * 10 + 1, bucket * 10 + 2], band, bucket % _BUCKET_SHARDS)
-        for band in range(4)
-        for bucket in range(2 * _BUCKET_SHARDS)
-    ]
-    (
-        spark.createDataFrame(
-            rows, "bucket bigint, eids array<bigint>, band int, bs int"
-        )
-        .repartition("band", "bs")
-        .write.partitionBy("band", "bs")
-        .parquet(st_b)
-    )
-    pairs = {(0, 1), (2, 3)}
-    # behavioral proof of pruning: corrupt every NON-candidate leaf
-    # directory's files — a listing-time-pruned scan never opens them,
-    # an unpruned scan (even with a post-scan filter) dies parsing them
+def test_stream_lsh_state_is_one_capped_row_per_bucket(spark, sf_dir):
+    """After the replay, the last bucket-table generation holds exactly
+    one row per (band, bucket) whose eids are sorted, distinct and at
+    most FUZZY_CAP long, and it equals the cap-grouping of the LSH
+    buckets of every admitted doc: the standing corpus plus the
+    stream's keeps."""
     import glob
     import os
 
-    for f in glob.glob(os.path.join(st_b, "band=*", "bs=*", "*.parquet")):
-        leaf = os.path.dirname(f)
-        band = int(leaf.split("band=")[1].split("/")[0])
-        bs = int(leaf.split("bs=")[1])
-        if (band, bs) not in pairs:
-            with open(f, "wb") as fh:
-                fh.write(b"not-a-parquet-file")
-    df = _read_pruned_buckets(spark, st_b, pairs, cap=8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    got = {(r["band"], r["bucket"]) for r in df.collect()}
-    want = {
-        (band, bucket)
-        for band in range(4)
-        for bucket in range(2 * _BUCKET_SHARDS)
-        if (band, bucket % _BUCKET_SHARDS) in pairs
-    }
-    assert got == want
-
-
-def test_stream_lsh_compaction_preserves_hash_and_bounds_files(
-    spark, sf_dir, monkeypatch
-):
-    """Fragmentation-triggered cap-compaction at its most aggressive
-    dial (threshold 1: every touched leaf rewritten every batch) must
-    (a) leave the admission
-    decisions bit-identical to the amortized default and (b) actually
-    bound the bucket state at one file per leaf directory after the
-    final compaction — the property that keeps standing state
-    O(cap x n_buckets) at crawl timescales."""
-    import glob
-    import os
-
-    import terasort_spark.operators.llm_dedup as llm_dedup
     from terasort_spark.operators._util import scratch_dir
+    from terasort_spark.operators.llm_dedup import FUZZY_CAP, lsh_signatures_df
 
-    want = sorted(map(tuple, _Q["dedup_stream_lsh"](spark, sf_dir).collect()))
-    monkeypatch.setattr(llm_dedup, "_COMPACT_FILES", 1)
-    got = sorted(map(tuple, _Q["dedup_stream_lsh"](spark, sf_dir).collect()))
-    assert got == want
-    st_b = os.path.join(scratch_dir(spark, "stream_lsh"), "state_buckets")
-    leaf_files = {}
-    for f in glob.glob(os.path.join(st_b, "band=*", "bs=*", "*.parquet")):
-        leaf_files.setdefault(os.path.dirname(f), []).append(f)
-    assert leaf_files, "no state partitions written"
-    # every batch compacted the partitions it touched, so each leaf dir
-    # holds exactly the one merged file the last compaction wrote
-    assert all(len(v) == 1 for v in leaf_files.values()), {
-        k: len(v) for k, v in leaf_files.items() if len(v) != 1
+    keeps = [
+        (r["doc_id"],)
+        for r in _Q["dedup_stream_lsh"](spark, sf_dir).collect()
+        if r["keep"]
+    ]
+    gens = glob.glob(
+        os.path.join(scratch_dir(spark, "stream_lsh"), "state_buckets", "g*")
+    )
+    last = max(gens, key=lambda g: int(os.path.basename(g)[1:]))
+    got = spark.read.parquet(last).collect()
+    keys = [(r["band"], r["bucket"]) for r in got]
+    assert len(keys) == len(set(keys))
+    for r in got:
+        assert r["eids"] == sorted(set(r["eids"]))
+        assert 1 <= len(r["eids"]) <= FUZZY_CAP
+
+    docs = table(spark, sf_dir, "documents")
+    admitted = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id").unionByName(
+        spark.createDataFrame(keeps, "doc_id bigint")
+    )
+    _, buckets = lsh_signatures_df(
+        docs.join(admitted, "doc_id").select("doc_id", "text")
+    )
+    want = {}
+    for r in buckets.collect():
+        want.setdefault((r["band"], r["bucket"]), set()).add(r["doc_id"])
+    assert {(r["band"], r["bucket"]): r["eids"] for r in got} == {
+        k: sorted(v)[:FUZZY_CAP] for k, v in want.items()
     }
 
 
@@ -238,3 +202,110 @@ def test_bloom_ingest_never_admits_true_duplicates(spark, sf_dir):
             n_dup += 1
         n_admitted += bool(admitted[doc_id])
     assert n_admitted > 0, "gate admitted nothing — filter saturated"
+
+
+# ---------------------------------------------------------------------------
+# dedup_probabilistic
+
+
+def _py_bloom_pos(h: str, k: int, m: int) -> int:
+    # 32-bit slice: 16 bits would alias once the data-sized M > 65536
+    return int(hashlib.md5(f"{h}#{k}".encode()).hexdigest()[:8], 16) % m
+
+
+def test_bloom_admitted_equals_exact_antijoin(spark, sf_dir):
+    """The gate must admit EXACTLY the docs an exact hash anti-join
+    admits — the Bloom is an execution strategy, never a semantics
+    change. Checked against an independent Python recompute."""
+    rows = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", F.md5("text").alias("h"))
+        .collect()
+    )
+    existing = {r["h"] for r in rows if r["doc_id"] % 5 == 0}
+    batch = {}
+    for r in rows:
+        if r["doc_id"] % 5 != 0:
+            keep, n = batch.get(r["h"], (r["doc_id"], 0))
+            batch[r["h"]] = (min(keep, r["doc_id"]), n + 1)
+    want = {
+        (v[0], h, v[1]) for h, v in batch.items() if h not in existing
+    }
+
+    got_rows = _Q["dedup_probabilistic"](spark, sf_dir).collect()
+    got = {(r["doc_id"], r["h"], r["n_copies"]) for r in got_rows}
+    assert got == want
+
+
+def test_bloom_no_false_negatives(spark, sf_dir):
+    """Every EXISTING hash must test Bloom-positive in the filter the
+    operator builds — rebuilt independently in Python from the md5
+    position definition. A false negative would silently admit a
+    duplicate into the corpus."""
+    texts = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", F.md5("text").alias("h"))
+        .collect()
+    )
+    existing = {r["h"] for r in texts if r["doc_id"] % 5 == 0}
+    m = _bloom_m(len(existing))  # same data-sized M as the operator
+    words = {}
+    for h in existing:
+        for k in range(BLOOM_K):
+            p = _py_bloom_pos(h, k, m)
+            words[p // 32] = words.get(p // 32, 0) | (1 << (p % 32))
+    for h in existing:
+        assert all(
+            (words.get(_py_bloom_pos(h, k, m) // 32, 0)
+             >> (_py_bloom_pos(h, k, m) % 32)) & 1
+            for k in range(BLOOM_K)
+        )
+    # and the operator's fast/verified routing agrees with this filter:
+    # fast-path docs must be Bloom-MISSES, verified ones Bloom-hits
+    for r in _Q["dedup_probabilistic"](spark, sf_dir).collect():
+        might = all(
+            (words.get(_py_bloom_pos(r["h"], k, m) // 32, 0)
+             >> (_py_bloom_pos(r["h"], k, m) % 32)) & 1
+            for k in range(BLOOM_K)
+        )
+        assert r["path"] == ("verified" if might else "fast")
+
+
+# ---------------------------------------------------------------------------
+# dedup_fuzzy_ingest
+
+
+def test_fuzzy_ingest_drops_are_admissible(spark, sf_dir):
+    """Cross-corpus fuzzy admission: one decision per batch doc, and
+    every DROP has a verified EXISTING-corpus partner at exact
+    Jaccard >= 0.8 (no hash/banding choice can fabricate one); kept +
+    dropped partition the batch."""
+    from terasort_spark.operators.llm_dedup import FUZZY_TAU
+
+    docs = {
+        r["doc_id"]: set((r["text"] or "").lower().split(" "))
+        for r in table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .collect()
+    }
+    dec = {
+        r["doc_id"]: r["keep"]
+        for r in _Q["dedup_fuzzy_ingest"](spark, sf_dir).collect()
+    }
+    batch = {d for d in docs if d % 5 != 0}
+    existing = [d for d in sorted(docs) if d % 5 == 0]
+    assert set(dec) == batch  # exactly one row per batch doc
+
+    for d, keep in dec.items():
+        if keep:
+            continue
+        toks = docs[d]
+        ok = any(
+            len(toks & docs[e]) / len(toks | docs[e]) >= FUZZY_TAU - 5e-5
+            for e in existing
+            if toks or docs[e]
+        )
+        assert ok, f"batch doc {d} dropped without an existing partner"
+    assert any(not k for k in dec.values())  # the corpus has cross dups

@@ -137,7 +137,6 @@ def test_engine_explain_returns_plan_text(spark, sf_dir):
 _LEGACY_TEST_FILES = {
     "test_wave6.py",
     "test_wave7.py",
-    "test_wave8.py",
     "test_wave11.py",
 }
 
@@ -161,3 +160,33 @@ def test_modules_are_named_for_families_not_rounds():
     assert not bad, bad
     # a dissolved legacy file leaves the list with it
     assert _LEGACY_TEST_FILES <= files, sorted(_LEGACY_TEST_FILES - files)
+
+
+def test_scripts_import_only_names_that_exist():
+    """Every `from terasort_spark... import name` in scripts/*.py and
+    bench.py resolves, so moving a query or helper between modules
+    cannot leave a script importing a name that is gone."""
+    import ast
+    import glob
+    import importlib
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted(glob.glob(os.path.join(root, "scripts", "*.py")))
+    bad = []
+    for path in paths + [os.path.join(root, "bench.py")]:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or not (
+                node.module or ""
+            ).startswith("terasort_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            bad += [
+                f"{os.path.relpath(path, root)}:{node.lineno}: "
+                f"{node.module}.{a.name}"
+                for a in node.names
+                if not hasattr(mod, a.name)
+            ]
+    assert not bad, bad

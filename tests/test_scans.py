@@ -1,6 +1,6 @@
 """Scan and sink operators (terasort_spark/operators/scans.py): VACUUM,
-equality deletes and manifest pruning. These tests pin the file-level properties the
-oracle hash cannot see."""
+equality and position deletes, and manifest pruning. These tests pin the
+file-level properties the oracle hash cannot see."""
 
 from __future__ import annotations
 
@@ -125,4 +125,45 @@ def test_manifest_prune_skips_non_overlapping_files(spark, sf_dir):
     finally:
         with open(victim, "wb") as f:
             f.write(original)
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# scan_position_delete
+
+
+def test_position_delete_read_is_broadcast_antijoin(spark, sf_dir):
+    """The merge-on-read plan must anti-join the delete vector as a
+    BROADCAST (vectors are tiny relative to data) — never shuffle the
+    data side for the merge — and carry the metadata position columns
+    through the scan stage."""
+    df = _Q["scan_position_delete"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_position_delete_exact_semantics(spark, sf_dir):
+    """Positions must drop EXACTLY the delete-predicate rows: nothing
+    resurrected, nothing extra lost — checked against a relational
+    recompute in Spark."""
+    from terasort_spark.operators._util import rnd
+
+    want = sorted(
+        map(
+            tuple,
+            table(spark, sf_dir, "orders")
+            .filter(
+                (F.col("o_orderkey") % 4 != 3)
+                & ~(F.col("o_orderkey") % 9 == 0)
+            )
+            .select(
+                "o_orderkey",
+                "o_orderstatus",
+                rnd(F.col("o_totalprice"), "price"),
+            )
+            .collect(),
+        )
+    )
+    got = sorted(map(tuple, _Q["scan_position_delete"](spark, sf_dir).collect()))
     assert got == want
