@@ -10,14 +10,15 @@ stream is validated WITHOUT being persisted. What remains is the part
 that actually stresses scale: the full 100 GB range exchange
 (lz4-compressed shuffle spill is the only disk cost), the
 partition-local sort, and the complete validation contract —
+``teravalidate`` on the sorted stream as it leaves the sort:
   (a) keys non-decreasing within every partition,
-  (b) partition boundaries ordered,
+  (b) partition boundaries ordered, in partition-index order,
   (c) row count preserved,
-  (d) order-insensitive 48-bit-md5-sum checksum equal between the
-      generated and the sorted stream (multiset equality -> the output
-      is a true sorted permutation).
-The checksum ride-along is JVM-side (whole-stage codegen md5/conv) in
-the SAME pass as the order check, so the sort executes exactly once.
+  (d) the order-insensitive content checksum equal to ``checksum`` of
+      the generated stream (multiset equality -> the output is a true
+      sorted permutation).
+The sort executes exactly once; the generated stream is hashed in a
+separate, shuffle-free pass.
 
 Key-mode dial (r9 VERDICT task 1 — skew robustness): ``uniform`` is the
 GraySort distribution; ``zipf`` keeps the plain key-ranged sort but
@@ -27,8 +28,8 @@ skewed corpus produces); ``zipf_salted`` runs the salted
 (key, salt)-ranged sort over the same data, spreading the hot key over
 up to 4096 range slices while preserving the full permutation contract
 (equal keys need no relative order). The JSON line reports the
-straggler factor (max partition rows / mean) so the skew and its fix
-are both measured, not asserted.
+straggler factor (``max_part_rows`` / mean rows per non-empty
+partition) so the skew and its fix are both measured, not asserted.
 
 Run:  python scripts/tera_scale_probe.py [n_rows] [n_partitions] [mode]
       mode in {uniform (default), zipf, zipf_salted}
@@ -44,15 +45,14 @@ REPO = "/root/repo"
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
 from terasort_spark.session import get_spark  # noqa: E402
 from terasort_spark.sources.teragen import (  # noqa: E402
+    checksum,
     teragen,
     teragen_skewed,
     terasort,
     terasort_salted,
+    teravalidate,
 )
 
 N_ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000_000
@@ -63,81 +63,30 @@ _GEN = teragen if MODE == "uniform" else teragen_skewed
 _SORT = terasort_salted if MODE == "zipf_salted" else terasort
 
 
-def _cs_col():
-    h = F.substring(
-        F.md5(F.concat(F.col("key"), F.lit(b"\x00"), F.col("value"))), 1, 12
-    )
-    return F.conv(h, 16, 10).cast("decimal(20,0)").alias("cs")
-
-
-def _summarize(batches):
-    """One pass over a sorted partition: order invariants + count +
-    checksum partial. Keys arrive as bytes; comparisons vectorize via
-    numpy object arrays (C-level PyObject compares)."""
-    first = last = None
-    n = 0
-    sorted_ok = True
-    cs = 0
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        kb = pdf["key"].to_numpy()
-        if first is None:
-            first = bytes(kb[0])
-        if last is not None and bytes(kb[0]) < last:
-            sorted_ok = False
-        if len(kb) > 1 and not bool((kb[:-1] <= kb[1:]).all()):
-            sorted_ok = False
-        last = bytes(kb[-1])
-        n += len(kb)
-        cs += int(pdf["cs"].sum())
-    yield pd.DataFrame(
-        {
-            "n": [n],
-            "first_key": [first.hex() if first is not None else None],
-            "last_key": [last.hex() if last is not None else None],
-            "sorted_ok": [sorted_ok],
-            "cs": [str(cs)],
-        }
-    )
-
-
 def main() -> None:
     spark = get_spark(app_name="tera-scale-probe", shuffle_partitions=N_PARTS)
     spark.sparkContext.setLogLevel("ERROR")
 
     # pass 1: checksum of the generated stream (no shuffle, pure codegen)
     t0 = time.time()
-    gen = _GEN(spark, N_ROWS, n_partitions=N_PARTS)
-    cs_gen = gen.select(
-        F.sum(_cs_col().cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
+    cs_gen = checksum(_GEN(spark, N_ROWS, n_partitions=N_PARTS))
     t_gen_cs = time.time() - t0
 
     # pass 2: the sort itself + one-pass validate/checksum, never sunk
     t1 = time.time()
-    sorted_df = _SORT(
-        _GEN(spark, N_ROWS, n_partitions=N_PARTS), n_partitions=N_PARTS
-    ).select("key", "value", _cs_col())
-    schema = "n long, first_key string, last_key string, sorted_ok boolean, cs string"
-    rows = [
-        r
-        for r in sorted_df.mapInPandas(_summarize, schema=schema).collect()
-        if r["n"] > 0
-    ]
+    rep = teravalidate(
+        _SORT(_GEN(spark, N_ROWS, n_partitions=N_PARTS), n_partitions=N_PARTS)
+    )
     t_sort_validate = time.time() - t1
 
-    rows.sort(key=lambda r: bytes.fromhex(r["first_key"]))
-    within = all(r["sorted_ok"] for r in rows)
-    between = all(
-        bytes.fromhex(rows[i]["last_key"]) <= bytes.fromhex(rows[i + 1]["first_key"])
-        for i in range(len(rows) - 1)
+    within, between = rep["sorted_within"], rep["sorted_between"]
+    rows_ok, cs_ok = rep["n_rows"] == N_ROWS, rep["checksum"] == cs_gen
+    ok = within and between and rows_ok and cs_ok
+    straggler = (
+        round(rep["max_part_rows"] * rep["n_partitions"] / rep["n_rows"], 2)
+        if rep["n_rows"]
+        else 0
     )
-    n_rows = sum(r["n"] for r in rows)
-    cs_sorted = sum(int(r["cs"]) for r in rows)
-    ok = within and between and n_rows == N_ROWS and cs_sorted == int(cs_gen)
-    sizes = [r["n"] for r in rows]
-    straggler = round(max(sizes) / (sum(sizes) / len(sizes)), 2) if sizes else 0
     print(
         json.dumps(
             {
@@ -148,8 +97,8 @@ def main() -> None:
                 "straggler_factor": straggler,
                 "sorted_within": within,
                 "sorted_between": between,
-                "rows_preserved": n_rows == N_ROWS,
-                "checksum_match": cs_sorted == int(cs_gen),
+                "rows_preserved": rows_ok,
+                "checksum_match": cs_ok,
                 "ok": ok,
                 "gen_checksum_sec": round(t_gen_cs, 1),
                 "sort_validate_sec": round(t_sort_validate, 1),

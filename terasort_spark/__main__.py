@@ -11,15 +11,17 @@ registry access:
 
 Each subcommand is a thin shim over the library (Engine /
 sources/teragen.py), so spark-submit'ing this module on a cluster runs
-the identical code paths the tests pin. Exit status: teravalidate
-returns nonzero when the directory is NOT sorted — and, when the
-caller supplies ``--expect-rows`` / ``--expect-checksum`` (printed by
-teragen / computable via sources.teragen.checksum), also when records
-were dropped, duplicated, or corrupted, which upgrades the check to
-the reference validator's full sorted-permutation contract. teragen
-and terasort exit 1 when ``--out`` already holds part files, and
-terasort and teravalidate exit 1 when an input part file ends in a
-partial record, each with one ``terasort_spark: ...`` line on stderr.
+the identical code paths the tests pin. teravalidate reads the
+directory once, in one Spark job, and reports its order checks, counts
+and content checksum. Its exit status is nonzero when the directory is
+NOT sorted — and, when the caller supplies ``--expect-rows`` /
+``--expect-checksum`` (printed by ``teragen --checksum``), also when
+records were dropped, duplicated, or corrupted, which upgrades the
+check to the reference validator's full sorted-permutation contract.
+teragen and terasort exit 1 when ``--out`` already holds part files,
+and every command that reads records exits 1 when its input directory
+holds no part files or a part file ends in a partial record, each with
+one ``terasort_spark: ...`` line on stderr.
 """
 
 from __future__ import annotations
@@ -65,8 +67,9 @@ def _build_parser() -> argparse.ArgumentParser:
         "--expect-checksum",
         type=int,
         default=None,
-        help="fail unless the order-insensitive content checksum matches "
-        "(catches duplicated/corrupted records a sort check cannot)",
+        help="fail unless the reported content checksum (always computed, "
+        "in the same pass as the order check) matches; catches "
+        "duplicated/corrupted records a sort check cannot",
     )
 
     sub.add_parser("list", help="list registered queries")
@@ -90,17 +93,17 @@ def _refused(reason: object) -> int:
 
 
 def _partial_record(e: Py4JJavaError, in_dir: str) -> int:
-    """A Spark job over ``in_dir`` failed. When a part file there ends in a
-    partial record, that is the cause (the JVM reader fails on it with
-    a bare EOFException), so refuse with the file names; otherwise
-    re-raise. File sizes are checked only here, after a failure."""
+    """A Spark job over ``in_dir`` failed. When ``in_dir`` holds no part
+    file (the JVM reader fails with InvalidInputException) or a part
+    file there ends in a partial record (a bare EOFException), that is
+    the cause, so refuse with one line; otherwise re-raise. The
+    directory is listed only here, after a failure."""
     from terasort_spark.sources.teragen import RECORD_LEN
 
-    bad = sorted(
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(in_dir, "part-*.dat"))
-        if os.path.getsize(p) % RECORD_LEN
-    )
+    parts = glob.glob(os.path.join(in_dir, "part-*.dat"))
+    if not parts:
+        return _refused(f"{in_dir}: no part-*.dat files")
+    bad = sorted(os.path.basename(p) for p in parts if os.path.getsize(p) % RECORD_LEN)
     if not bad:
         raise e
     return _refused(
@@ -140,7 +143,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.checksum:
             from terasort_spark.sources.teragen import checksum, read_tera_files
 
-            out["checksum"] = checksum(read_tera_files(eng.spark, args.out))
+            try:
+                out["checksum"] = checksum(read_tera_files(eng.spark, args.out))
+            except Py4JJavaError as e:
+                return _partial_record(e, args.out)
         print(json.dumps(out))
         return 0
 
@@ -162,13 +168,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         return 0
 
     if args.cmd == "teravalidate":
-        from terasort_spark.sources.teragen import checksum, read_tera_files
+        from terasort_spark.sources.teragen import read_tera_files
 
-        df = read_tera_files(eng.spark, args.input)
         try:
-            report = eng.teravalidate(df)
-            if args.expect_checksum is not None:
-                report["checksum"] = checksum(df)
+            report = eng.teravalidate(read_tera_files(eng.spark, args.input))
         except Py4JJavaError as e:
             return _partial_record(e, args.input)
         ok = report["sorted_within"] and report["sorted_between"]

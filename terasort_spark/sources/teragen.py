@@ -20,7 +20,9 @@ empty; see SURVEY.md §0):
   naming, so concatenating part files in index order yields a globally
   sorted dataset.
 - TeraValidate: order-within + order-between partitions, row count, and
-  an order-insensitive content checksum — invariants, not golden files.
+  an order-insensitive content checksum, all from one read of the
+  sorted records (as Hadoop's TeraValidate mapper does) — invariants,
+  not golden files.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 KEY_LEN = 10
@@ -187,13 +189,38 @@ def read_tera_files(spark: SparkSession, in_dir: str) -> DataFrame:
     )
 
 
+def _hash_halves() -> list[Column]:
+    """The checksum's per-record term, the first 48 bits of
+    ``md5(key || 0x00 || value)``, as two 24-bit longs ``hi`` and ``lo``
+    (term = hi * 2^24 + lo). Summed as longs, each half stays exact up
+    to 2^39 records, where a 48-bit term would overflow past 2^15."""
+    h = F.md5(F.concat(F.col("key"), F.lit(b"\x00"), F.col("value")))
+    return [
+        F.conv(F.substring(h, 1 + 6 * i, 6), 16, 10).cast("long").alias(name)
+        for i, name in enumerate(("hi", "lo"))
+    ]
+
+
+def _halves_total(hi: int | None, lo: int | None) -> int:
+    """The checksum from the summed halves; no records (NULL sums) is 0."""
+    return ((hi or 0) << 24) + (lo or 0)
+
+
+def checksum(df: DataFrame) -> int:
+    """Order-insensitive content checksum, computed distributed: the sum
+    over records of the first 48 bits of ``md5(key || 0x00 || value)``,
+    exact at any row count; 0 for no records. ``teravalidate`` returns
+    the same value from its own pass."""
+    return _halves_total(*df.select(*(F.sum(c) for c in _hash_halves())).first())
+
+
 def _summarize_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """One partition's TeraValidate summary: its index, record count,
-    first and last key, and whether its keys never decrease — across
-    batch boundaries too. Only this one row leaves the executor; an
-    empty partition sends none."""
+    first and last key, whether its keys never decrease — across batch
+    boundaries too — and its sums of the checksum halves. Only this one
+    row leaves the executor; an empty partition sends none."""
     first = last = None
-    n = 0
+    n = hi = lo = 0
     sorted_ok = True
     for batch in batches:
         keys = batch.column(0)
@@ -207,44 +234,45 @@ def _summarize_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
             first = keys[0].as_py()
         last = keys[-1].as_py()
         n += len(keys)
+        hi += pc.sum(batch.column(1)).as_py()
+        lo += pc.sum(batch.column(2)).as_py()
     if n:
         part = TaskContext.get().partitionId()
         yield pa.RecordBatch.from_pylist(
-            [{"part": part, "n": n, "first_key": first, "last_key": last, "sorted_ok": sorted_ok}]
+            [{"part": part, "n": n, "first_key": first, "last_key": last,
+              "sorted_ok": sorted_ok, "hi": hi, "lo": lo}]
         )
 
 
-def checksum(df: DataFrame) -> int:
-    """Order-insensitive content checksum, computed distributed: sum of
-    per-record 48-bit md5 prefixes, accumulated in DECIMAL(38,0) so the
-    sum is exact at any row count (a long would overflow past ~2^15
-    records x 48 bits)."""
-    h = F.substring(F.md5(F.concat(F.col("key"), F.lit(b"\x00"), F.col("value"))), 1, 12)
-    per_record = F.conv(h, 16, 10).cast("decimal(20,0)")
-    total = df.select(
-        F.sum(per_record.cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    return int(total)
-
-
 def teravalidate(sorted_df: DataFrame) -> dict:
-    """TeraValidate invariants on a sorted DataFrame:
-    (a) keys non-decreasing within every partition,
-    (b) last key of partition i <= first key of partition i+1, taking
-        partitions in index order — for ``read_tera_files`` that is
-        file-name order, so a directory with two part files swapped
-        fails,
-    (c) row count preserved (caller compares),
-    Returns a dict with counts and booleans; raises nothing itself."""
+    """TeraValidate on a sorted DataFrame, in one Spark job that reads
+    each record once:
+    (a) ``sorted_within``: keys non-decreasing within every partition,
+    (b) ``sorted_between``: last key of partition i <= first key of
+        partition i+1, taking partitions in index order — for
+        ``read_tera_files`` that is file-name order, so a directory with
+        two part files swapped fails,
+    (c) ``n_rows``, ``n_partitions`` (non-empty ones) and
+        ``max_part_rows``, for the caller to compare,
+    (d) ``checksum``, equal to ``checksum(sorted_df)``: equal to the
+        input's checksum, it shows no record was lost, duplicated or
+        changed.
+    Returns the dict; raises nothing itself."""
     # mapInArrow runs on the sorted partitions directly (no extra shuffle)
-    schema = "part long, n long, first_key binary, last_key binary, sorted_ok boolean"
-    rows = sorted_df.select("key").mapInArrow(_summarize_partition, schema).collect()
+    schema = (
+        "part long, n long, first_key binary, last_key binary, sorted_ok boolean,"
+        " hi long, lo long"
+    )
+    records = sorted_df.select("key", *_hash_halves())
+    rows = records.mapInArrow(_summarize_partition, schema).collect()
     summaries = sorted(rows, key=lambda r: r["part"])
     return {
         "n_rows": sum(r["n"] for r in summaries),
         "n_partitions": len(summaries),
+        "max_part_rows": max((r["n"] for r in summaries), default=0),
         "sorted_within": all(r["sorted_ok"] for r in summaries),
         "sorted_between": all(
             a["last_key"] <= b["first_key"] for a, b in zip(summaries, summaries[1:])
         ),
+        "checksum": _halves_total(*(sum(r[h] for r in summaries) for h in ("hi", "lo"))),
     }

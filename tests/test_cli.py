@@ -85,6 +85,38 @@ def test_cli_teravalidate_fails_on_swapped_part_files(spark, tmp_path, capsys):
     assert report["sorted_within"] and not report["sorted_between"]
 
 
+def test_cli_teravalidate_fails_on_corrupted_record(spark, tmp_path, capsys):
+    """One flipped byte inside a value leaves every key, and so every
+    order check, intact; only the checksum, which teravalidate reports
+    from the same single job as the order checks, can catch it."""
+    gen_dir, sort_dir = str(tmp_path / "gen"), str(tmp_path / "sorted")
+    parts = ["--partitions", "4"]
+    gen = ["teragen", "--rows", "4000", "--out", gen_dir, *parts, "--checksum"]
+    assert main(gen, spark=spark) == 0
+    cks = json.loads(capsys.readouterr().out)["checksum"]
+    assert main(["terasort", "--input", gen_dir, "--out", sort_dir, *parts], spark=spark) == 0
+    capsys.readouterr()
+    assert main(["teravalidate", "--input", sort_dir], spark=spark) == 0
+    assert json.loads(capsys.readouterr().out)["checksum"] == cks
+
+    part = tmp_path / "sorted" / "part-00001.dat"
+    data = bytearray(part.read_bytes())
+    data[150] ^= 0x01  # a value byte of the second record
+    part.write_bytes(bytes(data))
+    sc, group = spark.sparkContext, "cli-teravalidate-corrupted"
+    sc.setJobGroup(group, "teravalidate --expect-checksum")
+    try:
+        argv = ["teravalidate", "--input", sort_dir, "--expect-checksum", str(cks)]
+        rc = main(argv, spark=spark)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert rc == 1
+    report = json.loads(capsys.readouterr().out)
+    assert report["sorted_within"] and report["sorted_between"], report
+    assert report["n_rows"] == 4000 and report["checksum_ok"] is False
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
 def test_cli_terasort_refuses_existing_output(spark, tmp_path, capsys):
     """Like Hadoop's FileOutputFormat: part files left by an earlier
     write would be read back as data, so a second write into the same
@@ -139,3 +171,21 @@ def test_cli_list_query_explain(spark, sf_dir, capsys):
 
     assert main(["explain", "scan_pushdown", "--sf-dir", sf_dir], spark=spark) == 0
     assert "Scan parquet" in capsys.readouterr().out
+
+
+def test_cli_input_without_part_files_exits_with_one_line(spark, tmp_path, capsys):
+    """teragen of zero rows writes no part file; every command that
+    then reads that directory fails with one line naming it, not with a
+    JVM traceback."""
+    empty = str(tmp_path / "empty")
+    assert main(["teragen", "--rows", "0", "--out", empty, "--partitions", "2"], spark=spark) == 0
+    assert json.loads(capsys.readouterr().out)["files"] == 0
+    again = str(tmp_path / "again")
+    for argv, in_dir in (
+        (["teravalidate", "--input", empty], empty),
+        (["terasort", "--input", empty, "--out", str(tmp_path / "sorted")], empty),
+        (["teragen", "--rows", "0", "--out", again, "--checksum"], again),
+    ):
+        assert main(argv, spark=spark) == 1
+        err = capsys.readouterr().err.splitlines()
+        assert err == [f"terasort_spark: {in_dir}: no part-*.dat files"], err

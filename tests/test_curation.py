@@ -1,8 +1,9 @@
 """Corpus-curation operators (terasort_spark/operators/curation.py):
 BM25, inverted-index cosine, incremental dedup, dataset split, Z-order
-layout. Oracle equality is covered by tests/test_oracle.py; these tests
-assert the properties the oracle can't see — layout statistics, split
-stability under corpus append, and plan shapes."""
+layout, priority-reservoir sampling. Oracle equality is covered by
+tests/test_oracle.py; these tests assert the properties the oracle
+can't see — layout statistics, split stability under corpus append,
+reservoir size, and plan shapes."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from terasort_spark.catalog import table
+from terasort_spark.plans.checks import executed_plan
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -236,3 +239,23 @@ def test_morton_code_is_bijective_and_neighbor_tight(spark):
     for (x, y), z in got.items():
         assert z == ref(x, y)
     assert len(set(got.values())) == len(got)  # injective on the sample
+
+
+# -------------------------------------------------------- sample_reservoir --
+
+
+def test_reservoir_fixed_size_and_partition_invariant(spark, sf_dir):
+    from terasort_spark.operators.curation import _RESERVOIR_K
+
+    out = _Q["sample_reservoir"](spark, sf_dir).collect()
+    n_docs = table(spark, sf_dir, "documents").count()
+    assert len(out) == min(_RESERVOIR_K, n_docs)
+    assert [r["rank"] for r in out] and len({r["doc_id"] for r in out}) == len(out)
+    # priorities are sorted by rank and the kept set is the K smallest
+    pri = [(r["priority"], r["doc_id"]) for r in sorted(out, key=lambda r: r["rank"])]
+    assert pri == sorted(pri)
+
+
+def test_reservoir_plan_is_take_ordered_not_global_sort(spark, sf_dir):
+    plan = executed_plan(_Q["sample_reservoir"](spark, sf_dir))
+    assert "TakeOrderedAndProject" in plan, plan

@@ -1,6 +1,7 @@
 """File-format sources (terasort_spark/operators/formats.py and the
 DataSources in terasort_spark/sources/). Oracle parity runs in
-tests/test_oracle.py; these tests pin the Avro reader's split geometry."""
+tests/test_oracle.py; these tests pin the Avro reader's split geometry
+and the fixed-width source's split count."""
 
 from __future__ import annotations
 
@@ -125,3 +126,10 @@ def test_source_avro_reads_through_real_datasource(spark, sf_dir):
         )
     )
     assert got == want
+
+
+def test_source_fixedwidth_query_has_multiple_splits(spark, sf_dir):
+    df = _Q["source_fixedwidth"](spark, sf_dir)
+    # one split per written part file at the default split size
+    assert df.rdd.getNumPartitions() == 8
+    assert df.count() == 20_000

@@ -2,8 +2,8 @@
 rows-only queries (no DuckDB oracle) still have measurable contracts —
 LSH candidate recall vs the exact pair set, ANN recall vs exact top-k,
 simhash determinism, multimodal batch plumbing, MinHash containment
-estimates — and replays of the language-ID and Kneser-Ney text
-operators."""
+estimates — replays of the language-ID, Kneser-Ney, scene-cut and
+markup-extraction operators, and the plan shape of the latter."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators.llm_text import CONTAIN_EST_TAU
+from terasort_spark.plans.checks import executed_plan
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -987,3 +988,71 @@ def test_containment_estimates_track_truth(spark, sf_dir):
         exact = len(a & b) / len(b)
         errs.append(abs(r["containment"] - exact))
     assert errs and sum(errs) / len(errs) < 0.12, sum(errs) / len(errs)
+
+
+# ----------------------------------------------------- multimodal_scenecut --
+
+
+def test_scenecut_matches_local_replay(spark, sf_dir):
+    from terasort_spark.operators.multimodal import _CUT_HAMMING, _FRAME_BYTES
+
+    out = {
+        (r["doc_id"], r["frame_idx"]): r["hamming"]
+        for r in _Q["multimodal_scenecut"](spark, sf_dir).collect()
+    }
+    assert out, "no cuts found on this corpus"
+    texts = {
+        r["doc_id"]: r["text"]
+        for r in table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .collect()
+    }
+
+    def fhash(chunk: bytes) -> int:
+        dg = hashlib.md5(chunk).digest()
+        return sum(1 << k for k in range(12) if dg[k] < dg[k + 1])
+
+    expected = {}
+    for did, text in texts.items():
+        payload = text.encode()
+        nf = max(1, len(payload) // _FRAME_BYTES)
+        hs = [
+            fhash(payload[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES])
+            for i in range(nf)
+        ]
+        for i in range(1, nf):
+            d = bin(hs[i] ^ hs[i - 1]).count("1")
+            if d >= _CUT_HAMMING:
+                expected[(did, i)] = d
+    assert out == expected
+
+
+# ----------------------------------------------------- text_markup_extract --
+
+
+def test_markup_extract_recovers_visible_text_exactly(spark, sf_dir):
+    """Extraction must return EXACTLY the visible text (heading + body
+    + link anchors, single-spaced): no tag fragments, no script code,
+    no leaked attributes."""
+    rows = _Q["text_markup_extract"](spark, sf_dir).collect()
+    assert rows
+    texts = {
+        r["doc_id"]: (r["lang"], r["text"])
+        for r in table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select("doc_id", "lang", "text")
+        .collect()
+    }
+    for r in rows:
+        lang, text = texts[r["doc_id"]]
+        extra = "more x" if r["doc_id"] % 3 == 0 else "more"
+        want = " ".join(f"{lang} {text} {extra}".split())
+        assert r["clean_text"] == want, (r["doc_id"], r["clean_text"][:80])
+        assert "<" not in r["clean_text"] and "var x" not in r["clean_text"]
+        assert r["n_chars_clean"] == len(want)
+        assert r["n_links"] == (2 if r["doc_id"] % 3 == 0 else 1)
+
+
+def test_markup_extract_plan_is_shuffle_free(spark, sf_dir):
+    plan = executed_plan(_Q["text_markup_extract"](spark, sf_dir))
+    assert "Exchange" not in plan, plan

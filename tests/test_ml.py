@@ -2,7 +2,8 @@
 iterative training, so its semantics are pinned by an exact numpy
 replay of the standardize + quantized-GD recipe plus learnability and
 determinism checks; the trees, boosting and ROUGE are replayed against
-brute-force Python."""
+brute-force Python; retrieval MRR/hit@5 is checked for bounds and
+consistency."""
 
 from __future__ import annotations
 
@@ -178,3 +179,23 @@ def test_rouge_clipped_counts_replay(spark, sf_dir):
         # identical texts must score a perfect F1
         if cand == ref:
             assert r["rouge1_f"] == 1.0
+
+
+# ------------------------------------------------------------------ ml_mrr --
+
+
+def test_mrr_metrics_bounded_and_consistent(spark, sf_dir):
+    rows = _Q["ml_mrr"](spark, sf_dir).collect()
+    assert len(rows) == 10  # one per query
+    for r in rows:
+        assert 0.0 <= r["rr"] <= 1.0
+        assert r["hit5"] in (0, 1)
+        # rr and hit5 agree: a hit has rr >= 1/5, a miss has rr == 0
+        assert (r["rr"] > 0) == (r["hit5"] == 1)
+        if r["hit5"]:
+            assert r["rr"] >= 1 / 5 - 1e-9
+    # the multi-probe IVF must beat random bucket luck (5/16 of the
+    # space probed -> ~3 expected hits if hashing carried no signal);
+    # at this tiny sf the buckets are sparse, so the bar is modest —
+    # sf0.01 scores higher (driver-graded values in CORRECTNESS_r07)
+    assert sum(r["hit5"] for r in rows) >= 4

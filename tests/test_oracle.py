@@ -136,7 +136,6 @@ def test_engine_explain_returns_plan_text(spark, sf_dir):
 # list may only shrink.
 _LEGACY_TEST_FILES = {
     "test_wave6.py",
-    "test_wave7.py",
     "test_wave11.py",
 }
 

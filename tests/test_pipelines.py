@@ -1,6 +1,7 @@
 """Pipeline operators (terasort_spark/operators/pipelines.py): the crawl
-frontier's per-host politeness quota, and the composed materialized-view
-lifecycle answering from the refreshed view alone."""
+frontier's per-host politeness quota, the composed materialized-view
+lifecycle answering from the refreshed view alone, and one preference
+pair per group."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators.pipelines import FRONTIER_PER_HOST, FRONTIER_ROUNDS
+from terasort_spark.plans.checks import executed_plan
 from terasort_spark.registry import queries
 
 _Q = queries()
@@ -95,3 +97,33 @@ def test_ivm_rewrite_equals_spark_recompute(spark, sf_dir):
     )
     got = _Q["pipeline_ivm_rewrite"](spark, sf_dir).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+# ----------------------------------------------- pipeline_preference_pairs --
+
+
+def test_preference_pairs_one_per_group_with_nonneg_margin(spark, sf_dir):
+    rows = _Q["pipeline_preference_pairs"](spark, sf_dir).collect()
+    assert rows
+    seen = set()
+    for r in rows:
+        key = (r["lang"], r["source"])
+        assert key not in seen  # one pair per group
+        seen.add(key)
+        assert r["margin"] >= 0
+        assert r["chosen_id"] != r["rejected_id"]
+    # groups with >= 2 docs all emit a pair
+    n_groups = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .groupBy("lang", "source")
+        .count()
+        .filter(F.col("count") >= 2)
+        .count()
+    )
+    assert len(rows) == n_groups
+
+
+def test_preference_pairs_plan_uses_window_group_limit(spark, sf_dir):
+    plan = executed_plan(_Q["pipeline_preference_pairs"](spark, sf_dir))
+    assert "WindowGroupLimit" in plan, plan

@@ -1,10 +1,11 @@
 """Plan-shape tests: the scale-critical optimizer behaviors actually
 happen (pushdown, pruning, broadcast, no cartesian in equi joins,
-whole-stage codegen). These guard the 100 TB properties the small-SF
-correctness suite can't observe."""
+whole-stage codegen, materialized-view rewrite). These guard the
+100 TB properties the small-SF correctness suite can't observe."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
@@ -739,3 +740,55 @@ def test_manifest_prune_scan_lists_only_surviving_files(spark, sf_dir):
     df = _Q["scan_manifest_prune"](spark, sf_dir)
     plan = formatted_plan(df)
     assert "PushedFilters" in plan and "o_orderdate" in plan, plan
+
+
+# ------------------------------------------------------------- mv_rewrite --
+
+
+def test_mv_rewrite_plan_scans_only_the_view(spark, sf_dir):
+    """The rewrite's promise: the returned plan reads the MV directory,
+    never orders.parquet — the fact table is touched only by the
+    refresh job."""
+    plan = executed_plan(_Q["mv_rewrite"](spark, sf_dir))
+    scan_lines = [l for l in plan.splitlines() if "FileScan" in l]
+    assert scan_lines, plan
+    for l in scan_lines:
+        assert "orders.parquet" not in l, l
+        assert "mv_daily" in l or "InMemoryFileIndex" in l, l
+
+
+def test_mv_rewrite_rejects_non_derivable_requests(spark, sf_dir):
+    from terasort_spark.plans.mv_rewrite import answer_from_mv, build_daily_mv
+
+    p = build_daily_mv(spark, sf_dir)
+    with pytest.raises(ValueError, match="not derivable"):
+        answer_from_mv(spark, p, dims=("o_custkey",), measures=("n_orders",))
+    with pytest.raises(ValueError, match="not in the view"):
+        answer_from_mv(spark, p, dims=("order_month",), measures=("avg_price",))
+
+
+def test_mv_rollup_matches_direct_fact_aggregation(spark, sf_dir):
+    """Semantics preservation in-Spark (the oracle proves it vs DuckDB;
+    this proves it vs the fact table through Spark's own engine): the
+    MV roll-up equals aggregating orders directly, bit-for-bit, because
+    partial sums are DECIMAL."""
+    from terasort_spark.operators._util import DEC, rnd
+
+    got = {
+        (r["order_month"], r["o_orderpriority"]): (r["n_orders"], r["revenue"])
+        for r in _Q["mv_rewrite"](spark, sf_dir).collect()
+    }
+    direct = (
+        table(spark, sf_dir, "orders")
+        .groupBy(
+            F.trunc("o_orderdate", "month").alias("m"),
+            "o_orderpriority",
+        )
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            rnd(F.sum(F.col("o_totalprice").cast(DEC)).cast("double"), "rev"),
+        )
+        .collect()
+    )
+    want = {(r["m"], r["o_orderpriority"]): (r["n"], r["rev"]) for r in direct}
+    assert got == want

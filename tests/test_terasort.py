@@ -1,9 +1,11 @@
 """TeraValidate-style invariant tests for the terasort module
 (SURVEY.md §5b #4): order within partitions, order between partitions,
-count and content preserved — invariants, not golden files."""
+count and content preserved — invariants, not golden files — plus the
+record reader's split geometry."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from terasort_spark.registry import queries
@@ -44,6 +46,75 @@ def test_terasort_total_order_and_content(spark):
     assert report["sorted_between"], report
     assert checksum(out) == in_checksum  # permutation, nothing lost/changed
 
+
+def test_checksum_and_teravalidate_of_no_records(spark):
+    """Spark sums over no rows are NULL; the checksum of no records is 0,
+    and TeraValidate of no records passes with zero counts."""
+    empty = teragen(spark, 0, n_partitions=2)
+    assert checksum(empty) == 0
+    assert teravalidate(empty) == {
+        "n_rows": 0,
+        "n_partitions": 0,
+        "max_part_rows": 0,
+        "sorted_within": True,
+        "sorted_between": True,
+        "checksum": 0,
+    }
+
+
+def test_teravalidate_reads_records_in_one_job(spark, tmp_path):
+    """Like Hadoop's TeraValidate mapper, the order checks, counts and
+    checksum come from one read of the records: one Spark job."""
+    from terasort_spark.sources.teragen import read_tera_files, write_tera_files
+
+    out_dir = str(tmp_path / "tera")
+    write_tera_files(terasort(teragen(spark, 4000, n_partitions=2), 4), out_dir)
+    df = read_tera_files(spark, out_dir)
+    sc, group = spark.sparkContext, "teravalidate-one-pass"
+    sc.setJobGroup(group, "teravalidate")
+    try:
+        report = teravalidate(df)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert report["n_rows"] == 4000 and report["n_partitions"] == 4
+    assert report["sorted_within"] and report["sorted_between"], report
+    assert report["checksum"] == checksum(df)
+
+
+def test_teravalidate_checksum_exact_in_one_large_batch(spark, tmp_path):
+    """100k records in one Arrow batch: a plain int64 sum of their 48-bit
+    terms would overflow (100k * 2^48 > 2^63). The checksum still equals
+    a pure-Python md5 sum over the same records."""
+    import hashlib
+
+    from terasort_spark.sources.teragen import (
+        RECORD_LEN,
+        read_tera_files,
+        write_tera_files,
+    )
+
+    n = 100_000
+    out_dir = tmp_path / "tera"
+    write_tera_files(teragen(spark, n, n_partitions=1), str(out_dir))
+    data = b"".join(p.read_bytes() for p in sorted(out_dir.glob("part-*.dat")))
+    want = sum(
+        int(hashlib.md5(r[:KEY_LEN] + b"\x00" + r[KEY_LEN:]).hexdigest()[:12], 16)
+        for r in (data[o : o + RECORD_LEN] for o in range(0, len(data), RECORD_LEN))
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        report = teravalidate(read_tera_files(spark, str(out_dir)))
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert report["n_rows"] == n and report["n_partitions"] == 1
+    assert report["checksum"] == want
 
 def test_terasort_plan_uses_range_exchange(spark):
     out = terasort(teragen(spark, 1000, n_partitions=4), n_partitions=4)
@@ -203,3 +274,56 @@ def test_skewed_terasort_contract_with_spanning_key(spark, sf_dir):
 
     out_hist = sorted(Counter(k for _, k in rows).items())
     assert gen_hist == out_hist
+
+
+# ------------------------------------------------------------ fixedwidth --
+
+
+def test_fixedwidth_reader_splits_and_roundtrip(spark, tmp_path):
+    """read_tera_files cuts files into record-aligned splits by the
+    Hadoop split size, takes them in file-name order, then byte offset
+    (the order teravalidate relies on), and returns every record
+    exactly once — for an empty file, a one-record file and files
+    that span several splits."""
+    import random
+    from collections import Counter
+
+    from terasort_spark.sources.teragen import RECORD_LEN, read_tera_files
+
+    rng = random.Random(7)
+    written = []
+    for i, n in enumerate((0, 1, 37, 53)):
+        recs = [rng.randbytes(RECORD_LEN) for _ in range(n)]
+        (tmp_path / f"part-{i:05d}.dat").write_bytes(b"".join(recs))
+        written += recs
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "mapreduce.input.fileinputformat.split.maxsize"
+    old = conf.get(key)
+    conf.set(key, str(10 * RECORD_LEN))  # 10-record splits
+    try:
+        df = read_tera_files(spark, str(tmp_path))
+        got = sorted(bytes(r["key"]) + bytes(r["value"]) for r in df.collect())
+        splits = df.select(
+            F.spark_partition_id().alias("p"),
+            F.regexp_extract(F.input_file_name(), r"part-\d+", 0).alias("f"),
+        ).distinct().collect()
+    finally:
+        if old is None:
+            conf.unset(key)
+        else:
+            conf.set(key, old)
+    assert got == sorted(written)  # nothing lost, torn or duplicated
+    per_file = Counter(r["f"] for r in splits)
+    assert per_file["part-00002"] > 1 and per_file["part-00003"] > 1, per_file
+    by_part = [r["f"] for r in sorted(splits, key=lambda r: r["p"])]
+    assert by_part == sorted(by_part)
+
+
+def test_fixedwidth_reader_rejects_misaligned_file(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    from terasort_spark.sources.teragen import read_tera_files
+
+    (tmp_path / "part-00000.dat").write_bytes(b"x" * 105)  # 1.05 records
+    with pytest.raises(Py4JJavaError, match="EOFException"):
+        read_tera_files(spark, str(tmp_path)).count()
