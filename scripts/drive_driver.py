@@ -7,7 +7,8 @@ twin of the grading gate. Run from any cwd:  python scripts/drive_driver.py
 # repo's __spark_entry__ by path, smoke-checks entry(), then t2-compares every
 # queries() entry against oracle_sql() via DuckDB at sf0.01.
 import importlib.util, sys, os
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 
 from pyspark.sql import SparkSession
@@ -30,7 +31,7 @@ if only:
     assert not missing, f"DRIVE_ONLY names not in registry: {missing}"
     qs = {n: f for n, f in qs.items() if n in keep}
     print(f"DRIVE_ONLY: restricting to {len(qs)} queries")
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from terasort_spark.compare import compare_query, duck_connection
 con = duck_connection("/root/testdata/sf0.01")
 fails = 0

@@ -6,9 +6,10 @@ covered 189 queries; re-run at the full registry."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 

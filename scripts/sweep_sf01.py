@@ -6,9 +6,10 @@ registry). Output: one line per failure, summary at the end."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 

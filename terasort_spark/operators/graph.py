@@ -305,7 +305,7 @@ def star_components(spark, e, max_rounds: int = 16):
     """Large-star/small-star alternation over a canonical (a < b) edge
     DataFrame until fixpoint. Returns (labels_df(doc_id, component),
     rounds_run); only nodes that appear in ``e`` get a label. Shared by
-    graph_cc_star, dedup_cluster and scripts/cc_scale_probe.py, so the
+    graph_cc_star, dedup_cluster and ``scripts/probe.py cc``, so the
     probed loop IS the graded one."""
     e = e.localCheckpoint(eager=True)
     nodes = (

@@ -5,7 +5,7 @@ task 4 — promote SCALE.md's hand dial to a plan-builder rule).
 The per-user lead-window shape ("window over a high-cardinality key
 feeding one map-side-combined groupBy": ts_autocorr, ts_holt_forecast,
 ts_cusum) has a measured performance DIAL (SCALE.md round-11 decades,
-scripts/window_scale_probe.py): the plain single-window form wins on
+``scripts/probe.py window``): the plain single-window form wins on
 uniform keys (the two-phase rewrite pays a second exchange for
 nothing — 1.6–2.8× slower), but once one key owns a large share of all
 rows the plain form serializes the whole job behind a single task's
@@ -97,19 +97,15 @@ def choose_strategy(spark, sf_dir: str) -> str:
     return "bucketed" if share >= WIN_SKEW_SHARE_CUT else "plain"
 
 
-def _lead_columns_plain(seq: DataFrame) -> DataFrame:
-    """Reference form: ONE window keyed by user_id."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return seq.withColumns(
-        {f"q{k}": F.lead("q", k).over(w) for k in AC_LAGS}
-    )
+def lead_columns(seq: DataFrame, strategy: str) -> DataFrame:
+    """``seq`` (user_id, ts, event_id, q) plus lead-k columns ``q1..q3``
+    in (ts, event_id) order per user_id, by the named strategy.
 
+    'plain' is the reference form: ONE window keyed by user_id.
 
-def _lead_columns_bucketed(seq: DataFrame) -> DataFrame:
-    """Two-phase hot-key rewrite with exact boundary repair.
-
-    Phase 1: lead-k within (user_id, hour-bucket) windows; rows whose
-    k-successor crosses the bucket edge see NULL here. rb/re are the
+    'bucketed' is the two-phase hot-key rewrite with exact boundary
+    repair. Phase 1: lead-k within (user_id, hour-bucket) windows; rows
+    whose k-successor crosses the bucket edge see NULL here. rb/re are the
     in-bucket ranks from start/end (same-ts rows share a bucket, so
     the bucket is monotone in the (ts, event_id) order).
 
@@ -118,6 +114,11 @@ def _lead_columns_bucketed(seq: DataFrame) -> DataFrame:
     take ALL their leads from it (for k < re the in-bucket lead is
     also correct, and equal — both name the true k-successor, which is
     edge-resident by the induction in the module docstring)."""
+    if strategy != "bucketed":
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        return seq.withColumns(
+            {f"q{k}": F.lead("q", k).over(w) for k in AC_LAGS}
+        )
     b = seq.withColumn(
         "bucket", F.floor(F.col("ts").cast("bigint") / WIN_BUCKET_S)
     )
@@ -190,10 +191,7 @@ def autocorr_autoplan(
     ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     q = F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint")
     seq = ev.select("user_id", "ts", "event_id", q.alias("q"))
-    lead_fn = (
-        _lead_columns_bucketed if strategy == "bucketed" else _lead_columns_plain
-    )
-    return autocorr_stats(lead_fn(seq).drop("ts", "event_id"))
+    return autocorr_stats(lead_columns(seq, strategy).drop("ts", "event_id"))
 
 
 @register("ts_autocorr_autoplan", oracle=autocorr_oracle())

@@ -204,8 +204,8 @@ def terasort_skewed(spark, sf_dir):
     sort term, so the output is still globally key-sorted while the hot
     key spreads over up to 64 salt slices (spanning-partition spread
     asserted in tests/test_terasort.py; the straggler wall-clock cost and
-    the salted fix are measured at 20 GB in
-    scripts/tera_scale_probe.py's key-mode dial, BASELINE.md).
+    the salted fix are measured at 20 GB by
+    ``scripts/probe.py tera``'s key-mode dial, BASELINE.md).
 
     The exact oracle is the (position -> key) map itself: with
     duplicate keys ANY valid key-sorted permutation yields the same

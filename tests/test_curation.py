@@ -1,6 +1,7 @@
 """Corpus-curation operators (terasort_spark/operators/curation.py):
 BM25, inverted-index cosine, incremental dedup, dataset split, Z-order
-layout, priority-reservoir sampling. Oracle equality is covered by
+layout, priority-reservoir sampling, Hamilton-stratified and
+token-budget sampling. Oracle equality is covered by
 tests/test_oracle.py; these tests assert the properties the oracle
 can't see — layout statistics, split stability under corpus append,
 reservoir size, and plan shapes."""
@@ -259,3 +260,71 @@ def test_reservoir_fixed_size_and_partition_invariant(spark, sf_dir):
 def test_reservoir_plan_is_take_ordered_not_global_sort(spark, sf_dir):
     plan = executed_plan(_Q["sample_reservoir"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_stratified_sample_is_exact_hamilton_allocation(spark, sf_dir):
+    from terasort_spark.operators.quality import _STRAT_TARGET
+
+    docs = [
+        (r["doc_id"], r["lang"])
+        for r in table(spark, sf_dir, "documents").select("doc_id", "lang").collect()
+    ]
+    counts: dict[str, int] = {}
+    for _, lang in docs:
+        counts[lang] = counts.get(lang, 0) + 1
+    total = sum(counts.values())
+    quota = {l: _STRAT_TARGET * n / total for l, n in counts.items()}
+    base = {l: int(quota[l]) for l in counts}
+    leftover = _STRAT_TARGET - sum(base.values())
+    order = sorted(counts, key=lambda l: (-(quota[l] - base[l]), l))
+    alloc = {
+        l: base[l] + (1 if i < leftover else 0) for i, l in enumerate(order)
+    }
+    got = [
+        (r["doc_id"], r["lang"])
+        for r in _Q["sample_stratified_alloc"](spark, sf_dir).collect()
+    ]
+    per_lang: dict[str, int] = {}
+    for _, lang in got:
+        per_lang[lang] = per_lang.get(lang, 0) + 1
+    for l, k in alloc.items():
+        assert per_lang.get(l, 0) == min(k, counts[l]), (l, k, per_lang)
+    if all(counts[l] >= alloc[l] for l in alloc):
+        assert len(got) == _STRAT_TARGET
+
+
+def test_token_budget_is_greedy_prefix_within_budget(spark, sf_dir):
+    """sample_token_budget: per lang the selection is exactly the
+    longest (qs desc, doc_id) prefix whose token total stays within
+    TOKEN_BUDGET — replayed in Python from raw docs."""
+    from terasort_spark.operators.pretrain import TOKEN_BUDGET
+
+    out = {r["lang"]: r for r in _Q["sample_token_budget"](spark, sf_dir).collect()}
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .collect()
+    )
+    stops = {"the", "and", "of", "to", "a", "in", "is", "it"}
+    by_lang = {}
+    for r in docs:
+        toks = [w for w in r["text"].lower().split(" ") if w]
+        if not toks:
+            continue
+        qs = int((sum(w in stops for w in toks) / len(toks)) * 10000 + 0.5)
+        by_lang.setdefault(r["lang"], []).append((qs, r["doc_id"], len(toks)))
+    for lang, rows in by_lang.items():
+        rows.sort(key=lambda x: (-x[0], x[1]))
+        c, n, tok, mn = 0, 0, 0, None
+        for qs, _, t in rows:
+            if c + t > TOKEN_BUDGET:
+                break
+            c += t
+            n += 1
+            tok += t
+            mn = qs
+        got = out[lang]
+        assert (got["n_docs"], got["tokens_selected"], got["min_score"]) == (
+            n, tok, mn
+        ), lang
+        assert got["tokens_selected"] <= TOKEN_BUDGET

@@ -3,7 +3,9 @@ rows-only queries (no DuckDB oracle) still have measurable contracts —
 LSH candidate recall vs the exact pair set, ANN recall vs exact top-k,
 simhash determinism, multimodal batch plumbing, MinHash containment
 estimates — replays of the language-ID, Kneser-Ney, scene-cut and
-markup-extraction operators, and the plan shape of the latter."""
+markup-extraction operators, and the plan shape of the latter; and the
+document-statistics text operators (boilerplate, novelty, readability,
+keywords, Zipf fit, compression ratio, DSIR weights)."""
 
 from __future__ import annotations
 
@@ -1056,3 +1058,161 @@ def test_markup_extract_recovers_visible_text_exactly(spark, sf_dir):
 def test_markup_extract_plan_is_shuffle_free(spark, sf_dir):
     plan = executed_plan(_Q["text_markup_extract"](spark, sf_dir))
     assert "Exchange" not in plan, plan
+
+
+def test_boilerplate_ratio_bounds_and_duplicate_docs_max_out(spark, sf_dir):
+    out = {r["doc_id"]: r for r in _Q["text_boilerplate"](spark, sf_dir).collect()}
+    assert out, "corpus produced no shingled docs"
+    for r in out.values():
+        assert 0.0 <= r["boiler_ratio"] <= 1.0
+        assert r["n_boiler"] <= r["n_shingles"]
+        assert r["keep"] == (r["n_boiler"] / r["n_shingles"] <= 0.5)
+    # non-vacuous on this corpus: some shingles repeat across docs and
+    # some do not (the corpus has no exact-duplicate texts, so a ratio
+    # of exactly 1.0 everywhere would indicate a counting bug)
+    assert any(r["n_boiler"] > 0 for r in out.values())
+    assert any(r["boiler_ratio"] < 1.0 for r in out.values())
+    # Python replay on a sample: a doc's n_boiler equals the count of
+    # its distinct shingles that occur in >= 2 distinct docs
+    d = table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.length("text") > 0)
+    )
+    texts = {r["doc_id"]: r["text"] for r in d.collect()}
+    sh = {}
+    for did, text in texts.items():
+        toks = [t for t in text.lower().split(" ") if t]
+        sh[did] = {
+            " ".join(toks[i : i + 5]) for i in range(len(toks) - 4)
+        }
+    from collections import Counter
+
+    df_count = Counter(s for ss in sh.values() for s in ss)
+    for did in list(out)[:50]:
+        boiler = sum(1 for s in sh[did] if df_count[s] >= 2)
+        assert out[did]["n_shingles"] == len(sh[did])
+        assert out[did]["n_boiler"] == boiler, (did, boiler)
+
+
+def test_readability_lix_dominates_word_length(spark, sf_dir):
+    out = _Q["text_readability"](spark, sf_dir).collect()
+    assert out
+    for r in out:
+        assert r["n_words"] > 0
+        assert r["lix"] >= r["avg_word_len"] - 1e-9
+        assert 1.0 <= r["avg_word_len"] <= 20.0
+
+
+def test_keywords_topk_per_doc_ordered(spark, sf_dir):
+    rows = _Q["text_keywords"](spark, sf_dir).collect()
+    assert rows
+    per_doc = {}
+    for r in rows:
+        per_doc.setdefault(r["doc_id"], []).append(r)
+    for did, rs in per_doc.items():
+        rs.sort(key=lambda r: r["rank"])
+        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
+        assert len(rs) <= 3
+        for a, b in zip(rs, rs[1:]):
+            assert a["tfidf"] >= b["tfidf"] - 1e-9
+
+
+def test_novelty_is_boilerplates_dual(spark, sf_dir):
+    """Every shingle is novel in exactly ONE document, so total novel
+    shingles == distinct shingles corpus-wide; the earliest doc of any
+    duplicate pair scores the shingle, the later one doesn't."""
+    out = {r["doc_id"]: r for r in _Q["text_novelty"](spark, sf_dir).collect()}
+    assert out
+    boiler = {r["doc_id"]: r for r in _Q["text_boilerplate"](spark, sf_dir).collect()}
+    assert set(out) == set(boiler)
+    for did, r in out.items():
+        assert r["n_novel"] <= r["n_shingles"]
+        assert r["n_shingles"] == boiler[did]["n_shingles"]
+    # Python replay: total novel shingles == distinct shingles corpus-wide
+    texts = {
+        r["doc_id"]: r["text"]
+        for r in table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .collect()
+    }
+    all_shingles = set()
+    for text in texts.values():
+        toks = [t for t in text.lower().split(" ") if t]
+        all_shingles.update(
+            " ".join(toks[i : i + 5]) for i in range(len(toks) - 4)
+        )
+    assert sum(r["n_novel"] for r in out.values()) == len(all_shingles)
+    # the first doc (doc_id min) is 100% novel by construction
+    first = min(out)
+    assert out[first]["novelty"] == 1.0
+
+
+def test_zipf_exponent_is_plausible_and_rank1_is_top_word(spark, sf_dir):
+    row = _Q["text_zipf_fit"](spark, sf_dir).collect()
+    assert len(row) == 1
+    r = row[0]
+    vocab = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+        .where(F.col("w") != "")
+        .select("w")
+        .distinct()
+        .count()
+    )
+    assert r["n_vocab"] == vocab
+    # the synthetic corpus is near-uniform over a tiny vocab, so s is
+    # small but the fit must still be finite and non-negative-ish
+    assert -1.0 < r["zipf_s"] < 3.0
+    assert r["log_c"] > 0.0
+
+
+def test_compression_ratio_is_deterministic_and_sane(spark, sf_dir):
+    import zlib
+
+    rows = {r["doc_id"]: r for r in _Q["text_compression_ratio"](spark, sf_dir).collect()}
+    assert rows
+    texts = {
+        r["doc_id"]: r["text"]
+        for r in table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .collect()
+    }
+    assert set(rows) == set(texts)
+    for did, r in rows.items():
+        raw = texts[did].encode("utf-8")
+        expect = round(len(zlib.compress(raw, 6)) / len(raw), 4)
+        assert r["comp_ratio"] == expect, (did, r["comp_ratio"], expect)
+        assert 0.0 < r["comp_ratio"] <= 1.2
+    # repartitioning must not change a single ratio (pure function)
+    again = {
+        r["doc_id"]: r["comp_ratio"]
+        for r in _Q["text_compression_ratio"](spark, sf_dir).collect()
+    }
+    assert again == {k: v["comp_ratio"] for k, v in rows.items()}
+    # highly repetitive text compresses harder than varied text on avg
+    import statistics
+
+    assert statistics.mean(v["comp_ratio"] for v in rows.values()) < 1.0
+
+
+def test_dsir_weights_rank_target_like_docs_higher(spark, sf_dir):
+    """DSIR's whole point: documents from the target distribution
+    (English) must get systematically higher importance weights than
+    off-target documents. Also pins per-doc token counts against a
+    Python replay (the feature extraction is shared machinery)."""
+    out = {r["doc_id"]: r for r in _Q["text_dsir_weights"](spark, sf_dir).collect()}
+    d = table(spark, sf_dir, "documents").select("doc_id", "text", "lang").collect()
+    en, other = [], []
+    for r in d:
+        if not r["text"]:
+            continue
+        toks = [t for t in r["text"].lower().split(" ") if t]
+        if not toks:
+            continue
+        assert out[r["doc_id"]]["n_toks"] == len(toks)
+        w = out[r["doc_id"]]["logweight"] / len(toks)  # length-normalized
+        (en if r["lang"] == "en" else other).append(w)
+    assert en and other
+    # 256 hashed buckets collide heavily on a 500-doc corpus, so the
+    # separation is directional rather than dramatic at this SF.
+    assert sum(en) / len(en) > sum(other) / len(other) + 0.0005

@@ -2,8 +2,9 @@
 iterative training, so its semantics are pinned by an exact numpy
 replay of the standardize + quantized-GD recipe plus learnability and
 determinism checks; the trees, boosting and ROUGE are replayed against
-brute-force Python; retrieval MRR/hit@5 is checked for bounds and
-consistency."""
+brute-force Python; retrieval MRR/hit@5 and NDCG are checked for bounds and
+consistency; naive Bayes, stumps, AUC, calibration and confusion
+matrices are replayed in Python."""
 
 from __future__ import annotations
 
@@ -199,3 +200,167 @@ def test_mrr_metrics_bounded_and_consistent(spark, sf_dir):
     # at this tiny sf the buckets are sparse, so the bar is modest —
     # sf0.01 scores higher (driver-graded values in CORRECTNESS_r07)
     assert sum(r["hit5"] for r in rows) >= 4
+
+
+def test_naivebayes_confusion_matrix_partitions_corpus(spark, sf_dir):
+    rows = _Q["ml_naivebayes"](spark, sf_dir).collect()
+    assert rows
+    langs = {
+        r["lang"]
+        for r in table(spark, sf_dir, "documents").select("lang").distinct().collect()
+    }
+    n_docs = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .count()
+    )
+    assert sum(r["n"] for r in rows) == n_docs
+    for r in rows:
+        assert r["lang"] in langs and r["pred_lang"] in langs
+        assert r["n"] > 0
+
+
+def test_stump_minimizes_weighted_gini_over_histogram(spark, sf_dir):
+    row = _Q["ml_stump"](spark, sf_dir).collect()
+    assert len(row) == 1
+    row = row[0]
+    docs = table(spark, sf_dir, "documents").select("n_chars", "lang").collect()
+    n = len(docs)
+    assert row["n_left"] + row["n_right"] == n
+    assert 0.0 <= row["wgini"] <= 0.5 + 1e-9
+
+    def wgini_at(t):
+        ln_ = sum(1 for d in docs if d["n_chars"] <= t)
+        lp = sum(1 for d in docs if d["n_chars"] <= t and d["lang"] == "en")
+        rn = n - ln_
+        rp = sum(1 for d in docs if d["lang"] == "en") - lp
+        if ln_ == 0 or rn == 0:
+            return None
+
+        def g(nn, pp):
+            pr, qr = pp / nn, (nn - pp) / nn
+            return 1.0 - pr * pr - qr * qr
+
+        return (ln_ * g(ln_, lp) + rn * g(rn, rp)) / n
+
+    xs = sorted({d["n_chars"] for d in docs})
+    best = min(w for w in (wgini_at(t) for t in xs) if w is not None)
+    assert abs(row["wgini"] - best) < 2e-6, (row["wgini"], best)
+
+
+def test_auc_matches_pairwise_bruteforce(spark, sf_dir):
+    """The histogram rank-sum AUC must equal the O(n_pos*n_neg)
+    pairwise definition: mean over (pos, neg) pairs of
+    1[s_pos > s_neg] + 0.5 * 1[tie] — an independent algorithm."""
+    from terasort_spark.operators.ml import _AUC_STOPS
+
+    row = _Q["ml_auc"](spark, sf_dir).collect()[0]
+    d = table(spark, sf_dir, "documents").select("text", "lang").collect()
+    pos, neg = [], []
+    for r in d:
+        if not r["text"]:
+            continue
+        toks = [t for t in r["text"].lower().split(" ") if t]
+        if not toks:
+            continue
+        s = int(sum(t in _AUC_STOPS for t in toks) / len(toks) * 10000 + 0.5)
+        (pos if r["lang"] == "en" else neg).append(s)
+    assert (row["n_pos"], row["n_neg"]) == (len(pos), len(neg))
+    two_u = sum(
+        2 if sp > sn else (1 if sp == sn else 0) for sp in pos for sn in neg
+    )
+    import math
+
+    expect = math.floor(two_u / (2.0 * len(pos) * len(neg)) * 10000 + 0.5) / 10000
+    assert row["auc"] == expect
+    assert 0.0 <= row["auc"] <= 1.0
+
+
+def test_calibration_bins_replay_and_ece(spark, sf_dir):
+    """Bin stats must equal a Python replay of the identical score/bin
+    recipe, and the n-weighted ECE must be a sane probability gap."""
+    import math
+
+    from terasort_spark.operators.ml import _AUC_STOPS
+
+    got = {r["bin"]: r for r in _Q["ml_calibration"](spark, sf_dir).collect()}
+    d = table(spark, sf_dir, "documents").select("text", "lang").collect()
+    bins: dict[int, list] = {}
+    for r in d:
+        if not r["text"]:
+            continue
+        toks = [t for t in r["text"].lower().split(" ") if t]
+        if not toks:
+            continue
+        s = int(sum(t in _AUC_STOPS for t in toks) / len(toks) * 10000 + 0.5)
+        bins.setdefault(min(s // 1000, 9), []).append(
+            (s, 1 if r["lang"] == "en" else 0)
+        )
+    assert set(got) == set(bins)
+    n_total = sum(len(v) for v in bins.values())
+    ece = 0.0
+    for b, rows in bins.items():
+        n = len(rows)
+        avg_pred = math.floor(sum(s for s, _ in rows) / (n * 10000) * 10000 + 0.5) / 10000
+        frac_pos = math.floor(sum(y for _, y in rows) / n * 10000 + 0.5) / 10000
+        assert got[b]["n"] == n
+        assert got[b]["avg_pred"] == avg_pred
+        assert got[b]["frac_pos"] == frac_pos
+        ece += n / n_total * abs(got[b]["avg_pred"] - got[b]["frac_pos"])
+    assert 0.0 <= ece <= 1.0
+
+
+def test_confusion_matrices_replay_and_are_consistent(spark, sf_dir):
+    """ml_confusion: each threshold's matrix sums to the corpus size,
+    counts are monotone in the threshold (raising T can only move
+    predictions from positive to negative), and a Counter replay from
+    raw (s, y) pairs matches exactly."""
+    from collections import Counter
+
+    from terasort_spark.operators.ml import _stopword_scored
+
+    rows = {r["threshold"]: r for r in _Q["ml_confusion"](spark, sf_dir).collect()}
+    assert set(rows) == {250, 500, 750}
+    pairs = [(r["s"], r["y"]) for r in _stopword_scored(spark, sf_dir).collect()]
+    n = len(pairs)
+    for t, r in rows.items():
+        cm = Counter()
+        for s, y in pairs:
+            cm[(int(s >= t), y)] += 1
+        assert (r["tp"], r["fp"], r["fn"], r["tn"]) == (
+            cm[(1, 1)], cm[(1, 0)], cm[(0, 1)], cm[(0, 0)]
+        )
+        assert r["tp"] + r["fp"] + r["fn"] + r["tn"] == n
+        if r["tp"] + r["fp"]:
+            assert 0.0 <= r["precision_"] <= 1.0 and 0.0 <= r["f1"] <= 1.0
+    ts = sorted(rows)
+    for lo, hi in zip(ts, ts[1:]):
+        assert rows[hi]["tp"] <= rows[lo]["tp"]
+        assert rows[hi]["fp"] <= rows[lo]["fp"]
+
+
+def test_ndcg_recomputes_from_system_and_exact_rankings(spark, sf_dir):
+    """NDCG must equal a from-scratch Python recomputation over the
+    emitted system ranking and the exact top-5 ground truth."""
+    import math
+
+    from terasort_spark.operators.ml import _IDCG6
+
+    sys_rows = _Q["sim_cosine_sq8"](spark, sf_dir).collect()
+    exact = _Q["sim_cosine_topk"](spark, sf_dir).collect()
+    rel = {(r["q_id"], r["c_id"]): 6 - r["rn"] for r in exact}
+    want: dict = {}
+    for r in sys_rows:
+        g = rel.get((r["q_id"], r["c_id"]), 0)
+        t6 = math.floor(g / math.log2(r["rn"] + 1) * 1000000 + 0.5)
+        d = want.setdefault(r["q_id"], [0, 0])
+        d[0] += t6
+        d[1] += 1 if g else 0
+    got = {r["q_id"]: r for r in _Q["ml_ndcg"](spark, sf_dir).collect()}
+    assert set(got) == set(want)
+    for qid, (dcg6, hits) in want.items():
+        r = got[qid]
+        assert r["hits"] == hits
+        assert r["dcg"] == math.floor(dcg6 / 100.0 + 0.5) / 10000
+        assert r["ndcg"] == math.floor(dcg6 / _IDCG6 * 10000 + 0.5) / 10000
+        assert 0.0 <= r["ndcg"] <= 1.0

@@ -131,18 +131,9 @@ def test_engine_explain_returns_plan_text(spark, sf_dir):
     assert "Scan parquet" in eng.explain("scan_project", mode="simple")
 
 
-# Round-named test files that still keep their names so their test IDs
-# stay stable while their tests move into the family test modules. The
-# list may only shrink.
-_LEGACY_TEST_FILES = {
-    "test_wave6.py",
-    "test_wave11.py",
-}
-
-
 def test_modules_are_named_for_families_not_rounds():
     """Queries live in the module of their family and tests in the test
-    module of the family they exercise, so no operator module or new test
+    module of the family they exercise, so no operator module or test
     file may be named for the round it landed in."""
     import os
     import re
@@ -155,16 +146,16 @@ def test_modules_are_named_for_families_not_rounds():
     )
     here = os.path.dirname(os.path.abspath(__file__))
     files = {f for f in os.listdir(here) if f.startswith("test_") and f.endswith(".py")}
-    bad += sorted(f for f in files - _LEGACY_TEST_FILES if rounds.search(f))
+    bad += sorted(f for f in files if rounds.search(f))
     assert not bad, bad
-    # a dissolved legacy file leaves the list with it
-    assert _LEGACY_TEST_FILES <= files, sorted(_LEGACY_TEST_FILES - files)
 
 
 def test_scripts_import_only_names_that_exist():
     """Every `from terasort_spark... import name` in scripts/*.py and
     bench.py resolves, so moving a query or helper between modules
-    cannot leave a script importing a name that is gone."""
+    cannot leave a script importing a name that is gone. No script names
+    this checkout's absolute path: each derives the root from its own
+    file, so a script run from another checkout imports that checkout."""
     import ast
     import glob
     import importlib
@@ -175,7 +166,10 @@ def test_scripts_import_only_names_that_exist():
     bad = []
     for path in paths + [os.path.join(root, "bench.py")]:
         with open(path) as fh:
-            tree = ast.parse(fh.read(), path)
+            src = fh.read()
+        if root in src:
+            bad.append(f"{os.path.relpath(path, root)}: names {root}")
+        tree = ast.parse(src, path)
         for node in ast.walk(tree):
             if not isinstance(node, ast.ImportFrom) or not (
                 node.module or ""

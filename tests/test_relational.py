@@ -1,6 +1,6 @@
 """Relational operators (joins, set operations and scalar
-functions): Bloom prefilters, binned range joins, EXCEPT ALL and
-try_* functions. These tests pin plan shapes and multiset semantics
+functions): Bloom prefilters, binned range joins, EXCEPT ALL,
+try_* functions and the skyline. These tests pin plan shapes and multiset semantics
 the oracle hash cannot see."""
 
 from __future__ import annotations
@@ -143,3 +143,29 @@ def test_join_range_binned_equals_naive_between_join(spark, sf_dir):
         for r in _Q["join_range_binned"](spark, sf_dir).collect()
     }
     assert got == want and got
+
+
+def test_skyline_matches_bruteforce_dominance_and_plan_shape(spark, sf_dir):
+    """The histogram-frontier skyline must equal the O(n^2) dominance
+    definition, and its plan must stay broadcast + cartesian-free."""
+    from terasort_spark.plans.checks import (
+        assert_broadcast_join,
+        assert_no_cartesian,
+    )
+
+    df = _Q["topk_skyline"](spark, sf_dir)
+    assert_no_cartesian(df)
+    assert_broadcast_join(df)
+    got = {(r["p_partkey"], r["p_size"]) for r in df.collect()}
+    parts = [
+        (r["p_partkey"], r["p_size"], int(r["p_retailprice"] * 100 + 0.5))
+        for r in table(spark, sf_dir, "part").collect()
+    ]
+    expect = {
+        (k, s)
+        for (k, s, c) in parts
+        if not any(
+            bc <= c and bs >= s and (bc < c or bs > s) for (_, bs, bc) in parts
+        )
+    }
+    assert got == expect and got

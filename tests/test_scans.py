@@ -1,8 +1,11 @@
 """Scan and sink operators (terasort_spark/operators/scans.py): VACUUM,
-equality and position deletes, and manifest pruning. These tests pin the
+equality and position deletes, manifest pruning, row-group stats,
+compaction and Bloom skipping. These tests pin the
 file-level properties the oracle hash cannot see."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -167,3 +170,48 @@ def test_position_delete_exact_semantics(spark, sf_dir):
     )
     got = sorted(map(tuple, _Q["scan_position_delete"](spark, sf_dir).collect()))
     assert got == want
+
+
+def test_rowgroup_stats_covers_both_columns(spark, sf_dir):
+    rows = {r["col_name"]: r for r in _Q["scan_rowgroup_stats"](spark, sf_dir).collect()}
+    assert set(rows) == {"doc_id", "n_chars"}
+    d = table(spark, sf_dir, "documents")
+    mm = d.agg(
+        F.min("doc_id"), F.max("doc_id"), F.min("n_chars"), F.max("n_chars")
+    ).first()
+    assert rows["doc_id"]["min_val"] == mm[0] and rows["doc_id"]["max_val"] == mm[1]
+    assert rows["n_chars"]["min_val"] == mm[2] and rows["n_chars"]["max_val"] == mm[3]
+
+
+def test_compaction_reduces_file_count_to_size_target(spark, sf_dir):
+    """sink_compacted must actually compact: 64 small input files, and
+    the output file count equals ceil(on-disk bytes / 1 MiB)."""
+    import os
+
+    from terasort_spark.operators.scans import _COMPACT_TARGET_BYTES
+
+    _Q["sink_compacted"](spark, sf_dir).collect()
+    from terasort_spark.operators._util import scratch_dir
+
+    small_dir = scratch_dir(spark, "smallfiles")
+    big_dir = scratch_dir(spark, "compacted")
+    small = [f for f in os.listdir(small_dir) if f.endswith(".parquet")]
+    big = [f for f in os.listdir(big_dir) if f.endswith(".parquet")]
+    assert len(small) == 64
+    on_disk = sum(os.path.getsize(os.path.join(small_dir, f)) for f in small)
+    want = max(1, -(-on_disk // _COMPACT_TARGET_BYTES))
+    assert len(big) == want < 64
+
+
+def test_bloom_skip_prunes_and_never_misses(spark, sf_dir):
+    from terasort_spark.operators.scans import _BLOOM_BUCKETS, _BLOOM_PROBES
+
+    rows = {r["probe_key"]: r for r in _Q["scan_bloom_skip"](spark, sf_dir).collect()}
+    assert set(rows) == set(_BLOOM_PROBES)
+    for p in (1, 2, 3):  # orders keys are dense-unique from 0 at every SF
+        assert rows[p]["n_found"] == 1, rows[p]
+        assert 1 <= rows[p]["n_candidates"] < _BLOOM_BUCKETS
+    for p in (900000007, 900000008, 900000009):
+        assert rows[p]["n_found"] == 0
+        # ~10 bits/key, k=4 -> per-bucket FP ~1%; allow generous slack
+        assert rows[p]["n_candidates"] <= 3, rows[p]

@@ -1,6 +1,6 @@
 """Mergeable sketch aggregates (terasort_spark/operators/sketches.py):
-merge associativity, no-false-negative and never-undercount bounds, and
-per-user replays against exact Python."""
+merge associativity, no-false-negative and never-undercount bounds,
+per-user replays against exact Python, and quantile-histogram bins."""
 
 from __future__ import annotations
 
@@ -127,3 +127,27 @@ def test_decay_counter_matches_reference_for_one_user(spark, sf_dir):
         for r in _Q["agg_decay_counter"](spark, sf_dir).collect()
     }
     assert got[uid] == want
+
+
+def test_quantile_hist_bins_contain_exact_order_statistics(spark, sf_dir):
+    """The estimated quantile bin must be exactly the bin of the
+    ceil(q*N)-th order statistic — the histogram sketch's defining
+    invariant, checked against a brute-force sort."""
+    import math
+
+    from terasort_spark.catalog import table
+
+    rows = {r["flag"]: r for r in _Q["agg_quantile_hist"](spark, sf_dir).collect()}
+    vals: dict = {}
+    for r in table(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_extendedprice"
+    ).collect():
+        vals.setdefault(r["l_returnflag"], []).append(r["l_extendedprice"])
+    assert set(rows) == set(vals)
+    for flag, xs in vals.items():
+        xs.sort()
+        assert rows[flag]["total"] == len(xs)
+        for pct in (50, 95, 99):
+            v = xs[math.ceil(pct * len(xs) / 100) - 1]
+            want = math.floor(v / 1000.0) * 1000.0
+            assert rows[flag][f"p{pct}_est"] == want, (flag, pct)

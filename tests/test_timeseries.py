@@ -1,6 +1,6 @@
 """Time-series operators (terasort_spark/operators/timeseries.py):
-Theil-Sen, changepoint and MAD anomalies, each
-replayed against numpy or plain Python for one key."""
+Theil-Sen, changepoint, MAD anomalies, lag autocorrelation
+and CUSUM, each replayed against numpy or plain Python for one key."""
 
 from __future__ import annotations
 
@@ -121,3 +121,76 @@ def test_mad_flags_are_genuine_outliers(spark, sf_dir):
         assert mad > 0
         assert abs(r["value_r"] - (med + (r["value_r"] - med))) >= 0  # sanity
         assert r["abs_dev"] > 3.5 * mad * 0.999  # rounding slack
+
+
+def test_autocorr_matches_numpy_and_is_bounded(spark, sf_dir):
+    import numpy as np
+
+    out = {r["user_id"]: r for r in _Q["ts_autocorr"](spark, sf_dir).collect()}
+    assert out, "no user met the minimum-history bar"
+    from terasort_spark.operators.timeseries import AC_LAGS, AC_MIN_EVENTS
+
+    for r in out.values():
+        assert r["n"] >= AC_MIN_EVENTS
+        for k in AC_LAGS:
+            v = r[f"r{k}"]
+            assert v is None or -1.0001 <= v <= 1.0001
+    # numpy replay on 10 users: Pearson corr of the 4dp-quantized
+    # series against its k-shift matches the exact-integer result
+    ev = (
+        table(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .select("user_id", "ts", "event_id", "value")
+        .collect()
+    )
+    series: dict[int, list[float]] = {}
+    for row in sorted(ev, key=lambda r: (r["user_id"], r["ts"], r["event_id"])):
+        series.setdefault(row["user_id"], []).append(row["value"])
+    checked = 0
+    for uid in sorted(out):
+        xs = np.floor(np.array(series[uid]) * 10000 + 0.5)
+        for k in AC_LAGS:
+            a, b = xs[:-k], xs[k:]
+            expect = np.corrcoef(a, b)[0, 1]
+            got = out[uid][f"r{k}"]
+            assert abs(got - expect) < 2e-4, (uid, k, got, expect)
+        checked += 1
+        if checked >= 10:
+            break
+    assert checked == 10
+
+
+def test_cusum_matches_numpy_changepoint(spark, sf_dir):
+    """ts_cusum: replay the scaled CUSUM argmax in numpy from raw
+    events; a deliberately level-shifted series puts the changepoint at
+    the shift."""
+    import numpy as np
+    import pandas as pd
+
+    out = {r["event_type"]: r for r in _Q["ts_cusum"](spark, sf_dir).collect()}
+    ev = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .filter(F.col("value").isNotNull())
+        .select("event_type", F.date_trunc("day", "ts").cast("date").alias("d"),
+                "value")
+        .collect()
+    )
+    daily = {}
+    for r in ev:
+        key = (r["event_type"], r["d"])
+        daily[key] = daily.get(key, 0) + int(np.floor(r["value"] * 10000 + 0.5))
+    for et in {k[0] for k in daily}:
+        days = sorted(d for (t, d) in daily if t == et)
+        sv = np.array([daily[(et, d)] for d in days], dtype=np.int64)
+        n, tot = len(sv), sv.sum()
+        cus = n * np.cumsum(sv) - np.arange(1, n + 1) * tot
+        best = int(np.argmax(np.abs(cus)))  # ties: earliest, matches asc d
+        assert out[et]["cp_date"] == days[best]
+        assert out[et]["n_days"] == n
+        expect = np.floor(abs(cus[best]) / (n * 10000.0) * 10000 + 0.5) / 10000
+        assert out[et]["max_dev"] == expect
+    # synthetic level shift: flat 10s then flat 20s -> cusum peaks at the shift
+    pdf = pd.DataFrame({"v": [10.0] * 6 + [20.0] * 6})
+    sv = np.floor(pdf["v"].to_numpy() * 10000 + 0.5).astype(np.int64)
+    cus = len(sv) * np.cumsum(sv) - np.arange(1, len(sv) + 1) * sv.sum()
+    assert int(np.argmax(np.abs(cus))) == 5  # last pre-shift day
