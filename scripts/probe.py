@@ -43,10 +43,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from terasort_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from terasort_spark.operators.graph import lsh_edges, star_components  # noqa: E402
 from terasort_spark.operators.streaming import running_totals, tws_fold  # noqa: E402
-from terasort_spark.plans.window_skew_rewrite import (  # noqa: E402
-    autocorr_stats,
-    lead_columns,
-)
+from terasort_spark.operators.timeseries import autocorr_stats  # noqa: E402
+from terasort_spark.plans.window_skew_rewrite import lead_columns  # noqa: E402
 from terasort_spark.registry import queries  # noqa: E402
 from terasort_spark.session import get_spark  # noqa: E402
 from terasort_spark.sources.teragen import (  # noqa: E402

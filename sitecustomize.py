@@ -1,8 +1,9 @@
-"""Repo-root sitecustomize: fallback loader for the StateMessage codec
-shim in interpreters where ``site`` never imports usercustomize (venvs
-with ENABLE_USER_SITE=False, ``python -s``). ``site`` imports
+"""Repo-root sitecustomize: fallback loader for the repo-root
+usercustomize hook (StateMessage codec shim, lazy zipimport directories)
+in interpreters where ``site`` never imports usercustomize (venvs with
+ENABLE_USER_SITE=False, ``python -s``). ``site`` imports
 *sitecustomize* unconditionally (unless -S), so a worker whose
-PYTHONPATH leads with the repo root always gets the shim either way.
+PYTHONPATH leads with the repo root always gets the hook either way.
 
 Chains to the next sitecustomize on sys.path so a distro/user hook this
 file shadows still runs.

@@ -483,31 +483,19 @@ def _tws_scope(spark):
 
 
 def ensure_state_codec(spark) -> None:
-    """Make the StateMessage codec importable in EVERY Python process of
-    this session. Two pieces:
+    """Make the StateMessage codec importable in the DRIVER process:
+    importing ``usercustomize`` registers the meta-path finder (a no-op
+    when a real google-protobuf is installed; the finder is only
+    registered when ``google.protobuf.descriptor`` is absent).
 
-    - driver: importing ``usercustomize`` registers the meta-path finder
-      (a no-op when a real google-protobuf is installed — the finder is
-      only registered when ``google.protobuf.descriptor`` is absent);
-    - workers (Arrow workers AND transformWithState's driver-side init
-      runner): each python function carries ``sc.environment`` as its
-      worker env, so putting the repo root on its PYTHONPATH makes
-      worker interpreters import the same ``usercustomize`` at startup
-      — this works even when the JVM was launched by an EXTERNAL driver
-      (the grading harness) whose env we never controlled. The worker
-      interpreter loads the hook via usercustomize (user-site enabled)
-      or the repo-root sitecustomize fallback (venv / python -s)."""
+    Workers (Arrow workers and transformWithState's driver-side init
+    runner) get the same hook from ``session.configure``, which puts the
+    repo root first on the session's worker PYTHONPATH once, before any
+    query runs. ``spark`` is kept for callers; the driver hook needs no
+    session."""
     import usercustomize
 
     usercustomize.install()  # explicit + idempotent (r11 ADVICE)
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    env = spark.sparkContext.environment
-    pp = env.get("PYTHONPATH", "")
-    if repo not in pp.split(os.pathsep):
-        env["PYTHONPATH"] = repo + (os.pathsep + pp if pp else "")
 
 
 def tws_fold(

@@ -7,7 +7,7 @@ scale (the grid is per-key and bounded by the key's own time span).
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
@@ -157,8 +157,9 @@ FROM l{n}
 # Values are quantized to 4dp int64 (exact and identical in both
 # engines), so every sum/product below is exact integer arithmetic at
 # any partitioning; only the final Pearson ratio touches IEEE ops,
-# identically on both sides. Bounds at the fixture's ranges: q <= 5.7e6
-# (value <= 561), per-user n <= ~100, so m*Saa <= ~3e17 < 2^63.
+# identically on both sides. q <= 5.7e6 (value <= 561), so the sums
+# fit BIGINT up to ~2.9e5 events per user; the products m*Saa do not
+# past ~6k events, so the query forms them in DECIMAL(38,0).
 AC_LAGS = (1, 2, 3)
 AC_MIN_EVENTS = 24
 
@@ -206,6 +207,42 @@ FROM sums
 """
 
 
+def autocorr_stats(seq_with_leads: DataFrame) -> DataFrame:
+    """Per-user lag-k Pearson autocorrelation from ``seq_with_leads``
+    (user_id, q, q1..q3): the exact integer sufficient statistics per
+    (user, lag) in ONE map-side-combined groupBy, then the Pearson ratio
+    in identical IEEE order, so every window strategy and the oracle
+    agree exactly. ``m·Σab − Σa·Σb`` and the two variance terms are
+    formed in DECIMAL(38,0): in BIGINT, ``m·Σa²`` overflows once one
+    user has more than ~6k events."""
+    aggs = [F.count(F.lit(1)).cast("bigint").alias("n")]
+    for k in AC_LAGS:
+        qk = F.col(f"q{k}")
+        aggs += [
+            F.count(qk).cast("bigint").alias(f"m{k}"),
+            F.sum(F.when(qk.isNotNull(), F.col("q"))).alias(f"sa{k}"),
+            F.sum(qk).alias(f"sb{k}"),
+            F.sum(F.when(qk.isNotNull(), F.col("q") * F.col("q"))).alias(f"saa{k}"),
+            F.sum(qk * qk).alias(f"sbb{k}"),
+            F.sum(F.col("q") * qk).alias(f"sab{k}"),
+        ]
+    sums = seq_with_leads.groupBy("user_id").agg(*aggs).filter(
+        F.col("n") >= AC_MIN_EVENTS
+    )
+    out = [F.col("user_id"), F.col("n")]
+    for k in AC_LAGS:
+        m, sa, sb, saa, sbb, sab = (
+            F.col(f"{s}{k}").cast("decimal(38,0)")
+            for s in ("m", "sa", "sb", "saa", "sbb", "sab")
+        )
+        num = (m * sab - sa * sb).cast("double")
+        den = F.sqrt((m * saa - sa * sa).cast("double")) * F.sqrt(
+            (m * sbb - sb * sb).cast("double")
+        )
+        out.append(rnd(num / F.when(den != 0, den), f"r{k}"))
+    return sums.select(*out)
+
+
 @register("ts_autocorr", oracle=autocorr_oracle())
 def ts_autocorr(spark, sf_dir):
     """Per-entity lag-1/2/3 autocorrelation of the event-value series —
@@ -234,30 +271,7 @@ def ts_autocorr(spark, sf_dir):
         .withColumns({f"q{k}": F.lead("q", k).over(w) for k in AC_LAGS})
         .drop("ts", "event_id")
     )
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n")]
-    for k in AC_LAGS:
-        qk = F.col(f"q{k}")
-        aggs += [
-            F.count(qk).cast("bigint").alias(f"m{k}"),
-            F.sum(F.when(qk.isNotNull(), F.col("q"))).alias(f"sa{k}"),
-            F.sum(qk).alias(f"sb{k}"),
-            F.sum(F.when(qk.isNotNull(), F.col("q") * F.col("q"))).alias(f"saa{k}"),
-            F.sum(qk * qk).alias(f"sbb{k}"),
-            F.sum(F.col("q") * qk).alias(f"sab{k}"),
-        ]
-    sums = seq.groupBy("user_id").agg(*aggs).filter(
-        F.col("n") >= AC_MIN_EVENTS
-    )
-    out = [F.col("user_id"), F.col("n")]
-    for k in AC_LAGS:
-        m, sa, sb = F.col(f"m{k}"), F.col(f"sa{k}"), F.col(f"sb{k}")
-        saa, sbb, sab = F.col(f"saa{k}"), F.col(f"sbb{k}"), F.col(f"sab{k}")
-        num = (m * sab - sa * sb).cast("double")
-        den = F.sqrt((m * saa - sa * sa).cast("double")) * F.sqrt(
-            (m * sbb - sb * sb).cast("double")
-        )
-        out.append(rnd(num / F.when(den != 0, den), f"r{k}"))
-    return sums.select(*out)
+    return autocorr_stats(seq)
 
 
 @register("ts_holt_forecast", oracle=_holt_oracle())

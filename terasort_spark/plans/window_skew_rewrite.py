@@ -47,8 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import estimate_rows, table
-from terasort_spark.operators._util import rnd
-from terasort_spark.operators.timeseries import AC_LAGS, AC_MIN_EVENTS, autocorr_oracle
+from terasort_spark.operators.timeseries import AC_LAGS, autocorr_oracle, autocorr_stats
 from terasort_spark.registry import register
 
 # Measured crossover (SCALE.md r11 lead-window decades): at 10% hot
@@ -144,41 +143,6 @@ def lead_columns(seq: DataFrame, strategy: str) -> DataFrame:
         .select("user_id", "ts", "event_id", "q", *[f"q{k}" for k in AC_LAGS])
     )
     return interior.unionByName(repaired)
-
-
-def autocorr_stats(seq_with_leads: DataFrame) -> DataFrame:
-    """The shared tail: exact integer sufficient statistics per
-    (user, lag) in ONE map-side-combined groupBy, then the Pearson
-    ratio in identical IEEE order — byte-identical to ts_autocorr's
-    aggregation, so both strategies and the oracle agree exactly."""
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n")]
-    for k in AC_LAGS:
-        qk = F.col(f"q{k}")
-        aggs += [
-            F.count(qk).cast("bigint").alias(f"m{k}"),
-            F.sum(F.when(qk.isNotNull(), F.col("q"))).alias(f"sa{k}"),
-            F.sum(qk).alias(f"sb{k}"),
-            F.sum(F.when(qk.isNotNull(), F.col("q") * F.col("q"))).alias(
-                f"saa{k}"
-            ),
-            F.sum(qk * qk).alias(f"sbb{k}"),
-            F.sum(F.col("q") * qk).alias(f"sab{k}"),
-        ]
-    sums = (
-        seq_with_leads.groupBy("user_id")
-        .agg(*aggs)
-        .filter(F.col("n") >= AC_MIN_EVENTS)
-    )
-    out = [F.col("user_id"), F.col("n")]
-    for k in AC_LAGS:
-        m, sa, sb = F.col(f"m{k}"), F.col(f"sa{k}"), F.col(f"sb{k}")
-        saa, sbb, sab = F.col(f"saa{k}"), F.col(f"sbb{k}"), F.col(f"sab{k}")
-        num = (m * sab - sa * sb).cast("double")
-        den = F.sqrt((m * saa - sa * sa).cast("double")) * F.sqrt(
-            (m * sbb - sb * sb).cast("double")
-        )
-        out.append(rnd(num / F.when(den != 0, den), f"r{k}"))
-    return sums.select(*out)
 
 
 def autocorr_autoplan(

@@ -57,24 +57,29 @@ def get_spark(
     return builder.getOrCreate()
 
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _repo_first(pythonpath: str) -> str:
+    """``pythonpath`` with the repo root moved (or added) to its front."""
+    rest = [p for p in pythonpath.split(os.pathsep) if p != _REPO] if pythonpath else []
+    return os.pathsep.join([_REPO, *rest])
+
+
 def _export_pythonpath() -> None:
     """Put the repo root on PYTHONPATH BEFORE the JVM launches, so every
     Python process the JVM spawns (Arrow workers, transformWithState's
     driver-side init runner) imports the repo-root ``usercustomize`` at
-    startup — that hook substitutes the pure-Python StateMessage codec
-    when google-protobuf is absent (streaming/state_message_shim.py).
+    startup (the StateMessage codec shim and the lazy zipimport cache).
 
     This mutates the calling process's PYTHONPATH, which makes the
     repo-root hook shadow any user-site usercustomize.py in spawned
     interpreters; the hook chain-loads the next usercustomize found on
     sys.path so shadowed user hooks still run (r11 ADVICE), and a
     repo-root sitecustomize covers venvs where user-site is disabled."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
-    if repo not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            repo + (os.pathsep + existing if existing else "")
-        )
+    if _REPO not in existing.split(os.pathsep):
+        os.environ["PYTHONPATH"] = _repo_first(existing)
 
 
 _shipped_sessions: set[int] = set()
@@ -101,11 +106,23 @@ def _ship_package(spark: SparkSession) -> None:
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply the engine's session-level settings to an externally provided
-    SparkSession (the driver constructs its own and calls ``entry(spark)``)."""
+    SparkSession (the driver constructs its own and calls ``entry(spark)``).
+
+    Besides the SQL confs and shipping the package, this gives the
+    session ONE Python worker environment: the repo root leads
+    ``sc.environment["PYTHONPATH"]``, which every Python function
+    created afterwards carries to its workers. So workers load the
+    repo-root ``usercustomize`` (codec shim, lazy zipimport cache) even
+    when another program built the session and launched its JVM, and
+    the env does not change mid-session. Spark keys its
+    Python daemons by that env, so a later change would start another
+    daemon and fresh workers."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
     except Exception:  # pragma: no cover - conf may be static
         pass
+    env = spark.sparkContext.environment
+    env["PYTHONPATH"] = _repo_first(env.get("PYTHONPATH", ""))
     _ship_package(spark)
     return spark

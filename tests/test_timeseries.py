@@ -160,6 +160,44 @@ def test_autocorr_matches_numpy_and_is_bounded(spark, sf_dir):
     assert checked == 10
 
 
+def test_autocorr_hot_user_matches_exact_integers(spark):
+    """One user with 6,500 events: in BIGINT, m·Σa² overflows past ~6k
+    events. Under both window strategies every lag matches a reference
+    computed with Python's exact integers, rounded as the query rounds."""
+    import math
+
+    from terasort_spark.operators.timeseries import AC_LAGS, autocorr_stats
+    from terasort_spark.plans.window_skew_rewrite import lead_columns
+
+    n_hot, n_cold, mod = 6500, 30, 5_600_000  # q <= 5.6e6: value <= 560
+    seq = spark.range(n_hot + n_cold).select(
+        F.when(F.col("id") < n_hot, 1).otherwise(2).alias("user_id"),
+        F.timestamp_seconds(F.col("id") * 7).alias("ts"),
+        F.col("id").alias("event_id"),
+        F.pmod(F.col("id") * 2654435761, F.lit(mod)).alias("q"),
+    )
+    qs = [i * 2654435761 % mod for i in range(n_hot + n_cold)]
+    expect = {}
+    for uid, xs in ((1, qs[:n_hot]), (2, qs[n_hot:])):
+        row = [len(xs)]
+        for k in AC_LAGS:
+            a, b = xs[:-k], xs[k:]
+            m = len(a)
+            num = m * sum(x * y for x, y in zip(a, b)) - sum(a) * sum(b)
+            va = m * sum(x * x for x in a) - sum(a) ** 2
+            vb = m * sum(y * y for y in b) - sum(b) ** 2
+            r = float(num) / (math.sqrt(float(va)) * math.sqrt(float(vb)))
+            row.append(math.floor(r * 10000 + 0.5) / 10000)
+        expect[uid] = tuple(row)
+    assert 6500 * sum(x * x for x in qs[:n_hot]) > 2**63  # past BIGINT
+    for strategy in ("plain", "bucketed"):
+        got = {
+            r["user_id"]: tuple(r)[1:]
+            for r in autocorr_stats(lead_columns(seq, strategy)).collect()
+        }
+        assert got == expect, strategy
+
+
 def test_cusum_matches_numpy_changepoint(spark, sf_dir):
     """ts_cusum: replay the scaled CUSUM argmax in numpy from raw
     events; a deliberately level-shifted series puts the changepoint at
