@@ -43,18 +43,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from terasort_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from terasort_spark.operators.graph import lsh_edges, star_components  # noqa: E402
 from terasort_spark.operators.streaming import running_totals, tws_fold  # noqa: E402
-from terasort_spark.operators.timeseries import autocorr_stats  # noqa: E402
-from terasort_spark.plans.window_skew_rewrite import lead_columns  # noqa: E402
+from terasort_spark.operators.timeseries import autocorr_stats, lead_columns  # noqa: E402
 from terasort_spark.registry import queries  # noqa: E402
 from terasort_spark.session import get_spark  # noqa: E402
-from terasort_spark.sources.teragen import (  # noqa: E402
-    checksum,
-    teragen,
-    teragen_skewed,
-    terasort,
-    terasort_salted,
-    teravalidate,
-)
+from terasort_spark.sources.teragen import checksum, teragen, terasort, teravalidate  # noqa: E402
 
 SPAN = 30 * 86400  # event timestamps span 30 days
 BUCKET = 3600  # agg's two-phase rewrite bucket: one hour
@@ -135,8 +127,7 @@ _HOT_FRAC = (
 @spec(
     _n_rows(1_000_000_000),
     (("n_partitions",), dict(nargs="?", type=int, default=256)),
-    (("mode",), dict(nargs="?", default="uniform",
-                     choices=("uniform", "zipf", "zipf_salted"))),
+    (("mode",), dict(nargs="?", default="uniform", choices=("uniform", "zipf"))),
 )
 def tera(spark, a):
     """The range sort and the full TeraValidate contract at decade sizes
@@ -155,21 +146,19 @@ def tera(spark, a):
     runs once; the generated stream is hashed in a separate shuffle-free
     pass.
 
-    ``mode``: ``uniform`` is the GraySort key distribution. ``zipf``
-    feeds the plain range sort teragen_skewed's adversary (~25% of all
-    rows on one key, so one partition holds a quarter of the data).
-    ``zipf_salted`` runs the (key, salt)-ranged sort over the same data.
-    ``straggler_factor`` (max rows per partition over the mean) measures
-    the skew and its fix."""
-    gen = teragen if a.mode == "uniform" else teragen_skewed
-    sort = terasort_salted if a.mode == "zipf_salted" else terasort
-    n, parts = a.n_rows, a.n_partitions
-    cs_gen, t_gen = timed(lambda: checksum(gen(spark, n, n_partitions=parts)))
-    rep, t_sort = timed(
-        lambda: teravalidate(
-            sort(gen(spark, n, n_partitions=parts), n_partitions=parts)
-        )
-    )
+    ``mode``: ``uniform`` is the GraySort key distribution. ``zipf`` is
+    teragen's skewed key, 22% of all rows on one key: a range sort on
+    the key alone would put that key on one partition, and ``terasort``
+    ranges on ``(key, value)``, distinct per record, so the key spans
+    partitions. ``straggler_factor`` (max rows per partition over the
+    mean) measures how well the sampled boundaries balance the sort."""
+    n, parts, skewed = a.n_rows, a.n_partitions, a.mode == "zipf"
+
+    def gen():
+        return teragen(spark, n, n_partitions=parts, skewed=skewed)
+
+    cs_gen, t_gen = timed(lambda: checksum(gen()))
+    rep, t_sort = timed(lambda: teravalidate(terasort(gen(), n_partitions=parts)))
     checks = {
         "sorted_within": rep["sorted_within"],
         "sorted_between": rep["sorted_between"],

@@ -68,7 +68,7 @@ class Engine:
         return teragen(self.spark, n_rows, n_partitions)
 
     def terasort(self, n_rows: int = 1_000_000, n_partitions: int = 32) -> DataFrame:
-        from terasort_spark.sources.teragen import teragen, terasort
+        from terasort_spark.sources.teragen import terasort
 
         return terasort(self.teragen(n_rows, n_partitions), n_partitions)
 

@@ -613,7 +613,7 @@ _RESERVOIR_K = 100
 
 
 def _reservoir_oracle() -> str:
-    from terasort_spark.sources.tera_queries import mix32_sql
+    from terasort_spark.sources.teragen import mix32_sql
 
     pri = mix32_sql("doc_id % 2147483648")
     return f"""
@@ -640,7 +640,7 @@ def sample_reservoir(spark, sf_dir):
     rows; no global sort, no full shuffle. The id is folded mod 2^31
     before mixing so 64-bit ids at 100 TB stay inside the mixer's
     exact-arithmetic precondition."""
-    from terasort_spark.sources.tera_queries import mix32
+    from terasort_spark.sources.teragen import mix32
 
     d = table(spark, sf_dir, "documents").select(
         "doc_id", mix32(F.col("doc_id") % F.lit(2147483648)).alias("priority")

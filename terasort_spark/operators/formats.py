@@ -21,6 +21,7 @@ from terasort_spark.operators._util import scratch_dir
 from terasort_spark.registry import register
 from terasort_spark.sources.avro_ds import AvroDataSource, write_avro
 from terasort_spark.sources.protobuf_ds import ProtobufDataSource
+from terasort_spark.sources.teragen import gen_sql, read_tera_files, teragen, write_tera_files
 
 # --------------------------------------------------------------------------
 # source_fixedwidth — the 100-byte record files' round trip through the
@@ -31,21 +32,7 @@ _FW_ROWS = 20_000
 _FW_PARTS = 8
 
 
-def _fw_oracle() -> str:
-    # built from the SAME constants as tera_queries._gen_df/_GEN_SQL so
-    # a future VALUE_LEN change cannot silently desync this oracle
-    from terasort_spark.sources.tera_queries import KEY_SQL
-    from terasort_spark.sources.teragen import VALUE_LEN
-
-    return f"""
-SELECT id,
-       {KEY_SQL} AS key,
-       rpad(lpad(CAST(id AS VARCHAR), 32, '0'), {VALUE_LEN}, 'X') AS value
-FROM range(0, {_FW_ROWS}) t(id)
-"""
-
-
-@register("source_fixedwidth", oracle=_fw_oracle())
+@register("source_fixedwidth", oracle=gen_sql(_FW_ROWS))
 def source_fixedwidth(spark, sf_dir):
     """Round trip through the record files: generate the registered
     teragen rows, sink them as raw 100-byte records with
@@ -60,16 +47,9 @@ def source_fixedwidth(spark, sf_dir):
     record boundaries, with no record passing through Python. The
     scratch directory is cleared first, since the writer refuses a
     directory that already holds part files."""
-    from terasort_spark.sources.tera_queries import gen_df
-    from terasort_spark.sources.teragen import read_tera_files, write_tera_files
-
     out = scratch_dir(spark, "fixedwidth")
     shutil.rmtree(out, ignore_errors=True)
-    gen = gen_df(spark, _FW_ROWS, _FW_PARTS).select(
-        F.encode("key", "utf-8").alias("key"),
-        F.encode("value", "utf-8").alias("value"),
-    )
-    write_tera_files(gen, out)
+    write_tera_files(teragen(spark, _FW_ROWS, _FW_PARTS), out)
     val = F.decode("value", "utf-8")
     return read_tera_files(spark, out).select(
         F.substring(val, 1, 32).cast("bigint").alias("id"),

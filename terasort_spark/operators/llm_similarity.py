@@ -129,7 +129,7 @@ def ivf_proj_sql(j: int) -> str:
     weights — exact int64, matching the Spark expression bit-for-bit.
     Spark's transform index is 0-based, DuckDB's range is 1-based, hence
     the i - 1."""
-    from terasort_spark.sources.tera_queries import mix32_sql
+    from terasort_spark.sources.teragen import mix32_sql
 
     return (
         "list_sum(list_transform(range(1, len(v) + 1), "
@@ -263,7 +263,7 @@ def ivf_projection(xu_col, j: int):
     flip candidates by (ann_index.sim_cosine_ivf_nprobe). Twin of
     ivf_proj_sql; factored so the bucket and the margins can never use
     different hyperplanes."""
-    from terasort_spark.sources.tera_queries import mix32
+    from terasort_spark.sources.teragen import mix32
 
     return F.aggregate(
         F.transform(
@@ -347,7 +347,7 @@ def sim_cosine_ivf(spark, sf_dir):
     reuses sim_cosine_topk's verified float-fold contract. Overflow:
     |x_u| ≤ 1e6, |h| ≤ 2^31 → per-term ≤ 2.2e15, ×64 terms ≤ 1.4e17
     < 2^63."""
-    from terasort_spark.sources.tera_queries import mix32
+    from terasort_spark.sources.teragen import mix32
 
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")

@@ -6,7 +6,7 @@ curation and packing.
 
 All four are exact-oracle: the LM scores reuse text_bigram_lm's
 6dp-quantized logprob discipline, the sampling coin is the bit-exact
-splitmix mixer from sources/tera_queries.py (no rand(), no engine RNG),
+splitmix mixer from sources/teragen.py (no rand(), no engine RNG),
 and the time-travel read replays relationally.
 """
 
@@ -22,7 +22,7 @@ from terasort_spark.operators._util import DEC, rnd, scratch_dir
 from terasort_spark.operators.llm_lm import BIGRAMS_SQL, text_bigram_lm
 from terasort_spark.registry import register
 from terasort_spark.sources.snapshots import read_snapshot, write_version
-from terasort_spark.sources.tera_queries import mix32, mix32_sql
+from terasort_spark.sources.teragen import mix32, mix32_sql
 
 # One isolated child session per outer session (keyed by id; the value
 # keeps the outer alive so ids can't be recycled underneath us). A

@@ -21,7 +21,7 @@ from terasort_spark.catalog import table
 from terasort_spark.operators._util import dsum, o_dsum, rnd, scratch_dir
 from terasort_spark.registry import register
 from terasort_spark.sources.snapshots import delete_keys, read_snapshot, write_version
-from terasort_spark.sources.tera_queries import mix32, mix32_sql
+from terasort_spark.sources.teragen import mix32, mix32_sql
 
 _O_DSUM_REVENUE = o_dsum("l_extendedprice*(1-l_discount)", "revenue")
 
@@ -551,7 +551,7 @@ _BLOOM_PROBES = (1, 2, 3, 900000007, 900000008, 900000009)
 
 
 def _bloom_pos_sql(key: str, j: str) -> str:
-    from terasort_spark.sources.tera_queries import mix32_sql
+    from terasort_spark.sources.teragen import mix32_sql
 
     return (
         f"CAST({mix32_sql(f'((({key}) % 134217728) * {_BLOOM_K} + ({j}))')} "
@@ -560,7 +560,7 @@ def _bloom_pos_sql(key: str, j: str) -> str:
 
 
 def _bloom_oracle() -> str:
-    from terasort_spark.sources.tera_queries import mix32_sql
+    from terasort_spark.sources.teragen import mix32_sql
 
     probes = ", ".join(f"({p})" for p in _BLOOM_PROBES)
     in_list = ", ".join(str(p) for p in _BLOOM_PROBES)
@@ -632,7 +632,7 @@ def scan_bloom_skip(spark, sf_dir):
     scales at ~10 bits/key like Parquet/Iceberg bloom footers and
     lives with the data, so the false-positive rate (~1%) holds at
     100 TB instead of saturating a fixed-size filter."""
-    from terasort_spark.sources.tera_queries import mix32
+    from terasort_spark.sources.teragen import mix32
 
     out = scratch_dir(spark, "bloom_skip")
     shutil.rmtree(out, ignore_errors=True)

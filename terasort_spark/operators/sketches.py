@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import hex_int, o_hex_int, rnd
 from terasort_spark.registry import register
-from terasort_spark.sources.tera_queries import mix32, mix32_sql
+from terasort_spark.sources.teragen import mix32, mix32_sql
 
 # ---------------------------------------------------------------------------
 # agg_quantile_hist — deterministic mergeable histogram quantiles: the

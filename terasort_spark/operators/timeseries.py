@@ -243,6 +243,65 @@ def autocorr_stats(seq_with_leads: DataFrame) -> DataFrame:
     return sums.select(*out)
 
 
+# Two-phase bucket width over event time (seconds) for lead_columns'
+# 'bucketed' strategy: one hour, matching ``scripts/probe.py window``.
+# Wider buckets → less repair work but taller in-bucket sorts; the width
+# bounds per-task window state at events-per-(user, hour).
+WIN_BUCKET_S = 3600
+
+MAXLAG = max(AC_LAGS)
+
+
+def lead_columns(seq: DataFrame, strategy: str) -> DataFrame:
+    """``seq`` (user_id, ts, event_id, q) plus lead-k columns ``q1..q3``
+    in (ts, event_id) order per user_id, by the named strategy.
+
+    'plain' is the reference form: ONE window keyed by user_id.
+
+    'bucketed' is the two-phase hot-key rewrite with exact boundary
+    repair. Phase 1: lead-k within (user_id, hour-bucket) windows; rows
+    whose k-successor crosses the bucket edge see NULL here. rb/re are the
+    in-bucket ranks from start/end (same-ts rows share a bucket, so
+    the bucket is monotone in the (ts, event_id) order).
+
+    Phase 2: rows within MAXLAG of a bucket edge re-window per user
+    over the reduced edge-resident sequence; rows with re <= MAXLAG
+    take ALL their leads from it (for k < re the in-bucket lead is
+    also correct, and equal — both name the true k-successor, which is
+    edge-resident by the induction in the module docstring of
+    plans/window_skew_rewrite.py, which picks the strategy)."""
+    if strategy != "bucketed":
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        return seq.withColumns(
+            {f"q{k}": F.lead("q", k).over(w) for k in AC_LAGS}
+        )
+    b = seq.withColumn(
+        "bucket", F.floor(F.col("ts").cast("bigint") / WIN_BUCKET_S)
+    )
+    wb = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
+    cnt = F.count(F.lit(1)).over(Window.partitionBy("user_id", "bucket"))
+    df = (
+        b.withColumns({f"q{k}": F.lead("q", k).over(wb) for k in AC_LAGS})
+        .withColumn("rb", F.row_number().over(wb))
+        .withColumn("re", cnt - F.row_number().over(wb) + 1)
+    )
+    interior = df.filter(F.col("re") > MAXLAG).select(
+        "user_id", "ts", "event_id", "q", *[f"q{k}" for k in AC_LAGS]
+    )
+    edge = df.filter(
+        (F.col("rb") <= MAXLAG) | (F.col("re") <= MAXLAG)
+    ).select("user_id", "ts", "event_id", "q", "re")
+    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    repaired = (
+        edge.withColumns(
+            {f"q{k}": F.lead("q", k).over(wu) for k in AC_LAGS}
+        )
+        .filter(F.col("re") <= MAXLAG)
+        .select("user_id", "ts", "event_id", "q", *[f"q{k}" for k in AC_LAGS])
+    )
+    return interior.unionByName(repaired)
+
+
 @register("ts_autocorr", oracle=autocorr_oracle())
 def ts_autocorr(spark, sf_dir):
     """Per-entity lag-1/2/3 autocorrelation of the event-value series —
@@ -264,14 +323,9 @@ def ts_autocorr(spark, sf_dir):
     to a users-sized table. No self-join: lead() pairs each row with
     its k-successor in the same sort the window already owns."""
     ev = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     q = F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint")
-    seq = (
-        ev.select("user_id", "ts", "event_id", q.alias("q"))
-        .withColumns({f"q{k}": F.lead("q", k).over(w) for k in AC_LAGS})
-        .drop("ts", "event_id")
-    )
-    return autocorr_stats(seq)
+    seq = ev.select("user_id", "ts", "event_id", q.alias("q"))
+    return autocorr_stats(lead_columns(seq, "plain").drop("ts", "event_id"))
 
 
 @register("ts_holt_forecast", oracle=_holt_oracle())

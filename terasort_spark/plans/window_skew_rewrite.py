@@ -43,11 +43,11 @@ plain-form SQL).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import estimate_rows, table
-from terasort_spark.operators.timeseries import AC_LAGS, autocorr_oracle, autocorr_stats
+from terasort_spark.operators.timeseries import autocorr_oracle, autocorr_stats, lead_columns
 from terasort_spark.registry import register
 
 # Measured crossover (SCALE.md r11 lead-window decades): at 10% hot
@@ -61,14 +61,6 @@ WIN_SKEW_SHARE_CUT = 0.25
 # Target sample size for the heavy-hitter pass: 4096 rows bounds the
 # share estimate's error at ~±1.6% (1/sqrt(n)) — far from the cut.
 WIN_SKEW_SAMPLE = 4096
-
-# Two-phase bucket width over event time (seconds): one hour, matching
-# the probe. Wider buckets → less repair work but taller in-bucket
-# sorts; the width bounds per-task window state at
-# events-per-(user, hour).
-WIN_BUCKET_S = 3600
-
-MAXLAG = max(AC_LAGS)
 
 
 def max_key_share(spark, sf_dir: str) -> float:
@@ -94,55 +86,6 @@ def choose_strategy(spark, sf_dir: str) -> str:
     """'plain' | 'bucketed' from the measured skew sketch."""
     share = max_key_share(spark, sf_dir)
     return "bucketed" if share >= WIN_SKEW_SHARE_CUT else "plain"
-
-
-def lead_columns(seq: DataFrame, strategy: str) -> DataFrame:
-    """``seq`` (user_id, ts, event_id, q) plus lead-k columns ``q1..q3``
-    in (ts, event_id) order per user_id, by the named strategy.
-
-    'plain' is the reference form: ONE window keyed by user_id.
-
-    'bucketed' is the two-phase hot-key rewrite with exact boundary
-    repair. Phase 1: lead-k within (user_id, hour-bucket) windows; rows
-    whose k-successor crosses the bucket edge see NULL here. rb/re are the
-    in-bucket ranks from start/end (same-ts rows share a bucket, so
-    the bucket is monotone in the (ts, event_id) order).
-
-    Phase 2: rows within MAXLAG of a bucket edge re-window per user
-    over the reduced edge-resident sequence; rows with re <= MAXLAG
-    take ALL their leads from it (for k < re the in-bucket lead is
-    also correct, and equal — both name the true k-successor, which is
-    edge-resident by the induction in the module docstring)."""
-    if strategy != "bucketed":
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return seq.withColumns(
-            {f"q{k}": F.lead("q", k).over(w) for k in AC_LAGS}
-        )
-    b = seq.withColumn(
-        "bucket", F.floor(F.col("ts").cast("bigint") / WIN_BUCKET_S)
-    )
-    wb = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
-    cnt = F.count(F.lit(1)).over(Window.partitionBy("user_id", "bucket"))
-    df = (
-        b.withColumns({f"q{k}": F.lead("q", k).over(wb) for k in AC_LAGS})
-        .withColumn("rb", F.row_number().over(wb))
-        .withColumn("re", cnt - F.row_number().over(wb) + 1)
-    )
-    interior = df.filter(F.col("re") > MAXLAG).select(
-        "user_id", "ts", "event_id", "q", *[f"q{k}" for k in AC_LAGS]
-    )
-    edge = df.filter(
-        (F.col("rb") <= MAXLAG) | (F.col("re") <= MAXLAG)
-    ).select("user_id", "ts", "event_id", "q", "re")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    repaired = (
-        edge.withColumns(
-            {f"q{k}": F.lead("q", k).over(wu) for k in AC_LAGS}
-        )
-        .filter(F.col("re") <= MAXLAG)
-        .select("user_id", "ts", "event_id", "q", *[f"q{k}" for k in AC_LAGS])
-    )
-    return interior.unionByName(repaired)
 
 
 def autocorr_autoplan(

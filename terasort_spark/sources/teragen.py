@@ -5,15 +5,19 @@ Reference parity (reconstructed public semantics — /root/reference is
 empty; see SURVEY.md §0):
 - R1 source: fixed 100-byte records = 10-byte key + 90-byte value
   (GraySort spec, Hadoop TeraInputFormat). Here the generator is native:
-  ``spark.range`` + per-id seeded hashing — no RNG state, so any retry or
-  repartitioning reproduces identical data.
+  ``spark.range`` + per-id ``mix32`` hashing — no RNG state, so any retry
+  or repartitioning reproduces identical data. Every step is exact
+  integer arithmetic, so ``gen_sql`` regenerates the same rows in DuckDB:
+  the bytes the CLI writes, and the graded ``teragen``/``terasort``
+  queries (sources/tera_queries.py), share one generator with an oracle.
 - R2 key normalization (``OptimizedText`` 10-byte prefix): built into
   Tungsten's UnsafeRow binary prefix comparator — nothing to write.
 - R3 range partitioning (the reference's contribution — a custom
   Partitioner / Flink DataDistribution): ``repartitionByRange`` plans an
   Exchange(RangePartitioning) whose RangePartitioner reservoir-samples
   boundaries — the same "range partitioner with sampling" design, built
-  in.
+  in. It ranges on ``(key, value)``, which is distinct per record, so a
+  duplicated key can span partitions without a salt.
 - R4 per-partition sort: ``sortWithinPartitions`` fuses into the shuffle
   (SortExec after the range exchange), spill-safe.
 - R5 sink: partition-indexed files are Spark's default part-NNNNN
@@ -41,88 +45,137 @@ from pyspark.sql import functions as F
 KEY_LEN = 10
 VALUE_LEN = 90
 RECORD_LEN = KEY_LEN + VALUE_LEN
-DEFAULT_SEED = 42
+_MASK31 = 0x7FFFFFFF
+_MASK32 = 0xFFFFFFFF
+
+
+def mix32(v: Column) -> Column:
+    """Splitmix-style mixer on a non-negative bigint column -> uniform
+    value in [0, 2^32). Every step (multiply, mask, xor, shift) is exact
+    64-bit integer arithmetic: an input below 2^31 keeps the first
+    product under 2^63, and the value is cut to 31 bits before the
+    second multiply. Spark (ANSI on) and DuckDB therefore compute
+    identical values for any v in [0, 2^31)."""
+    z = (v * F.lit(2654435761)).bitwiseAND(F.lit(_MASK32))
+    z = z.bitwiseXOR(F.shiftright(z, 16))
+    z = (z.bitwiseAND(F.lit(_MASK31)) * F.lit(2246822519)).bitwiseAND(F.lit(_MASK32))
+    return z.bitwiseXOR(F.shiftright(z, 13))
+
+
+# The two SQL dialects the generator is written in differ only in how
+# they spell bitwise xor.
+_XOR = {
+    "duckdb": lambda a, b: f"xor({a}, {b})",
+    "spark": lambda a, b: f"(({a}) ^ ({b}))",
+}
+
+
+def mix32_sql(v: str, engine: str = "duckdb") -> str:
+    """SQL twin of :func:`mix32` for ``engine`` ("duckdb" or "spark") —
+    bit-exact by construction."""
+    xor = _XOR[engine]
+    z1 = f"((({v}) * 2654435761) & {_MASK32})"
+    z2 = xor(z1, f"{z1} >> 16")
+    z3 = f"(((({z2}) & {_MASK31}) * 2246822519) & {_MASK32})"
+    return xor(z3, f"{z3} >> 13")
+
+
+def _mix_in_sql(v: str, engine: str) -> str:
+    """mix32's input for a value ``v`` derived from the row's ``id``: the
+    low 31 bits of ``v`` xor a per-block term, the block ``id >> 27``
+    times an odd constant, mod 2^31. The term is 0 for ids below 2^27,
+    where the input is ``v`` itself; above that the mask keeps every
+    input inside mix32's exact range, and the term keeps blocks whose
+    low bits agree apart. Exact for ids below 2^58."""
+    block = f"((id >> 27) * 2654435761) & {_MASK31}"
+    return _XOR[engine](f"({v}) & {_MASK31}", block)
+
+
+def key_sql(engine: str, skewed: bool = False) -> str:
+    """TeraGen's 10-character printable-ASCII key of row ``id``, as SQL
+    for ``engine``: the Spark generator and its DuckDB oracle evaluate
+    the same SQL, spelled apart only in xor.
+
+    Uniform: character i is ``chr(32 + mix32(id * 10 + i) % 95)``,
+    uniform per byte — the distribution the reference's closed-form
+    partitioner exploits. Skewed: 100 equally likely draws
+    ``a = mix32(id) % 100`` on a cubic ramp ``floor(a^3 / 10^4)``, so the
+    key ``'0' * 10`` (every a <= 21) holds 22% of all rows — the
+    duplicate-heavy regime uniform GraySort keys never exercise. a^3 <
+    2^20 is exact in a double."""
+    if skewed:
+        a = f"(({mix32_sql(_mix_in_sql('id', engine), engine)}) % 100)"
+        k = f"CAST(floor(({a} * {a} * {a}) / 10000) AS BIGINT)"
+        return f"lpad(CAST({k} AS STRING), {KEY_LEN}, '0')"
+    return " || ".join(
+        f"chr(CAST(32 + (({mix32_sql(_mix_in_sql(f'id * {KEY_LEN} + {i}', engine), engine)})"
+        " % 95) AS INT))"
+        for i in range(KEY_LEN)
+    )
+
+
+KEY_SQL = key_sql("duckdb")
+SKEW_KEY_SQL = key_sql("duckdb", skewed=True)
+VALUE_SQL = f"rpad(lpad(CAST(id AS STRING), 32, '0'), {VALUE_LEN}, 'X')"
+
+
+def gen_df(
+    spark: SparkSession, n_rows: int, n_partitions: int, skewed: bool = False
+) -> DataFrame:
+    """TeraGen's rows as strings: ``id``, the key from :func:`key_sql` and
+    a 90-char value carrying the zero-padded id, so ``(key, value)``
+    order is ``(key, id)`` order. All JVM-side expressions, embarrassingly
+    parallel from ``spark.range``; ``gen_sql`` is the exact DuckDB twin.
+    The key is parsed from SQL text in one call: built as Column objects,
+    the same expression took ~0.3 s of Py4J calls and analysis per
+    DataFrame against ~0.04 s parsed (300k rows, 4 cores, ``local[4]``),
+    about what generating 300k rows costs."""
+    return spark.range(0, n_rows, numPartitions=n_partitions).select(
+        "id",
+        F.expr(key_sql("spark", skewed)).alias("key"),
+        F.expr(VALUE_SQL).alias("value"),
+    )
+
+
+def gen_sql(n_rows: int, skewed: bool = False) -> str:
+    """DuckDB twin of :func:`gen_df`: the same (id, key, value) rows,
+    regenerated from ``range()``."""
+    key = SKEW_KEY_SQL if skewed else KEY_SQL
+    return f"""
+SELECT id,
+       {key} AS key,
+       {VALUE_SQL} AS value
+FROM range(0, {n_rows}) t(id)
+"""
 
 
 def teragen(
-    spark: SparkSession,
-    n_rows: int,
-    n_partitions: int = 32,
-    seed: int = DEFAULT_SEED,
+    spark: SparkSession, n_rows: int, n_partitions: int = 32, skewed: bool = False
 ) -> DataFrame:
-    """Deterministic TeraGen: 10-byte printable-ASCII key (uniform per
-    byte — the distribution the reference's closed-form partitioner
-    exploits) + 90-byte value carrying the zero-padded row id.
-
-    All JVM-side expressions; ~1M rows/s/core locally, embarrassingly
-    parallel at any cluster size."""
-    ids = spark.range(0, n_rows, numPartitions=n_partitions)
-    key_chars = [
-        F.chr(F.lit(32) + F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit(i)), F.lit(95)))
-        for i in range(KEY_LEN)
-    ]
-    key = F.encode(F.concat(*key_chars), "utf-8").alias("key")
-    value = F.encode(
-        F.rpad(F.lpad(F.col("id").cast("string"), 32, "0"), VALUE_LEN, "X"), "utf-8"
-    ).alias("value")
-    return ids.select(key, value)
-
-
-def teragen_skewed(
-    spark: SparkSession,
-    n_rows: int,
-    n_partitions: int = 32,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
-    """Duplicate-heavy adversary for the range sort (r9 VERDICT task 1):
-    ~25% of ALL rows share ONE key (ten 0x20 bytes — the minimal
-    printable key, so it also lands on the first partition) and the
-    rest stay uniform. A plain range partitioner must put every copy of
-    a key on one partition, so this forces a straggler holding a
-    quarter of the dataset — the regime teragen's uniform keys never
-    exercise. Deterministic from row ids like teragen itself."""
-    base = teragen(spark, n_rows, n_partitions, seed)
-    is_hot = F.pmod(F.xxhash64(F.col("value"), F.lit(seed + 1)), F.lit(4)) == 0
-    return base.withColumn(
-        "key",
-        F.when(is_hot, F.encode(F.lit(" " * KEY_LEN), "utf-8")).otherwise(
-            F.col("key")
-        ),
-    )
-
-
-def terasort_salted(
-    df: DataFrame, n_partitions: int = 32, n_salts: int = 4096
-) -> DataFrame:
-    """Skew-robust total-order sort: range-exchange and locally sort on
-    (key, salt) with a deterministic per-row salt, then drop the salt.
-    Key stays the major term, so partition i's keys still all precede
-    (or equal, at a spanning duplicate's boundary) partition i+1's and
-    within-partition keys stay nondecreasing — the full TeraValidate
-    contract — while a hot key spreads over up to n_salts range slices
-    instead of pinning one reducer. Equal keys need no relative order
-    (GraySort validates a sorted PERMUTATION), which is exactly the
-    freedom the salt spends. The graded exact-oracle twin is
-    tera_queries.terasort_skewed."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("value"), F.lit(2)), F.lit(n_salts))
-    )
-    return (
-        salted.repartitionByRange(n_partitions, "key", "_salt")
-        .sortWithinPartitions("key", "_salt")
-        .drop("_salt")
+    """Deterministic TeraGen: ``gen_df``'s key and value as the binary
+    10-byte key and 90-byte value of a 100-byte record."""
+    return gen_df(spark, n_rows, n_partitions, skewed).select(
+        F.encode("key", "utf-8").alias("key"), F.encode("value", "utf-8").alias("value")
     )
 
 
 def terasort(df: DataFrame, n_partitions: int = 32) -> DataFrame:
-    """Total-order sort: range-exchange on sampled boundaries, then
-    partition-local sort — partition i's keys all precede partition
-    i+1's, so output files concatenate to a sorted whole.
+    """Total-order sort on ``(key, value)``: range-exchange on sampled
+    boundaries, then partition-local sort — partition i's records all
+    precede partition i+1's, so output files concatenate to a sorted
+    whole.
 
-    BinaryType ordering is unsigned-byte lexicographic, exactly the
-    GraySort comparator; Tungsten compares via the 8-byte key prefix
-    (the built-in equivalent of the reference's OptimizedText)."""
-    return df.repartitionByRange(n_partitions, "key").sortWithinPartitions("key")
+    Key is the major term, so keys are nondecreasing within and between
+    partitions: the TeraValidate contract. A TeraGen value carries the
+    row id, so ``(key, value)`` is distinct per record, and the sampled
+    boundaries can cut a hot key across partitions instead of pinning
+    every copy to one reducer. BinaryType ordering is unsigned-byte
+    lexicographic, exactly the GraySort comparator; Tungsten compares
+    via the 8-byte key prefix (the built-in equivalent of the
+    reference's OptimizedText)."""
+    return df.repartitionByRange(n_partitions, "key", "value").sortWithinPartitions(
+        "key", "value"
+    )
 
 
 def write_tera_files(sorted_df: DataFrame, out_dir: str) -> list[str]:

@@ -65,6 +65,24 @@ def test_cli_gen_sort_validate_roundtrip(spark, tmp_path, capsys):
     assert json.loads(capsys.readouterr().out)["checksum_ok"] is False
 
 
+def test_cli_teragen_bytes_match_duckdb_regeneration(spark, tmp_path, capsys):
+    """The records the CLI's teragen writes are, as a multiset, the rows
+    DuckDB regenerates from ``gen_sql`` (``KEY_SQL`` and the padded id):
+    the reference job's own bytes have an oracle."""
+    import duckdb
+
+    from terasort_spark.sources.teragen import RECORD_LEN, gen_sql
+
+    n, gen_dir = 20000, tmp_path / "gen"
+    argv = ["teragen", "--rows", str(n), "--out", str(gen_dir), "--partitions", "4"]
+    assert main(argv, spark=spark) == 0
+    capsys.readouterr()
+    data = b"".join(p.read_bytes() for p in sorted(gen_dir.glob("part-*.dat")))
+    got = sorted(data[o : o + RECORD_LEN] for o in range(0, len(data), RECORD_LEN))
+    want = duckdb.sql(f"SELECT key || value FROM ({gen_sql(n)})").fetchall()
+    assert got == sorted(r[0].encode() for r in want)
+
+
 def test_cli_teravalidate_fails_on_swapped_part_files(spark, tmp_path, capsys):
     """Sorted files concatenate in NAME order, so swapping two sorted
     part files breaks the total order even though each file, and the

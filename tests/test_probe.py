@@ -26,7 +26,7 @@ def test_every_probe_spec_is_ok_at_its_smallest_size(
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     runs = [
         ["tera", "20000", "4", "uniform"],
-        ["tera", "20000", "4", "zipf_salted"],
+        ["tera", "20000", "4", "zipf"],
         ["agg", "20000", "hot"],
         ["window", "20000", "hot"],
         ["tws", "3000", "300"],

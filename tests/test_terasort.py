@@ -116,10 +116,38 @@ def test_teravalidate_checksum_exact_in_one_large_batch(spark, tmp_path):
     assert report["n_rows"] == n and report["n_partitions"] == 1
     assert report["checksum"] == want
 
-def test_terasort_plan_uses_range_exchange(spark):
+def test_terasort_plan_uses_range_exchange(spark, sf_dir, monkeypatch):
+    """The CLI's sort and the registered terasort and terasort_skewed are
+    one range exchange keyed on (key, value), and the graded queries run
+    without a Python worker: neither the plan their localCheckpoint pins
+    nor their final plan holds a Python node."""
+    import re
+
+    from terasort_spark.plans.checks import executed_plan
+
+    keyed = re.compile(
+        r"rangepartitioning\(key#\d+ ASC NULLS FIRST, value#\d+ ASC NULLS FIRST, \d+\)"
+    )
     out = terasort(teragen(spark, 1000, n_partitions=4), n_partitions=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower(), plan
+    assert keyed.search(executed_plan(out)), executed_plan(out)
+
+    pinned = []
+    frame = type(out)
+    checkpoint = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        pinned.append(executed_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    for name in ("terasort", "terasort_skewed"):
+        pinned.clear()
+        final = executed_plan(_Q[name](spark, sf_dir))
+        assert len(pinned) == 1, name
+        assert keyed.search(pinned[0]), pinned[0]
+        for plan in (pinned[0], final):
+            for node in ("MapInPandas", "MapInArrow", "EvalPython"):
+                assert node not in plan, (name, plan)
 
 
 def test_read_tera_files_plan_has_no_python_node(spark, tmp_path):
@@ -224,36 +252,32 @@ def test_terasort_query_correct_without_exchange_reuse(spark):
 def test_skewed_terasort_contract_with_spanning_key(spark, sf_dir):
     """The r9 VERDICT pinned test: the terasort permutation contract
     must hold when one massively duplicated key SPANS partitions. The
-    salted range sort spreads the hot key (22% of rows) over several
-    partitions — assert it actually spans (>1, else salting is dead
-    code and the straggler returns), that a plain key-ranged exchange
-    keeps it on exactly one (the baseline being fixed), and that the
-    TeraValidate triple still holds: keys nondecreasing inside every
-    partition, last(i) <= first(i+1) ACROSS the spanning boundary
-    (equality allowed — that is the duplicated-key case), count
-    preserved, and the key multiset a true permutation of the input."""
-    from terasort_spark.sources.tera_queries import N_PARTS, N_ROWS, _skew_df
+    (key, value) range sort spreads the hot key (22% of rows) over
+    several partitions — assert it actually spans (>1, else the
+    straggler returns), that a plain key-ranged exchange keeps it on
+    exactly one (the baseline being fixed), and that the TeraValidate
+    triple still holds: keys nondecreasing inside every partition,
+    last(i) <= first(i+1) ACROSS the spanning boundary (equality allowed
+    — that is the duplicated-key case), count preserved, and the key
+    multiset a true permutation of the input."""
+    from collections import Counter
+
+    from terasort_spark.sources.tera_queries import N_PARTS, N_ROWS
+    from terasort_spark.sources.teragen import gen_df
 
     hot = "0" * 10
-    salted = (
-        _skew_df(spark, N_ROWS, N_PARTS)
-        .repartitionByRange(N_PARTS, "key", "salt")
-        .sortWithinPartitions("key", "salt")
-        .withColumn("pid", F.spark_partition_id())
+    skewed = gen_df(spark, N_ROWS, N_PARTS, skewed=True)
+
+    def hot_partitions(df):
+        with_pid = df.withColumn("pid", F.spark_partition_id())
+        return with_pid.filter(F.col("key") == hot).select("pid").distinct().count()
+
+    assert hot_partitions(terasort(skewed, N_PARTS)) > 1, (
+        "hot key stayed on one partition"
     )
-    spread = (
-        salted.filter(F.col("key") == hot).select("pid").distinct().count()
+    assert hot_partitions(skewed.repartitionByRange(N_PARTS, "key")) == 1, (
+        "plain range exchange split equal keys (boundary semantics changed)"
     )
-    assert spread > 1, "salted hot key stayed on one partition"
-    unsalted = (
-        _skew_df(spark, N_ROWS, N_PARTS)
-        .repartitionByRange(N_PARTS, "key")
-        .withColumn("pid", F.spark_partition_id())
-    )
-    assert (
-        unsalted.filter(F.col("key") == hot).select("pid").distinct().count()
-        == 1
-    ), "plain range exchange split equal keys (boundary semantics changed)"
     # TeraValidate, strongest form: the engine's PHYSICAL (idx -> key)
     # map (partition offsets + encounter order — the graded machinery)
     # must be globally nondecreasing ACROSS the spanning boundaries and
@@ -264,16 +288,53 @@ def test_skewed_terasort_contract_with_spanning_key(spark, sf_dir):
     )
     assert len(rows) == N_ROWS and rows[0][0] == 0 and rows[-1][0] == N_ROWS - 1
     assert all(a[1] <= b[1] for a, b in zip(rows, rows[1:]))
-    gen_hist = sorted(
-        map(
-            tuple,
-            _skew_df(spark, N_ROWS, N_PARTS).groupBy("key").count().collect(),
-        )
-    )
-    from collections import Counter
-
+    gen_hist = sorted(map(tuple, skewed.groupBy("key").count().collect()))
     out_hist = sorted(Counter(k for _, k in rows).items())
     assert gen_hist == out_hist
+
+
+def test_generator_twins_agree_at_large_ids(spark):
+    """The uniform and skewed keys stay exact past mix32's 2^31 input
+    range: near id 2^40, where id * 10 + i is far past it, Spark (ANSI
+    on, so an overflow raises) and the DuckDB twins give the same keys."""
+    import duckdb
+
+    from terasort_spark.sources.teragen import KEY_SQL, SKEW_KEY_SQL, key_sql
+
+    lo, hi = 2**40 - 8, 2**40
+    got = spark.range(lo, hi).select(
+        "id",
+        F.expr(key_sql("spark")).alias("key"),
+        F.expr(key_sql("spark", skewed=True)).alias("skew"),
+    )
+    want = duckdb.sql(
+        f"SELECT id, {KEY_SQL} AS key, {SKEW_KEY_SQL} AS skew FROM range({lo}, {hi}) t(id)"
+    ).fetchall()
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+    assert len(want) == 8
+
+
+def test_one_teragen_key_derivation():
+    """TeraGen's key has one derivation, ``key_sql`` in
+    sources/teragen.py, evaluated by Spark and DuckDB alike: that module
+    holds no second hash, and no module or script defines or imports
+    the generators and sorts it replaced."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "terasort_spark", "sources", "teragen.py")) as fh:
+        assert "xxhash64" not in fh.read()
+    gone = re.compile(r"\b(teragen_skewed|terasort_salted|DEFAULT_SEED|_skew_df|zipf_salted)\b")
+    bad = []
+    for base in ("terasort_spark", "scripts"):
+        for dirpath, _, files in os.walk(os.path.join(root, base)):
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(dirpath, f)
+                    with open(path) as fh:
+                        bad += [f"{os.path.relpath(path, root)}: {m}" for m in gone.findall(fh.read())]
+    assert not bad, bad
 
 
 # ------------------------------------------------------------ fixedwidth --

@@ -166,8 +166,7 @@ def test_autocorr_hot_user_matches_exact_integers(spark):
     computed with Python's exact integers, rounded as the query rounds."""
     import math
 
-    from terasort_spark.operators.timeseries import AC_LAGS, autocorr_stats
-    from terasort_spark.plans.window_skew_rewrite import lead_columns
+    from terasort_spark.operators.timeseries import AC_LAGS, autocorr_stats, lead_columns
 
     n_hot, n_cold, mod = 6500, 30, 5_600_000  # q <= 5.6e6: value <= 560
     seq = spark.range(n_hot + n_cold).select(
