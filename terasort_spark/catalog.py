@@ -1,8 +1,12 @@
 """Table catalog: the ten driver-provided parquet tables (FIXTURES.md).
 
 All loads go through here so scan behavior (schema pinning, future
-partitioned layouts for the 100 TB path) is centralized. Schemas come
-from the parquet footers — explicit and stable, no inference pass.
+partitioned layouts for the 100 TB path) is centralized. ``table`` lets
+Spark infer each schema: ``spark.read.parquet(path)`` reads the footer
+in a schema-inference job, one Spark job per call, even for a single
+file. ``events`` then normalizes its ``ts`` column to one type.
+``estimate_rows`` reads footers with pyarrow on the driver and runs no
+Spark job.
 """
 
 from __future__ import annotations

@@ -10,6 +10,26 @@ sane on a 1000-executor cluster:
 - ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
   coalesces small post-shuffle partitions, so a value sized for the big
   end (cluster) does not hurt the small end (local tests).
+- The driver JVM compiles at tier 4 (C2) only code hot enough to repay
+  it: ``C2_THRESHOLDS`` sets HotSpot's four tier-4 thresholds to 4× their
+  JDK 17 defaults, and C1 (tiers 1–3) keeps its defaults. Most of what a
+  session runs (Catalyst rules, Janino, the closure cleaner, Java
+  serialization) runs a few thousand times, and C2 compiling it was
+  the largest CPU consumer of a short session. In one cold pass over
+  perfbench's eight ``query_mix`` queries at sf0.01 (4 cores,
+  ``local[4]``), C2's threads took ~12.4 s of the session's ~48 s of
+  CPU before and ~7.5 s of ~41 s after. perfbench medians over ten
+  pairs: ``setup_s`` 12.6 → 9.8 s (``terasort_files``) and 12.8 → 9.7 s
+  (``query_mix``), with wall times and MB/s flat. Code that stays hot,
+  such as the sort's loops, still passes the thresholds and gets C2
+  code. 8× thresholds lowered the sort's MB/s; 2× saved less than half
+  as much. The flags go in ``spark.driver.defaultJavaOptions`` (which
+  replaces a ``spark-defaults.conf`` value of that key); the launcher
+  puts it ahead of ``spark.driver.extraJavaOptions``, so a caller's own
+  ``-XX`` flags win. They apply only to a JVM that ``get_spark``
+  launches: a session whose JVM another program launched
+  (``entry(spark)``, ``scripts/drive_driver.py``) keeps its flags,
+  because ``configure`` cannot change the flags of a running JVM.
 """
 
 from __future__ import annotations
@@ -17,6 +37,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# HotSpot tier-4 (C2) compile thresholds, 4× the JDK 17 defaults
+# (5000, 600, 15000, 40000).
+C2_THRESHOLDS = {
+    "Tier4InvocationThreshold": 20000,
+    "Tier4MinInvocationThreshold": 2400,
+    "Tier4CompileThreshold": 60000,
+    "Tier4BackEdgeThreshold": 160000,
+}
 
 
 def get_spark(
@@ -39,6 +68,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.defaultJavaOptions",
+            " ".join(f"-XX:{k}={v}" for k, v in C2_THRESHOLDS.items()),
+        )
         # Long-lived sessions (the 186-query bench loop runs ~750 jobs in
         # one JVM) accumulate status-store state even with the UI off;
         # cap retention so late queries aren't taxed by listener-bus and

@@ -1,4 +1,6 @@
-"""Session set-up and the repo-root worker hook: ``session.configure``
+"""Session set-up and the repo-root worker hook: ``session.get_spark``
+launches its JVM with the engine's C2 compile thresholds and leaves
+``spark.driver.extraJavaOptions`` to the caller; ``session.configure``
 gives a session one worker environment led by the repo root, and the
 hook's lazy zipimport cache keeps PySpark's per-task
 ``importlib.invalidate_caches()`` from re-reading every archive on the
@@ -24,6 +26,41 @@ needs_backport = pytest.mark.skipif(
     or not hasattr(zipimport.zipimporter, "invalidate_caches"),
     reason="zipimport has no eager invalidate_caches to replace",
 )
+
+
+def test_get_spark_jvm_runs_the_c2_thresholds(spark):
+    """The session fixture comes from get_spark, so its JVM must report
+    every tier-4 threshold of C2_THRESHOLDS, set at VM creation."""
+    from terasort_spark.session import C2_THRESHOLDS
+
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    got = {}
+    for flag in C2_THRESHOLDS:
+        opt = bean.getVMOption(flag)
+        got[flag] = (int(opt.getValue()), opt.getOrigin().toString())
+    assert got == {k: (v, "VM_CREATION") for k, v in C2_THRESHOLDS.items()}
+
+
+def test_get_spark_leaves_extra_java_options_to_caller(monkeypatch):
+    """get_spark passes the thresholds as the driver's DEFAULT java
+    options and never sets spark.driver.extraJavaOptions, which the
+    launcher places after them, so a caller's own flags still win."""
+    from pyspark.sql import SparkSession
+
+    from terasort_spark.session import C2_THRESHOLDS, get_spark
+
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    opts = get_spark(master="local[1]")
+    assert "spark.driver.extraJavaOptions" not in opts
+    assert opts["spark.driver.defaultJavaOptions"].split() == [
+        f"-XX:{k}={v}" for k, v in C2_THRESHOLDS.items()
+    ]
 
 
 def test_configure_leads_worker_pythonpath_with_repo_root(spark):
