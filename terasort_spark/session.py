@@ -15,18 +15,13 @@ sane on a 1000-executor cluster:
   JDK 17 defaults, and C1 (tiers 1–3) keeps its defaults. Most of what a
   session runs (Catalyst rules, Janino, the closure cleaner, Java
   serialization) runs a few thousand times, and C2 compiling it was
-  the largest CPU consumer of a short session. In one cold pass over
-  perfbench's eight ``query_mix`` queries at sf0.01 (4 cores,
-  ``local[4]``), C2's threads took ~12.4 s of the session's ~48 s of
-  CPU before and ~7.5 s of ~41 s after. perfbench medians over ten
-  pairs: ``setup_s`` 12.6 → 9.8 s (``terasort_files``) and 12.8 → 9.7 s
-  (``query_mix``), with wall times and MB/s flat. Code that stays hot,
+  the largest CPU consumer of a short session. Code that stays hot,
   such as the sort's loops, still passes the thresholds and gets C2
-  code. 8× thresholds lowered the sort's MB/s; 2× saved less than half
-  as much. The flags go in ``spark.driver.defaultJavaOptions`` (which
-  replaces a ``spark-defaults.conf`` value of that key); the launcher
-  puts it ahead of ``spark.driver.extraJavaOptions``, so a caller's own
-  ``-XX`` flags win. They apply only to a JVM that ``get_spark``
+  code. CHANGES.md has the measurements. The flags go in
+  ``spark.driver.defaultJavaOptions``, so they replace a
+  ``spark-defaults.conf`` value of that key; the launcher puts them
+  ahead of ``spark.driver.extraJavaOptions``, so a caller's own ``-XX``
+  flags there win. They apply only to a JVM that ``get_spark``
   launches: a session whose JVM another program launched
   (``entry(spark)``, ``scripts/drive_driver.py``) keeps its flags,
   because ``configure`` cannot change the flags of a running JVM.

@@ -23,16 +23,12 @@ _SLOW_MODULES = {
     "test_stream_recovery",
 }
 
-# Individual heavyweights (>13 s measured). None is an oracle-hash test.
-# test_stream_left_outer_join_equals_batch is a result-equivalence test
-# over both state stores; its default-tier form is
-# test_stream_left_outer_join_equals_batch_small (half the users, two
-# chunks, HDFS store). The other three equivalence tests (streaming LSH
-# ≡ sequential batch, partition-count invariance, quartile histogram ≡
-# ntile) run in the default tier.
+# Individual heavyweights (>13 s measured). None is an oracle-hash or a
+# result-equivalence test: those (streaming LSH ≡ sequential batch,
+# streaming left-outer join ≡ batch, partition-count invariance,
+# quartile histogram ≡ ntile) all run in the default tier.
 _SLOW_TESTS = {
     "test_no_nested_output_types",  # builds all 341 plans: 178 s
-    "test_stream_left_outer_join_equals_batch",  # HDFS + RocksDB: 5.8 s + 6.7 s warm at 4 cores
     "test_similarity_rewrite_small_input_uses_exact_form",  # 25 s
     "test_url_canonicalization_idempotent",  # 15 s
 }

@@ -985,27 +985,10 @@ def test_tws_delete_if_exists_resets_state_mid_stream(spark, sf_dir):
 
 
 def test_stream_left_outer_join_equals_batch(spark, sf_dir, tmp_path, state_store):
-    """The streaming LEFT OUTER join, replayed in three chunks with a
-    watermark-advancing sentinel chunk, must equal the batch twin
-    EXACTLY — including the null-padded rows for unmatched purchases
-    (emitted when the watermark closes each purchase's join window)."""
-    _assert_left_outer_join_replay_equals_batch(spark, sf_dir, tmp_path, 3)
-
-
-def test_stream_left_outer_join_equals_batch_small(spark, sf_dir, tmp_path):
-    """The default-tier form of the test above: every other user's
-    events, two chunks, the default (HDFS-backed) state store, and the
-    same assertions against the batch twin over the same events."""
-    small = str(tmp_path / "sf_small")
-    (
-        table(spark, sf_dir, "events")
-        .where(F.col("user_id") % 2 == 0)
-        .write.parquet(os.path.join(small, "events.parquet"))
-    )
-    _assert_left_outer_join_replay_equals_batch(spark, small, tmp_path, 2)
-
-
-def _assert_left_outer_join_replay_equals_batch(spark, sf_dir, tmp_path, n_chunks):
+    """The streaming LEFT OUTER join, replayed with a watermark-
+    advancing sentinel chunk, must equal the batch twin EXACTLY —
+    including the null-padded rows for unmatched purchases (emitted
+    when the watermark closes each purchase's join window)."""
     from terasort_spark.streaming.replay import (
         EVENTS_SCHEMA,
         read_stream,
@@ -1013,12 +996,14 @@ def _assert_left_outer_join_replay_equals_batch(spark, sf_dir, tmp_path, n_chunk
         stage_chunks,
     )
 
+    import os
+
     ev = table(spark, sf_dir, "events")
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
 
     replay_dir = str(tmp_path / "outer_replay")
     stagers = stage_chunks(
-        spark, sf_dir, replay_dir, n_chunks=n_chunks, order_by=("ts", "event_id")
+        spark, sf_dir, replay_dir, n_chunks=3, order_by=("ts", "event_id")
     )
 
     # Two successive far-future sentinel waves: the first advances the
