@@ -13,12 +13,23 @@ from __future__ import annotations
 
 import shutil
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from terasort_spark.catalog import table
 from terasort_spark.operators._util import o_rnd, rnd, scratch_dir
-from terasort_spark.operators.llm_similarity import COSINE_SQL, ivf_bucket, ivf_proj_sql
+from terasort_spark.operators.llm_similarity import (
+    COSINE_SQL,
+    cosine,
+    ivf_bits,
+    ivf_bucket,
+    ivf_proj_sql,
+    ivf_projections,
+    micro,
+    pq_train_encode,
+    side,
+    split,
+    topk_per,
+    vectors,
+)
 from terasort_spark.registry import register
 
 
@@ -74,43 +85,20 @@ def sink_ann_index(spark, sf_dir):
     bit-exactly."""
     out = scratch_dir(spark, "ann_index")
     shutil.rmtree(out, ignore_errors=True)
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-    xu = F.transform(
-        F.col("emb"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
-    )
-    eb = e.withColumn("bucket", ivf_bucket(xu))
+    eb = vectors(spark, sf_dir).withColumn("bucket", ivf_bucket(micro(F.col("v"))))
     eb.write.mode("overwrite").partitionBy("bucket").parquet(out)
 
     # explicit schema: an all-empty corpus writes no partition
     # directories, and the re-read must still resolve (sink_parquet
     # empty-input convention). Partition inference would also widen
     # bucket to int anyway; pinning it keeps the probe join key typed.
-    idx = spark.read.schema(eb.schema).parquet(out).select(
-        F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"), "bucket"
-    )
-    q = F.broadcast(
-        eb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb"), "bucket"
-        )
-    )
-
-    from terasort_spark.operators.llm_similarity import dot_fold as dot
-
-    cosine = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        idx.join(q, "bucket")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .withColumn("cosine", rnd(cosine))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    # Each vector's norm is stored next to it, as real indexes do.
+    idx = side(spark.read.schema(eb.schema).parquet(out), "c")
+    q, _ = split(eb, 5)
+    pairs = idx.join(
+        q, (F.col("c_bucket") == F.col("q_bucket")) & (F.col("c_id") != F.col("q_id"))
+    ).withColumn("cosine", rnd(cosine()))
+    return topk_per(pairs, 3, "cosine").select("q_id", "c_id", "cosine", "rn")
 
 
 def _ivfpq_oracle() -> str:
@@ -193,34 +181,16 @@ def sim_cosine_ivfpq(spark, sf_dir):
     the refine step reads 32 full vectors per query. The quantized scan
     and the directory pruning COMPOUND — this is the layout
     billion-vector services actually deploy."""
-    from terasort_spark.operators.llm_similarity import (
-        pq_train_encode,
-        dot_fold,
-    )
-
     out = scratch_dir(spark, "ivfpq")
     shutil.rmtree(out, ignore_errors=True)
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "vu",
-            F.transform(
-                F.col("v"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
-            ),
-        )
-    )
+    e = vectors(spark, sf_dir, "embedding").filter(F.col("embedding").isNotNull())
+    e = e.withColumn("vu", micro(F.col("v")))
     pq = pq_train_encode(spark, e, q_cut=10)
     if pq is None:  # empty corpus
         return spark.createDataFrame(
             [], "q_id bigint, c_id bigint, cosine double, rn int"
         )
     _sub, codes, lut = pq
-    dot = dot_fold
     # pack per-vector codes into the compact array layout a real PQ
     # index stores (array position == sub_id), norm alongside
     code_arr = (
@@ -228,74 +198,39 @@ def sim_cosine_ivfpq(spark, sf_dir):
         .agg(F.array_sort(F.collect_list(F.struct("sub_id", "cid"))).alias("pm"))
         .select(F.col("c_id").alias("vec_id"), F.col("pm.cid").alias("code"))
     )
-    eb = e.withColumn("bucket", ivf_bucket(F.col("vu"))).withColumn(
-        "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
-    )
+    eb = e.withColumn("bucket", ivf_bucket(F.col("vu")))
     idx_rows = eb.join(code_arr, "vec_id").select(
         "vec_id", "v", "nrm", "code", "bucket"
     )
     idx_rows.write.mode("overwrite").partitionBy("bucket").parquet(out)
-    idx = spark.read.schema(idx_rows.schema).parquet(out)
+    idx = side(spark.read.schema(idx_rows.schema).parquet(out), "c")
 
     # probe: broadcast query routing; the bucket join key IS the
     # partition directory key -> DPP restricts the scan to probed lists
-    q = F.broadcast(
-        eb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            "bucket",
-        )
-    )
-    cand = idx.join(q.select("q_id", "bucket"), "bucket").filter(
-        F.col("vec_id") != F.col("q_id")
+    q, _ = split(eb, 10)
+    cand = idx.join(
+        q.select("q_id", "q_bucket"),
+        (F.col("c_bucket") == F.col("q_bucket")) & (F.col("c_id") != F.col("q_id")),
     )
     adc = (
-        cand.select(
-            "q_id",
-            F.col("vec_id").alias("c_id"),
-            F.col("nrm").alias("cnrm"),
-            F.posexplode("code").alias("sub_id", "cid"),
-        )
+        cand.select("q_id", "c_id", "c_nrm", F.posexplode("c_code").alias("sub_id", "cid"))
         .join(lut, ["q_id", "sub_id", "cid"])
-        .groupBy("q_id", "c_id", "cnrm")
+        .groupBy("q_id", "c_id", "c_nrm")
         .agg(F.sum("pdot").alias("adot"))
     )
-    approx = adc.join(
-        F.broadcast(q.select("q_id", "qnrm")), "q_id"
-    ).withColumn(
+    approx = adc.join(q.select("q_id", "q_nrm"), "q_id").withColumn(
         "acos",
         (F.col("adot").cast("double") / F.lit(1000000000000.0))
-        / (F.col("qnrm") * F.col("cnrm")),
+        / (F.col("q_nrm") * F.col("c_nrm")),
     )
-    wa = Window.partitionBy("q_id").orderBy(F.desc("acos"), F.asc("c_id"))
-    shortlist = (
-        approx.withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= 32)
-        .select("q_id", "c_id")
-    )
+    shortlist = topk_per(approx, 32, "acos", rn="arn").select("q_id", "c_id")
     # refine: exact cosine over the 32 stored full vectors per query
-    cv = idx.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     exact = (
-        shortlist.join(F.broadcast(q.select("q_id", "qv")), "q_id")
-        .join(cv, "c_id")
-        .withColumn(
-            "cosine",
-            rnd(
-                dot(F.col("qv"), F.col("cv"))
-                / (
-                    F.sqrt(dot(F.col("qv"), F.col("qv")))
-                    * F.sqrt(dot(F.col("cv"), F.col("cv")))
-                )
-            ),
-        )
+        shortlist.join(q.select("q_id", "q_v", "q_nrm"), "q_id")
+        .join(idx.select("c_id", "c_v", "c_nrm"), "c_id")
+        .withColumn("cosine", rnd(cosine()))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    return topk_per(exact, 3, "cosine").select("q_id", "c_id", "cosine", "rn")
 
 
 def _nprobe_oracle(nprobe: int, q_cut: int) -> str:
@@ -355,67 +290,31 @@ _NPROBE_QCUT = 30
 def _ivf_nprobe_df(spark, sf_dir, nprobe: int, q_cut: int = _NPROBE_QCUT):
     """Shared builder for sim_cosine_ivf_nprobe and its recall test
     (which runs it at nprobe=1 to measure the lift)."""
-    from terasort_spark.operators.llm_similarity import (
-        dot_fold,
-        ivf_projection,
+    e = vectors(spark, sf_dir, "embedding").filter(F.col("embedding").isNotNull())
+    eb = e.withColumn("pj", ivf_projections(micro(F.col("v")))).withColumn(
+        "bucket", ivf_bits(F.col("pj"))
     )
-
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-        )
-    )
-    xu = F.transform(
-        F.col("emb"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
-    )
-    eb = e.withColumn("pj", F.array(*[ivf_projection(xu, j) for j in range(4)]))
-    bucket = None
-    for j in range(4):
-        bit = F.when(F.col("pj")[j] > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    eb = eb.withColumn("bucket", bucket)
-    c = eb.select(
-        F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"), "bucket"
-    )
+    q, c = split(eb, q_cut)
+    # the (margin, plane) pairs sorted by margin; flip the narrowest first
     ms = F.sort_array(
         F.array(
             *[
-                F.struct(
-                    F.abs(F.col("pj")[j]).alias("m"), F.lit(j).alias("j")
-                )
+                F.struct(F.abs(F.col("q_pj")[j]).alias("m"), F.lit(j).alias("j"))
                 for j in range(4)
             ]
         )
     )
     flips = F.array(*[F.lit(1 << k) for k in range(4)])
-    qm = eb.filter(F.col("vec_id") < q_cut).withColumn("ms", ms)
-    probe_cols = [F.col("bucket")] + [
-        F.col("bucket").bitwiseXOR(
-            F.element_at(flips, F.col("ms").getItem(k).getField("j") + 1)
-        )
+    bkt = F.col("q_bucket")
+    probes = [bkt] + [
+        bkt.bitwiseXOR(F.element_at(flips, ms.getItem(k).getField("j") + 1))
         for k in range(nprobe - 1)
     ]
-    q = qm.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("emb").alias("q_emb"),
-        F.explode(F.array(*probe_cols)).alias("bucket"),
-    )
-    cosine = dot_fold(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(dot_fold(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(dot_fold(F.col("c_emb"), F.col("c_emb")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        q.join(c, "bucket")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .withColumn("cosine", rnd(cosine))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    q = q.select("q_id", "q_v", "q_nrm", F.explode(F.array(*probes)).alias("q_bucket"))
+    pairs = q.join(
+        c, (F.col("c_bucket") == F.col("q_bucket")) & (F.col("c_id") != F.col("q_id"))
+    ).withColumn("cosine", rnd(cosine()))
+    return topk_per(pairs, 5, "cosine").select("q_id", "c_id", "cosine", "rn")
 
 
 @register("sim_cosine_ivf_nprobe", oracle=_nprobe_oracle(_NPROBE, _NPROBE_QCUT))
@@ -448,19 +347,13 @@ _ANN_INC_SCHEMA = "vec_id bigint, emb array<double>, src string, bucket int"
 
 
 def _ann_inc_bucketed(spark, sf_dir, src_filter, src_tag):
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull() & src_filter)
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-        )
-    )
-    xu = F.transform(
-        F.col("emb"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
-    )
-    return e.withColumn("src", F.lit(src_tag)).withColumn(
-        "bucket", ivf_bucket(xu)
+    e = vectors(spark, sf_dir, "embedding")
+    e = e.filter(F.col("embedding").isNotNull() & src_filter)
+    return e.select(
+        "vec_id",
+        F.col("v").alias("emb"),
+        F.lit(src_tag).alias("src"),
+        ivf_bucket(micro(F.col("v"))).alias("bucket"),
     )
 
 

@@ -131,12 +131,16 @@ def lsh_signatures_df(docs):
     # bit-exactness precondition.
     d = d.withColumn(
         "th", F.transform(F.col("toks"), lambda t: hex_int(F.md5(t), 7))
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     # ^ pin the hashed-token arrays: Catalyst collapses projections, so
     # without the checkpoint every one of the N_HASHES signature
     # columns would re-run the md5 pass over every token (32x the
     # corpus's most expensive scan work). One materialization, read by
-    # all 32 permutations and the verify stage.
+    # all 32 permutations and the verify stage. Eager: a lazy
+    # checkpoint is computed inside the query's own jobs, where AQE runs
+    # independent stages at once, and at 2x sf0.1 their tasks then
+    # reported to accumulators Spark had already dropped
+    # ("non-existent accumulator" errors; none with AQE off or here).
 
     def minhash(i):
         # 1-ary lambda: a 2-ary one would receive the array INDEX as its
@@ -519,22 +523,13 @@ def dedup_embcos(spark, sf_dir):
     sign-LSH bucketing from sim_cosine_ivf to make candidates an
     equi-join before this exact verify — same candidate/verify split as
     MinHash for text."""
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 300)
-        .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    )
-    a = e.select(F.col("vec_id").alias("a_id"), F.col("v").alias("a_v"))
-    b = e.select(F.col("vec_id").alias("b_id"), F.col("v").alias("b_v"))
+    from terasort_spark.operators.llm_similarity import cosine, side, vectors
 
-    from terasort_spark.operators.llm_similarity import dot_fold as dot
-
-    cos = dot(F.col("a_v"), F.col("b_v")) / (
-        F.sqrt(dot(F.col("a_v"), F.col("a_v"))) * F.sqrt(dot(F.col("b_v"), F.col("b_v")))
-    )
+    e = vectors(spark, sf_dir).filter(F.col("vec_id") < 300)
     return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .withColumn("cosine", rnd(cos))
+        side(e, "a")
+        .join(side(e, "b"), F.col("a_id") < F.col("b_id"))
+        .withColumn("cosine", rnd(cosine("a", "b")))
         .filter(F.col("cosine") >= 0.3)
         .select("a_id", "b_id", "cosine")
     )
@@ -1345,70 +1340,35 @@ def dedup_semantic(spark, sf_dir):
     MinHash-LSH banding (dedup_embcos is the unclustered exact slice;
     sim_cosine_ivf uses the same routing idea for search). Assignment
     broadcasts K vectors; ties break to the smaller centroid id.
-    Cosines round to 4dp via the shared dot_fold (bit-identical to
-    the oracle's list_sum twin), so the EXISTS set replays exactly."""
-    from terasort_spark.operators.llm_similarity import dot_fold
+    Cosines round to 4dp via the shared kernel's ``cosine`` (each norm
+    folded once per vector, bit-identical to the oracle's per-pair
+    list_sum twin), so the EXISTS set replays exactly."""
+    from terasort_spark.operators.llm_similarity import cosine, side, topk_per, vectors
 
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    cents = F.broadcast(
-        e.where(F.col("vec_id") < _SEM_K).select(
-            F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
-        )
-    )
-
-    # Precompute each vector's norm ONCE (sqrt of the same fold the
-    # oracle's per-pair recomputation runs — identical doubles, 1/3 the
-    # fold work in the pair join: dot only, not dot + two norms).
-    e = e.withColumn("nrm", F.sqrt(dot_fold(F.col("emb"), F.col("emb"))))
-    cents = F.broadcast(
-        cents.withColumn(
-            "cnrm", F.sqrt(dot_fold(F.col("cemb"), F.col("cemb")))
-        )
-    )
-
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("ccos"), F.asc("cent_id")
-    )
-    ccos = dot_fold(F.col("emb"), F.col("cemb")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
+    e = vectors(spark, sf_dir)
+    cents = F.broadcast(side(e.where(F.col("vec_id") < _SEM_K), "cent"))
+    routed = side(e, "a").crossJoin(cents).withColumn("ccos", rnd(cosine("a", "cent")))
     asg = (
-        e.crossJoin(cents)
-        .withColumn("ccos", rnd(ccos))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", F.col("cent_id").alias("cluster"), "emb", "nrm")
+        topk_per(routed, 1, "ccos", by="a_id", tie="cent_id")
+        .select(
+            F.col("a_id").alias("vec_id"),
+            F.col("cent_id").alias("cluster"),
+            F.col("a_v").alias("v"),
+            F.col("a_nrm").alias("nrm"),
+        )
         # materialize the assignment once: three downstream consumers
         # (both pair sides + the label read-off) would otherwise each
         # re-derive the centroid cross; at corpus scale the assignment
         # is a persisted table (the sink_ann_index pattern)
         .localCheckpoint(eager=True)
     )
-    a = asg.select(
-        F.col("vec_id").alias("a_id"),
-        "cluster",
-        F.col("emb").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-    )
-    b = asg.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("cluster").alias("b_cluster"),
-        F.col("emb").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-    )
-    pcos = dot_fold(F.col("a_emb"), F.col("b_emb")) / (
-        F.col("a_nrm") * F.col("b_nrm")
-    )
     dups = (
-        a.join(
-            b,
-            (F.col("cluster") == F.col("b_cluster"))
-            & (F.col("b_id") < F.col("a_id")),
+        side(asg, "a")
+        .join(
+            side(asg, "b"),
+            (F.col("a_cluster") == F.col("b_cluster")) & (F.col("b_id") < F.col("a_id")),
         )
-        .withColumn("pcos", rnd(pcos))
+        .withColumn("pcos", rnd(cosine("a", "b")))
         .where(F.col("pcos") >= _SEM_TAU)
         .select(F.col("a_id").alias("vec_id"))
         .distinct()

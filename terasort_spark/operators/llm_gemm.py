@@ -22,11 +22,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.operators.llm_similarity import COSINE_TOPK_ORACLE
+from terasort_spark.operators.llm_similarity import COSINE_TOPK_ORACLE, topk_per
 from terasort_spark.registry import register
 
 TOP_K = 5
@@ -108,9 +107,4 @@ def sim_cosine_gemm(spark, sf_dir):
     partials = e.select("vec_id", "embedding").mapInPandas(
         topk_per_batch, schema="q_id bigint, c_id bigint, cosine double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        partials.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    return topk_per(partials, TOP_K, "cosine").select("q_id", "c_id", "cosine", "rn")

@@ -4,6 +4,15 @@ majority-label classification, quantized retrieval (PQ, SQ8, binary
 codes), late-interaction MaxSim, edit distance and source-level MinHash
 sketches.
 
+The vector-similarity family (here, ann_index.py, llm_gemm.py and the
+retrieval metrics, dedups and pipelines that rank vectors) is built on
+one top-k kernel defined below ``dot_fold``: ``vectors`` reads the
+embeddings as doubles with each norm computed once, ``split`` broadcasts
+the query side, ``cosine`` is one fold per pair over those norms, and
+``topk_per`` is the one ranked tail (score descending, tie column
+ascending, ``rn <= k``). ``micro`` is the one 6dp micro-unit
+quantization behind the IVF hyperplanes, the PQ codebooks and k-means.
+
 Scale design: the declared queries are the exact baselines at corpus
 scale; the 100 TB path swaps the all-pairs step for the banded
 MinHash-LSH candidate join (llm_dedup.dedup_minhash) or an IVF-style
@@ -18,7 +27,6 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import hex_int, o_hex_int, o_rnd, rnd
-from terasort_spark.operators.llm_dedup import BUCKET_M, N_HASHES, PERM_A, PERM_B
 from terasort_spark.registry import register
 
 TAU = 0.9  # Jaccard threshold (p95 of the corpus pair distribution)
@@ -98,15 +106,79 @@ def sim_jaccard(spark, sf_dir):
 
 
 def dot_fold(x, y):
-    """THE dot-product fold every cosine operator (and its oracle's
-    list_sum twin) depends on bit-for-bit: a sequential left fold over
-    zip_with products with a 0.0 init. One definition — callers
-    (sim_cosine_topk/knn_label/sim_cosine_ivf/gemm verify/ml_mrr) must
-    import this rather than re-stating it, so the fold order/init can
-    never silently diverge between the index and its evaluator."""
+    """THE dot-product fold every cosine (and its oracle's list_sum
+    twin) depends on bit-for-bit: a sequential left fold over zip_with
+    products with a 0.0 init. Cosines reach it only through the top-k
+    kernel below (``norm`` and ``cosine``), so the fold order and init
+    can never diverge between an index and its evaluator."""
     return F.aggregate(
         F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
     )
+
+
+# ---------------------------------------------------------------------------
+# The top-k kernel of the vector-similarity family.
+
+
+def norm(v):
+    """L2 norm through the shared fold: the twin of norm_sql."""
+    return F.sqrt(dot_fold(v, v))
+
+
+def micro(v):
+    """6dp micro-units of a double array: floor(x * 1e6 + 0.5) per
+    element as int64, the exact integer coordinates the IVF
+    hyperplanes, PQ codebooks and k-means compute on."""
+    return F.transform(v, lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long"))
+
+
+def vectors(spark, sf_dir, *extra):
+    """The embeddings as (vec_id, *extra, v, nrm): ``v`` is the vector
+    cast to double and ``nrm`` its norm, computed once per vector rather
+    than once per pair. Null vectors stay: a query whose oracle reads
+    only non-null embeddings takes "embedding" as an extra column and
+    filters it, which Spark pushes into the parquet scan."""
+    v = F.transform("embedding", lambda x: x.cast("double"))
+    return (
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", *extra, v.alias("v"))
+        .withColumn("nrm", norm(F.col("v")))
+    )
+
+
+def side(df, tag):
+    """``df`` as one side of a pair join: vec_id becomes ``{tag}_id``
+    and every other column x becomes ``{tag}_x``."""
+    return df.select(
+        *[F.col(c).alias(f"{tag}_id" if c == "vec_id" else f"{tag}_{c}") for c in df.columns]
+    )
+
+
+def split(df, q_cut):
+    """(queries, candidates): the rows with vec_id < q_cut as the
+    broadcast ``q_`` side, every row as the ``c_`` side. The query side
+    is a bounded sample, so the candidates stream and are never the
+    build side."""
+    return F.broadcast(side(df.filter(F.col("vec_id") < q_cut), "q")), side(df, "c")
+
+
+def cosine(q="q", c="c", v="v", nrm="nrm"):
+    """dot_fold(q_v, c_v) / (q_nrm * c_nrm): one fold per pair. The
+    norms are the same sqrt(dot_fold) doubles COSINE_SQL recomputes per
+    pair, so the value is bit-identical to the oracle's form."""
+    return dot_fold(F.col(f"{q}_{v}"), F.col(f"{c}_{v}")) / (
+        F.col(f"{q}_{nrm}") * F.col(f"{c}_{nrm}")
+    )
+
+
+def topk_per(df, k, score, by="q_id", tie="c_id", rn="rn"):
+    """The ranked tail: number the rows of each ``by`` group by
+    ``score`` descending, then ``tie`` ascending, into ``rn`` and keep
+    rn <= k. The constant k lets Spark plan a WindowGroupLimit, so each
+    partition prunes to its local top-k before the exchange. ``score``
+    may be a Column (``-F.col("hamming")`` ranks ascending)."""
+    w = Window.partitionBy(by).orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
 
 
 def dot_sql(a, b):
@@ -162,34 +234,14 @@ def sim_cosine_topk(spark, sf_dir):
 
     Dot products via JVM higher-order functions (zip_with + aggregate)
     over double-cast elements — identical sequential fold order on both
-    engines, floor-rounded. The broadcast of the tiny query side means
+    engines, floor-rounded; one fold per pair, over norms folded once
+    per vector. The broadcast of the tiny query side means
     the candidate scan is a single pass, embarrassingly parallel; at
     1000× scale the same plan holds (queries broadcast, candidates
     partition-local top-k via the rn<=5 window group limit)."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-        )
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"))
-
-    dot = dot_fold
-
-    cosine = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        q.join(c, F.col("c_id") != F.col("q_id"))
-        .withColumn("cosine", rnd(cosine))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    q, c = split(vectors(spark, sf_dir), 10)
+    pairs = q.join(c, F.col("c_id") != F.col("q_id")).withColumn("cosine", rnd(cosine()))
+    return topk_per(pairs, 5, "cosine").select("q_id", "c_id", "cosine", "rn")
 
 
 @register(
@@ -221,38 +273,15 @@ def knn_label(spark, sf_dir):
     # Majority label among the 5 nearest neighbors; ties broken by the
     # smaller label id (explicit window, never mode() whose tie choice
     # is engine-arbitrary).
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
+    q, c = split(vectors(spark, sf_dir, "label"), 10)
+    pairs = q.join(c, F.col("c_id") != F.col("q_id")).withColumn("cosine", rnd(cosine()))
+    votes = (
+        topk_per(pairs, 5, "cosine")
+        .groupBy("q_id", F.col("c_label").alias("label"))
+        .agg(F.count(F.lit(1)).alias("n_votes"))
     )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-        )
-    )
-    c = e.select(
-        F.col("vec_id").alias("c_id"), F.col("label"), F.col("emb").alias("c_emb")
-    )
-
-    dot = dot_fold
-
-    cosine = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
-    )
-    w = Window.partitionBy("q_id").orderBy(rnd(cosine).desc(), F.asc("c_id"))
-    topk = (
-        q.join(c, F.col("c_id") != F.col("q_id"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-    )
-    votes = topk.groupBy("q_id", "label").agg(F.count(F.lit(1)).alias("n_votes"))
-    vw = Window.partitionBy("q_id").orderBy(F.desc("n_votes"), F.asc("label"))
-    return (
-        votes.withColumn("vr", F.row_number().over(vw))
-        .filter(F.col("vr") == 1)
-        .select("q_id", F.col("label").alias("knn_label"), "n_votes")
+    return topk_per(votes, 1, "n_votes", tie="label", rn="vr").select(
+        "q_id", F.col("label").alias("knn_label"), "n_votes"
     )
 
 
@@ -275,20 +304,28 @@ def ivf_projection(xu_col, j: int):
     )
 
 
+def ivf_bits(pj):
+    """IVF bucket id from the projection array ``pj``: bit j is set
+    when pj[j] > 0."""
+    out = None
+    for j in range(4):
+        bit = F.when(pj[j] > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        out = bit if out is None else out + bit
+    return out
+
+
+def ivf_projections(xu_col):
+    """The 4 hyperplane projections of ``xu_col`` as one array<long>."""
+    return F.array(*[ivf_projection(xu_col, j) for j in range(4)])
+
+
 def ivf_bucket(xu_col):
     """16-way IVF coarse quantizer: sign pattern of 4 integer mix32
     hyperplanes dotted against 6dp-quantized coordinates (``xu_col`` is
     an array<long>). Exact int64 in both engines — shared by
     sim_cosine_ivf and sink_ann_index (ann_index.py), twin of
     ivf_proj_sql."""
-    bits = [
-        F.when(ivf_projection(xu_col, j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        for j in range(4)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    return ivf_bits(ivf_projections(xu_col))
 
 
 # Shared oracle text for the IVF index: the bucket-assignment CTEs and
@@ -347,54 +384,18 @@ def sim_cosine_ivf(spark, sf_dir):
     reuses sim_cosine_topk's verified float-fold contract. Overflow:
     |x_u| ≤ 1e6, |h| ≤ 2^31 → per-term ≤ 2.2e15, ×64 terms ≤ 1.4e17
     < 2^63."""
-    from terasort_spark.sources.teragen import mix32
-
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-    xu = F.transform(
-        F.col("emb"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
-    )
-    eb = e.withColumn("bucket", ivf_bucket(xu))
+    eb = vectors(spark, sf_dir).withColumn("bucket", ivf_bucket(micro(F.col("v"))))
+    q, c = split(eb, 10)
     # multi-probe: each query probes its own bucket plus the 4 Hamming-1
     # neighbors — 5/16 of the space instead of 1/16, the standard
     # recall/cost dial (candidates stay single-bucket, so no dup pairs)
-    bkt = F.col("bucket")
-    q = (
-        eb.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("emb").alias("q_emb"),
-            F.explode(
-                F.array(
-                    bkt,
-                    bkt.bitwiseXOR(F.lit(1)),
-                    bkt.bitwiseXOR(F.lit(2)),
-                    bkt.bitwiseXOR(F.lit(4)),
-                    bkt.bitwiseXOR(F.lit(8)),
-                )
-            ).alias("bucket"),
-        )
-    )
-    c = eb.select(
-        F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"), "bucket"
-    )
-
-    dot = dot_fold
-
-    cosine = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        q.join(c, "bucket")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .withColumn("cosine", rnd(cosine))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    bkt = F.col("q_bucket")
+    probes = F.array(bkt, *[bkt.bitwiseXOR(F.lit(f)) for f in (1, 2, 4, 8)])
+    q = q.select("q_id", "q_v", "q_nrm", F.explode(probes).alias("q_bucket"))
+    pairs = q.join(
+        c, (F.col("c_bucket") == F.col("q_bucket")) & (F.col("c_id") != F.col("q_id"))
+    ).withColumn("cosine", rnd(cosine()))
+    return topk_per(pairs, 5, "cosine").select("q_id", "c_id", "cosine", "rn")
 
 
 _SHINGLES_SQL = (
@@ -924,17 +925,9 @@ def emb_kmeans(spark, sf_dir):
     Only K x dim centroid ints ever reach the driver per round;
     vectors never move. Empty clusters keep their previous centroid."""
     e = (
-        table(spark, sf_dir, "embeddings")
+        vectors(spark, sf_dir, "embedding")
         .filter(F.col("embedding").isNotNull())  # null vectors are unscoreable
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5)).cast(
-                    "long"
-                ),
-            ).alias("v"),
-        )
+        .select("vec_id", micro(F.col("v")).alias("v"))
     )
     # The base vectors are re-read KMEANS_ITER+2 times (init, one
     # assignment per Lloyd round, final assignment); materialize them
@@ -1223,89 +1216,43 @@ def sim_cosine_pq(spark, sf_dir):
     only (q_id, c_id, partial) triples with map-side combine. No
     all-pairs step anywhere. Candidate norms ride alongside the codes
     (exact), as real PQ indexes store them."""
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())  # null vectors are unscoreable
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-    )
     # quantized integer coordinates (6dp micro-units) drive training,
     # encoding and the ADC numerators; the float v drives norms and the
-    # exact re-rank
-    e = e.withColumn(
-        "vu",
-        F.transform(
-            F.col("v"), lambda x: F.floor(x * 1000000 + F.lit(0.5)).cast("long")
-        ),
-    )
+    # exact re-rank. Null vectors are unscoreable.
+    e = vectors(spark, sf_dir, "embedding").filter(F.col("embedding").isNotNull())
+    e = e.withColumn("vu", micro(F.col("v")))
     pq = pq_train_encode(spark, e, q_cut=10)
     if pq is None:  # empty corpus → no codebooks, not a crash
         return spark.createDataFrame(
             [], "q_id bigint, c_id bigint, cosine double, rn int"
         )
     _sub, codes, lut = pq
-
-    dot = dot_fold
-    norms = e.select("vec_id", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"))
+    q, c = split(e, 10)
     approx = (
         codes.join(lut, ["sub_id", "cid"])
         .groupBy("q_id", "c_id")
         .agg(F.sum("pdot").alias("adot"))
-        .join(norms.select(F.col("vec_id").alias("c_id"), F.col("nrm").alias("cnrm")), "c_id")
-        .join(
-            F.broadcast(
-                norms.filter(F.col("vec_id") < 10).select(
-                    F.col("vec_id").alias("q_id"), F.col("nrm").alias("qnrm")
-                )
-            ),
-            "q_id",
-        )
+        .join(c.select("c_id", "c_nrm"), "c_id")
+        .join(q.select("q_id", "q_nrm"), "q_id")
         .filter(F.col("c_id") != F.col("q_id"))
         # exact int adot (1e12 scale, < 2^53 so the double conversion is
         # exact) over IEEE norms — the same value in every engine
         .withColumn(
             "acos",
             (F.col("adot").cast("double") / F.lit(1000000000000.0))
-            / (F.col("qnrm") * F.col("cnrm")),
+            / (F.col("q_nrm") * F.col("c_nrm")),
         )
     )
     # ADC shortlist (top-32 by approximate cosine), then exact re-rank —
     # the standard PQ answer path: the quantized scan prunes 1e9 -> 32,
     # the exact pass reads only those 32 full vectors per query
-    wa = Window.partitionBy("q_id").orderBy(F.desc("acos"), F.asc("c_id"))
-    shortlist = (
-        approx.withColumn("arn", F.row_number().over(wa))
-        .filter(F.col("arn") <= 32)
-        .select("q_id", "c_id")
-    )
-    qv = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-        )
-    )
-    cv = e.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
+    shortlist = topk_per(approx, 32, "acos", rn="arn").select("q_id", "c_id")
     exact = (
-        shortlist.join(qv, "q_id")
-        .join(cv, "c_id")
-        .withColumn(
-            "cosine",
-            rnd(
-                dot(F.col("qv"), F.col("cv"))
-                / (
-                    F.sqrt(dot(F.col("qv"), F.col("qv")))
-                    * F.sqrt(dot(F.col("cv"), F.col("cv")))
-                )
-            ),
-        )
+        shortlist.join(q.select("q_id", "q_v", "q_nrm"), "q_id")
+        .join(c.select("c_id", "c_v", "c_nrm"), "c_id")
+        .withColumn("cosine", rnd(cosine()))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "c_id", "cosine", "rn")
-    )
+    return topk_per(exact, 5, "cosine").select("q_id", "c_id", "cosine", "rn")
 
 
 # ---------------------------------------------------------------------------
@@ -1369,6 +1316,23 @@ sq8_topk AS (
 )"""
 
 
+def sq8_vectors(spark, sf_dir):
+    """The non-null, non-zero vectors with their SQ8 sidecar: ``amax``
+    (max |v_i|) and the int8 code ``q8`` = round(v_i * 127 / amax).
+    Shared by sim_cosine_sq8 and its evaluator ml_ndcg, the Spark twin
+    of SQ8_CTES' ``sq``."""
+    return (
+        vectors(spark, sf_dir, "embedding")
+        .filter(F.col("embedding").isNotNull())
+        .withColumn("amax", F.array_max(F.transform("v", F.abs)))
+        .filter(F.col("amax") > 0)
+        .withColumn(
+            "q8",
+            F.transform("v", lambda x: F.floor(x * 127 / F.col("amax") + 0.5).cast("bigint")),
+        )
+    )
+
+
 @register(
     "sim_cosine_sq8",
     oracle=f"""
@@ -1394,61 +1358,18 @@ def sim_cosine_sq8(spark, sf_dir):
     shortlist — with the re-rank touching only shortlisted fp
     vectors. Estimator rank key is quantized to 6dp like the IVF/PQ
     family; re-rank and output round at the family-standard 4dp."""
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn("amax", F.array_max(F.transform("v", F.abs)))
-        .filter(F.col("amax") > 0)
-        .withColumn("nrm", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
-        .withColumn(
-            "q8",
-            F.transform(
-                "v",
-                lambda x: F.floor(x * 127 / F.col("amax") + 0.5).cast(
-                    "bigint"
-                ),
-            ),
-        )
+    q, c = split(sq8_vectors(spark, sf_dir), SQ8_QCUT)
+    est = (F.col("dot8") * F.col("q_amax") * F.col("c_amax")) / (
+        F.lit(16129.0) * F.col("q_nrm") * F.col("c_nrm")
     )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < SQ8_QCUT).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("amax").alias("aq"),
-            F.col("nrm").alias("nq"),
-            F.col("q8").alias("qq8"),
-        )
-    )
-    c = e.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("amax").alias("ac"),
-        F.col("nrm").alias("nc"),
-        F.col("q8").alias("cq8"),
-    )
-    dot8 = dot_fold(F.col("qq8"), F.col("cq8"))
-    est = (F.col("dot8") * F.col("aq") * F.col("ac")) / (
-        F.lit(16129.0) * F.col("nq") * F.col("nc")
-    )
-    w8 = Window.partitionBy("q_id").orderBy(F.desc("est6"), F.asc("c_id"))
-    short = (
+    pairs = (
         q.join(c, F.col("c_id") != F.col("q_id"))
-        .withColumn("dot8", dot8)
+        .withColumn("dot8", dot_fold(F.col("q_q8"), F.col("c_q8")))
         .withColumn("est6", rnd(est, nd=6))
-        .withColumn("rn8", F.row_number().over(w8))
-        .filter(F.col("rn8") <= _SQ8_SHORTLIST)
     )
-    cosine = dot_fold(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        short.withColumn("cosine", rnd(cosine))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= SQ8_TOPK)
-        .select("q_id", "c_id", "cosine", "rn")
+    short = topk_per(pairs, _SQ8_SHORTLIST, "est6", rn="rn8")
+    return topk_per(short.withColumn("cosine", rnd(cosine())), SQ8_TOPK, "cosine").select(
+        "q_id", "c_id", "cosine", "rn"
     )
 
 
@@ -1457,6 +1378,10 @@ def sim_cosine_sq8(spark, sf_dir):
 
 
 def _src_minhash_oracle() -> str:
+    # imported here, not at the top: llm_dedup's own oracles import this
+    # module, so either module can be imported first
+    from terasort_spark.operators.llm_dedup import BUCKET_M, N_HASHES, PERM_A, PERM_B
+
     h28 = o_hex_int("md5(t)", 7)
     mh_cols = ",\n         ".join(
         f"min((h * {PERM_A[i]} + {PERM_B[i]}) % {BUCKET_M}) AS mh{i}"
@@ -1519,6 +1444,8 @@ def sim_source_minhash(spark, sf_dir):
     token-level join of both corpora. The exact side here is the
     oracle's ground truth AND stays feasible because sources are few;
     at scale you keep only the sketch."""
+    from terasort_spark.operators.llm_dedup import BUCKET_M, N_HASHES, PERM_A, PERM_B
+
     st = (
         table(spark, sf_dir, "documents")
         .select(
@@ -1654,56 +1581,33 @@ def sim_maxsim(spark, sf_dir):
     window here: no ordering needed). At corpus scale the candidate
     set comes from an ANN prefilter (sim_cosine_ivf) and MaxSim
     re-ranks the shortlist — exactly how late-interaction systems
-    deploy; the 4dp-rounded per-token cosines reuse the shared
-    dot_fold, so the whole score replays in SQL."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    toks = e.select(
+    deploy; the 4dp-rounded per-token cosines are the kernel's
+    ``cosine`` over per-token norms, so the whole score replays in SQL."""
+    toks = vectors(spark, sf_dir).select(
         "vec_id",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(t).alias("t"),
-                        F.slice("emb", (t - 1) * _MS_DIM + 1, _MS_DIM).alias(
-                            "tv"
-                        ),
+                        F.slice("v", (t - 1) * _MS_DIM + 1, _MS_DIM).alias("v"),
                     )
                     for t in range(1, _MS_TOK + 1)
                 ]
             )
         ).alias("tok"),
-    ).select("vec_id", F.col("tok.t").alias("t"), F.col("tok.tv").alias("tv"))
-    q = F.broadcast(
-        toks.where(F.col("vec_id") < _MS_NQ).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("t").alias("qt"),
-            F.col("tv").alias("qv"),
-        )
     )
-    c = toks.where(F.col("vec_id") >= _MS_NQ).select(
-        F.col("vec_id").alias("c_id"), F.col("tv").alias("cv")
-    )
-    cos = dot_fold(F.col("qv"), F.col("cv")) / (
-        F.sqrt(dot_fold(F.col("qv"), F.col("qv")))
-        * F.sqrt(dot_fold(F.col("cv"), F.col("cv")))
-    )
+    toks = toks.select("vec_id", "tok.t", "tok.v").withColumn("nrm", norm(F.col("v")))
+    q, c = split(toks, _MS_NQ)
     tok_max = (
-        c.crossJoin(q)
-        .withColumn("cc", rnd(cos))
-        .groupBy("q_id", "c_id", "qt")
+        c.where(F.col("c_id") >= _MS_NQ)
+        .crossJoin(q)
+        .withColumn("cc", rnd(cosine()))
+        .groupBy("q_id", "c_id", "q_t")
         .agg(F.max("cc").alias("m"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("maxsim"), F.asc("c_id"))
-    return (
-        tok_max.groupBy("q_id", "c_id")
-        .agg(rnd(F.sum("m"), "maxsim"))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _MS_TOPK)
-        .select("q_id", "c_id", "maxsim", "rn")
-    )
+    scores = tok_max.groupBy("q_id", "c_id").agg(rnd(F.sum("m"), "maxsim"))
+    return topk_per(scores, _MS_TOPK, "maxsim").select("q_id", "c_id", "maxsim", "rn")
 
 
 # ---------------------------------------------------------------------------
@@ -1716,7 +1620,7 @@ _BIN_TOPK = 5
 def _bin_word(word: int):
     """Bits 32*word .. 32*word+31 of the sign code as one bigint."""
     return F.expr(
-        "aggregate(transform(sequence(0, 31), i -> IF(element_at(emb, "
+        "aggregate(transform(sequence(0, 31), i -> IF(element_at(v, "
         f"{32 * word} + i + 1) > 0D, shiftleft(cast(1 as bigint), i), "
         "cast(0 as bigint))), cast(0 as bigint), (a, x) -> a + x)"
     )
@@ -1771,36 +1675,18 @@ def sim_cosine_binary(spark, sf_dir):
     (sim_cosine_topk's plan). The code build is one whole-stage-
     codegen projection; at 100 TB codes ride in a 64x smaller column
     and the scan is bandwidth-bound at 8 bytes/vector."""
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    codes = e.select(
+    codes = vectors(spark, sf_dir).select(
         "vec_id", _bin_word(0).alias("h0"), _bin_word(1).alias("h1")
     )
-    q = F.broadcast(
-        codes.where(F.col("vec_id") < _BIN_NQ).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("h0").alias("q0"),
-            F.col("h1").alias("q1"),
-        )
-    )
-    c = codes.where(F.col("vec_id") >= _BIN_NQ).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("h0").alias("c0"),
-        F.col("h1").alias("c1"),
-    )
+    q, c = split(codes, _BIN_NQ)
     ham = (
-        F.bit_count(F.col("q0").bitwiseXOR(F.col("c0")))
-        + F.bit_count(F.col("q1").bitwiseXOR(F.col("c1")))
+        F.bit_count(F.col("q_h0").bitwiseXOR(F.col("c_h0")))
+        + F.bit_count(F.col("q_h1").bitwiseXOR(F.col("c_h1")))
     ).cast("bigint")
-    w = Window.partitionBy("q_id").orderBy(F.asc("hamming"), F.asc("c_id"))
-    return (
-        c.crossJoin(q)
-        .withColumn("hamming", ham)
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= _BIN_TOPK)
-        .select("q_id", "c_id", "hamming", "rn")
+    pairs = c.where(F.col("c_id") >= _BIN_NQ).crossJoin(q).withColumn("hamming", ham)
+    # nearest = smallest distance: rank on -hamming descending
+    return topk_per(pairs, _BIN_TOPK, -F.col("hamming")).select(
+        "q_id", "c_id", "hamming", "rn"
     )
 
 

@@ -32,9 +32,14 @@ from terasort_spark.operators.llm_similarity import (
     SQ8_CTES,
     SQ8_QCUT,
     SQ8_TOPK,
-    dot_fold,
+    cosine,
     dot_sql,
+    sim_cosine_ivf,
     sim_cosine_sq8,
+    split,
+    sq8_vectors,
+    topk_per,
+    vectors,
 )
 from terasort_spark.registry import register
 
@@ -756,35 +761,10 @@ def ml_mrr(spark, sf_dir):
     production), so the non-equi join is |Q| x n with a broadcast-able
     Q, not n². The system side reuses the bucketed IVF plan unchanged.
     The final scoring joins are |Q|-sized."""
-    from terasort_spark.operators.llm_similarity import sim_cosine_ivf
-
     sys_topk = sim_cosine_ivf(spark, sf_dir).select("q_id", "c_id", "rn")
-
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"))
-
-    from terasort_spark.operators.llm_similarity import dot_fold as dot
-
-    cosine = dot(F.col("q_emb"), F.col("c_emb")) / (
-        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    # broadcast the BOUNDED query sample (10 rows) so the non-equi join
-    # streams the candidate side — at 100 TB the candidates must never
-    # be the build side
-    exact = (
-        F.broadcast(q).join(c, F.col("c_id") != F.col("q_id"))
-        .withColumn("cosine", rnd(cosine))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 1)
-        .select("q_id", F.col("c_id").alias("true_c"))
-    )
+    q, c = split(vectors(spark, sf_dir), 10)
+    pairs = q.join(c, F.col("c_id") != F.col("q_id")).withColumn("cosine", rnd(cosine()))
+    exact = topk_per(pairs, 1, "cosine").select("q_id", F.col("c_id").alias("true_c"))
     hit = sys_topk.withColumnRenamed("c_id", "true_c")
     return exact.join(hit, ["q_id", "true_c"], "left").select(
         "q_id",
@@ -850,38 +830,10 @@ def ml_ndcg(spark, sf_dir):
     ml_mrr); the system side reuses sim_cosine_sq8's plan unchanged
     via the shared CTE/function, so index and metric cannot drift."""
     sys_topk = sim_cosine_sq8(spark, sf_dir).select("q_id", "c_id", "rn")
-
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn("amax", F.array_max(F.transform("v", F.abs)))
-        .filter(F.col("amax") > 0)
-        .withColumn("nrm", F.sqrt(dot_fold(F.col("v"), F.col("v"))))
-    )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < SQ8_QCUT).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("nq"),
-        )
-    )
-    c = e.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("nc"),
-    )
-    cosine = dot_fold(F.col("qv"), F.col("cv")) / (F.col("nq") * F.col("nc"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    exact = (
-        q.join(c, F.col("c_id") != F.col("q_id"))
-        .withColumn("cosine", rnd(cosine))
-        .withColumn("rn_x", F.row_number().over(w))
-        .filter(F.col("rn_x") <= SQ8_TOPK)
-        .select("q_id", "c_id", (F.lit(6) - F.col("rn_x")).alias("rel"))
+    q, c = split(sq8_vectors(spark, sf_dir), SQ8_QCUT)
+    pairs = q.join(c, F.col("c_id") != F.col("q_id")).withColumn("cosine", rnd(cosine()))
+    exact = topk_per(pairs, SQ8_TOPK, "cosine", rn="rn_x").select(
+        "q_id", "c_id", (F.lit(6) - F.col("rn_x")).alias("rel")
     )
     t6 = F.floor(
         F.coalesce(F.col("rel"), F.lit(0)) / F.log2(F.col("rn") + 1) * 1000000

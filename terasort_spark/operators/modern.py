@@ -333,40 +333,16 @@ def sim_cosine_mrl(spark, sf_dir):
     bounded at shortlist×n_queries rows regardless of corpus size. Both
     stages rank on floor-rounded cosines with c_id tie-breaks, so the
     shortlist boundary is deterministic across engines and partitionings."""
-    from pyspark.sql import Window
+    from terasort_spark.operators.llm_similarity import cosine, norm, split, topk_per, vectors
 
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
+    e = vectors(spark, sf_dir).withColumn("p", F.slice("v", 1, MRL_DIMS))
+    q, c = split(e.withColumn("pnrm", norm(F.col("p"))), 10)
+    pairs = q.join(c, F.col("c_id") != F.col("q_id")).withColumn(
+        "cos16", rnd(cosine(v="p", nrm="pnrm"))
     )
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-        )
-    )
-    c = e.select(F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"))
-
-    from terasort_spark.operators.llm_similarity import dot_fold as dot
-
-    def cos(x, y):
-        return dot(x, y) / (F.sqrt(dot(x, x)) * F.sqrt(dot(y, y)))
-
-    from terasort_spark.operators._util import rnd
-
-    pre_q = F.slice("q_emb", 1, MRL_DIMS)
-    pre_c = F.slice("c_emb", 1, MRL_DIMS)
-    w16 = Window.partitionBy("q_id").orderBy(F.desc("cos16"), F.asc("c_id"))
-    shortlist = (
-        q.join(c, F.col("c_id") != F.col("q_id"))
-        .withColumn("cos16", rnd(cos(pre_q, pre_c)))
-        .withColumn("rn16", F.row_number().over(w16))
-        .filter(F.col("rn16") <= MRL_SHORTLIST)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        shortlist.withColumn("cosine", rnd(cos(F.col("q_emb"), F.col("c_emb"))))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "c_id", "cosine", "rn")
+    shortlist = topk_per(pairs, MRL_SHORTLIST, "cos16", rn="rn16")
+    return topk_per(shortlist.withColumn("cosine", rnd(cosine())), 5, "cosine").select(
+        "q_id", "c_id", "cosine", "rn"
     )
 
 

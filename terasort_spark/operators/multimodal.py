@@ -36,21 +36,12 @@ JOIN embeddings e ON d.doc_id = e.vec_id
 def multimodal_join(spark, sf_dir):
     # Text + vector fused record: equi join on the shared key, flat
     # scalar projection (D5 — no raw array column in the hashed output).
+    from terasort_spark.operators.llm_similarity import vectors
+
     d = table(spark, sf_dir, "documents")
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform("emb", lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    e = vectors(spark, sf_dir, "label")
     return d.join(e, d.doc_id == e.vec_id).select(
-        "doc_id", "lang", "n_chars", "label", rnd(norm, "emb_norm")
+        "doc_id", "lang", "n_chars", "label", rnd(F.col("nrm"), "emb_norm")
     )
 
 

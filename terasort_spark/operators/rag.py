@@ -15,7 +15,6 @@ batch-embed of multimodal.py / llm_gemm.py), none of the plan shape.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
@@ -119,6 +118,8 @@ def pipeline_rag_retrieval(spark, sf_dir):
     map-side even though query_id is low-cardinality — the same bound
     an ANN serving tier guarantees. Brute-force scoring is the declared
     baseline; the bucketed scale path is sim_cosine_ivf/pq/mrl."""
+    from terasort_spark.operators.llm_similarity import topk_per
+
     d = table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
@@ -160,73 +161,17 @@ def pipeline_rag_retrieval(spark, sf_dir):
     cos = F.col("dot").cast("double") / (
         F.sqrt(F.col("qq")) * F.sqrt(F.col("cc"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "chunk_id")
-    return (
+    scored = (
         dots.join(F.broadcast(q_norm), "query_id")
         .join(chunk_norm, "chunk_id")
         .select("query_id", "chunk_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+    )
+    return (
+        topk_per(scored, TOP_K, "cos", by="query_id", tie="chunk_id", rn="rank")
         .select(
             "query_id",
             "chunk_id",
             F.col("rank").cast("bigint").alias("rank"),
             rnd(F.col("cos"), "cosine"),
         )
-    )
-
-
-@register(
-    "win_gaps_islands",
-    oracle="""
-WITH days AS (
-    SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-    FROM events
-),
-grp AS (
-    SELECT user_id, day,
-           day - CAST(row_number() OVER (PARTITION BY user_id ORDER BY day)
-                      AS INTEGER) AS island
-    FROM days
-),
-islands AS (
-    SELECT user_id, island, count(*) AS len
-    FROM grp GROUP BY user_id, island
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_islands,
-       CAST(max(len) AS BIGINT) AS longest_streak,
-       CAST(sum(len) AS BIGINT) AS active_days
-FROM islands GROUP BY user_id
-""",
-)
-def win_gaps_islands(spark, sf_dir):
-    """Gaps-and-islands: per user, collapse distinct activity days into
-    runs of consecutive days (day minus its per-user rank is constant
-    within a run — the classic SQL islands trick), reporting streak
-    count, longest streak and total active days — the engagement-streak
-    metric every activity dashboard computes.
-
-    Scale: distinct days is one (user_id, day)-keyed aggregation; the
-    rank window and both rollups are partitioned by user_id —
-    high-cardinality, bounded per-user state. No self-join over the
-    event log (the naive day-to-next-day join would be quadratic in
-    active days)."""
-    ev = table(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).distinct()
-    w = Window.partitionBy("user_id").orderBy("day")
-    grp = days.select(
-        "user_id",
-        "day",
-        F.date_sub("day", F.row_number().over(w)).alias("island"),
-    )
-    islands = grp.groupBy("user_id", "island").agg(
-        F.count(F.lit(1)).alias("len")
-    )
-    return islands.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_islands"),
-        F.max("len").cast("bigint").alias("longest_streak"),
-        F.sum("len").cast("bigint").alias("active_days"),
     )

@@ -287,3 +287,59 @@ def win_ignorenulls(spark, sf_dir):
         F.last("v", ignorenulls=True).over(ordered).alias("fill_fwd"),
         F.nth_value("v", 2, ignoreNulls=True).over(full).alias("second_v"),
     )
+
+
+@register(
+    "win_gaps_islands",
+    oracle="""
+WITH days AS (
+    SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
+    FROM events
+),
+grp AS (
+    SELECT user_id, day,
+           day - CAST(row_number() OVER (PARTITION BY user_id ORDER BY day)
+                      AS INTEGER) AS island
+    FROM days
+),
+islands AS (
+    SELECT user_id, island, count(*) AS len
+    FROM grp GROUP BY user_id, island
+)
+SELECT user_id,
+       CAST(count(*) AS BIGINT) AS n_islands,
+       CAST(max(len) AS BIGINT) AS longest_streak,
+       CAST(sum(len) AS BIGINT) AS active_days
+FROM islands GROUP BY user_id
+""",
+)
+def win_gaps_islands(spark, sf_dir):
+    """Gaps-and-islands: per user, collapse distinct activity days into
+    runs of consecutive days (day minus its per-user rank is constant
+    within a run — the classic SQL islands trick), reporting streak
+    count, longest streak and total active days — the engagement-streak
+    metric every activity dashboard computes.
+
+    Scale: distinct days is one (user_id, day)-keyed aggregation; the
+    rank window and both rollups are partitioned by user_id —
+    high-cardinality, bounded per-user state. No self-join over the
+    event log (the naive day-to-next-day join would be quadratic in
+    active days)."""
+    ev = table(spark, sf_dir, "events")
+    days = ev.select(
+        "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
+    ).distinct()
+    w = Window.partitionBy("user_id").orderBy("day")
+    grp = days.select(
+        "user_id",
+        "day",
+        F.date_sub("day", F.row_number().over(w)).alias("island"),
+    )
+    islands = grp.groupBy("user_id", "island").agg(
+        F.count(F.lit(1)).alias("len")
+    )
+    return islands.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_islands"),
+        F.max("len").cast("bigint").alias("longest_streak"),
+        F.sum("len").cast("bigint").alias("active_days"),
+    )

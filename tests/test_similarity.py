@@ -445,3 +445,27 @@ def test_sq8_shortlist_is_bounded(spark, sf_dir):
     for qid, rns in per.items():
         assert sorted(rns) == list(range(1, len(rns) + 1))
         assert len(rns) <= 5
+
+
+def test_one_cosine_topk_kernel():
+    """The vector-similarity family has one cosine and one ranked tail:
+    the top-k kernel in operators/llm_similarity.py (``norm``,
+    ``cosine``, ``topk_per``). That module folds a norm in one place,
+    and no other operator module folds its own norm or opens its own
+    q_id-partitioned window, so the copies cannot grow back."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ops = os.path.join(root, "terasort_spark", "operators")
+    copies = ("F.sqrt(dot_fold(", 'Window.partitionBy("q_id")')
+    bad = []
+    for dirpath, _, files in os.walk(ops):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                src = fh.read()
+            if os.path.relpath(path, ops) == "llm_similarity.py":
+                assert src.count(copies[0]) == 1, "one norm fold, in norm()"
+                continue
+            bad += [f"{os.path.relpath(path, root)}: {c}" for c in copies if c in src]
+    assert not bad, bad
