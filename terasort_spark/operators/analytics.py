@@ -382,7 +382,7 @@ def emb_norm_stats(spark, sf_dir):
         F.lit(0.0),
         lambda a, v: a + v,
     )
-    nrm = F.floor(F.sqrt(sq) * 1000000 + F.lit(0.5)) / 1000000
+    nrm = rnd(F.sqrt(sq), nd=6)
     norms = e.select("label", nrm.alias("nrm"))
     return norms.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
@@ -587,7 +587,7 @@ def agg_entropy(spark, sf_dir):
         .withColumn("n", F.sum("c").over(Window.partitionBy("lang")))
     )
     p = F.col("c").cast("double") / F.col("n")
-    plogp_q6 = F.floor(-p * F.log(p) * 1000000 + F.lit(0.5)) / 1000000
+    plogp_q6 = rnd(-p * F.log(p), nd=6)
     return tf.groupBy("lang").agg(
         F.max("n").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
@@ -796,7 +796,7 @@ def agg_gini(spark, sf_dir):
     return agg.select(
         "source",
         F.col("n").alias("n_docs"),
-        (F.floor(gini * 1000000 + F.lit(0.5)) / 1000000).alias("gini"),
+        rnd(gini, "gini", nd=6),
     )
 
 
@@ -855,10 +855,9 @@ def text_zipf_fit(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     rank = F.row_number().over(Window.orderBy(F.col("n").desc(), "word"))
-    q6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000  # noqa: E731
     pts = counts.select(
-        q6(F.log(rank.cast("double"))).alias("x"),
-        q6(F.log(F.col("n").cast("double"))).alias("y"),
+        rnd(F.log(rank.cast("double")), "x", nd=6),
+        rnd(F.log(F.col("n").cast("double")), "y", nd=6),
     )
     s = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import dsum, o_dsum, o_rnd, rnd
+from terasort_spark.operators.sketches import bloom_words
 from terasort_spark.registry import register
 
 
@@ -537,40 +538,30 @@ _BLOOM_HASHES = 3
 def bloom_prefilter(probe, probe_key: str, build, build_key: str):
     """Filter `probe` to rows whose `probe_key` MIGHT appear in
     `build.build_key`, via a distributed Bloom filter: K xxhash64
-    positions per build key OR'd into 64-bit words (bounded,
-    partial-aggregatable state), shipped as a one-row broadcast map,
-    tested with pure codegen bit expressions. No false negatives;
-    false positives bounded by the M/K geometry — callers follow with
-    an exact join. The one-row cross join necessarily prints as a
-    BroadcastNestedLoopJoin; it moves M/8 bytes, not data."""
-    pos = [
-        F.pmod(F.xxhash64(F.col(build_key), F.lit(i)), F.lit(_BLOOM_BITS))
-        for i in range(_BLOOM_HASHES)
-    ]
-    words = (
-        build.select(F.explode(F.array(*pos)).alias("pos"))
-        .select(
-            F.expr("pos DIV 64").alias("word_idx"),
-            F.expr("CAST(pos % 64 AS INT)").alias("bit"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or(F.expr("shiftleft(1L, bit)")).alias("w"))
-    )
-    bloom = words.agg(
-        F.map_from_arrays(
-            F.collect_list("word_idx"), F.collect_list("w")
-        ).alias("bf")
+    positions per build key OR'd into 32-bit words by the Bloom kernel
+    (sketches.bloom_words — bounded, partial-aggregatable state),
+    shipped as a one-row broadcast map, tested with pure codegen bit
+    expressions. No false negatives; false positives bounded by the
+    M/K geometry — callers follow with an exact join. The one-row
+    cross join necessarily prints as a BroadcastNestedLoopJoin; it
+    moves M/8 bytes, not data, and drops probe rows before any
+    shuffle."""
+
+    def pos(key: str):
+        return [
+            F.pmod(F.xxhash64(F.col(key), F.lit(i)), F.lit(_BLOOM_BITS))
+            for i in range(_BLOOM_HASHES)
+        ]
+
+    bloom = bloom_words(build, pos(build_key)).agg(
+        F.map_from_arrays(F.collect_list("word"), F.collect_list("bits")).alias("bf")
     )
     pre = probe.crossJoin(F.broadcast(bloom))
-    for i in range(_BLOOM_HASHES):
-        pre = pre.withColumn(
-            f"_p{i}",
-            F.pmod(F.xxhash64(F.col(probe_key), F.lit(i)), F.lit(_BLOOM_BITS)),
-        ).where(
+    for i, p in enumerate(pos(probe_key)):
+        pre = pre.withColumn(f"_p{i}", p).where(
             F.expr(
-                f"element_at(bf, _p{i} DIV 64) IS NOT NULL AND "
-                f"(shiftright(element_at(bf, _p{i} DIV 64), "
-                f"CAST(_p{i} % 64 AS INT)) & 1) = 1"
+                f"(shiftright(element_at(bf, shiftright(_p{i}, 5)), "
+                f"CAST(_p{i} % 32 AS INT)) & 1) = 1"
             )
         )
     return pre.drop("bf", *[f"_p{i}" for i in range(_BLOOM_HASHES)])
@@ -601,11 +592,11 @@ def join_bloom(spark, sf_dir):
     expressions are internal-only in 4.1), built here from public
     building blocks, all JVM-side:
       build:  K positions per key via xxhash64(key, seed) mod M,
-              OR'd into 64-bit words (`bit_or` over `shiftleft`) —
-              partial-aggregatable state, bounded by M bits no matter
-              how many keys;
-      ship:   the <=M/64-entry (word_idx -> word) map broadcast as a
-              one-row cross join (4 KB at M=2^15);
+              OR'd into 32-bit words by the Bloom kernel
+              (sketches.bloom_words) — partial-aggregatable state,
+              bounded by M bits no matter how many keys;
+      ship:   the <=M/32-entry (word -> bits) map broadcast as a
+              one-row cross join (4 KB of bits at M=2^15);
       probe:  K bit tests per row — pure codegen, no shuffle, no UDF.
 
     100 TB: build-side state is M bits regardless of cardinality;

@@ -29,6 +29,7 @@ from terasort_spark.operators._util import (
     scoped_confs,
     scratch_dir,
 )
+from terasort_spark.operators.sketches import bloom_bits_set, bloom_words
 from terasort_spark.registry import register
 
 N_HASHES = 32  # minhash signature length
@@ -795,7 +796,7 @@ def dedup_probabilistic(spark, sf_dir):
     true duplicates. Output = every admitted (new) doc with its batch
     keep-id, copy count, and which path admitted it.
 
-    Oracle-replayed BITMAP: bit positions are 16 md5 bits of (h || '#k')
+    Oracle-replayed BITMAP: bit positions are 32 md5 bits of (h || '#k')
     mod M, the words are bit_or aggregates — both engines build the
     identical filter, so the fast/verified routing itself is
     hash-checked, not just the final admitted set (join_bloom's oracle,
@@ -841,56 +842,18 @@ def dedup_probabilistic(spark, sf_dir):
             F.count(F.lit(1)).cast("bigint").alias("n_copies"),
         )
     )
-    # build: K positions per existing hash, OR'd into 32-bit words held
-    # in longs — bounded state (256 rows) whatever the corpus size
-    epos = existing.crossJoin(F.broadcast(mm)).select(
-        F.explode(
-            F.array(
-                *[
-                    _bloom_pos_spark(F.col("h"), k, F.col("m"))
-                    for k in range(BLOOM_K)
-                ]
-            )
-        ).alias("p")
-    )
-    words = epos.groupBy(
-        (F.col("p") / BLOOM_W).cast("long").alias("widx")
-    ).agg(
-        F.bit_or(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(p % {BLOOM_W} AS INT))")
-        ).alias("w")
-    )
-    # probe: K bit tests per batch hash against the broadcast words map
-    bpos = batch.crossJoin(F.broadcast(mm)).select(
-        "h",
-        F.explode(
-            F.array(
-                *[
-                    _bloom_pos_spark(F.col("h"), k, F.col("m"))
-                    for k in range(BLOOM_K)
-                ]
-            )
-        ).alias("p"),
-    )
-    hit = F.col("w").isNotNull() & (
-        F.expr(f"shiftright(w, CAST(p % {BLOOM_W} AS INT))").bitwiseAND(F.lit(1))
-        == 1
-    )
-    probe = (
-        bpos.join(
-            F.broadcast(words),
-            (F.col("p") / BLOOM_W).cast("long") == F.col("widx"),
-            "left",
-        )
-        .groupBy("h")
-        .agg(F.bool_and(hit).alias("might"))
-    )
+    # build: K positions per existing hash, OR'd into 32-bit words —
+    # bounded state (M/32 rows) whatever the corpus size; probe: K bit
+    # tests per batch hash against the broadcast words
+    pos = [_bloom_pos_spark(F.col("h"), k, F.col("m")) for k in range(BLOOM_K)]
+    words = bloom_words(existing.crossJoin(F.broadcast(mm)), pos)
+    probe = bloom_bits_set(batch.crossJoin(F.broadcast(mm)), "h", pos, words)
     gated = batch.join(probe, "h")
     # fast path: Bloom miss == PROOF of novelty, no corpus join
-    fast = gated.filter(~F.col("might")).withColumn("path", F.lit("fast"))
+    fast = gated.filter(F.col("nbits") < BLOOM_K).withColumn("path", F.lit("fast"))
     # suspected dups: exact anti-join clears the false positives
     verified = (
-        gated.filter(F.col("might"))
+        gated.filter(F.col("nbits") == BLOOM_K)
         .join(existing, "h", "left_anti")
         .withColumn("path", F.lit("verified"))
     )
@@ -1517,44 +1480,10 @@ def dedup_bloom_ingest(spark, sf_dir):
     d = table(spark, sf_dir, "documents").select(
         "doc_id", F.md5(F.lower("text")).alias("h")
     )
-    standing = d.where(F.col("doc_id") < _BI_SPLIT)
-    build = standing.select(
-        F.explode(
-            F.array(*[_bi_pos(F.col("h"), i) for i in range(_BI_K)])
-        ).alias("p")
-    )
-    words = (
-        build.select(
-            F.shiftright("p", 5).alias("word"),
-            F.expr("shiftleft(cast(1 as bigint), cast(p % 32 as int))").alias(
-                "mask"
-            ),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
+    pos = [_bi_pos(F.col("h"), i) for i in range(_BI_K)]
+    words = bloom_words(d.where(F.col("doc_id") < _BI_SPLIT), pos)
     batch = d.where(F.col("doc_id") >= _BI_SPLIT)
-    probe = batch.select(
-        "doc_id",
-        F.explode(
-            F.array(*[_bi_pos(F.col("h"), i) for i in range(_BI_K)])
-        ).alias("p"),
-    )
-    hits = (
-        probe.withColumn("word", F.shiftright("p", 5))
-        .join(F.broadcast(words), "word", "left")
-        .withColumn(
-            "bit_set",
-            (
-                F.col("bits").bitwiseAND(
-                    F.expr("shiftleft(cast(1 as bigint), cast(p % 32 as int))")
-                )
-                != 0
-            ).cast("int"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("bit_set").alias("nbits"))
-    )
+    hits = bloom_bits_set(batch, "doc_id", pos, words)
     return batch.join(hits, "doc_id").select(
         "doc_id", (F.col("nbits") < _BI_K).alias("admitted")
     )

@@ -465,7 +465,7 @@ def ml_stump(spark, sf_dir):
     return (
         splits.select(
             F.col("threshold").cast("bigint").alias("threshold"),
-            (F.floor(wgini * 1000000 + F.lit(0.5)) / 1000000).alias("wgini"),
+            rnd(wgini, "wgini", nd=6),
             F.col("ln_").cast("bigint").alias("n_left"),
             F.col("rn_").cast("bigint").alias("n_right"),
         )
@@ -1140,10 +1140,7 @@ def ml_tree_depth2(spark, sf_dir):
             .select(
                 "node",
                 F.col("x").cast("bigint").alias("threshold"),
-                (
-                    F.floor(F.col("wgini_raw") * 1000000 + F.lit(0.5))
-                    / 1000000
-                ).alias("wgini"),
+                rnd(F.col("wgini_raw"), "wgini", nd=6),
                 F.col("ln_").cast("bigint").alias("n_left"),
                 (F.col("n") - F.col("ln_")).cast("bigint").alias("n_right"),
             )

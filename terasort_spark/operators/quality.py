@@ -576,7 +576,7 @@ def text_dsir_weights(spark, sf_dir):
     )
     lr = buckets.select(
         "b",
-        (F.floor(logratio * 1000000 + F.lit(0.5)) / 1000000).alias("logratio"),
+        rnd(logratio, "logratio", nd=6),
     )
     docb = occ.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("c"))
     return (

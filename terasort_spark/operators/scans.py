@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
 from terasort_spark.operators._util import dsum, o_dsum, rnd, scratch_dir
+from terasort_spark.operators.sketches import bloom_bits_set, bloom_words
 from terasort_spark.registry import register
 from terasort_spark.sources.snapshots import delete_keys, read_snapshot, write_version
 from terasort_spark.sources.teragen import mix32, mix32_sql
@@ -551,8 +552,6 @@ _BLOOM_PROBES = (1, 2, 3, 900000007, 900000008, 900000009)
 
 
 def _bloom_pos_sql(key: str, j: str) -> str:
-    from terasort_spark.sources.teragen import mix32_sql
-
     return (
         f"CAST({mix32_sql(f'((({key}) % 134217728) * {_BLOOM_K} + ({j}))')} "
         f"% mbits AS BIGINT)"
@@ -560,8 +559,6 @@ def _bloom_pos_sql(key: str, j: str) -> str:
 
 
 def _bloom_oracle() -> str:
-    from terasort_spark.sources.teragen import mix32_sql
-
     probes = ", ".join(f"({p})" for p in _BLOOM_PROBES)
     in_list = ", ".join(str(p) for p in _BLOOM_PROBES)
     return f"""
@@ -623,17 +620,16 @@ def scan_bloom_skip(spark, sf_dir):
     Emits per probe the candidate-bucket count (the prune, bit-exactly
     replayed by the oracle) and the rows found by the pruned scan
     (== the true count — Bloom's no-false-negative guarantee, enforced
-    by the hash grade). Scale honesty: the bitmap NEVER rides through
-    the driver — candidate qualification is a relational join of the
-    {len(_BLOOM_PROBES)}x{_BLOOM_K} probe-position table against the
-    words relation, and only the per-probe candidate lists (bounded by
-    probes x buckets) are collected to parameterize the pruned scans,
-    exactly how a planner consumes file-skip metadata. The bitmap
-    scales at ~10 bits/key like Parquet/Iceberg bloom footers and
-    lives with the data, so the false-positive rate (~1%) holds at
-    100 TB instead of saturating a fixed-size filter."""
-    from terasort_spark.sources.teragen import mix32
-
+    by the hash grade). Build and probe are the Bloom kernel
+    (sketches.bloom_words / bloom_bits_set, by bucket): the words
+    relation broadcasts into one hash join against the
+    {len(_BLOOM_PROBES)}x{_BLOOM_K} probe-position table, and only the
+    per-probe candidate lists (bounded by probes x buckets) are
+    collected to parameterize the pruned scans, exactly how a planner
+    consumes file-skip metadata. The bitmap scales at ~10 bits/key
+    like Parquet/Iceberg bloom footers, so the false-positive rate
+    (~1%) holds at every scale instead of saturating a fixed-size
+    filter; the broadcast grows with it, one row per 32 filter bits."""
     out = scratch_dir(spark, "bloom_skip")
     shutil.rmtree(out, ignore_errors=True)
     staged = table(spark, sf_dir, "orders").select(
@@ -661,48 +657,24 @@ def scan_bloom_skip(spark, sf_dir):
             % F.col("mbits")
         ).cast("bigint")
 
-    expl = staged.crossJoin(F.broadcast(params)).select(
-        "bucket",
-        F.explode(
-            F.array(*[pos_col(F.col("k"), j) for j in range(_BLOOM_K)])
-        ).alias("pos"),
-    )
-    words = (
-        expl.select(
-            "bucket",
-            F.expr("pos DIV 32").alias("word"),
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
-            ).alias("mask"),
-        )
-        .groupBy("bucket", "word")
-        .agg(F.expr("bit_or(mask)").alias("bits"))
+    words = bloom_words(
+        staged.crossJoin(F.broadcast(params)),
+        [pos_col(F.col("k"), j) for j in range(_BLOOM_K)],
+        by=("bucket",),
     )
     probes_df = spark.createDataFrame(
         [(p,) for p in _BLOOM_PROBES], "p bigint"
     )
-    ppos = probes_df.crossJoin(F.broadcast(params)).select(
-        "p",
-        F.explode(
-            F.array(*[pos_col(F.col("p"), j) for j in range(_BLOOM_K)])
-        ).alias("pos"),
-    )
     # bounded collect: per-probe candidate lists (<= probes x buckets
-    # rows) — the bitmap itself stays distributed
+    # rows)
     cand_rows = (
-        F.broadcast(ppos)
-        .join(
+        bloom_bits_set(
+            probes_df.crossJoin(F.broadcast(params)),
+            "p",
+            [pos_col(F.col("p"), j) for j in range(_BLOOM_K)],
             words,
-            (F.col("word") == F.expr("pos DIV 32"))
-            & (
-                F.expr(
-                    "bits & shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
-                )
-                != 0
-            ),
+            by=("bucket",),
         )
-        .groupBy("p", "bucket")
-        .agg(F.count(F.lit(1)).alias("nbits"))
         .filter(F.col("nbits") == _BLOOM_K)
         .select("p", "bucket")
         .collect()

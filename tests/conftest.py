@@ -34,17 +34,21 @@ _SLOW_TESTS = {
 }
 
 
-# The degenerate-corpus cases of the queries built on the similarity
-# top-k kernel (operators/llm_similarity.py: vectors, split, cosine,
-# topk_per) stay in the default tier: the empty and the NULL-heavy
-# corpus are where a shared loader or ranked tail would break every
-# caller at once.
+# The degenerate-corpus cases of the queries built on a shared kernel
+# stay in the default tier: the similarity top-k kernel
+# (operators/llm_similarity.py: vectors, split, cosine, topk_per) and
+# the Bloom kernel (operators/sketches.py: bloom_words,
+# bloom_bits_set). The empty and the NULL-heavy corpus are where a
+# shared loader, ranked tail or bit count would break every caller at
+# once.
 _KERNEL_QUERIES = {
     "dedup_embcos", "dedup_semantic", "emb_kmeans", "knn_label", "ml_mrr",
     "ml_ndcg", "multimodal_join", "pipeline_rag_retrieval", "sim_cosine_binary",
     "sim_cosine_gemm", "sim_cosine_ivf", "sim_cosine_ivf_nprobe",
     "sim_cosine_ivfpq", "sim_cosine_mrl", "sim_cosine_pq", "sim_cosine_sq8",
     "sim_cosine_topk", "sim_maxsim", "sink_ann_incremental", "sink_ann_index",
+    "agg_bloom_filter", "dedup_bloom_ingest", "dedup_probabilistic",
+    "join_bloom", "scan_bloom_skip",
 }
 
 

@@ -1,15 +1,22 @@
 """Mergeable sketch aggregates (terasort_spark/operators/sketches.py):
 merge associativity, no-false-negative and never-undercount bounds,
-per-user replays against exact Python, and quantile-histogram bins."""
+per-user replays against exact Python, quantile-histogram bins, and the
+one Bloom kernel."""
 
 from __future__ import annotations
 
 import math
+import os
+import re
+import shutil
 
+import duckdb
 from pyspark.sql import functions as F
 
 from terasort_spark.catalog import table
-from terasort_spark.registry import queries
+from terasort_spark.compare import compare_query
+from terasort_spark.operators.llm_dedup import _BI_SPLIT
+from terasort_spark.registry import oracle_sql, queries
 
 _Q = queries()
 
@@ -79,6 +86,60 @@ def test_bloom_probe_is_deterministic(spark, sf_dir):
     a = sorted(map(tuple, _Q["agg_bloom_filter"](spark, sf_dir).collect()))
     b = sorted(map(tuple, _Q["agg_bloom_filter"](spark, sf_dir).collect()))
     assert a == b
+
+
+def test_bloom_probe_counts_empty_words_as_zero(spark, sf_dir, tmp_path):
+    """A probe key whose words hold no set bit counts 0 bits, not NULL,
+    as the oracles' ``count(*) FILTER`` does. With ``orders`` cut to
+    its first row and ``documents`` to doc_id 0 plus the batch, most
+    probe keys of agg_bloom_filter and dedup_bloom_ingest meet only
+    empty words, and both must still match their oracles."""
+    cut = {
+        "orders": "LIMIT 1",
+        "documents": f"WHERE doc_id = 0 OR doc_id >= {_BI_SPLIT}",
+    }
+    with duckdb.connect() as con:
+        for f in os.listdir(sf_dir):
+            src, dst = os.path.join(sf_dir, f), str(tmp_path / f)
+            where = cut.get(f.removesuffix(".parquet"))
+            if where is None:
+                shutil.copy(src, dst)
+            else:
+                con.execute(
+                    f"COPY (SELECT * FROM read_parquet('{src}') {where}) "
+                    f"TO '{dst}' (FORMAT PARQUET)"
+                )
+    oracles = oracle_sql()
+    for name in ("agg_bloom_filter", "dedup_bloom_ingest"):
+        res = compare_query(name, _Q[name], oracles[name], spark, str(tmp_path))
+        assert res.ok, str(res)
+
+
+def test_one_bloom_kernel():
+    """Bloom words have one build: the kernel in operators/sketches.py
+    (``bloom_words``, ``bloom_bits_set``). No other operator module ORs
+    a ``shiftleft(1, ...)`` mask with ``bit_or``, so the copies cannot
+    grow back. (The oracles write their masks with ``<<``.)"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ops = os.path.join(root, "terasort_spark", "operators")
+    mask = re.compile(
+        r"shiftleft\(\s*(F\.lit\(\s*)?(cast\(\s*1\s+as\s+bigint\s*\)|1L?\b)",
+        re.I,
+    )
+    bad = []
+    for dirpath, _, files in os.walk(ops):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                src = fh.read()
+            if os.path.relpath(path, ops) == "sketches.py":
+                assert "def bloom_words(" in src
+                continue
+            if "bit_or" in src and mask.search(src):
+                bad.append(os.path.relpath(path, root))
+    assert not bad, bad
 
 
 # ---------------------------------------------------------------------------
